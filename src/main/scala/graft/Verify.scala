@@ -19,7 +19,6 @@ object Verify {
       // execute the same plans the bench times.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
-      // allow shuffled-hash joins (see the Bench builder note)
       // bytes-derived scan splits, same as Bench (see the note there)
       .config("spark.sql.files.minPartitionNum", "1")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

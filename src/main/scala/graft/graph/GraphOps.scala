@@ -83,7 +83,7 @@ object GraphOps {
     * loop retires must go through here or it stays pinned for the
     * session's lifetime (the round-7 g11 leak).
     */
-  private def releaseIterate(df: DataFrame): Unit = {
+  private[graph] def releaseIterate(df: DataFrame): Unit = {
     df.unpersist(false)
     org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(df)
   }

@@ -20,13 +20,19 @@ import org.apache.spark.storage.StorageLevel
   *    out-degree, dangling mass redistributed uniformly every
   *    iteration, every node updated. Correct on arbitrary graphs.
   *
-  * Scale notes (100 TB design): the adjacency relation is built once,
-  * hash-partitioned on the node id, and persisted; every per-iteration
-  * join and aggregation keys on that same id, so AQE keeps one exchange
-  * per iteration. Lineage is truncated with `localCheckpoint` every
-  * `checkpointEvery` passes (on a cluster, swap for `checkpoint` with a
-  * reliable dir) — without it the plan doubles per iteration and the
-  * driver, not the data, becomes the bottleneck.
+  * Scale notes (100 TB design): compat partitions its graph once.
+  * The graph is every node a pass can reach with its adjacency,
+  * hash-partitioned on the node id to the session's shuffle width and
+  * persisted. Each pass then has one exchange: the exploded
+  * contributions, regrouped by node and hash-joined into the graph,
+  * which never moves. Lineage is truncated with `localCheckpoint`
+  * every `checkpointEvery` passes (on a cluster, swap for `checkpoint`
+  * with a reliable dir) — without it the plan doubles per iteration
+  * and the driver, not the data, becomes the bottleneck. A pass's
+  * cache or checkpoint is released as soon as the next pass's state
+  * is materialized. Hence the `onPass` contract: the `CompatState` a
+  * pass hands over stays valid until the next pass materializes, so a
+  * hook writes or collects it before returning.
   */
 object PageRank {
 
@@ -48,7 +54,9 @@ object PageRank {
     * iteration passes. Returns state (node, contrib, adj) with the
     * dangling sink's row diverted to `danglingMass`. `onPass` fires
     * after every completed pass (1-based) — the CLI's per-iteration
-    * output-dir hook (pageRank_v2.java:96-98).
+    * output-dir hook (pageRank_v2.java:96-98); see the scale notes for
+    * how long its state stays valid. The returned state stays pinned
+    * for the caller.
     */
   def compat(edges: DataFrame, k: Long, passes: Int, beta: Double = 0.15,
              checkpointEvery: Int = 5,
@@ -59,22 +67,24 @@ object PageRank {
     // Init pass (pageRank_v2.java:153-169): every in-edge carries 1/N;
     // every node that appears as src or dst forms a group (the P-/O-
     // records guarantee src-side groups); contributions default 0.0
-    // (the reference's Null sentinel made explicit by coalesce).
-    val links = GraphOps.adjacency(edges)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val initContribs = edges
-      .groupBy(col("dst").as("node"))
-      .agg(sum(lit(1.0 / n)).as("contrib"))
-    val init = links.join(initContribs, Seq("node"), "full_outer")
-      .select(col("node"),
-        coalesce(col("contrib"), lit(0.0)).as("contrib"),
-        coalesce(col("adj"), array().cast("array<long>")).as("adj"))
+    // (the reference's Null sentinel made explicit by coalesce). One
+    // row per edge end, shuffled once by node: the init state is
+    // already the partitioned graph every later pass joins into.
+    val ends = edges.select(col("src").as("node"), col("dst").as("to"),
+        lit(null).cast("double").as("mass"))
+      .union(edges.select(col("dst").as("node"), lit(null).cast("long").as("to"),
+        lit(1.0 / n).as("mass")))
+    val init = ends.repartition(shuffleWidth(edges), col("node"))
+      .groupBy("node")
+      .agg(coalesce(sum(col("mass")), lit(0.0)).as("contrib"),
+        sort_array(collect_set(col("to"))).as("adj"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val d = extractDangling(init)
     val state1 = CompatState(init.filter(col("node") =!= 0), d)
     onPass(1, state1)
-    compatSteps(state1, k, passes - 1, beta, checkpointEvery, onPass,
+    if (passes == 1) state1
+    else iterate(init, state1, k, passes - 1, beta, checkpointEvery, onPass,
       passOffset = 1)
   }
 
@@ -90,48 +100,80 @@ object PageRank {
                   beta: Double = 0.15, checkpointEvery: Int = 5,
                   onPass: (Int, CompatState) => Unit = (_, _) => (),
                   passOffset: Int = 0): CompatState = {
+    // A state lacks the sink row and any other contribution-only
+    // target: every adjacency target joins the graph with an empty list.
+    val targets = state0.state.select(explode(col("adj")).as("node")).distinct()
+    val graph = state0.state.select(col("node"), col("adj"))
+      .join(targets, Seq("node"), "full_outer")
+      .select(col("node"), coalesce(col("adj"), array().cast("array<long>")).as("adj"))
+      .repartition(shuffleWidth(state0.state), col("node"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    iterate(graph, state0, k, steps, beta, checkpointEvery, onPass, passOffset)
+  }
+
+  /** The session's shuffle width, passed explicitly to `repartition`
+    * so that AQE keeps the graph's partitioning instead of coalescing it.
+    */
+  private def shuffleWidth(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** The compat iteration over a fixed graph: every node a pass can
+    * reach with its adjacency, hash-partitioned on node and pinned.
+    * Adjacency never changes and contribution-only targets keep an
+    * empty list, so each pass is the graph LEFT JOIN its contributions,
+    * and only the contributions cross an exchange. Each pass releases
+    * its predecessor's cache or checkpoint once its own state is
+    * materialized; the graph is released after the last pass.
+    */
+  private def iterate(graph: DataFrame, state0: CompatState, k: Long,
+                      steps: Int, beta: Double, checkpointEvery: Int,
+                      onPass: (Int, CompatState) => Unit,
+                      passOffset: Int): CompatState = {
     val n = (k.toDouble * k.toDouble)
-    var cur = state0.state
-    var d = state0.danglingMass
+    var cur = state0
+    var pin: DataFrame = null
     var step = 0
     while (step < steps) {
       // Rank update applied lazily (pageRank_v2.java:126-127), then
       // whole-rank contribution to each out-neighbor (:136-139).
-      val ranked = cur.withColumn("rank",
-        lit(1 - beta) * (col("contrib") + lit(d / n)) + lit(beta / n))
+      val ranked = cur.state.withColumn("rank",
+        lit(1 - beta) * (col("contrib") + lit(cur.danglingMass / n)) +
+          lit(beta / n))
       val contribs = ranked
         .select(explode(col("adj")).as("node"), col("rank"))
         .groupBy("node").agg(sum(col("rank")).as("contrib"))
-      // Adjacency circulates with the state (pageRank_v2.java:39,141);
-      // contribution-only targets (e.g. the sink) get an empty list.
-      var next = cur.select(col("node"), col("adj"))
-        .join(contribs, Seq("node"), "full_outer")
+      // Adjacency circulates with the state (pageRank_v2.java:39,141).
+      // The hint keeps the join on the graph's partitioning: AQE would
+      // otherwise broadcast the contributions and aggregate them in a
+      // single task.
+      val plan = graph.select(col("node"), col("adj"))
+        .join(contribs.hint("shuffle_hash"), Seq("node"), "left_outer")
         .select(col("node"),
-          coalesce(col("contrib"), lit(0.0)).as("contrib"),
-          coalesce(col("adj"), array().cast("array<long>")).as("adj"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if ((passOffset + step + 1) % checkpointEvery == 0)
-        next = next.localCheckpoint(true)
+          coalesce(col("contrib"), lit(0.0)).as("contrib"), col("adj"))
+      val next =
+        if ((passOffset + step + 1) % checkpointEvery == 0) plan.localCheckpoint(true)
+        else plan.persist(StorageLevel.MEMORY_AND_DISK)
 
-      d = extractDangling(next)
-      val prev = cur
-      cur = next.filter(col("node") =!= 0)
-      prev.unpersist(false)
+      val d = extractDangling(next)
+      if (pin != null) GraphOps.releaseIterate(pin)
+      pin = next
+      cur = CompatState(next.filter(col("node") =!= 0), d)
       step += 1
-      onPass(passOffset + step, CompatState(cur, d))
+      onPass(passOffset + step, cur)
     }
-    CompatState(cur, d)
+    graph.unpersist(false)
+    cur
   }
 
-  /** The reference's counter read: node 0's contribution sum, removed
+  /** The reference's counter read: node 0's contribution, removed
     * from the output relation (pageRank_v2.java:216-222). One cheap
     * driver action per pass — the same job materializes the persisted
-    * state, so no extra full pass over the data.
+    * state, and the graph holds one sink row, which comes back to the
+    * driver as is: no aggregate, so no exchange.
     */
   private def extractDangling(state: DataFrame): Double =
-    state.filter(col("node") === 0).select(sum(col("contrib")))
-      .collect().headOption.flatMap(r => Option(r.get(0)))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0)
+    state.filter(col("node") === 0).select(col("contrib"))
+      .collect().map(_.getDouble(0)).sum
 
   /** Standard PageRank: returns (node, rank) after `iters` iterations.
     * r'(v) = β/N + (1−β)·(Σ_{u→v} r(u)/outdeg(u) + D/N),

@@ -48,6 +48,10 @@ class PageRankSpec extends AnyFunSuite {
     (contrib, d)
   }
 
+  /** The reference's committed k=3, one-pass output (FIXTURES.md §A.3). */
+  private def goldenCheck3(): Source =
+    Source.fromResource("golden/check3/part-r-00000")
+
   private def run(k: Long, passes: Int) = {
     val edges = GraphIO.kChainEdges(spark, k)
     val got = PageRank.compat(edges, k, passes)
@@ -59,8 +63,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("compat k=3 single pass matches the committed golden file") {
-    val goldenSrc = Source.fromFile(
-      "/root/reference/output/check3/part-r-00000")
+    val goldenSrc = goldenCheck3()
     val golden = try {
       goldenSrc.getLines().filter(_.nonEmpty).map { line =>
         val f = line.split(",")
@@ -88,8 +91,7 @@ class PageRankSpec extends AnyFunSuite {
     // Double.toString, and the compat contribs are bit-identical to
     // the reference's doubles, so every line must match byte-for-byte;
     // only the row order (a reducer-partition artifact) is modded out.
-    val goldenSrc = Source.fromFile(
-      "/root/reference/output/check3/part-r-00000")
+    val goldenSrc = goldenCheck3()
     val golden = try goldenSrc.getLines().filter(_.nonEmpty).toVector.sorted
       finally goldenSrc.close()
     val got = PageRank.compat(GraphIO.kChainEdges(spark, 3), 3, 1)
@@ -147,6 +149,67 @@ class PageRankSpec extends AnyFunSuite {
       .map { case (n, c, a) => n -> (c, a.toSet) }.toMap
     assert(resM === fullM)
     assert(resumed.danglingMass === full.danglingMass)
+  }
+
+  test("compat pins a constant number of RDDs, however many passes run") {
+    // Each pass releases its predecessor's cache or checkpoint once its
+    // own state is materialized, so the pins a run holds do not grow
+    // with the pass count (checkpoint passes included).
+    val sc = spark.sparkContext
+    val edges = GraphIO.kChainEdges(spark, 4)
+    def pinnedBy(passes: Int): (Map[Int, Int], Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      def pinned = (sc.getPersistentRDDs.keySet -- before).size
+      val perPass = scala.collection.mutable.Map.empty[Int, Int]
+      PageRank.compat(edges, 4, passes, checkpointEvery = 3,
+        onPass = (p, _) => perPass(p) = pinned)
+      (perPass.toMap, pinned)
+    }
+    val (perPass4, after4) = pinnedBy(4)
+    val (perPass10, after10) = pinnedBy(10)
+    assert(after4 === after10)
+    assert(after10 <= 2, s"$after10 RDDs pinned after the run")
+    assert(perPass4(4) === perPass10(10))
+    assert((2 to 10).map(perPass10).distinct.size === 1, perPass10)
+  }
+
+  test("compat is bit-identical across shuffle widths and AQE, resumed or not") {
+    // The graph is partitioned to the session's shuffle width, so the
+    // width must not reach the result: not the state, and not the
+    // dangling mass summed over the chain tails.
+    val k = 5L
+    val passes = 7
+    val postures = Seq(
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false")
+    def bits(st: PageRank.CompatState) =
+      (st.state.select("node", "contrib", "adj")
+        .as[(Long, Double, Seq[Long])].collect()
+        .map { case (n, c, a) => (n, java.lang.Double.doubleToRawLongBits(c), a) }
+        .sortBy(_._1).toSeq,
+        java.lang.Double.doubleToRawLongBits(st.danglingMass))
+    val runs = postures.map { case (key, value) =>
+      val s = spark.newSession()
+      s.conf.set(key, value)
+      val full = PageRank.compat(GraphIO.kChainEdges(s, k), k, passes)
+      // resume from a written pass-3 state: the graph is rebuilt from
+      // rows that lack the sink
+      val tmp = java.nio.file.Files.createTempDirectory("graft-width").toString
+      val s3 = PageRank.compat(GraphIO.kChainEdges(s, k), k, 3)
+      GraphIO.writeCompatCsv(s3.state, s"$tmp/state3")
+      val resumed = PageRank.compatSteps(
+        PageRank.CompatState(GraphIO.readCompatCsv(s, s"$tmp/state3"),
+          s3.danglingMass), k, passes - 3, passOffset = 3)
+      (bits(full), bits(resumed))
+    }
+    val (full0, resumed0) = runs.head
+    assert(full0._1.size === (k * k).toInt, "every non-sink node")
+    assert(resumed0 === full0)
+    runs.zip(postures).tail.foreach { case ((full, resumed), posture) =>
+      assert(full === full0, s"uninterrupted under $posture")
+      assert(resumed === full0, s"resumed under $posture")
+    }
   }
 
   test("GraphX compat matches DataFrame compat, duplicate edges included") {
