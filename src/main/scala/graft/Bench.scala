@@ -1,58 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional regex filter for local iteration (unset → all queries).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE re-optimize plans that read CACHED relations (the
-      // iterative graph loops persist every round; the shared base
-      // relations are persisted per family). The default `false`
-      // pins a cached relation's output partitioning so downstream
-      // co-partitioning can be reused — but every consumer here
-      // re-plans its own exchanges anyway, so the pin only disables
-      // AQE's partition coalescing and broadcast conversion for
-      // every query over a cached input. Measured r18 at local[32]
-      // sf0.1: g family 16.3s → 8.2s, s family 8.8s → 3.9s, whole
-      // bench 215s → 108s combined with the streaming commit fix;
-      // shuffle records drop 2.1M → 0.75M in g (AQE broadcast-joins
-      // the small cached rounds instead of shuffling both sides).
-      // Results are plan-shape-invariant (oracle-verified ×156 at
-      // sf0.001, sf0.01 AND sf0.1 — the r19 sweeps; Verify shares
-      // this posture).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Join strategy: STOCK defaults. r18 carried
-      // preferSortMergeJoin=false + the AQE 64m SHJ local-map
-      // threshold; r19 measured both at the bench posture (local[32]
-      // sf0.1) and removed them. The static flag trusts size estimates
-      // and cannot spill (the r18 advice's OOM risk at the sf10
-      // envelope) and changed no executed plan. The AQE threshold DOES
-      // convert SMJ→SHJ here (q64 ×1, q65 ×2 final-plan conversions,
-      // executed dumps) but an isolated q64/q65 A/B across all three
-      // postures — both confs / threshold only / neither — was inside
-      // the run-to-run noise band (q65 0.63–0.84 s), so per the r18
-      // verdict's criterion the unevidenced planner deviation is gone.
-      // Scan splits derive from BYTES alone (guide §2/§6): the stock
-      // floor (= defaultParallelism) re-splits every small file into
-      // one sliver per core, so file-count-heavy paths (the versioned
-      // tables' 80-directory slices, the layout trees) paid ~40
-      // near-empty scan tasks per read at local[32] and got FASTER at
-      // 8 cores (r18 scaling ratios 0.5-0.8 on q42/q57/q59/q64/q65).
-      // At 100 TB maxPartitionBytes governs and this floor is inert;
-      // compute-heavy small scans that genuinely want cores are
-      // spread explicitly where they are built (DedupQueries.spread).
-      // Measured r19 at sf0.1: q65 1.7→1.0s, q42 0.5→0.1s, q57 cold
-      // build 12.8→11.7s on top of the explicit-files index.
-      .config("spark.sql.files.minPartitionNum", "1")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: spin up executors, JIT the codegen paths, and open each
     // parquet footer once, so the first measured query isn't charged
@@ -265,28 +217,16 @@ object Bench {
         s"\"" + f + "\":" + structJson(sums)
       }
       .mkString("{", ",", "}")
-    // JSON string escape for error text (same class of escaping as
-    // Verify's oracle dump — a raw quote or newline here would corrupt
-    // the one-line artifact).
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val errMap = failed
-      .map { case (k, _, _, _, Some(e), _) => s"\"" + k + "\":" + jq(e.take(300)) }
+      .map { case (k, _, _, _, Some(e), _) => s"\"" + k + "\":" + Json.quote(e.take(300)) }
       .mkString("{", ",", "}")
     val total = timed.map(_._2).sum
     // Optional free-text annotation carried IN the artifact (e.g. the
     // sf10 sweep's exclusion list + sample count) — a sweep's caveats
     // must survive with its numbers, not live only in BENCH_NOTES.
     val note = sys.env.get("SPARK_GRAFT_NOTE")
-      .map(t => s""","note":${jq(t)}""").getOrElse("")
-    val line = s"""{"metric":"total","value":${n3(total)},"unit":"sec","queries":$qs,"families":$fams,"cold":$cold,"uncounted":$unc,"structural":$structQ,"err":$errMap,"cpus":$cpus,"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"$note}"""
+      .map(t => s""","note":${Json.quote(t)}""").getOrElse("")
+    val line = s"""{"metric":"total","value":${n3(total)},"unit":"sec","queries":$qs,"families":$fams,"cold":$cold,"uncounted":$unc,"structural":$structQ,"err":$errMap,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"$note}"""
     // Teardown BEFORE the result line: the driver keeps only an output
     // tail, so the JSON must be the absolute last thing on stdout —
     // r13/r14's artifacts were `parsed: null` because state-store
@@ -327,6 +267,6 @@ object Bench {
     // (build.sbt routes forked output through raw stdout and suppresses
     // sbt's [success] banner, so this line really reaches the driver
     // undecorated — the r16 root cause.)
-    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","n":${timed.length},"err_n":${failed.length},"families":$fams,"structural":$structFam,"cpus":$cpus,"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","n":${timed.length},"err_n":${failed.length},"families":$fams,"structural":$structFam,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"}""")
   }
 }

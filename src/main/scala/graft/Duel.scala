@@ -131,24 +131,12 @@ object Duel {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.getOrElse("SPARK_GRAFT_NSAMPLES", "3").toInt
     val which = if (args.nonEmpty) args.toSet
       else Set("topk", "bitmap", "band", "hist", "zorder", "bucketedsym",
         "bucketededges", "hits", "dpp", "bloom", "compaction", "mergecow",
         "statsskip", "fileskip", "vtzorder", "bloomskip")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the Bench/Verify runtime posture (see the Bench note)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // bytes-derived scan splits, same as Bench (see the note there)
-      .config("spark.sql.files.minPartitionNum", "1")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT/executor warmup
 
@@ -685,7 +673,7 @@ object Duel {
         .persist(StorageLevel.MEMORY_AND_DISK)
       sym.count()
       val bsym = graft.sources.Bucketing.bucketedTable(
-        spark, sym, "duel_sym_bucketed", cpus.toInt, "src")
+        spark, sym, "duel_sym_bucketed", Runtime.cpus, "src")
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // Unlike `measure` (fixed plan ⇒ identical tallies every run),
@@ -743,7 +731,7 @@ object Duel {
       nodes.queryExecution.toRdd.count()
       deg.queryExecution.toRdd.count()
       val be = graft.sources.Bucketing.bucketedTable(
-        spark, e, "duel_edges_bucketed", cpus.toInt, "src")
+        spark, e, "duel_edges_bucketed", Runtime.cpus, "src")
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def measurePr(eRel: org.apache.spark.sql.DataFrame)
@@ -803,7 +791,7 @@ object Duel {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def measureHits(bucketed: Boolean): (Double, Long, Long) = {
         if (bucketed) {
-          spark.conf.set("graft.bucketedEdges", cpus)
+          spark.conf.set("graft.bucketedEdges", Runtime.cpus.toString)
           // one-time layout write (both orientations), outside samples
           GraphQueries.clearCheckpointMemos(spark)
           GraphQueries.hitsLoop(spark, sfDir, 1).queryExecution.toRdd.count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene dump: formatted physical plans for the queries named
   * on the command line (or a representative default set). Used to
   * audit the properties that matter at 100 TB — filter pushdown into
@@ -20,25 +18,7 @@ object Explain {
         "d08_embed_neardup", "d11_repeated_spans", "s02_knn_lsh",
         "s05_knn_pq", "t05_fingerprint", "t06_repetition",
         "p04_contamination", "q23_event_windows")
-    // GRAFT_EXPLAIN_CPUS: match the bench's core/shuffle width when a
-    // plan claim is about the runtime posture (join-strategy and
-    // partition-count decisions are width-dependent); default stays
-    // the historical local[4] dump convention.
-    val cpus = sys.env.getOrElse("GRAFT_EXPLAIN_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the Bench/Verify runtime posture (see the Bench note);
-      // GRAFT_EXPLAIN_CACHED_AQE=false reproduces the pre-r18 plans
-      // for before/after diffs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_EXPLAIN_CACHED_AQE", "true"))
-      // bytes-derived scan splits, same as Bench (see the note there)
-      .config("spark.sql.files.minPartitionNum", "1")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_EXPLAIN_EXEC=true: EXECUTE each query first (the full
     // optimized plan, `toRdd.count()` — no count-side pruning), then

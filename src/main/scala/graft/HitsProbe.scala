@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Instrumentation main for g20's stopping rule (r15 verdict item 4):
   * runs [[graft.queries.GraphQueries.hitsConverged]] over the derived
   * graph at each SF dir on the command line with the given budget and
@@ -17,14 +15,7 @@ object HitsProbe {
     val maxRounds = args(0).toInt
     val tolFp = args(1).toLong
     val dirs = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("WARN")
     dirs.foreach { dir =>
       val t0 = System.nanoTime()

@@ -109,14 +109,7 @@ object PageRankCli {
     if (k <= 0) usageError("<k> must be positive")
     if (iters < 1) usageError("<iters> must be >= 1")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-      .appName("graft-pagerank")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled",
-        sys.props.getOrElse("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("WARN")
 
     run(spark, in, out, k, iters, mass0)

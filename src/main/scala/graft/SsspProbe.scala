@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Instrumentation main for the g14 pathology (r9 verdict item 2):
@@ -14,14 +13,7 @@ object SsspProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val deltas = args.tail.map(_.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runtime.session()
     spark.sparkContext.setLogLevel("WARN")
     val e = graft.queries.GraphQueries.derivedEdges(spark, sfDir)
     val sym = e.union(e.select(col("dst"), col("src"))).toDF("src", "dst")

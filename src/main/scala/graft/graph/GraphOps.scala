@@ -3,77 +3,18 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Primitive graph operators from the reference's inventory
-  * (SURVEY.md §2): adjacency build (O7), transpose (O16), degrees
-  * (O17), structural predicates (O3), explode (O4).
+/** Iterative graph loops over DataFrames, each run to convergence:
+  * connected components (min-label propagation and the O(log n)
+  * star-contraction variant), single-source BFS and weighted shortest
+  * paths, and k-core peeling. The one-shot primitives of the
+  * reference's inventory (SURVEY.md §2: adjacency, degrees, the
+  * dangling set) are the registry entries g01–g03.
   *
-  * All operators are narrow projections or single-shuffle aggregates;
-  * at scale the shuffle key is always the node id, so downstream
+  * At scale the shuffle key is always the node id, so each round's
   * node-keyed joins reuse the same hash partitioning (no second
   * exchange when partition counts line up).
   */
 object GraphOps {
-
-  /** Adjacency list: src → deduped, sorted out-neighbors.
-    * Reference packs this as a `-`-joined string through a HashSet
-    * (pageRank_v2.java:122,184,207-213); here it is a first-class
-    * ARRAY<LONG>. `sort_array` makes output deterministic (HashSet
-    * order was not).
-    */
-  def adjacency(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("node"))
-      .agg(sort_array(collect_set(col("dst"))).as("adj"))
-
-  /** Graph transpose — the incoming-links view (pageRank.java:134-144). */
-  def transpose(edges: DataFrame): DataFrame =
-    edges.select(col("dst").as("src"), col("src").as("dst"))
-
-  /** Out-degree per source node (v1's TotalRecordsReducer analogue,
-    * pageRank.java:146-158, generalized per-key).
-    */
-  def outDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_degree"))
-
-  def inDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_degree"))
-
-  /** Every distinct node id appearing as src or dst. */
-  def nodes(edges: DataFrame): DataFrame =
-    edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-
-  /** Nodes with no outgoing edges (the true dangling set; the
-    * reference hardcodes node 0, pageRank_v2.java:35,216).
-    */
-  def danglingNodes(edges: DataFrame): DataFrame =
-    nodes(edges).join(
-      edges.select(col("src").as("node")).distinct(),
-      Seq("node"), "left_anti")
-
-  /** Chain-head predicate `node % k == 1` (pageRank_v2.java:145,165). */
-  def isChainHead(k: Long) = (col("node") % k) === 1
-
-  /** Explode an adjacency state back to an edge list (O4 inverse of O7). */
-  /** Connected components by min-label propagation over the
-    * symmetrized graph, iterated to convergence (bounded by
-    * `maxRounds`); returns (node, component) where component is the
-    * minimum node id of the component. The per-round work is one
-    * node-keyed join + aggregation — label-prop converges in
-    * O(diameter) rounds, and each round is a fixed two-shuffle plan,
-    * so lineage is truncated with `localCheckpoint` on cadence like
-    * the PageRank loops. GraphX's `ConnectedComponents` is the
-    * Pregel-side twin (equivalence pinned in GraphOpsSpec).
-    */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
-                          checkpointEvery: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst"), col("src")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val out = connectedComponentsFromSym(sym, maxRounds, checkpointEvery)
-    sym.unpersist(false)
-    out
-  }
 
   /** Release whatever kind of pin a loop iterate holds: a CacheManager
     * persist (`unpersist` — no-op on checkpointed plans) and/or a
@@ -88,9 +29,17 @@ object GraphOps {
     org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(df)
   }
 
-  /** [[connectedComponents]] over an already-symmetrized (and ideally
-    * caller-persisted) edge relation — every round joins against it, so
-    * a shared materialization must not be rebuilt or unpersisted here.
+  /** Connected components by min-label propagation over an
+    * already-symmetrized (and ideally caller-persisted) edge relation,
+    * iterated to convergence (bounded by `maxRounds`); returns (node,
+    * component) where component is the minimum node id of the
+    * component. Every round joins against `sym`, so a shared
+    * materialization must not be rebuilt or unpersisted here. The
+    * per-round work is one node-keyed join + aggregation — label-prop
+    * converges in O(diameter) rounds, and each round is a fixed
+    * two-shuffle plan, so lineage is truncated with `localCheckpoint`
+    * on cadence. GraphX's `ConnectedComponents` is the Pregel-side
+    * twin (equivalence pinned in GraphOpsSpec).
     *
     * Each iterate carries its previous label as `old`, so convergence
     * detection is a filter+count on the already-cached iterate — no
@@ -553,7 +502,4 @@ object GraphOps {
     releaseIterate(cur)
     out
   }
-
-  def explodeAdjacency(adj: DataFrame): DataFrame =
-    adj.select(col("node").as("src"), explode(col("adj")).as("dst"))
 }

@@ -1,24 +1,20 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Iterative PageRank, two semantic modes (SURVEY.md §7.1.2):
-  *
-  *  - '''compat''': the reference's intended semantics
-  *    (pageRank_v2.java:32-43,116-223): each node sends its WHOLE rank
-  *    to every out-neighbor (no out-degree division — mass-conserving
-  *    only on out-degree ≤ 1 graphs like the k-chain fixture), state
-  *    column is the raw incoming-contribution sum, the rank-update
-  *    formula `(1−β)(c + D/N) + β/N` is applied lazily at the start of
-  *    the NEXT pass, N = k², and the dangling sink node 0's row is
-  *    diverted into a driver-side scalar (the reference's Hadoop
-  *    counter, pageRank_v2.java:216-222) instead of the output.
-  *
-  *  - '''standard''': textbook PageRank — contributions divided by
-  *    out-degree, dangling mass redistributed uniformly every
-  *    iteration, every node updated. Correct on arbitrary graphs.
+/** Iterative compat PageRank: the reference's intended semantics
+  * (pageRank_v2.java:32-43,116-223; SURVEY.md §7.1.2). Each node sends
+  * its WHOLE rank to every out-neighbor (no out-degree division —
+  * mass-conserving only on out-degree ≤ 1 graphs like the k-chain
+  * fixture), the state column is the raw incoming-contribution sum,
+  * the rank-update formula `(1−β)(c + D/N) + β/N` is applied lazily at
+  * the start of the NEXT pass, N = k², and the dangling sink node 0's
+  * row is diverted into a driver-side scalar (the reference's Hadoop
+  * counter, pageRank_v2.java:216-222) instead of the output. Textbook
+  * PageRank on arbitrary graphs is the GraphX path
+  * ([[PageRankGraphX.standardOn]], [[PageRankGraphX.standardFixedPointOn]]).
   *
   * Scale notes (100 TB design): compat partitions its graph once.
   * The graph is every node a pass can reach with its adjacency,
@@ -174,141 +170,4 @@ object PageRank {
   private def extractDangling(state: DataFrame): Double =
     state.filter(col("node") === 0).select(col("contrib"))
       .collect().map(_.getDouble(0)).sum
-
-  /** Standard PageRank: returns (node, rank) after `iters` iterations.
-    * r'(v) = β/N + (1−β)·(Σ_{u→v} r(u)/outdeg(u) + D/N),
-    * D = Σ_{dangling u} r(u).
-    */
-  def standard(edges: DataFrame, iters: Int, beta: Double = 0.15,
-               checkpointEvery: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-
-    // One row per node: out-neighbors + out-degree; empty for dangling.
-    // Built once, cached — the only per-iteration shuffles are the
-    // explode-regroup and the node-keyed join against this relation.
-    val links = GraphOps.nodes(edges)
-      .join(GraphOps.adjacency(edges), Seq("node"), "left_outer")
-      .select(col("node"),
-        coalesce(col("adj"), array().cast("array<long>")).as("adj"))
-      .withColumn("out_degree", size(col("adj")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = links.count().toDouble
-
-    var ranks = links.select(col("node"), lit(1.0 / n).as("rank"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Release each pass's cache only after the NEXT pass's dangling-sum
-    // action has materialized its successor — unpersisting an
-    // un-materialized parent forces a full lineage recompute per pass.
-    var prevRanks: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val joined = links.join(ranks, Seq("node"))
-      val d = joined.filter(col("out_degree") === 0)
-        .select(sum(col("rank"))).collect().headOption
-        .flatMap(r => Option(r.get(0))).map(_.asInstanceOf[Double])
-        .getOrElse(0.0)
-      if (prevRanks != null) prevRanks.unpersist(false)
-      val contribs = joined.filter(col("out_degree") > 0)
-        .select(explode(col("adj")).as("node"),
-          (col("rank") / col("out_degree")).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      var next = links.select(col("node"))
-        .join(contribs, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(beta / n) + lit(1 - beta) *
-            (coalesce(col("c"), lit(0.0)) + lit(d / n))).as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if ((i + 1) % checkpointEvery == 0) {
-        // the checkpoint subsumes the pre-checkpoint persist — release
-        // it, or every cadence hit leaks one pinned plan
-        val pre = next
-        next = next.localCheckpoint(true)
-        pre.unpersist(false)
-      }
-      prevRanks = ranks
-      ranks = next
-      i += 1
-    }
-    ranks
-  }
-
-  /** Result of [[standardConverged]]: final ranks, passes actually run,
-    * and the last pass's L1 delta Σ_v |r′(v) − r(v)|.
-    */
-  final case class Converged(ranks: DataFrame, iters: Int, delta: Double)
-
-  /** Standard PageRank iterated to convergence: stops once the L1 rank
-    * delta Σ_v |r′(v) − r(v)| drops below `eps`, or after `maxIters`
-    * passes. The reference iterates a fixed trip count
-    * (pageRank_v2.java:78-103, Makefile:23 iters=10) because testing
-    * convergence under MR costs a whole extra job per iteration; Spark
-    * folds it into one extra 1-row aggregate per pass — the same
-    * change-count-termination shape as
-    * [[GraphOps.connectedComponents]]. The delta aggregate doubles as
-    * the action that materializes the new pass's persisted state, so
-    * the per-pass job count matches [[standard]]'s (dangling scalar +
-    * one materializing action).
-    *
-    * At `eps = 0` the stop test (`delta < eps`) never fires and the
-    * recurrence is exactly [[standard]]'s, so the result matches
-    * fixed-trip output at `maxIters` (pinned in PageRankSpec).
-    */
-  def standardConverged(edges: DataFrame, eps: Double, maxIters: Int,
-                        beta: Double = 0.15,
-                        checkpointEvery: Int = 5): Converged = {
-    val links = GraphOps.nodes(edges)
-      .join(GraphOps.adjacency(edges), Seq("node"), "left_outer")
-      .select(col("node"),
-        coalesce(col("adj"), array().cast("array<long>")).as("adj"))
-      .withColumn("out_degree", size(col("adj")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = links.count().toDouble
-
-    var ranks = links.select(col("node"), lit(1.0 / n).as("rank"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prevRanks: DataFrame = null
-    var delta = Double.PositiveInfinity
-    var i = 0
-    while (i < maxIters && delta >= eps) {
-      val joined = links.join(ranks, Seq("node"))
-      val d = joined.filter(col("out_degree") === 0)
-        .select(sum(col("rank"))).collect().headOption
-        .flatMap(r => Option(r.get(0))).map(_.asInstanceOf[Double])
-        .getOrElse(0.0)
-      if (prevRanks != null) prevRanks.unpersist(false)
-      val contribs = joined.filter(col("out_degree") > 0)
-        .select(explode(col("adj")).as("node"),
-          (col("rank") / col("out_degree")).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      var next = links.select(col("node"))
-        .join(contribs, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(beta / n) + lit(1 - beta) *
-            (coalesce(col("c"), lit(0.0)) + lit(d / n))).as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if ((i + 1) % checkpointEvery == 0) {
-        val pre = next
-        next = next.localCheckpoint(true)
-        pre.unpersist(false)
-      }
-      // The convergence scalar: one 1-row aggregate joining the new
-      // state against the old — also the job that materializes `next`.
-      delta = next.toDF("node", "nr")
-        .join(ranks.toDF("node", "or"), Seq("node"))
-        .select(sum(abs(col("nr") - col("or")))).collect().headOption
-        .flatMap(r => Option(r.get(0))).map(_.asInstanceOf[Double])
-        .getOrElse(0.0)
-      prevRanks = ranks
-      ranks = next
-      i += 1
-    }
-    // Unlike [[standard]] (whose result is still lazy at return), the
-    // final state here was materialized by its delta aggregate, so the
-    // loop's scaffolding can be released immediately; only `ranks`
-    // stays pinned for the caller.
-    if (prevRanks != null) prevRanks.unpersist(false)
-    links.unpersist(false)
-    Converged(ranks, i, delta)
-  }
 }

@@ -1,19 +1,22 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
+import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** GraphX flagship path for iterative PageRank (SURVEY.md §7.1.1,
-  * BASELINE.json spark_approach).
+/** GraphX path for textbook PageRank on arbitrary graphs (SURVEY.md
+  * §7.1.1, BASELINE.json spark_approach): contributions divided by
+  * out-degree, dangling mass redistributed uniformly every iteration,
+  * every node updated. [[standardOn]] runs it in doubles (registry
+  * entry g07) and [[standardFixedPointOn]] in g04's int64 fixed point
+  * (registry entry g10, bit-exact against the same DuckDB oracle).
   *
   * Implemented with `aggregateMessages` + an explicit driver loop
-  * rather than `graphx.lib.PageRank`, because the reference's
-  * semantics need dangling-mass redistribution every iteration
-  * (GraphX's stock implementation leaks dangling mass) and compat mode
-  * needs the no-out-degree-division contribution rule
-  * (pageRank_v2.java:136-139).
+  * rather than `graphx.lib.PageRank`, because the dangling mass must be
+  * redistributed every iteration (GraphX's stock implementation leaks
+  * it). The reference's own compat semantics run on the DataFrame path
+  * ([[PageRank.compat]]).
   *
   * Scale: vertices/edges are partitioned by GraphX
   * (`EdgePartition2D` keeps replication ≤ 2√P at P partitions);
@@ -61,15 +64,12 @@ object PageRankGraphX {
       .partitionBy(PartitionStrategy.EdgePartition2D)
   }
 
-  /** Standard PageRank with dangling redistribution; returns
-    * (node, rank) as a DataFrame for parity with [[PageRank.standard]].
-    */
-  def standard(edges: DataFrame, iters: Int, beta: Double = 0.15): DataFrame =
-    standardOn(fromEdges(edges), iters, beta)
-
-  /** [[standard]] on an already-built (possibly caller-cached) graph —
-    * repeated runs over the same edge set skip the count + partition +
-    * cache of graph construction.
+  /** Standard PageRank with dangling redistribution on an already-built
+    * (possibly caller-cached) graph — repeated runs over the same edge
+    * set skip the count + partition + cache of graph construction.
+    * Returns (node, rank):
+    * r'(v) = β/N + (1−β)·(Σ_{u→v} r(u)/outdeg(u) + D/N),
+    * D = Σ_{dangling u} r(u).
     */
   def standardOn(graph0: Graph[Double, Unit], iters: Int,
                  beta: Double = 0.15): DataFrame = {
@@ -111,92 +111,6 @@ object PageRankGraphX {
           org.apache.spark.sql.types.DoubleType, nullable = false))))
   }
 
-  /** Compat-mode PageRank on GraphX — the reference's OWN contribution
-    * rule (pageRank_v2.java:136-139,163): every node sends its
-    * '''whole''' rank (no out-degree division) to each out-neighbor,
-    * ranks update lazily as `(1−β)(contrib + D/N) + β/N`, and the
-    * dangling sink node 0's accumulated mass is diverted to the
-    * returned scalar each pass (the reference's DanglingMass counter,
-    * pageRank_v2.java:216-222) — never propagated as rank.
-    *
-    * Duplicate-edge semantics follow the reference exactly: the INIT
-    * pass counts every raw input edge (each emits 1/N,
-    * pageRank_v2.java:163), while iteration passes send along the
-    * HashSet-DEDUPED adjacency (pageRank_v2.java:122,195) — so the
-    * graph here is built on `distinct()` edges and the init contribs
-    * join in raw in-degrees. Same semantics as [[PageRank.compat]]
-    * (pinned equal, duplicate edges included, in PageRankSpec); the
-    * DataFrame twin remains the oracle-checkable path, this is the
-    * flagship GraphX execution of it. One `aggregateMessages` plus one
-    * 1-row vertex action per pass. The returned state carries the
-    * `adj` column like the DataFrame twin, so
-    * [[GraphIO.writeCompatCsv]] accepts it directly.
-    */
-  def compat(edges: DataFrame, k: Long, passes: Int,
-             beta: Double = 0.15): PageRank.CompatState = {
-    require(passes >= 1, "compat needs at least the init pass")
-    val spark = edges.sparkSession
-    val n = k.toDouble * k.toDouble
-    val raw = edges.select("src", "dst")
-    val ded = raw.distinct()
-    val graph0 = fromEdges(ded)
-
-    // Init pass (pageRank_v2.java:153-169): contrib(v) = rawInDeg(v)·1/N
-    // (every raw in-edge carries 1/N; heads get the Null-sentinel 0.0).
-    val rawInDeg: RDD[(VertexId, Long)] = raw
-      .groupBy("dst").count()
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    var g: Graph[Double, Unit] = graph0
-      .outerJoinVertices(rawInDeg)((_, _, ind) =>
-        ind.getOrElse(0L) * (1.0 / n))
-      .cache()
-    var d = sinkMass(g)
-
-    var prev: Graph[Double, Unit] = null
-    var pass = 1
-    while (pass < passes) {
-      val dd = d
-      // Lazy rank update; the sink's diverted mass never re-enters as
-      // its own rank (its row left the state, pageRank_v2.java:216-218).
-      val ranked = g.mapVertices((id, c) =>
-        if (id == 0L) 0.0 else (1 - beta) * (c + dd / n) + beta / n)
-      val msgs = ranked.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr), // whole rank, no division
-        _ + _)
-      if (prev != null) {
-        prev.unpersistVertices(false)
-        prev.edges.unpersist(false)
-      }
-      prev = g
-      g = ranked.outerJoinVertices(msgs)((_, _, m) => m.getOrElse(0.0))
-        .cache()
-      d = sinkMass(g)
-      pass += 1
-    }
-    val contribs = spark.createDataFrame(
-      g.vertices.filter(_._1 != 0L).map { case (id, c) => Row(id, c) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("contrib",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    // Deduped adjacency circulates with the state like the DataFrame
-    // twin's (pageRank_v2.java:39,141); contribution-only targets get
-    // an empty list.
-    import org.apache.spark.sql.functions.{array, coalesce, col}
-    val state = contribs
-      .join(GraphOps.adjacency(ded), Seq("node"), "left_outer")
-      .select(col("node"), col("contrib"),
-        coalesce(col("adj"), array().cast("array<long>")).as("adj"))
-    PageRank.CompatState(state, d)
-  }
-
-  /** Node 0's accumulated mass — the counter read; also materializes
-    * the pass's cached vertices (one scalar action, no data collect).
-    */
-  private def sinkMass(g: Graph[Double, Unit]): Double =
-    g.vertices.filter(_._1 == 0L).map(_._2).fold(0.0)(_ + _)
-
   /** Int64 fixed-point standard PageRank on GraphX — the GraphX
     * execution of [[graft.queries.GraphQueries.g04_pagerank]]'s exact
     * integer recurrence (scale 10¹², β = 15/100, truncating division):
@@ -206,17 +120,11 @@ object PageRankGraphX {
     *          + D div n)) div 100,  D = Σ_{dangling u} r(u)
     *
     * Long sums are associative, so unlike the double-precision
-    * flagship ([[standard]], rows-only checked) this path is
-    * bit-identical to the DataFrame loop AND the unrolled DuckDB
-    * oracle regardless of message merge order — the GraphX engine
-    * itself becomes oracle-gated. Expects a deduplicated edge list
+    * [[standardOn]] (rows-only checked) this path is bit-identical to
+    * the DataFrame loop AND the unrolled DuckDB oracle regardless of
+    * message merge order — the GraphX engine itself becomes
+    * oracle-gated. Expects a graph built from a deduplicated edge list
     * (the derived graph is distinct by construction).
-    */
-  def standardFixedPoint(edges: DataFrame, iters: Int): DataFrame =
-    standardFixedPointOn(fromEdges(edges), iters)
-
-  /** [[standardFixedPoint]] on an already-built graph (see
-    * [[standardOn]]).
     */
   def standardFixedPointOn(graph0: Graph[Double, Unit], iters: Int): DataFrame = {
     val spark = sessionOf(graph0.vertices)
@@ -253,48 +161,5 @@ object PageRankGraphX {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("rank_fp",
           org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** Pregel-API variant (BASELINE.json `spark_approach`): textbook
-    * damped PageRank `r' = β/N + (1−β)·Σ r(u)/deg(u)` driven by
-    * `graphx.Pregel` for a fixed superstep count.
-    *
-    * Deliberately WITHOUT dangling-mass redistribution: Pregel's
-    * vertex program sees only its own messages — a per-superstep
-    * GLOBAL scalar (the dangling sum) has no home in the model, which
-    * is exactly why [[standard]] uses `aggregateMessages` + a driver
-    * loop for the reference's semantics (SURVEY.md §4.1). On
-    * dangling-free graphs the two agree exactly (pinned by
-    * PageRankSpec); on general graphs this variant leaks dangling
-    * mass the same way `graphx.lib.PageRank` does.
-    */
-  def pregel(edges: DataFrame, iters: Int, beta: Double = 0.15): DataFrame = {
-    import org.apache.spark.graphx.{EdgeTriplet, Pregel}
-    val spark = edges.sparkSession
-    val graph0 = fromEdges(edges)
-    val n = graph0.numVertices.toDouble
-    val withDeg: Graph[(Double, Int), Unit] = graph0
-      .outerJoinVertices(graph0.outDegrees)((_, _, d) => (1.0 / n, d.getOrElse(0)))
-      .cache()
-
-    // message = Σ incoming r/deg of the PREVIOUS superstep; the first
-    // Pregel pass delivers initialMsg, which must reproduce iteration 1
-    // for the uniform init: every in-neighbor holds 1/N.
-    val ranked = Pregel(withDeg, initialMsg = Double.NaN,
-        maxIterations = iters, activeDirection = org.apache.spark.graphx.EdgeDirection.Out)(
-      vprog = (_, attr: (Double, Int), msg: Double) =>
-        if (msg.isNaN) attr // superstep 0: keep the 1/N init
-        else (beta / n + (1 - beta) * msg, attr._2),
-      sendMsg = (t: EdgeTriplet[(Double, Int), Unit]) =>
-        Iterator((t.dstId, t.srcAttr._1 / t.srcAttr._2)),
-      mergeMsg = _ + _)
-
-    spark.createDataFrame(
-      ranked.vertices.map { case (id, (rank, _)) => Row(id, rank) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
   }
 }

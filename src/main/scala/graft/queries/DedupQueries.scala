@@ -956,8 +956,8 @@ object DedupQueries {
     * graph, connected components assign every document a cluster id
     * (the component's minimum doc_id, via min-label propagation over
     * `rounds` fixed rounds, the SQL-unrollable form — the converged
-    * variant is [[graft.graph.GraphOps.connectedComponents]]), and the
-    * cluster representative is the keeper. Documents with no candidate
+    * variant is [[graft.graph.GraphOps.connectedComponentsFromSym]]),
+    * and the cluster representative is the keeper. Documents with no candidate
     * pair are their own singleton cluster.
     *
     * Scale shape: the pair graph is tiny relative to the corpus

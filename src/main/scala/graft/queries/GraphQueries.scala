@@ -552,7 +552,7 @@ object GraphQueries {
     * every node. Hash-exact iff every node's double rank is inside
     * tolerance; the raw-rank surface stays available via
     * [[graft.graph.PageRankGraphX.standardOn]] (spec-pinned against
-    * the DataFrame path in PageRankSpec).
+    * a plain-Scala reference in PageRankSpec).
     */
   def g07_pagerank_graphx(s: SparkSession, dir: String): DataFrame = {
     val dbl = graft.graph.PageRankGraphX.standardOn(graphxGraph(s, dir), G07Iters)
@@ -1289,8 +1289,8 @@ object GraphQueries {
 
   /** Delta-CONVERGED HITS — [[hitsLoop]]'s recurrence run to a
     * fixed-point criterion instead of a fixed round count (the
-    * `standardConverged` pattern the CC/BFS/SSSP loops use, applied
-    * to the two-vector recurrence): stop when max|Δauth| + max|Δhub|
+    * change-count termination g11's CC loop and the BFS/SSSP loops
+    * use, applied to the two-vector recurrence): stop when max|Δauth| + max|Δhub|
     * (fixed-point units, so the tolerance is exact integer
     * arithmetic) falls to ≤ `tolFp`, or at the `maxRounds` budget.
     * Returns (result, roundsRun) — the stopped count is what makes

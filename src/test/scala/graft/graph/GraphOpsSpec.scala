@@ -7,8 +7,6 @@ class GraphOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def edges(pairs: (Long, Long)*) = pairs.toDF("src", "dst")
-
   test("kChainEdges generates the reference k=3 fixture") {
     val got = GraphIO.kChainEdges(spark, 3)
       .as[(Long, Long)].collect().toSet
@@ -18,46 +16,14 @@ class GraphOpsSpec extends AnyFunSuite {
       (7L, 8L), (8L, 9L), (9L, 0L)))
   }
 
-  test("transpose twice is identity") {
-    val e = edges((1, 2), (2, 3), (3, 0), (1, 3))
-    val twice = GraphOps.transpose(GraphOps.transpose(e))
-    assert(twice.as[(Long, Long)].collect().toSet ===
-      e.as[(Long, Long)].collect().toSet)
-  }
-
-  test("adjacency dedups and sorts out-neighbors") {
-    val e = edges((1, 3), (1, 2), (1, 3), (2, 1))
-    val adj = GraphOps.adjacency(e).as[(Long, Seq[Long])].collect().toMap
-    assert(adj === Map(1L -> Seq(2L, 3L), 2L -> Seq(1L)))
-  }
-
-  test("danglingNodes finds nodes without out-edges") {
-    val e = edges((1, 2), (2, 3), (2, 0))
-    val d = GraphOps.danglingNodes(e).as[Long].collect().toSet
-    assert(d === Set(0L, 3L))
-  }
-
-  test("degrees count duplicate edges") {
-    val e = edges((1, 2), (1, 2), (2, 3))
-    val out = GraphOps.outDegrees(e).as[(Long, Long)].collect().toMap
-    assert(out === Map(1L -> 2L, 2L -> 1L))
-    val in = GraphOps.inDegrees(e).as[(Long, Long)].collect().toMap
-    assert(in === Map(2L -> 2L, 3L -> 1L))
-  }
-
-  test("explodeAdjacency inverts adjacency on deduped edges") {
-    val e = edges((1, 2), (1, 3), (2, 3))
-    val back = GraphOps.explodeAdjacency(GraphOps.adjacency(e))
-    assert(back.as[(Long, Long)].collect().toSet ===
-      e.as[(Long, Long)].collect().toSet)
-  }
-
   test("converged connectedComponents agrees with graphx.lib.ConnectedComponents") {
     import spark.implicits._
     // two chains + an isolated 2-cycle + a bridge: components {1..4,9}, {5,6}
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 2L), (5L, 6L), (6L, 5L))
       .toDF("src", "dst")
-    val viaDf = GraphOps.connectedComponents(edges)
+    val sym = edges.union(edges.select($"dst", $"src")).toDF("src", "dst")
+      .distinct()
+    val viaDf = GraphOps.connectedComponentsFromSym(sym)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val g = PageRankGraphX.fromEdges(edges)
     val viaGx = org.apache.spark.graphx.lib.ConnectedComponents.run(g)
@@ -82,7 +48,8 @@ class GraphOpsSpec extends AnyFunSuite {
     // self-loop singleton) it matches the label-prop fixpoint exactly
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 2L), (5L, 6L),
       (6L, 5L), (7L, 7L)).toDF("src", "dst")
-    val viaProp = GraphOps.connectedComponents(e)
+    val sym = e.union(e.select($"dst", $"src")).toDF("src", "dst").distinct()
+    val viaProp = GraphOps.connectedComponentsFromSym(sym)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaLog = GraphOps.connectedComponentsLogN(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

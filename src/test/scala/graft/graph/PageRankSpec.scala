@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.io.Source
 
 /** Compat-mode parity with the reference's committed golden output and
-  * with an independent in-driver reference implementation; standard
-  * mode invariants + GraphX equivalence.
+  * with an independent in-driver reference implementation; GraphX
+  * standard PageRank against its own plain-Scala reference.
   */
 class PageRankSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,6 +46,25 @@ class PageRankSpec extends AnyFunSuite {
       pass += 1
     }
     (contrib, d)
+  }
+
+  /** Independent plain-Scala textbook PageRank: contributions divided
+    * by out-degree, dangling mass D spread as D/N every iteration.
+    */
+  private def standardRef(edges: Seq[(Long, Long)], iters: Int,
+                          beta: Double = 0.15): Map[Long, Double] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).toSet
+    val n = nodes.size.toDouble
+    val outDeg = edges.groupBy(_._1).map { case (u, es) => u -> es.size }
+    var rank = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters) {
+      val d = nodes.toSeq.filterNot(outDeg.contains).map(rank).sum
+      val in = edges.groupBy(_._2).map { case (v, es) =>
+        v -> es.map { case (u, _) => rank(u) / outDeg(u) }.sum }
+      rank = nodes.map(v =>
+        v -> (beta / n + (1 - beta) * (in.getOrElse(v, 0.0) + d / n))).toMap
+    }
+    rank
   }
 
   /** The reference's committed k=3, one-pass output (FIXTURES.md §A.3). */
@@ -212,103 +231,51 @@ class PageRankSpec extends AnyFunSuite {
     }
   }
 
-  test("GraphX compat matches DataFrame compat, duplicate edges included") {
+  test("compat matches the independent reference impl, duplicate edges included") {
     // k-chain fixture with DUPLICATED edges: the reference counts every
     // raw in-edge in the init pass (pageRank_v2.java:163) but iterates
-    // over the HashSet-deduped adjacency (pageRank_v2.java:122,195) —
-    // both engines must agree on both behaviors.
+    // over the HashSet-deduped adjacency (pageRank_v2.java:122,195).
     val k = 3L
     val base = GraphIO.kChainEdges(spark, k)
       .as[(Long, Long)].collect().toSeq
-    val withDups = (base ++ base.take(4) ++ base.take(2)).toDF("src", "dst")
-    for (passes <- Seq(1, 3)) {
-      val df = PageRank.compat(withDups, k, passes)
-      val gx = PageRankGraphX.compat(withDups, k, passes)
-      def toMap(st: org.apache.spark.sql.DataFrame) =
-        st.select("node", "contrib", "adj")
-          .as[(Long, Double, Seq[Long])].collect()
-          .map { case (n, c, a) => n -> (c, a.toSet) }.toMap
-      val dfM = toMap(df.state); val gxM = toMap(gx.state)
-      assert(gxM.keySet === dfM.keySet, s"passes=$passes")
-      dfM.foreach { case (node, (c, adj)) =>
-        assert(math.abs(gxM(node)._1 - c) < Eps,
-          s"passes=$passes node=$node gx=${gxM(node)._1} df=$c")
-        assert(gxM(node)._2 === adj, s"passes=$passes node=$node adj")
+    val withDups = base ++ base.take(4) ++ base.take(2)
+    val adj = withDups.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
+    for (passes <- Seq(1, 3, 7)) {
+      val (expected, expD) = compatRef(withDups, k, passes)
+      val got = PageRank.compat(withDups.toDF("src", "dst"), k, passes)
+      val state = got.state.select("node", "contrib", "adj")
+        .as[(Long, Double, Seq[Long])].collect()
+        .map { case (n, c, a) => n -> (c, a.toSet) }.toMap
+      assert(state.keySet === expected.keySet, s"passes=$passes")
+      expected.foreach { case (node, c) =>
+        assert(math.abs(state(node)._1 - c) < Eps,
+          s"passes=$passes node=$node got=${state(node)._1} want=$c")
+        assert(state(node)._2 === adj.getOrElse(node, Set.empty),
+          s"passes=$passes node=$node adj")
       }
-      assert(math.abs(gx.danglingMass - df.danglingMass) < Eps)
+      assert(math.abs(got.danglingMass - expD) < Eps, s"passes=$passes")
     }
   }
 
   test("standard mode conserves total mass on an arbitrary graph") {
-    // graph with multi-out-degree nodes, a dangling node, a cycle
+    // graph with multi-out-degree nodes, a dangling node, a cycle, a
+    // self-loop; iterations stay ≤ 10 because standardOn has no
+    // lineage truncation
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (3L, 4L),
-      (4L, 5L), (5L, 5L), (6L, 1L)).toDF("src", "dst")
-    for (iters <- Seq(1, 5, 20)) {
-      val ranks = PageRank.standard(edges, iters)
+      (4L, 5L), (5L, 5L), (6L, 1L))
+    val graph = PageRankGraphX.fromEdges(edges.toDF("src", "dst"))
+    for (iters <- Seq(1, 5, 10)) {
+      val ranks = PageRankGraphX.standardOn(graph, iters)
         .as[(Long, Double)].collect().toMap
-      assert(ranks.size === 6)
+      val expected = standardRef(edges, iters)
+      assert(ranks.keySet === expected.keySet, s"iters=$iters")
+      expected.foreach { case (node, r) =>
+        assert(math.abs(ranks(node) - r) < 1e-10,
+          s"iters=$iters node=$node got=${ranks(node)} want=$r")
+      }
       val total = ranks.values.sum
       assert(math.abs(total - 1.0) < 1e-9, s"iters=$iters total=$total")
       assert(ranks.values.forall(_ > 0))
     }
-  }
-
-  test("standard DataFrame and GraphX paths agree") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (3L, 4L),
-      (4L, 5L), (5L, 5L), (6L, 1L)).toDF("src", "dst")
-    val df = PageRank.standard(edges, 10).as[(Long, Double)].collect().toMap
-    val gx = PageRankGraphX.standard(edges, 10)
-      .as[(Long, Double)].collect().toMap
-    assert(df.keySet === gx.keySet)
-    df.foreach { case (node, r) =>
-      assert(math.abs(r - gx(node)) < 1e-10, s"node $node: df=$r gx=${gx(node)}")
-    }
-  }
-
-  test("converged pagerank stops early on a pre-converged graph") {
-    // uniform init is stationary on a cycle (every vertex in/out-degree
-    // 1, no dangling mass): pass 1 reproduces 1/m everywhere, so the
-    // L1 delta is ~0 and the loop must stop far before maxIters.
-    val m = 12L
-    val edges = (1L to m).map(i => (i, if (i == m) 1L else i + 1))
-      .toDF("src", "dst")
-    val res = PageRank.standardConverged(edges, eps = 1e-12, maxIters = 20)
-    assert(res.iters === 1, s"expected early stop, ran ${res.iters}")
-    assert(res.delta < 1e-12)
-    val ranks = res.ranks.as[(Long, Double)].collect().toMap
-    assert(ranks.size === m)
-    ranks.values.foreach(r => assert(math.abs(r - 1.0 / m) < Eps))
-  }
-
-  test("converged pagerank at eps=0 equals fixed-trip standard") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (3L, 4L),
-      (4L, 5L), (5L, 5L), (6L, 1L)).toDF("src", "dst")
-    val res = PageRank.standardConverged(edges, eps = 0.0, maxIters = 7)
-    assert(res.iters === 7) // delta < 0 never fires
-    val conv = res.ranks.as[(Long, Double)].collect().toMap
-    val fixed = PageRank.standard(edges, 7).as[(Long, Double)].collect().toMap
-    assert(conv.keySet === fixed.keySet)
-    conv.foreach { case (node, r) =>
-      assert(math.abs(r - fixed(node)) < Eps, s"node $node")
-    }
-  }
-
-  test("Pregel variant agrees with DataFrame standard on a dangling-free cycle") {
-    // every vertex has in- and out-degree 1, so Pregel's
-    // only-messaged-vertices-update rule covers the whole graph and no
-    // dangling mass exists — the regime where pregel() and standard()
-    // are the same recurrence.
-    val m = 12L
-    val edges = (1L to m).map(i => (i, if (i == m) 1L else i + 1)).toDF("src", "dst")
-    val viaPregel = PageRankGraphX.pregel(edges, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val viaDf = PageRank.standard(edges, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(viaPregel.keySet === viaDf.keySet)
-    viaDf.foreach { case (node, rank) =>
-      assert(math.abs(viaPregel(node) - rank) < Eps, s"node $node")
-    }
-    // uniform stationary distribution on a cycle: ranks stay 1/m
-    viaPregel.values.foreach(r => assert(math.abs(r - 1.0 / m) < Eps))
   }
 }

@@ -58,8 +58,9 @@ class GraphQueriesSpec extends AnyFunSuite {
   test("fixed-point pagerank is bit-identical across DataFrame and GraphX") {
     val df = GraphQueries.g04_pagerank(spark, dir)
       .as[(Long, Long)].collect().toMap
-    val gx = graft.graph.PageRankGraphX
-      .standardFixedPoint(GraphQueries.derivedEdges(spark, dir), 3)
+    val graph = graft.graph.PageRankGraphX
+      .fromEdges(GraphQueries.derivedEdges(spark, dir))
+    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(graph, 3)
       .as[(Long, Long)].collect().toMap
     assert(gx === df)
   }
