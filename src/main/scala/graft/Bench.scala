@@ -14,57 +14,25 @@ object Bench {
       try Tables(spark, sfDir, t).limit(1).count()
       catch { case _: Throwable => () }
     }
-    // Evict shared/pinned caches at family boundaries
-    // (d→g→m→p→q→s→t): families don't share relations across the
-    // boundary, so this bounds executor memory to one family's working
-    // set without losing within-family reuse. Deep probes (*_i10)
-    // additionally evict right after their own samples: their working
-    // set is the largest in the run and must not shade their siblings'
-    // medians.
+    // Family-boundary eviction is SparkEntry.byFamily's. Deep probes
+    // (*_i10) additionally evict right after their own samples: their
+    // working set is the largest in the run and must not shade their
+    // siblings' medians.
     //
     // Median of 3 back-to-back runs per query: a single GC pause or
     // JIT deopt then shifts one sample, not the query's reported time
     // (the q17–q21 cross-round variance pattern). Runs 2–3 hit the
     // family's warmed shared caches — the medians measure steady-state
     // query execution, which is what round-over-round comparison needs.
-    // Deep probes (*_i10) additionally report sample 1 in a "cold" map:
-    // their later samples resume from the memoized mid-loop checkpoint,
-    // so the median alone would hide the full-pass cost the probe
-    // exists to measure (round-6 verdict item).
+    // Sample 1 of every entry is reported too, in a "cold" map: entries
+    // whose later samples resume from a memo (the *_i10 checkpoints,
+    // the converged graph loops, the versioned-table builds) would
+    // otherwise hide the full-pass cost.
     val debugSamples = sys.env.contains("SPARK_GRAFT_SAMPLES")
     // Sample count per query. The driver's artifact is always median-of-3
     // (default); the override exists for one-shot probes of queries whose
     // single sample runs tens of minutes (d02 at sf10).
     val nSamples = sys.env.getOrElse("SPARK_GRAFT_NSAMPLES", "3").toInt
-    // Queries whose count()-side re-optimization ELIMINATES at least
-    // one join OR window (count() proves row-preserving joins
-    // irrelevant, and column-prunes a window whose output nothing
-    // consumes — both measure less than the full plan). The set is
-    // pinned by a PlanHygieneSpec sweep of the whole registry: d12 and
-    // d06 lose ALL their joins under count (their count number is a
-    // scan-count), p04 loses its probe join, the PageRank family
-    // loses its two 1-row scalar-assembly joins (cost ~0, listed for
-    // completeness), and the pure window projections q07/q33/q37/q46
-    // lose the Window node itself (exposed by the r13 sf10 sweep:
-    // q07 read 0.16s where the real 10M-row window is seconds). For
-    // these, one extra `toRdd.count()` pass — which materializes the
-    // full optimized plan with no count-side pruning — is timed into
-    // an "uncounted" map so the artifact carries the honest cost
-    // alongside the comparable count() number.
-    // (g19_hits left the set in r14: the lineage-rooted hitsLoop's lazy
-    // tail joins all survive count(), and its eager round checkpoints
-    // execute inside the timed sample — see the `cold` map instead.)
-    val uncountedQueries = Set("d12_span_removal", "d06_neardup_clusters",
-      "d13_incremental_neardup", "p04_contamination", "g04_pagerank",
-      "g04_pagerank_i10", "g07_pagerank_graphx", "g08_pagerank_compat",
-      "g09_pagerank_personalized", "q41_funnel", "g16_clustering",
-      "p09_source_report", "q07_window_running", "q33_lead_lag",
-      "q37_range_frame", "q46_ranks", "d15_quality_keeper", "p03_pack",
-      "p08_curriculum", "q28_asof_join", "q43_histogram_quantile",
-      "s07_knn_topk_operator")
-    // Family prefix = the leading letters (not one char): the st
-    // streaming entries are their own family, not part of s-similarity.
-    def famOf(name: String): String = name.takeWhile(!_.isDigit)
     // Co-tenancy annotation (r11 hygiene item): both rounds' driver
     // artifacts needed a BENCH_NOTES cross-reference to interpret cold
     // outliers — record the host 1-min load average at start and end
@@ -74,86 +42,43 @@ object Bench {
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val loadStart = loadAvg
-    // STRUCTURAL metrics per query (r16 verdict item): wall-clock
-    // comparisons across rounds are confounded by hypervisor-level
-    // host noise invisible to loadavg (the r16 afternoon finding), but
-    // rows/bytes through the exchanges and scans are deterministic
-    // given the plan — the numbers that actually carry to a 1000-
-    // executor cluster. One listener accumulates task metrics; each
-    // sample resets, runs, drains the (async) listener bus, snapshots.
-    //   sw/sb = shuffle records/bytes written, ir/ib = input
-    //   records/bytes read.
-    val structural = new org.apache.spark.scheduler.SparkListener {
-      import java.util.concurrent.atomic.AtomicLong
-      val Seq(sw, sb, ir, ib) = Seq.fill(4)(new AtomicLong)
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          sw.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          sb.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ir.addAndGet(m.inputMetrics.recordsRead)
-          ib.addAndGet(m.inputMetrics.bytesRead)
-        }
-      }
-      def reset(): Unit = Seq(sw, sb, ir, ib).foreach(_.set(0))
-      def snap(): Map[String, Long] = Map(
-        "sw" -> sw.get, "sb" -> sb.get, "ir" -> ir.get, "ib" -> ib.get)
-    }
-    spark.sparkContext.addSparkListener(structural)
-    def drainAndSnap(): Map[String, Long] = {
-      org.apache.spark.sql.graft.ColumnBridge
-        .drainListenerBus(spark.sparkContext)
-      structural.snap()
-    }
-    var family = ""
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-    val results = all.map { case (name, fn) =>
-      if (family.nonEmpty && famOf(name) != family) {
-        graft.queries.SharedRelations.evict(spark)
-        // The evict drops block-manager entries but their heap garbage
-        // lingers until the next major GC — measured shading g04/g08
-        // medians 2-3x after the d family. One explicit collection per
-        // family boundary (7/run) keeps each family's samples clean.
-        System.gc()
-      }
-      family = famOf(name)
+    val results = SparkEntry.byFamily(spark,
+        n => only.forall(_.findFirstIn(n).isDefined)) { (name, fn) =>
       // A failed materialization must NOT masquerade as a fast query
       // (the r9 artifact recorded seven instant analysis failures as
       // 0.07-0.10s entries): any sample that throws marks the query
       // errored, its phantom times are excluded from every map and
       // total, and the error lands in a first-class `err` map.
       var err: Option[String] = None
-      val samples = (1 to nSamples).map { _ =>
-        structural.reset()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          if (err.isEmpty) err = Some(e.toString)
+      var last: Option[org.apache.spark.sql.DataFrame] = None
+      def run(materialize: org.apache.spark.sql.DataFrame => Long) =
+        Recorder.sample(spark) {
+          try { val df = fn(spark, sfDir); last = Some(df); materialize(df) }
+          catch { case e: Throwable => if (err.isEmpty) err = Some(e.toString) }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        (dt, drainAndSnap())
-      }
+      val samples = (1 to nSamples).map(_ => run(_.count()))
       if (debugSamples)
         System.err.println(f"SAMPLES $name ${samples.map(t => f"${t._1}%.3f").mkString(" ")}")
-      val unc = if (uncountedQueries(name) && err.isEmpty) {
-        structural.reset()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case e: Throwable => if (err.isEmpty) err = Some(e.toString) }
-        val dt = (System.nanoTime() - t0) / 1e9
-        Some((dt, drainAndSnap()))
-      } else None
+      // An entry whose count() plan drops a join or window (see
+      // Recorder.countCollapse) gets one extra `toRdd.count()` pass,
+      // which materializes the full optimized plan, timed into an
+      // "uncounted" map: the artifact carries the honest cost next to
+      // the comparable count() number.
+      val collapses = err.isEmpty && last.exists { df =>
+        val (full, underCount) = Recorder.countCollapse(df)
+        underCount < full
+      }
+      val unc = if (collapses) Some(run(_.queryExecution.toRdd.count()))
+        else None
       if (name.endsWith("_i10")) graft.queries.SharedRelations.evict(spark)
       err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
-      val bySec = samples.sortBy(_._1)
-      val (medSec, medStruct) = bySec(samples.length / 2)
+      val (medSec, medTally) = Recorder.median(samples)
       // The reported structural numbers follow the reported time: the
       // median-time sample for the count() methodology, the full-plan
       // pass for the uncounted class (whose count() plan drops the
       // joins/windows the structural numbers exist to price).
-      val struct = unc.map(_._2).getOrElse(medStruct)
-      (name, medSec, samples.head._1, unc.map(_._1), err, struct)
+      val tally = unc.map(_._2).getOrElse(medTally)
+      (name, medSec, samples.head._1, unc.map(_._1), err, tally)
     }
     val (failed, timed) = results.partition(_._5.isDefined)
     // 3-decimal (ms) formatting: full Double.toString made the one-line
@@ -165,57 +90,30 @@ object Bench {
       .mkString("{", ",", "}")
     // Per-family subtotals: regression triage is one look at this map
     // instead of a 59-entry diff.
-    val fams = timed.groupBy(r => famOf(r._1)).toSeq.sortBy(_._1)
+    val fams = timed.groupBy(r => SparkEntry.family(r._1)).toSeq.sortBy(_._1)
       .map { case (f, rs) => s"\"" + f + "\":" + n3(rs.map(_._2).sum) }
       .mkString("{", ",", "}")
-    // Cold map: queries whose later samples resume from a memo (the
-    // *_i10 cpMemo resume; the memoized converged loops g11/g12/g13;
-    // g19's round-checkpoint memo since r14) report sample 1 too — the
-    // median alone would hide the full-pass cost.
     val cold = timed
-      .filter { case (n, _, _, _, _, _) =>
-        n.endsWith("_i10") || n.startsWith("g11") || n.startsWith("g12") ||
-          n.startsWith("g13") || n.startsWith("g14") || n.startsWith("g15") ||
-          n.startsWith("g19") || n.startsWith("g20") || n.startsWith("q50") ||
-          n.startsWith("q51") || n.startsWith("q53") || n.startsWith("q54") ||
-          n.startsWith("q55") || n.startsWith("q57") ||
-          n.startsWith("q58") || n.startsWith("q59") ||
-          // the versioned-table builds (multi-col q60, evolution
-          // q61/q62 — shared memo, q62's "cold" rides q61's build —
-          // z-optimize q63) pay their commits in sample 1 only;
-          // q64/q65 ride q57's memoized table, q66's sample 1 builds
-          // the bloom sidecar
-          n.startsWith("q60") || n.startsWith("q61") ||
-          n.startsWith("q62") || n.startsWith("q63") ||
-          n.startsWith("q64") || n.startsWith("q65") ||
-          n.startsWith("q66") ||
-          // st13/st14's sample 1 builds their versioned tables
-          n.startsWith("st13") || n.startsWith("st14") }
       .map { case (k, _, c, _, _, _) => s"\"" + k + "\":" + n3(c) }
       .mkString("{", ",", "}")
-    // Honest-cost map for the join-eliminated class (see
-    // uncountedQueries above): toRdd.count() time, NOT added to the
-    // total — the total stays the comparable count() methodology.
+    // Honest-cost map for the count()-collapse class (see the samples
+    // above): toRdd.count() time, NOT added to the total — the total
+    // stays the comparable count() methodology.
     val unc = results
       .collect { case (k, _, _, Some(u), None, _) => s"\"" + k + "\":" + n3(u) }
       .mkString("{", ",", "}")
-    // Structural maps (see the listener above): per-query in the full
-    // line / BENCH_LAST.json, per-family sums in the trailer — the
+    // Structural maps (Recorder tallies): per-query in the full line /
+    // BENCH_LAST.json, per-family sums in the trailer — the
     // deterministic round-over-round basis wall-clock can't be on a
-    // noisy host.
-    def structJson(m: Map[String, Long]): String =
-      Seq("sw", "sb", "ir", "ib")
-        .map(k => s"\"" + k + "\":" + m.getOrElse(k, 0L))
-        .mkString("{", ",", "}")
+    // noisy host. sw/sb = shuffle records/bytes written, ir/ib = input
+    // records/bytes read.
+    def structJson(t: Recorder.Tally): String =
+      s"""{"sw":${t.shuffleRecords},"sb":${t.shuffleBytes},"ir":${t.inputRecords},"ib":${t.inputBytes}}"""
     val structQ = timed
       .map { case (k, _, _, _, _, st) => s"\"" + k + "\":" + structJson(st) }
       .mkString("{", ",", "}")
-    val structFam = timed.groupBy(r => famOf(r._1)).toSeq.sortBy(_._1)
-      .map { case (f, rs) =>
-        val sums = Seq("sw", "sb", "ir", "ib")
-          .map(k => k -> rs.map(_._6.getOrElse(k, 0L)).sum).toMap
-        s"\"" + f + "\":" + structJson(sums)
-      }
+    val structFam = timed.groupBy(r => SparkEntry.family(r._1)).toSeq.sortBy(_._1)
+      .map { case (f, rs) => s"\"" + f + "\":" + structJson(rs.map(_._6).reduce(_ + _)) }
       .mkString("{", ",", "}")
     val errMap = failed
       .map { case (k, _, _, _, Some(e), _) => s"\"" + k + "\":" + Json.quote(e.take(300)) }

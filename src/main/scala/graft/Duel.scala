@@ -1,16 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.Recorder.Tally
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the engine's custom-plan operators: each duel runs
   * the custom operator and its stock-Spark twin on the SAME input and
-  * reports wall time plus total shuffle records/bytes written (task
-  * metrics via listener) — the two numbers the custom tiers exist to
+  * reports wall time plus total shuffle records/bytes written (the
+  * [[Recorder]] tally) — the two numbers the custom tiers exist to
   * move. Prints one JSON line per duel.
   *
   *  - `topk`: [[graft.plans.GroupedTopK]] (partial heaps → ≤k rows per
@@ -30,7 +28,8 @@ import org.apache.spark.sql.functions._
   *    pays two exchanges and an Expand; the duel exists to locate
   *    that crossover honestly, not to flatter the rule.
   *
-  * Methodology matches Bench: median of 3 samples (override with
+  * Methodology matches Bench (one [[Recorder]] sample per run, the
+  * median-time sample's tally reported): median of 3 samples (override with
   * `SPARK_GRAFT_NSAMPLES`), materialization via
   * `queryExecution.toRdd.count()` so count()-side re-optimization
   * can't prune either contender's plan, `SPARK_GRAFT_SF_DIR` selects
@@ -38,95 +37,19 @@ import org.apache.spark.sql.functions._
   */
 object Duel {
 
-  private final class ShuffleTally extends SparkListener {
-    val records = new AtomicLong(0L)
-    val bytes = new AtomicLong(0L)
-    val inputRecords = new AtomicLong(0L)
-    val inputBytes = new AtomicLong(0L)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        inputRecords.addAndGet(m.inputMetrics.recordsRead)
-        inputBytes.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-  }
-
-  /** (median seconds, shuffle records, shuffle bytes) of `n` runs.
-    * Each sample keeps ITS OWN tally and the reported records/bytes
-    * are the median-time sample's — the same run the reported seconds
-    * come from (for these fixed-plan duels the tallies are identical
-    * every run anyway, but this keeps one convention across the file
-    * with `measureCc`/`measurePr`, whose converged-loop traffic can
-    * shift between samples).
-    */
+  /** The median-time sample of `n` materializations of `df` (re-built
+    * per sample: callers pass defs, so no sample is served from an
+    * earlier one's shuffle files), with that sample's own tally. */
   private def measure(spark: SparkSession, df: => DataFrame, n: Int)
-      : (Double, Long, Long) = {
-    val samples = (1 to n).map { _ =>
-      val tally = new ShuffleTally
-      spark.sparkContext.addSparkListener(tally)
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // task-end events are posted async; drain before reading
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(tally)
-      (sec, tally.records.get(), tally.bytes.get())
-    }
-    samples.sortBy(_._1).apply(samples.length / 2)
-  }
+      : (Double, Tally) =
+    Recorder.median(Seq.fill(n)(
+      Recorder.sample(spark)(df.queryExecution.toRdd.count())))
 
-  /** (median seconds, input records read) of `n` runs — the scan-cost
-    * twin of [[measure]] for layout duels (z-order, partition
-    * pruning), where the number that scales is what the reader
-    * DECODED, not what the shuffle moved. Median-sample convention,
-    * same as `measure`.
-    */
-  private def measureScan(spark: SparkSession, df: => DataFrame, n: Int)
-      : (Double, Long) = {
-    val samples = (1 to n).map { _ =>
-      val tally = new ShuffleTally
-      spark.sparkContext.addSparkListener(tally)
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ColumnBridge
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(tally)
-      (sec, tally.inputRecords.get())
-    }
-    samples.sortBy(_._1).apply(samples.length / 2)
-  }
-
-  /** (median seconds, input records, input BYTES) — for duels where
-    * record tallies hide the cost (a record-level reader filter
-    * excludes non-matching rows from recordsRead even when their
-    * pages were fetched and decompressed); bytesRead still counts the
-    * fetched file bytes.
-    */
-  private def measureScanIO(spark: SparkSession, df: => DataFrame, n: Int)
-      : (Double, Long, Long) = {
-    val samples = (1 to n).map { _ =>
-      val tally = new ShuffleTally
-      spark.sparkContext.addSparkListener(tally)
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ColumnBridge
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(tally)
-      (sec, tally.inputRecords.get(), tally.inputBytes.get())
-    }
-    samples.sortBy(_._1).apply(samples.length / 2)
-  }
-
-  private def report(name: String, custom: (Double, Long, Long),
-      stock: (Double, Long, Long), sf: String): Unit = {
-    val (ct, cr, cb) = custom
-    val (st, sr, sb) = stock
-    println(f"""{"duel":"$name","sf":"$sf","custom_sec":$ct%.3f,"stock_sec":$st%.3f,"speedup":${st / ct}%.2f,"custom_shuffle_rows":$cr,"stock_shuffle_rows":$sr,"custom_shuffle_bytes":$cb,"stock_shuffle_bytes":$sb}""")
+  private def report(name: String, custom: (Double, Tally),
+      stock: (Double, Tally), sf: String): Unit = {
+    val (ct, c) = custom
+    val (st, s) = stock
+    println(f"""{"duel":"$name","sf":"$sf","custom_sec":$ct%.3f,"stock_sec":$st%.3f,"speedup":${st / ct}%.2f,"custom_shuffle_rows":${c.shuffleRecords},"stock_shuffle_rows":${s.shuffleRecords},"custom_shuffle_bytes":${c.shuffleBytes},"stock_shuffle_bytes":${s.shuffleBytes}}""")
   }
 
   def main(args: Array[String]): Unit = {
@@ -214,8 +137,8 @@ object Duel {
       def band(dir: String) = agg(spark.read.parquet(dir)
         .filter(col("l_suppkey").between(sMax / 2, sMax / 2 + sMax / 8)))
       for ((tag, probe) <- Seq("box2d" -> (box _), "dim2band" -> (band _))) {
-        val (zs, zr) = measureScan(spark, probe(zdir), n)
-        val (ls, lr) = measureScan(spark, probe(ldir), n)
+        val (zs, Tally(_, _, zr, _)) = measure(spark, probe(zdir), n)
+        val (ls, Tally(_, _, lr, _)) = measure(spark, probe(ldir), n)
         println(f"""{"duel":"zorder_$tag","sf":"$sfDir","z_sec":$zs%.3f,"linear_sec":$ls%.3f,"z_scan_rows":$zr,"linear_scan_rows":$lr,"prune_ratio":${lr.toDouble / math.max(zr, 1L)}%.2f}""")
       }
     }
@@ -263,8 +186,8 @@ object Duel {
         .snapshotRelation(spark, root, "l_year", v)
         .filter(col("l_suppkey").between(sMax / 2, sMax / 2 + sMax / 8)))
       for ((tag, probe) <- Seq("box2d" -> (box _), "dim2band" -> (band _))) {
-        val (zs, zr, zb) = measureScanIO(spark, probe(1L), n)
-        val (ps, pr, pb) = measureScanIO(spark, probe(0L), n)
+        val (zs, Tally(_, _, zr, zb)) = measure(spark, probe(1L), n)
+        val (ps, Tally(_, _, pr, pb)) = measure(spark, probe(0L), n)
         println(f"""{"duel":"vtzorder_$tag","sf":"$sfDir","optimized_sec":$zs%.3f,"ingest_sec":$ps%.3f,"optimized_scan_rows":$zr,"ingest_scan_rows":$pr,"optimized_scan_bytes":$zb,"ingest_scan_bytes":$pb,"rows_ratio":${pr.toDouble / math.max(zr, 1L)}%.2f,"bytes_ratio":${pb.toDouble / math.max(zb, 1L)}%.2f}""")
       }
     }
@@ -305,7 +228,7 @@ object Duel {
       // it would otherwise measure off-vs-off and the assert below
       // would fail spuriously)
       spark.conf.set(dppKey, "true")
-      val (ons, onr) = measureScan(spark, q, n)
+      val (ons, Tally(_, _, onr, _)) = measure(spark, q, n)
       // both plans scan the dim exactly once — ON-side the DPP
       // subquery REUSES the join's broadcast; assert that reuse WHILE
       // DPP is still on, and on ONE BOUND instance: `q` is a def, so
@@ -324,11 +247,11 @@ object Duel {
         "dpp duel: DPP subquery did not reuse the join's broadcast — " +
           "dim scanned twice, fact-row subtraction would be skewed")
       spark.conf.set(dppKey, "false")
-      val (offs, offr) = measureScan(spark, q, n)
+      val (offs, Tally(_, _, offr, _)) = measure(spark, q, n)
       spark.conf.set(dppKey, prevDpp)
       // subtracting the (single) dim scan's rows isolates the
       // FACT-side prune — the number that scales with the corpus
-      val (_, dimRows) = measureScan(spark, dim, 1)
+      val (_, Tally(_, _, dimRows, _)) = measure(spark, dim, 1)
       val (onFact, offFact) = (onr - dimRows, offr - dimRows)
       println(f"""{"duel":"dpp_star_join","sf":"$sfDir","dpp_sec":$ons%.3f,"no_dpp_sec":$offs%.3f,"dpp_fact_rows":$onFact,"no_dpp_fact_rows":$offFact,"prune_ratio":${offFact.toDouble / math.max(onFact, 1L)}%.2f}""")
     }
@@ -357,8 +280,8 @@ object Duel {
         .agg(sum(col("l_extendedprice")).as("rev"), count(lit(1)).as("n"))
       val nf = graft.sources.Compaction.fileCounts(spark, frag).values.sum
       val nc = graft.sources.Compaction.fileCounts(spark, comp).values.sum
-      val (fsec, frows) = measureScan(spark, probe(frag), n)
-      val (csec, crows) = measureScan(spark, probe(comp), n)
+      val (fsec, Tally(_, _, frows, _)) = measure(spark, probe(frag), n)
+      val (csec, Tally(_, _, crows, _)) = measure(spark, probe(comp), n)
       assert(frows == crows,
         s"compaction duel decoded different row counts: $frows vs $crows")
       println(f"""{"duel":"compaction","sf":"$sfDir","frag_files":$nf,"compact_files":$nc,"frag_sec":$fsec%.3f,"compact_sec":$csec%.3f,"speedup":${fsec / csec}%.2f,"scan_rows":$frows}""")
@@ -384,8 +307,8 @@ object Duel {
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_extendedprice").cast("decimal(28,2)"))
           .cast("double").as("rev"), count(lit(1)).as("n_rows"))
-      val (skipSec, skipRows) = measureScan(spark, q55, n)
-      val (fullSec, fullRows) = measureScan(spark, full, n)
+      val (skipSec, Tally(_, _, skipRows, _)) = measure(spark, q55, n)
+      val (fullSec, Tally(_, _, fullRows, _)) = measure(spark, full, n)
       def res(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
       assert(res(q55) == res(full), "statsskip duel: relations diverge")
       println(f"""{"duel":"statsskip","sf":"$sfDir","skip_rows_decoded":$skipRows,"full_rows_decoded":$fullRows,"rows_ratio":${fullRows.toDouble / math.max(1L, skipRows)}%.1f,"skip_sec":$skipSec%.3f,"full_sec":$fullSec%.3f,"speedup":${fullSec / skipSec}%.2f}""")
@@ -436,9 +359,9 @@ object Duel {
       val liveFiles = spark.read.parquet(stats)
         .filter(col("max_ship") >= to_timestamp(lit("1997-03-05")) &&
           col("min_ship") <= to_timestamp(lit("1997-03-12"))).count()
-      val (hashSec, hashRows, hashBytes) = measureScanIO(spark, hashDir, n)
-      val (dirSec, dirRows, dirBytes) = measureScanIO(spark, rangeDir, n)
-      val (fileSecT, fileRowsT, fileBytes) = measureScanIO(spark, fileSkip, n)
+      val (hashSec, Tally(_, _, hashRows, hashBytes)) = measure(spark, hashDir, n)
+      val (dirSec, Tally(_, _, dirRows, dirBytes)) = measure(spark, rangeDir, n)
+      val (fileSecT, Tally(_, _, fileRowsT, fileBytes)) = measure(spark, fileSkip, n)
       // q58's plan-time probe scans the |files|-row sidecar inside the
       // measured window — subtract it so file_rows_decoded is the DATA
       // decode (the dpp duel's dim-subtraction convention), and report
@@ -478,8 +401,8 @@ object Duel {
       def bloomed = graft.queries.CoreQueries
         .q66_bloom_skipping(spark, sfDir)
       val totalFiles = spark.read.parquet(stats).count()
-      val (plainSec, plainRows, plainBytes) = measureScanIO(spark, plain, n)
-      val (bSec, bRowsT, bBytes) = measureScanIO(spark, bloomed, n)
+      val (plainSec, Tally(_, _, plainRows, plainBytes)) = measure(spark, plain, n)
+      val (bSec, Tally(_, _, bRowsT, bBytes)) = measure(spark, bloomed, n)
       val bRows = bRowsT - totalFiles // plan-time probe, reported apart
       val listedFiles = {
         // the files the bloom actually kept, from the executed plan
@@ -676,28 +599,18 @@ object Duel {
         spark, sym, "duel_sym_bucketed", Runtime.cpus, "src")
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // Unlike `measure` (fixed plan ⇒ identical tallies every run),
-      // a converged-CC run's traffic can shift between samples (AQE
-      // decisions, cache state), so each sample keeps ITS tally and
-      // the reported records/bytes are the median-time sample's — the
-      // same run the reported seconds come from.
-      def measureCc(symRel: org.apache.spark.sql.DataFrame)
-          : (Double, Long, Long) = {
-        val samples = (1 to n).map { _ =>
-          val tally = new ShuffleTally
-          spark.sparkContext.addSparkListener(tally)
-          val t0 = System.nanoTime()
-          val out = graft.graph.GraphOps.connectedComponentsFromSym(symRel)
-          out.queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.graft.ColumnBridge
-            .drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(tally)
+      // The checkpoint release is per-sample tear-down, outside the
+      // timed body.
+      def measureCc(symRel: DataFrame): (Double, Tally) =
+        Recorder.median(Seq.fill(n) {
+          var out: DataFrame = null
+          val sample = Recorder.sample(spark) {
+            out = graft.graph.GraphOps.connectedComponentsFromSym(symRel)
+            out.queryExecution.toRdd.count()
+          }
           org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(out)
-          (sec, tally.records.get(), tally.bytes.get())
-        }
-        samples.sortBy(_._1).apply(samples.length / 2)
-      }
+          sample
+        })
       try {
         val custom = measureCc(bsym)
         val stock = measureCc(sym)
@@ -734,31 +647,23 @@ object Duel {
         spark, e, "duel_edges_bucketed", Runtime.cpus, "src")
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def measurePr(eRel: org.apache.spark.sql.DataFrame)
-          : (Double, Long, Long) = {
-        val samples = (1 to n).map { _ =>
-          val tally = new ShuffleTally
-          spark.sparkContext.addSparkListener(tally)
-          val t0 = System.nanoTime()
-          var pins = List.empty[org.apache.spark.sql.DataFrame]
-          var r = GraphQueries.pagerankInit(nodes, nn)
-          (1 to 3).foreach { _ =>
-            val withDeg = r.join(deg, Seq("node"), "left_outer")
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            pins ::= withDeg
-            r = GraphQueries.pagerankRound(eRel, nodes, withDeg, nn,
-              divideByOutdeg = true)
+      def measurePr(eRel: DataFrame): (Double, Tally) =
+        Recorder.median(Seq.fill(n) {
+          var pins = List.empty[DataFrame]
+          val sample = Recorder.sample(spark) {
+            var r = GraphQueries.pagerankInit(nodes, nn)
+            (1 to 3).foreach { _ =>
+              val withDeg = r.join(deg, Seq("node"), "left_outer")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+              pins ::= withDeg
+              r = GraphQueries.pagerankRound(eRel, nodes, withDeg, nn,
+                divideByOutdeg = true)
+            }
+            r.queryExecution.toRdd.count()
           }
-          r.queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.graft.ColumnBridge
-            .drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(tally)
           pins.foreach(_.unpersist(false))
-          (sec, tally.records.get(), tally.bytes.get())
-        }
-        samples.sortBy(_._1).apply(samples.length / 2)
-      }
+          sample
+        })
       try {
         val custom = measurePr(be)
         val stock = measurePr(e)
@@ -789,26 +694,18 @@ object Duel {
       GraphQueries.derivedNodes(spark, sfDir).queryExecution.toRdd.count()
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def measureHits(bucketed: Boolean): (Double, Long, Long) = {
+      def measureHits(bucketed: Boolean): (Double, Tally) = {
         if (bucketed) {
           spark.conf.set("graft.bucketedEdges", Runtime.cpus.toString)
           // one-time layout write (both orientations), outside samples
           GraphQueries.clearCheckpointMemos(spark)
           GraphQueries.hitsLoop(spark, sfDir, 1).queryExecution.toRdd.count()
         } else spark.conf.unset("graft.bucketedEdges")
-        val samples = (1 to n).map { _ =>
+        Recorder.median(Seq.fill(n) {
           GraphQueries.clearCheckpointMemos(spark)
-          val tally = new ShuffleTally
-          spark.sparkContext.addSparkListener(tally)
-          val t0 = System.nanoTime()
-          GraphQueries.hitsLoop(spark, sfDir, 2).queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.graft.ColumnBridge
-            .drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(tally)
-          (sec, tally.records.get(), tally.bytes.get())
-        }
-        samples.sortBy(_._1).apply(samples.length / 2)
+          Recorder.sample(spark)(
+            GraphQueries.hitsLoop(spark, sfDir, 2).queryExecution.toRdd.count())
+        })
       }
       try {
         val custom = measureHits(bucketed = true)

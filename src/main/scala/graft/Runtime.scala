@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session posture every main runs under (Bench, Verify, Duel,
-  * Explain, ScaleGen, PageRankCli and the probes), so the plans Verify
-  * checks are the plans Bench times.
+  * Explain, ScaleGen and PageRankCli) and the tier-1 specs share, so
+  * the plans Verify and the specs check are the plans Bench times.
   *
   * `SPARK_GRAFT_CPUS` (default 4) sets both the local core count and
   * the shuffle width. A `spark.master` system property (spark-submit

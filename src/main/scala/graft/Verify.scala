@@ -11,20 +11,13 @@ object Verify {
     val spark = Runtime.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Family-boundary cache eviction, same as Bench: bounds memory to
-    // one family's shared relations.
-    var family = ""
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(name.startsWith) }
-      .foreach { case (name, fn) =>
-      if (family.nonEmpty && name.take(1) != family)
-        graft.queries.SharedRelations.evict(spark)
-      family = name.take(1)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    SparkEntry.byFamily(spark, name => only.forall(name.startsWith)) {
+      (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
     }
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(k.startsWith) }

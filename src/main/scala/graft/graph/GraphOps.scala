@@ -226,21 +226,15 @@ object GraphOps {
     * Bellman-Ford. Probed at sf0.1 (15k nodes / 100k sym edges,
     * weights 1..9, weighted ecc 29): Δ=5 → 24 rounds, Δ=20
     * (adaptive) → ~18, Δ=∞ → 17; wall time tracks rounds ~1:1.
-    *
-    * Set `GRAFT_SSSP_LOG=1` to trace per-round (threshold, pending,
-    * frontier, ms) on stderr — the instrumentation the r9 verdict
-    * asked for.
     */
   def ssspFromSym(symW: DataFrame, source: Long, delta: Long = 0L,
                   maxRounds: Int = 200, checkpointEvery: Int = 5): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(delta >= 0, "ssspFromSym: delta must be positive (0 = adaptive)")
-    val trace = sys.env.contains("GRAFT_SSSP_LOG")
     val d = if (delta > 0) delta else {
       val avgW = symW.agg(avg(col("w"))).head().getDouble(0)
       math.max(1L, math.round(4.0 * math.max(1.0, avgW)))
     }
-    if (trace) System.err.println(s"[graft.sssp] delta=$d (requested $delta)")
     var dist = symW.select(col("src").as("node")).distinct()
       .select(col("node"),
         when(col("node") === source, 0L).otherwise(BfsInf).as("dist"),
@@ -263,7 +257,6 @@ object GraphOps {
         threshold = (minPending / d + 1L) * d
         frontierN = pendingN // ≥1 pending sits in [minPending, threshold)
       } else {
-        val t0 = System.nanoTime()
         val isFrontier = col("pending") && col("dist") < threshold
         val nbr = symW.toDF("u", "v", "w")
           .join(dist.filter(isFrontier)
@@ -317,10 +310,6 @@ object GraphOps {
         prev = dist
         dist = next
         round += 1
-        if (trace) System.err.println(
-          s"[graft.sssp] round=$round threshold=$threshold " +
-            s"pending=$pendingN frontier=$frontierN minPending=$minPending " +
-            s"ms=${(System.nanoTime() - t0) / 1000000}")
       }
     }
     if (pendingN > 0) {
@@ -330,7 +319,6 @@ object GraphOps {
       throw new IllegalStateException(
         s"ssspFromSym: not converged after $maxRounds rounds")
     }
-    if (trace) System.err.println(s"[graft.sssp] converged rounds=$round")
     val out = dist
       .select(col("node"),
         when(col("dist") === BfsInf, -1L).otherwise(col("dist")).as("dist"))

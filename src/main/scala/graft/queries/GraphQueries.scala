@@ -1366,7 +1366,9 @@ object GraphQueries {
     * hasn't converged by round K (the criterion then never fires and
     * both return round K's vectors with rounds_run = K, so the cap is
     * hash-safe at ANY scale, not just the ones measured). The pair is
-    * chosen from measurement ([[graft.HitsProbe]], budget 40): the
+    * chosen from measurement (a budget-40 run, BENCH_NOTES.md
+    * "g20's stopping criterion"; every run re-reports the stop in the
+    * hashed `rounds_run` column): the
     * shipped graphs cross 2%·Q at round 12 (sf0.001), 17 (sf0.01),
     * and 27 (sf0.1) — so a 20-round budget has the CRITERION fire at
     * both of the driver's oracle SFs (sf0.001 AND the sf0.01 gate;

@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One shared local session for all suites (avoids per-suite JVM-wide
-  * SparkContext churn; `getOrCreate` makes suites order-independent).
+  * SparkContext churn; `getOrCreate` makes suites order-independent),
+  * built by [[Runtime.session]] so the specs exercise the plans the
+  * mains run. The warehouse dir is a static conf: SparkConf reads
+  * `spark.*` system properties, so setting one here reaches it.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+  lazy val spark = {
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    val s = Runtime.session()
     s.sparkContext.setLogLevel("WARN")
     s
   }

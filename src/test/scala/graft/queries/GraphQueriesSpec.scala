@@ -227,7 +227,8 @@ class GraphQueriesSpec extends AnyFunSuite {
     // by carrying rounds_run as a column; this pins the Spark side's
     // half of that contract — the column is constant, the stop is the
     // criterion's (strictly under the 20-round budget on this graph;
-    // HitsProbe-measured stops: 12 at sf0.001, 17 at sf0.01, cap at
+    // measured stops, BENCH_NOTES.md and the rounds_run column of any
+    // Verify or Bench run: 12 at sf0.001, 17 at sf0.01, cap at
     // sf0.1), and stripping it leaves exactly hitsLoop unrolled to
     // that count.
     GraphQueries.clearCheckpointMemos(spark)

@@ -148,26 +148,22 @@ class PlanHygieneSpec extends AnyFunSuite {
     // 1-row scalar assemblies) are ELIMINATED, so those queries' bench
     // numbers measure less than the full plan (d12/d06 collapse to a
     // scan-count; p04 loses its probe join; the PageRank family loses
-    // its two ~free scalar joins). This sweep of the WHOLE registry
-    // pins the blind spot to exactly the set whose honest toRdd cost
-    // the bench artifact carries in its `uncounted` map
-    // (BENCH_NOTES §count()-collapse): if an operator change or a new
-    // query shifts the set, this tripwire forces Bench.uncountedQueries
-    // and the notes to move with it. Streaming twins and iterative
-    // loops return eager/checkpointed relations (0 joins both ways)
-    // and pass vacuously.
+    // its two ~free scalar joins). Bench derives its `uncounted` set
+    // (the entries whose honest toRdd cost the artifact carries) from
+    // the same Recorder.countCollapse this sweep of the WHOLE registry
+    // calls; the pairs below pin that set, so an operator change or a
+    // new query that shifts it shows here (BENCH_NOTES
+    // §count()-collapse). Streaming twins and iterative loops return
+    // eager/checkpointed relations (0 joins both ways) and pass
+    // vacuously.
     // Counted nodes: Joins AND Windows — a pure row-preserving window
     // projection (q07/q33/q37/q46) is column-pruned away under count()
     // just like a row-preserving join, and its bench number becomes a
     // scan-count (measured: q07 reads 0.16s at sf10 where the real
     // window over 10M rows is seconds — the r13 sf10 sweep exposed it).
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
-    def wide(p: LogicalPlan): Int =
-      p.collect { case j: Join => j; case w: Window => w }.size
     val collapsed = graft.SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      val full = wide(df.queryExecution.optimizedPlan)
-      val underCount = wide(df.groupBy().count().queryExecution.optimizedPlan)
+      val (full, underCount) =
+        graft.Recorder.countCollapse(graft.SparkEntry.queries(name)(spark, dir))
       if (underCount < full) Some(name -> ((full, underCount))) else None
     }
     val expected = Seq(
@@ -218,8 +214,8 @@ class PlanHygieneSpec extends AnyFunSuite {
       // the tie-break window above the GroupedTopK operator prunes
       "s07_knn_topk_operator" -> ((2, 1)))
     assert(collapsed === expected,
-      s"count()-collapse set changed: $collapsed — update Bench.uncountedQueries " +
-        "and BENCH_NOTES to keep the artifact honest")
+      s"count()-collapse set changed: $collapsed — Bench's uncounted map " +
+        "moves with it; update the expected pairs and BENCH_NOTES")
   }
 
   test("t10: ranking takes the WindowGroupLimit plan; dictionaries broadcast") {
