@@ -12,6 +12,12 @@ import org.apache.spark.sql.graft.ColumnBridge
   * from scans. Those counts are deterministic given the plan and its
   * input files, so they compare across runs on a noisy host where wall
   * time does not, and they are the cost that carries to a cluster.
+  * One exception: a layout written through `repartitionByRange` (q58's
+  * tree, q63's OPTIMIZE ZORDER, `ZOrderedWrite`) gets its boundaries
+  * from Spark's `RangePartitioner.sketch`, which seeds each partition's
+  * reservoir sample with the RDD id. The files, and so the rows a later
+  * scan of them decodes, then depend on how many RDDs the context
+  * created before the write.
   */
 object Recorder {
 

@@ -8,14 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `spark.sql("SELECT graft_polyhash(text) ...")` works alongside the
   * Column API ([[GraftExpressions]]), plus the engine's optimizer
   * rule ([[graft.plans.RangeJoinBinning]] — band joins become binned
-  * equi-joins instead of nested loops).
+  * equi-joins instead of nested loops) and planner strategy
+  * ([[graft.plans.GroupedTopKStrategy]]).
   *
-  * Two entry points:
-  *  - session build time: `.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions`;
-  *  - an existing session:
-  *    `org.apache.spark.sql.graft.ColumnBridge.registerGraftFunctions(spark)`
-  *    and `graft.plans.RangeJoinBinning.install(spark)`.
+  * One entry point, at session build time:
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, which
+  * `graft.Runtime.session()` sets for every session in the engine.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -28,9 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** (identifier, info, builder) triple per function — shared by the
-    * extension injector and the existing-session registrar.
-    */
+  /** (identifier, info, builder) triple per function. */
   val descriptors: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_polyhash"),

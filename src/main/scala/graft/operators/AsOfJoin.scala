@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,7 +66,4 @@ object AsOfJoin {
       .select((leftCols.map(col) ++
         outPayload.map(c => col("__asof")(c).as(c))): _*)
   }
-
-  /** Convenience: `last(c, ignoreNulls)` exposed for ad-hoc frames. */
-  def lastIgnoreNulls(c: Column): Column = last(c, ignoreNulls = true)
 }

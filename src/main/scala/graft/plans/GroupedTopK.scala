@@ -35,8 +35,7 @@ import org.apache.spark.sql.graft.ColumnBridge
   *
   * Planned by [[GroupedTopKStrategy]] (installed by
   * [[graft.functions.GraftExtensions]]); built from the Column API
-  * via [[GroupedTopK.of]], which resolves names against the child and
-  * auto-installs the strategy on the session.
+  * via [[GroupedTopK.of]], which resolves names against the child.
   */
 case class GroupedTopK(
     groupExprs: Seq[Expression],
@@ -62,7 +61,6 @@ object GroupedTopK {
   def of(df: DataFrame, groupCols: Seq[String],
       orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    GroupedTopKStrategy.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       analyzed.output.find(_.name == name).getOrElse(
@@ -91,14 +89,6 @@ object GroupedTopKStrategy extends SparkStrategy {
         partial) :: Nil
     case _ => Nil
   }
-
-  /** Idempotently add this strategy to an existing session
-    * (sessions built with `GraftExtensions` already have it).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(this))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ this
 }
 
 /** One heap pass of the grouped top-k: per input partition, a hash

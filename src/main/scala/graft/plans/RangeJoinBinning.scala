@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.functions.FloorDiv
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And,
   AttributeReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan,
   GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
@@ -67,8 +66,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    pass.
   *
   * Installed by [[graft.functions.GraftExtensions]]
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`) or on an
-  * existing session via [[RangeJoinBinning.install]]. Gated by
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`). Gated by
   * `spark.graft.rangeJoinBinning` (default true) so the naive plan
   * stays one conf flip away for A/B checks — RangeJoinBinningSpec
   * pins that both plans return identical rows.
@@ -77,14 +75,6 @@ object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
 
   val ConfKey = "spark.graft.rangeJoinBinning"
   private val BinName = "__graft_band_bin"
-
-  /** Register on an already-built session (sessions built with
-    * `GraftExtensions` don't need this).
-    */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!conf.getConfString(ConfKey, "true").toBoolean) plan

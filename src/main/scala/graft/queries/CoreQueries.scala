@@ -742,7 +742,7 @@ object CoreQueries {
     * already right — and at local[32] it is 4, which un-inverts the
     * r13 sf10 wall (8 tasks on 32 cores read 10× fewer rows SLOWER
     * than the unpruned scan; with the split the same prune is ~32
-    * wide). Override with `graft.partitioned.splitFiles`.
+    * wide).
     */
   /** Spec access to the partitioned layout (PartitionedSpec's q55
     * counterfactual scan needs the raw tree, not a registry entry). */
@@ -751,16 +751,13 @@ object CoreQueries {
 
   private def partitionedLineitem(s: SparkSession, dir: String): DataFrame =
     partLiMemo.getOrElseUpdate((s, dir), {
-      val split = s.conf.getOption("graft.partitioned.splitFiles")
-        .orElse(sys.env.get("GRAFT_PARTITIONED_SPLIT_FILES")).map(_.toInt)
-        .getOrElse(math.max(1, s.sparkContext.defaultParallelism / 8))
       graft.sources.PartitionedWrite.partitionedTable(
         s, t(s, dir, "lineitem"),
         graft.sources.Layouts.root(s) + "/part_li_" +
           graft.sources.Bucketing.pathDigest(dir),
         "l_smonth",
         year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
-        splitFiles = split)
+        splitFiles = math.max(1, s.sparkContext.defaultParallelism / 8))
     })
 
   /** The month [[q47_partition_pruned]] probes — mid-corpus, present
@@ -927,12 +924,8 @@ object CoreQueries {
           col("n_exact") * Q50Tol).as("ok"))
   }
 
-  // Keyed by (session, dir, targetBytes): the conf is resolved BEFORE
-  // the memo lookup so changing graft.compaction.targetBytes
-  // mid-session recompacts at the new target instead of silently
-  // returning the old tree (r15 advice).
   private val q51Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), DataFrame]
+    .empty[(SparkSession, String), DataFrame]
 
   // Small-file COMPACTION ([[graft.sources.Compaction]]) — the layout-
   // MAINTENANCE verb next to the three layout-creation operators
@@ -952,16 +945,13 @@ object CoreQueries {
   // pruning intact on the compacted tree); both trees are layout
   // artifacts under [[graft.sources.Layouts.root]], rebuild-on-miss.
   def q51_compaction(s: SparkSession, dir: String): DataFrame = {
-    val target = s.conf.getOption("graft.compaction.targetBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val compacted = q51Memo.getOrElseUpdate((s, dir, target), {
+    val target = 128L * 1024 * 1024
+    val compacted = q51Memo.getOrElseUpdate((s, dir), {
       val digest = graft.sources.Bucketing.pathDigest(dir)
       val frag = graft.sources.Layouts.root(s) + "/frag_li_" + digest
-      // targetBytes is part of the artifact identity, not just the
-      // memo key: a mid-session target change must compact into its
-      // OWN tree, or the overwrite would yank the files out from
-      // under the old target's still-memoized InMemoryFileIndex
-      // (r16 advice). frag stays target-independent and shared.
+      // the target suffix keeps this tree apart from Duel's
+      // `compact_li_<digest>` twin, whose overwrite would otherwise
+      // yank files out from under this entry's memoized file index
       val dst = graft.sources.Layouts.root(s) + "/compact_li_" + digest +
         "_t" + target
       graft.sources.PartitionedWrite.partitionedTable(
@@ -1312,6 +1302,9 @@ object CoreQueries {
       val stats = graft.sources.Layouts.root(s) + "/q58_fstats_" + digest
       val li = t(s, dir, "lineitem").withColumn("l_smonth",
         year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
+      // range boundaries come from a sample seeded with the RDD id:
+      // the file tiling (not the relation) varies with how many RDDs
+      // the context created before this write
       li.repartitionByRange(332, col("l_smonth"), col("l_shipdate"))
         .write.mode("overwrite").partitionBy("l_smonth").parquet(tree)
       graft.sources.StatsStore.writeFileStats(s, tree, stats, "l_smonth",

@@ -439,21 +439,10 @@ object DedupQueries {
   }
 
   /** Sentinel shard count meaning "derive S from corpus stats" —
-    * see [[autoShards]]. */
+    * see [[autoShards]]. [[d16_containment_sharded]] always derives
+    * it; the result is shard-count-invariant — only the peak
+    * in-flight pair volume (~1/S) changes. */
   private[graft] val AutoShards = -1
-
-  /** Shard count for [[d16_containment_sharded]]: spark conf
-    * `graft.d16.shards` / env `GRAFT_D16_SHARDS` — an explicit integer
-    * pins S; `auto` (the default) derives it from the measured
-    * candidate-pair volume ([[autoShards]]). The result is
-    * shard-count-invariant — only the peak in-flight pair volume
-    * (~1/S) changes.
-    */
-  private def d16Shards(s: SparkSession): Int =
-    s.conf.getOption("graft.d16.shards")
-      .orElse(sys.env.get("GRAFT_D16_SHARDS"))
-      .map(v => if (v.equalsIgnoreCase("auto")) AutoShards else v.toInt)
-      .getOrElse(AutoShards)
 
   /** Per-shard candidate-pair budget for [[autoShards]] (spark conf
     * `graft.d16.pairBudget` / env `GRAFT_D16_PAIR_BUDGET`). The
@@ -532,7 +521,7 @@ object DedupQueries {
     */
   def d16_containment_sharded(s: SparkSession, dir: String): DataFrame =
     containmentSharded(containmentShingles(s, dir), DefaultMaxPosting,
-      d16Shards(s), dirTag(dir), d16Root(s))
+      AutoShards, dirTag(dir), d16Root(s))
 
   private[graft] def containmentSharded(sh: DataFrame, maxPosting: Int,
                                         shardsSpec: Int, tag: String,
@@ -552,23 +541,6 @@ object DedupQueries {
     // and autoShards picks the smallest S whose per-shard volume fits
     // the budget. The stat job doubles as the cache-settling pass the
     // shard loop would otherwise pay.
-    // Shard-job concurrency (conf `graft.d16.concurrency` / env
-    // `GRAFT_D16_CONCURRENCY`, default 1 = the proven sequential
-    // envelope): C > 1 runs C shard jobs at a time from separate
-    // threads (Spark schedules concurrent jobs from one session), and
-    // the auto-S budget is divided by C so the TOTAL in-flight pair
-    // volume — C shards at once — still fits the same envelope (auto-S
-    // answers with more, smaller shards). The lever pays where a
-    // single shard job leaves cores idle: measured C=2 at local[32]
-    // wins 1.38× at sf1 (50.0→36.3s — tail stages overlap) but is a
-    // WASH at sf10 (3116s vs 3025s sequential: each half-size shard
-    // still saturates the machine, so overlap only buys what the
-    // doubled shard count's fixed cost takes back — BENCH_NOTES r14).
-    // Sequential stays the default: it is never worse, and its
-    // peak-resource story is the simplest to reason about.
-    val conc = math.max(1, spark.conf.getOption("graft.d16.concurrency")
-      .orElse(sys.env.get("GRAFT_D16_CONCURRENCY")).map(_.toInt)
-      .getOrElse(1))
     val shards =
       if (shardsSpec == AutoShards) {
         val vol = pinned.groupBy(col("lang"), col("sh"))
@@ -576,7 +548,7 @@ object DedupQueries {
           .where(col("n") <= maxPosting)
           .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).as("v"))
           .head().getLong(0)
-        autoShards(vol, d16PairBudget(spark) / conc)
+        autoShards(vol, d16PairBudget(spark))
       } else shardsSpec
     // Sequential shard jobs, each SPILLED TO STORAGE before the next
     // starts — the production per-shard recipe verbatim: shard outputs
@@ -631,15 +603,8 @@ object DedupQueries {
           .parquet(s"$base/shard_$i")
       else pc.write.mode("overwrite").parquet(s"$base/shard_$i")
     }
-    (0 until shards).grouped(conc).foreach { batch =>
-      if (conc == 1) batch.foreach(runShard)
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(
-          Future.sequence(batch.toList.map(i => Future(runShard(i)))),
-          scala.concurrent.duration.Duration.Inf)
-      }
+    (0 until shards).foreach { i =>
+      runShard(i)
       // the GC nudge costs ~1s a pop — only worth it in the
       // many-shard envelope regime where stale shuffles actually
       // threaten the disk budget (ContextCleaner frees a shard job's

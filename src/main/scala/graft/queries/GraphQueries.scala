@@ -80,30 +80,16 @@ object GraphQueries {
     * relation is the one that must not move per round — write it as a
     * table BUCKETED BY src once (sources/Bucketing.scala is the
     * mechanism) and every round's join is exchange-free on the big
-    * side. That path is OPT-IN here: set spark conf
-    * `graft.bucketedSym` (or env `GRAFT_BUCKETED_SYM`) to a bucket
-    * count and every FromSym loop (g11/g13/g14/g15, g05's base) reads
-    * a src-bucketed catalog table instead of the in-memory distinct —
-    * identical rows (results stay oracle-exact; the loops are
-    * layout-agnostic), but each round's edge-side join subtree plans
-    * ZERO exchanges ([[graft.graph.GraphBucketedSpec]] pins exactly
-    * that on the executed plan).
+    * side: each round's edge-side join subtree plans ZERO exchanges
+    * over such a table ([[graft.graph.GraphBucketedSpec]] pins exactly
+    * that on the executed plan; Duel's `bucketedsym` mode measures
+    * the traffic delta).
     */
-  private def symEdges(s: SparkSession, dir: String): DataFrame = {
-    val buckets = s.conf.getOption("graft.bucketedSym")
-      .orElse(sys.env.get("GRAFT_BUCKETED_SYM")).map(_.toInt)
-    buckets match {
-      case Some(n) => symEdgesBucketed(s, dir, n)
-      case None =>
-        SharedRelations(s, dir, "graph_sym") {
-          val e = derivedEdges(s, dir)
-          e.union(e.select(col("dst"), col("src"))).toDF("src", "dst").distinct()
-        }
+  private def symEdges(s: SparkSession, dir: String): DataFrame =
+    SharedRelations(s, dir, "graph_sym") {
+      val e = derivedEdges(s, dir)
+      e.union(e.select(col("dst"), col("src"))).toDF("src", "dst").distinct()
     }
-  }
-
-  private val symBucketMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
 
   /** Catalog-safe table-name tag for a bucketed layout: the SF dir
     * path with non-identifier chars collapsed — readable — PLUS the
@@ -117,26 +103,10 @@ object GraphQueries {
     dir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("_+", "_")
       .stripPrefix("_") + "_" + graft.sources.Bucketing.pathDigest(dir)
 
-  /** Bucketed materialization of [[symEdges]]: one write (the
-    * once-per-layout cost), then the returned catalog-table relation
-    * is hash-partitioned on `src` ON DISK — no SharedRelations persist
-    * (the files ARE the materialization; pinning an on-disk bucketed
-    * table in executor memory would just shadow the layout).
-    */
-  private def symEdgesBucketed(s: SparkSession, dir: String,
-                               buckets: Int): DataFrame =
-    symBucketMemo.getOrElseUpdate((s, dir, buckets), {
-      val e = derivedEdges(s, dir)
-      val sym =
-        e.union(e.select(col("dst"), col("src"))).toDF("src", "dst").distinct()
-      val table = "graft_sym_b" + buckets + "_" + tableTag(dir)
-      graft.sources.Bucketing.bucketedTable(s, sym, table, buckets, "src")
-    })
-
   /** The DIRECTED edge relation the PageRank-family loops
     * ([[pagerankLoop]], [[g09_pagerank_personalized]]) join their rank
-    * iterate against on the src side once per round — the flagship's
-    * twin of [[symEdges]]' layout opt-in. Default is the in-memory
+    * iterate against on the src side once per round — the layout
+    * [[symEdges]]' scaladoc describes, as an opt-in. Default is the in-memory
     * [[derivedEdges]] (at sf ≤ 0.1 AQE broadcasts the rank side, so
     * the edge side never moves anyway); set spark conf
     * `graft.bucketedEdges` (or env `GRAFT_BUCKETED_EDGES`) to a bucket
@@ -162,8 +132,11 @@ object GraphQueries {
   private val edgeBucketMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int), DataFrame]
 
-  /** Bucketed materialization of [[derivedEdges]] — [[symEdgesBucketed]]'s
-    * directed twin, same once-per-layout write discipline.
+  /** Bucketed materialization of [[derivedEdges]]: one write (the
+    * once-per-layout cost), then the returned catalog-table relation
+    * is hash-partitioned on `src` ON DISK — no SharedRelations persist
+    * (the files ARE the materialization; pinning an on-disk bucketed
+    * table in executor memory would just shadow the layout).
     */
   private def edgesBucketed(s: SparkSession, dir: String,
                             buckets: Int): DataFrame =

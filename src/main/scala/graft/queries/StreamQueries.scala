@@ -137,8 +137,8 @@ object StreamQueries {
     *
     * with feedBytes = the landed batch-0 slice × the feed's slice
     * count (slices are equal-width — no extra job), advisory passed
-    * by the runner ([[stateAdvisoryBytes]] for commit-bound
-    * operators, [[joinStateAdvisoryBytes]] for the probe-bound
+    * by the runner ([[StateAdvisoryBytes]] for commit-bound
+    * operators, [[JoinStateAdvisoryBytes]] for the probe-bound
     * symmetric join — see each). sf0.1's 2 MB feed → 1 instance for
     * the commit-bound class at any core count; sf10's ~200 MB → the
     * ceiling → the measured local[32] optimum unchanged; a real
@@ -153,12 +153,9 @@ object StreamQueries {
     * fixed cost is (instances × commit), so instances stay few until
     * data volume demands more. 16 MB of parquet ≈ 64 MB of raw state —
     * inside the per-instance budget every state-store sizing guide
-    * uses. Dial: `graft.stream.bytesPerStatePartition`.
+    * uses.
     */
-  private def stateAdvisoryBytes(s: SparkSession): Long =
-    s.conf.getOption("graft.stream.bytesPerStatePartition")
-      .orElse(sys.env.get("GRAFT_STREAM_STATE_PARTITION_BYTES"))
-      .map(_.toLong).getOrElse(16L * 1024 * 1024)
+  private val StateAdvisoryBytes = 16L * 1024 * 1024
 
   /** Advisory feed-bytes per state partition for the stream–stream
     * INTERVAL JOIN entries (st03/st08), whose per-partition cost is
@@ -173,12 +170,9 @@ object StreamQueries {
     * waves again (3.5 s). 256 KB/partition puts the measured optimum
     * (8) at this feed; larger feeds hit the shuffle-width ceiling,
     * which is the deployment's dial, exactly as for the commit-bound
-    * class. Dial: `graft.stream.bytesPerJoinStatePartition`.
+    * class.
     */
-  private def joinStateAdvisoryBytes(s: SparkSession): Long =
-    s.conf.getOption("graft.stream.bytesPerJoinStatePartition")
-      .orElse(sys.env.get("GRAFT_STREAM_JOIN_STATE_PARTITION_BYTES"))
-      .map(_.toLong).getOrElse(256L * 1024)
+  private val JoinStateAdvisoryBytes = 256L * 1024
 
   private def statePartitions(s: SparkSession, srcDir: String,
                               slices: Int, advisory: Long): Int = {
@@ -268,13 +262,13 @@ object StreamQueries {
   private[graft] def runFileStream(s: SparkSession, input: DataFrame,
       transform: DataFrame => DataFrame,
       laterBatches: Seq[DataFrame] = Nil,
-      advisoryBytes: SparkSession => Long = stateAdvisoryBytes): DataFrame =
+      advisoryBytes: Long = StateAdvisoryBytes): DataFrame =
     withStreamRun(s) { (srcDir, outDir, cpDir, delete) =>
       input.write.mode("overwrite").parquet(srcDir)
       val src = s.readStream.schema(input.schema).parquet(srcDir)
       val out = transform(src)
       val outSchema = out.schema
-      withStatePartitions(s, srcDir, 1 + laterBatches.size, advisoryBytes(s)) {
+      withStatePartitions(s, srcDir, 1 + laterBatches.size, advisoryBytes) {
         val q = out.writeStream.format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", cpDir)
@@ -315,7 +309,7 @@ object StreamQueries {
       val sink: (Dataset[Row], Long) => Unit = (batch, batchId) =>
         batch.write.mode("overwrite").parquet(outDir + "/batch_" + batchId)
       withStatePartitions(s, srcDir, 1 + laterBatches.size,
-          stateAdvisoryBytes(s)) {
+          StateAdvisoryBytes) {
         val q = out.writeStream.foreachBatch(sink)
           .option("checkpointLocation", cpDir)
           .outputMode(OutputMode.Update).start()
@@ -365,7 +359,7 @@ object StreamQueries {
       // recovers the checkpoint, whose state partition count is
       // pinned by query 1.
       val outSchema = withStatePartitions(s, srcDir, 1 + laterBatches.size,
-          stateAdvisoryBytes(s)) {
+          StateAdvisoryBytes) {
         val (outSchema, q1) = start()
         try {
           q1.processAllAvailable()
@@ -458,11 +452,7 @@ object StreamQueries {
     * as d16's `shards=auto`.
     */
   private def rowsPerBatch(s: SparkSession): Long =
-    s.conf.getOption("graft.stream.rowsPerBatch")
-      .orElse(sys.env.get("GRAFT_STREAM_ROWS_PER_BATCH"))
-      .map(_.toLong)
-      .getOrElse(math.max(250000L,
-        31250L * s.sparkContext.defaultParallelism))
+    math.max(250000L, 31250L * s.sparkContext.defaultParallelism)
 
   private def sliceCount(s: SparkSession, totalRows: Long): Int = {
     val conf = s.conf.getOption("graft.stream.slices")
@@ -541,7 +531,7 @@ object StreamQueries {
   def st03_error_follow_stream(s: SparkSession, dir: String): DataFrame = {
     val slices = timeSlices(s, eventCols(s, dir))
     runFileStream(s, slices.head, StreamOps.errorFollowJoin(_),
-      laterBatches = slices.tail, advisoryBytes = joinStateAdvisoryBytes)
+      laterBatches = slices.tail, advisoryBytes = JoinStateAdvisoryBytes)
   }
 
   /** Streaming windowed aggregation in APPEND mode — the fourth
@@ -609,7 +599,7 @@ object StreamQueries {
   def st08_error_follow_outer(s: SparkSession, dir: String): DataFrame = {
     val slices = timeSlices(s, eventCols(s, dir))
     runFileStream(s, slices.head, StreamOps.errorFollowJoinOuter(_),
-      laterBatches = slices.tail, advisoryBytes = joinStateAdvisoryBytes)
+      laterBatches = slices.tail, advisoryBytes = JoinStateAdvisoryBytes)
   }
 
   /** The streaming FUNNEL state machine under the oracle gate — the
@@ -849,7 +839,7 @@ object StreamQueries {
       // Stateless pipe, but each micro-batch plans the CDF diff JOIN
       // of its commit's before/after slices — size those exchanges to
       // the table, not the core count (same §2 rule as the runners).
-      withStatePartitions(s, table, 1, stateAdvisoryBytes(s)) {
+      withStatePartitions(s, table, 1, StateAdvisoryBytes) {
         val q = src.writeStream.format("parquet").option("path", outDir)
           .option("checkpointLocation", cpDir)
           .outputMode(OutputMode.Append).start()

@@ -117,121 +117,6 @@ object Compaction {
     *    join key. The count passes are parquet footer-count scans
     *    (no columns read), noise next to the rewrite itself.
     */
-  /** Compact a STREAMING file-sink output directory — the maintenance
-    * gap the st family and [[compact]] jointly expose: a sink dir is
-    * read through its `_spark_metadata` commit log (readers serve
-    * ONLY manifest-listed files — that is the sink's exactly-once
-    * read contract), so rewriting its files with the plain compactor
-    * would leave a manifest pointing at deleted paths and a tree
-    * Spark refuses to read. This variant keeps the contract across
-    * the rewrite:
-    *
-    *  1. read `sinkDir` VIA its manifest (`spark.read.parquet`
-    *     auto-detects `_spark_metadata`) — uncommitted stragglers
-    *     from a crashed batch are never compacted in;
-    *  2. size the output from the committed files' actual bytes (one
-    *     driver-side stat per committed file — metadata-scale, the
-    *     same |files| the read must plan anyway) and rewrite in one
-    *     explicit-width shuffle, same AQE-pinning rationale as
-    *     [[compact]];
-    *  3. re-register: write a FRESH commit log at `dstPath` declaring
-    *     the compacted files as batch 0
-    *     ([[org.apache.spark.sql.graft.ColumnBridge.writeSinkManifest]]
-    *     — Spark's own `FileStreamSinkLog` format, so the compacted
-    *     dir reads exactly like the original sink, stray files again
-    *     invisible).
-    *
-    * The compacted dir is a live INCREMENTAL snapshot: the original
-    * query keeps appending to `sinkDir` (its checkpoint references
-    * that log), and each re-invocation of this method picks up ONLY
-    * the source files committed since the last compaction, compacts
-    * them into fresh files APPENDED at `dstPath`, and commits them as
-    * the next batch of the compacted dir's own sink log — prior
-    * output is never rewritten (StreamingSpec pins name/len/mtime
-    * untouched across re-compactions). Bookkeeping lives in a
-    * `_graft_compaction/<gen>.sources` sidecar per increment (the
-    * source files it covers), written BEFORE the increment's manifest
-    * batch commits; a crash between the two leaves a TORN increment —
-    * sidecar present, batch absent — which the next invocation
-    * detects ([[org.apache.spark.sql.graft.ColumnBridge.sinkLogLatestBatch]])
-    * and REDOES from its recorded source list. The torn attempt's
-    * stray files stay manifest-invisible, so the redo duplicates
-    * nothing: the same idempotent-replay recipe the st11 foreachBatch
-    * sink pins, applied to maintenance.
-    *
-    * Unpartitioned sinks only — the shape every st entry writes; a
-    * partitioned sink compacts per-directory with the same recipe.
-    * Row-preservation asserted like [[compact]] on every invocation:
-    * the compacted dir must always read exactly the committed rows.
-    */
-  def compactStreamSink(s: SparkSession, sinkDir: String, dstPath: String,
-                        targetBytes: Long): DataFrame = {
-    val fs = new Path(sinkDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val src = s.read.parquet(sinkDir) // manifest-routed listing
-    val committed = src.inputFiles.toSeq.sorted
-    val sideDir = new Path(dstPath, "_graft_compaction")
-    def gens(): Map[Long, Seq[String]] =
-      if (!fs.exists(sideDir)) Map.empty
-      else fs.listStatus(sideDir).iterator
-        .filter(_.getPath.getName.endsWith(".sources"))
-        .map { f =>
-          val gen = f.getPath.getName.stripSuffix(".sources").toLong
-          val in = fs.open(f.getPath)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).toVector
-          finally in.close()
-          gen -> lines
-        }.toMap
-    def dataFiles(): Map[String, org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(new Path(dstPath))) Map.empty
-      else fs.listStatus(new Path(dstPath)).iterator
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-        .map(f => f.getPath.getName -> f).toMap
-    // one increment: compact `files` into appended output, commit as
-    // sink-log batch `gen`; width sized from the increment's actual
-    // bytes, never the whole sink's
-    def appendIncrement(gen: Long, files: Seq[String]): Unit = {
-      val before = dataFiles().keySet
-      val bytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
-      val width = math.max(1L,
-        (bytes + targetBytes - 1) / targetBytes).toInt
-      s.read.parquet(files: _*).repartition(width)
-        .write.mode(SaveMode.Append).parquet(dstPath)
-      val fresh = dataFiles().filter { case (n, _) => !before(n) }
-        .values.toIndexedSeq.sortBy(_.getPath.getName)
-      org.apache.spark.sql.graft.ColumnBridge
-        .writeSinkManifest(s, dstPath, fresh, gen)
-    }
-    val recorded = gens()
-    val lastBatch = org.apache.spark.sql.graft.ColumnBridge
-      .sinkLogLatestBatch(s, dstPath)
-    // heal torn increments first (sidecar ahead of the sink log)
-    recorded.filter(_._1 > lastBatch).toSeq.sortBy(_._1)
-      .foreach { case (g, files) => appendIncrement(g, files) }
-    // then compact whatever the source sink committed since
-    val done = recorded.values.flatten.toSet
-    val fresh = committed.filterNot(done)
-    if (fresh.nonEmpty) {
-      val gen = (recorded.keys ++ Seq(lastBatch)).max + 1
-      fs.mkdirs(sideDir)
-      val tmp = new Path(sideDir, s".$gen.sources.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((fresh.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new Path(sideDir, s"$gen.sources")),
-        s"compaction sidecar rename lost a race for gen $gen")
-      appendIncrement(gen, fresh)
-    }
-    val out = s.read.parquet(dstPath)
-    val (nSrc, nDst) = (src.count(), out.count())
-    require(nSrc == nDst,
-      s"sink compaction must be row-preserving: $sinkDir has $nSrc " +
-        s"committed rows but compacted $dstPath reads $nDst")
-    out
-  }
-
   def compact(s: SparkSession, srcPath: String, dstPath: String,
               partCol: String, targetBytes: Long,
               hooks: Seq[StatsStore.PostRewriteHook] = Nil): DataFrame = {

@@ -51,25 +51,9 @@ class VersionedFileIndex(
 
   require(partCols.nonEmpty, "a versioned table has >= 1 partition column")
 
-  private val fs = new Path(tablePath)
-    .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** (per-column unescaped value renderings, file statuses) per live
-    * directory, ordered by the manifest's directory path (never by
-    * the unescaped values, which are null for
-    * `__HIVE_DEFAULT_PARTITION__`). */
-  private val byDir: Seq[(List[String], Seq[FileStatus])] =
-    VersionedTable.manifest(s, tablePath, version)
-      .groupBy(f => f.substring(0, f.lastIndexOf('/'))).toSeq.sortBy(_._1)
-      .map { case (dir, files) =>
-        val raws = dir.split("/").toList.map { seg =>
-          val r = seg.split("=", 2)(1)
-          if (r == "__HIVE_DEFAULT_PARTITION__") null
-          else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(r)
-        }
-        raws -> files.map(f => fs.getFileStatus(new Path(tablePath, f)))
-      }
+  private val byDir: Seq[(List[String], Array[FileStatus])] =
+    VersionedFileIndex.statusesByDir(s, tablePath,
+      VersionedTable.manifest(s, tablePath, version))
 
   /** Per-column partition type by the narrow hive-style inference
     * shared with [[ZoneMapFileIndex]] (int → long → string; the
@@ -140,7 +124,7 @@ class VersionedFileIndex(
           pruned.forall(p => !p.contains(raws))
       }
       .map { case (_, row, files) =>
-        PartitionDirectory(row, files.toArray)
+        PartitionDirectory(row, files)
       }
       .toSeq
   }
@@ -159,8 +143,8 @@ class VersionedFileIndex(
   * times per change-feed query — pure metadata overhead the manifest
   * already paid for), and re-infers the schema from footers the log
   * already records. Here the driver resolves the N `FileStatus`es
-  * directly (one RPC per file — the metadata a production manifest
-  * stores inline) and hands Spark a ready listing; partition values
+  * with one listing per directory (a production manifest stores them
+  * inline) and hands Spark a ready listing; partition values
   * parse from the hive directory names against the RECORDED types, so
   * partition pruning still evaluates inside the index.
   */
@@ -169,26 +153,16 @@ private[sources] class ExplicitFilesIndex(
     override val partitionSchema: StructType)
     extends FileIndex {
 
-  private val fs = new Path(tablePath)
-    .getFileSystem(s.sparkContext.hadoopConfiguration)
-
   private val partTypes: Seq[DataType] =
     partitionSchema.fields.map(_.dataType).toSeq
 
   /** (partition values, file statuses) per directory, ordered by the
     * relative directory path. */
-  private val byDir: Seq[(InternalRow, Array[FileStatus])] = files
-    .groupBy(f => f.substring(0, f.lastIndexOf('/'))).toSeq.sortBy(_._1)
-    .map { case (dir, fsn) =>
-      val raws = dir.split("/").toList.map { seg =>
-        val r = seg.split("=", 2)(1)
-        if (r == "__HIVE_DEFAULT_PARTITION__") null
-        else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(r)
-      }
-      val row = InternalRow.fromSeq(raws.zip(partTypes).map {
-        case (r, t) => ZoneMap.valueOf(r, t) })
-      row -> fsn.map(f => fs.getFileStatus(new Path(tablePath, f))).toArray
+  private val byDir: Seq[(InternalRow, Array[FileStatus])] =
+    VersionedFileIndex.statusesByDir(s, tablePath, files).map {
+      case (raws, sts) =>
+        InternalRow.fromSeq(raws.zip(partTypes).map {
+          case (r, t) => ZoneMap.valueOf(r, t) }) -> sts
     }
 
   override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
@@ -222,6 +196,36 @@ private[sources] class ExplicitFilesIndex(
 
 /** Companion read API — see [[VersionedTable.snapshotRelation]]. */
 object VersionedFileIndex {
+
+  /** (per-column unescaped value renderings, file statuses) per
+    * directory of `files` (paths relative to `tablePath`), ordered by
+    * the relative directory path (never by the unescaped values,
+    * which are null for `__HIVE_DEFAULT_PARTITION__`), each
+    * directory's statuses in `files` order. One `listStatus` per
+    * directory, keeping the statuses `files` names: driver RPCs scale
+    * with directories, not files (a directory may also hold retired
+    * history files, which the listing returns and this drops). */
+  private[sources] def statusesByDir(s: SparkSession, tablePath: String,
+      files: Seq[String]): Seq[(List[String], Array[FileStatus])] = {
+    val fs = new Path(tablePath)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    files.groupBy(f => f.substring(0, f.lastIndexOf('/'))).toSeq.sortBy(_._1)
+      .map { case (dir, fsn) =>
+        val raws = dir.split("/").toList.map { seg =>
+          val r = seg.split("=", 2)(1)
+          if (r == "__HIVE_DEFAULT_PARTITION__") null
+          else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(r)
+        }
+        val listed = fs.listStatus(new Path(tablePath, dir))
+          .map(st => st.getPath.getName -> st).toMap
+        raws -> fsn.map { f =>
+          listed.getOrElse(f.substring(f.lastIndexOf('/') + 1),
+            throw new java.io.FileNotFoundException(
+              s"$tablePath/$f is in the file list but not on disk"))
+        }.toArray
+      }
+  }
 
   /** Partition-value types [[ExplicitFilesIndex]] can parse back out
     * of a hive directory name ([[ZoneMap.valueOf]]'s domain). */

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** A VERSIONED hive-partitioned table — the commit-log primitive that
@@ -117,7 +118,7 @@ object VersionedTable {
     }.sum
 
   /** Exchange width for a commit's data write:
-    * ceil(sliceBytes / graft.commit.targetFileBytes) — the guide §2
+    * ceil(sliceBytes / 128 MB) — the guide §2
     * rule (derive partitioning from data volume, never from a
     * core-count constant) applied to the write half of every commit.
     * Before r19 a commit wrote (upstream task count) files into EVERY
@@ -125,12 +126,9 @@ object VersionedTable {
     * leave ~3 files per directory and each change-feed read pay ~3×
     * the per-file open cost, while the file count itself scaled with
     * the core count (the r18 scaling block's ratio<1 signature). The
-    * default 128 MB target matches [[commitOptimize]]'s; dial with
-    * `graft.commit.targetFileBytes`. */
-  private def commitWriteWidth(s: SparkSession, sliceBytes: Long): Int = {
-    val target = s.conf.getOption("graft.commit.targetFileBytes")
-      .orElse(sys.env.get("GRAFT_COMMIT_TARGET_FILE_BYTES"))
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    * 128 MB target matches [[commitOptimize]]'s. */
+  private def commitWriteWidth(sliceBytes: Long): Int = {
+    val target = 128L * 1024 * 1024
     math.max(1L, (sliceBytes + target - 1) / target)
       .min(Int.MaxValue.toLong).toInt
   }
@@ -542,7 +540,7 @@ object VersionedTable {
     // task per directory. Width derives from the slice's on-disk
     // bytes ([[commitWriteWidth]]); the key-hash slot splits a
     // directory that outgrows one target file across tasks.
-    val width = commitWriteWidth(s, dirsBytes(fs, tablePath, affectedDirs))
+    val width = commitWriteWidth(dirsBytes(fs, tablePath, affectedDirs))
     val slotsPerDir = (width.toLong + parts.size - 1) / parts.size
     val slot = pmod(xxhash64(col(key)), lit(slotsPerDir))
     merged.select(outCols.map(col).toIndexedSeq: _*)
@@ -616,14 +614,18 @@ object VersionedTable {
     val outCols = dataCols ++ partCols
     // Size the landing write like the merge commit's (see
     // commitMergeMulti): the batch isn't on disk yet, so width comes
-    // from the optimizer's size estimate, clamped by the session's
+    // from the optimizer's size estimate, clamped by the launch-time
     // shuffle width as a mis-estimate guard (a deployment ingesting
     // more than shufflePartitions × target per batch raises shuffle
-    // partitions anyway).
+    // partitions anyway). The LAUNCH value, not the session's: a
+    // scope that pins the session's width (the streaming runners'
+    // state-partition scope pins it as low as 1) must not size a
+    // write it wasn't meant for.
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(BigInt(Long.MaxValue)).toLong
-    val width = math.min(commitWriteWidth(s, est),
-      math.max(1, s.conf.get("spark.sql.shuffle.partitions").toInt))
+    val launchWidth = s.sparkContext.getConf.getInt(
+      SQLConf.SHUFFLE_PARTITIONS.key, SQLConf.SHUFFLE_PARTITIONS.defaultValue.get)
+    val width = math.min(commitWriteWidth(est), math.max(1, launchWidth))
     val slotsPerDir = (width.toLong + parts.size - 1) / parts.size
     val slot = pmod(xxhash64(dataCols.map(col).toIndexedSeq: _*),
       lit(slotsPerDir))
@@ -799,7 +801,10 @@ object VersionedTable {
     val before = affectedDirs.flatMap(listDir(fs, tablePath, _)).toSet
     // EXPLICIT width: a count-free repartitionByRange is AQE-
     // coalescible on small inputs, which would fold the planned
-    // z-tiling into one file (the PartitionedWrite/Compaction lesson)
+    // z-tiling into one file (the PartitionedWrite/Compaction lesson).
+    // The range boundaries come from a sample seeded with the RDD id,
+    // so the tiling (not the relation) varies with how many RDDs the
+    // context created before this commit.
     snap.withColumn("_zv", ZOrderedWrite.zvalColumn(snap, dimA, dimB))
       .repartitionByRange(width, col(partCol), col("_zv"))
       .sortWithinPartitions(col(partCol), col("_zv"))

@@ -90,6 +90,9 @@ object ZOrderedWrite {
 
   def write(spark: SparkSession, df: DataFrame, dimA: String, dimB: String,
             nFiles: Int, path: String): DataFrame = {
+    // range boundaries come from a sample seeded with the RDD id: the
+    // file tiling (not the relation) varies with how many RDDs the
+    // context created before this write
     df.withColumn("zval", zvalColumn(df, dimA, dimB))
       .repartitionByRange(nFiles, col("zval"))
       .sortWithinPartitions(col("zval"))

@@ -80,14 +80,6 @@ object StreamOps {
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"), col("total_value"))
 
-  /** Stream–static enrichment join: each micro-batch of the stream is
-    * joined against a static dimension (broadcast — the dim is read
-    * once per batch, never shuffled with the stream). The incremental
-    * form of q04/q22's broadcast joins; no state store involved.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left_outer")
-
   /** Stream–stream INTERVAL join — the incremental form of q29's
     * error-follow range join: every error event paired with the same
     * user's events in `(err_ts, err_ts + bound]`. Both sides carry
@@ -254,19 +246,6 @@ object StreamOps {
     bands.groupByKey(b => (b.band, b.bkey))
       .transformWithState(new BucketNoveltyProcessor, TimeMode.None(),
         OutputMode.Append())
-  }
-
-  /** Same running stats on the `transformWithState` API (Spark 4's
-    * successor to mapGroupsWithState): explicit named `ValueState`
-    * handles, TTL support, timer callbacks — the surface new stateful
-    * operators should target. Semantics pinned equal to
-    * [[userRunningStats]] by the streaming spec.
-    */
-  def userRunningStatsTws(events: Dataset[Ev]): Dataset[UserStat] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningStatsProcessor, TimeMode.None(),
-        OutputMode.Update())
   }
 
   /** Streaming funnel — the incremental form of q41's ordered-event
@@ -444,28 +423,5 @@ class RetentionProcessor extends StatefulProcessor[Long, Ev, RetCell] {
     }
     state.update(cur)
     out.iterator
-  }
-}
-
-/** Per-user running (count, value-sum) as a StatefulProcessor with one
-  * named ValueState slot. State lives in the state store keyed by
-  * user_id — shards with the shuffle, no driver involvement.
-  */
-class RunningStatsProcessor extends StatefulProcessor[Long, Ev, UserStat] {
-  @transient private var state: ValueState[UserStat] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[UserStat]("runningStats",
-      Encoders.product[UserStat], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Ev],
-                               timerValues: TimerValues): Iterator[UserStat] = {
-    val prev = Option(state.get()).getOrElse(UserStat(key, 0L, 0.0))
-    var n = prev.n_events
-    var total = prev.total_value
-    rows.foreach { e => n += 1; total += e.value }
-    val cur = UserStat(key, n, total)
-    state.update(cur)
-    Iterator.single(cur)
   }
 }

@@ -96,61 +96,4 @@ object ColumnBridge {
     */
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
-
-  /** Write a file-sink commit log (`_spark_metadata`) at `outputDir`
-    * declaring exactly `files` as batch 0's committed output — the
-    * re-registration step of compacting a STREAMING sink's directory:
-    * the compacted files are a fresh, complete snapshot, and readers
-    * of a dir containing `_spark_metadata` serve ONLY manifest-listed
-    * files, so a stale or partially-written stray file is invisible
-    * (the same exactly-once read contract the original sink gave).
-    * Uses Spark's own `FileStreamSinkLog` (VERSION, serialization,
-    * compaction cadence), not a hand-rolled format — the log stays
-    * readable by any Spark that can read the original sink's.
-    * `FileStreamSinkLog`/`SinkFileStatus` are `private[sql]`, hence
-    * this bridge.
-    */
-  def writeSinkManifest(spark: org.apache.spark.sql.SparkSession,
-      outputDir: String,
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      batchId: Long = 0L): Unit = {
-    import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFileStatus}
-    val logDir = new org.apache.hadoop.fs.Path(
-      outputDir, org.apache.spark.sql.execution.streaming.sinks.FileStreamSink.metadataDir)
-    val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION,
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      logDir.toString)
-    require(log.add(batchId, files.map(SinkFileStatus.apply).toArray),
-      s"sink manifest batch $batchId already committed at $logDir")
-  }
-
-  /** The latest batch id committed to a file sink's `_spark_metadata`
-    * log at `outputDir`, or -1 if the log doesn't exist yet — lets
-    * incremental sink re-compaction detect how far its appended
-    * increments actually committed (torn-increment recovery). */
-  def sinkLogLatestBatch(spark: org.apache.spark.sql.SparkSession,
-      outputDir: String): Long = {
-    import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
-    val logDir = new org.apache.hadoop.fs.Path(
-      outputDir, FileStreamSink.metadataDir)
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(logDir)) return -1L
-    val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION,
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      logDir.toString)
-    log.getLatest().map(_._1).getOrElse(-1L)
-  }
-
-  /** Register the graft SQL functions on an ALREADY-BUILT session
-    * (sessions built with `GraftExtensions` don't need this). Uses the
-    * session's function registry, which is `private[sql]`.
-    */
-  def registerGraftFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    graft.functions.GraftExtensions.descriptors.foreach {
-      case (ident, info, builder) =>
-        registry.registerFunction(ident, info, builder)
-    }
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.TestSpark
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExpressionsSpec extends AnyFunSuite {
@@ -134,7 +133,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes graft_polyhash and graft_dot") {
-    ColumnBridge.registerGraftFunctions(spark)
     val r = spark.sql(
       "SELECT graft_polyhash('spark graft') AS h, " +
         "graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect().head

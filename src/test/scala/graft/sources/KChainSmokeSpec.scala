@@ -8,22 +8,21 @@ import org.apache.spark.sql.functions.{col, concat_ws, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** At-scale smoke over the reference's own EMR configuration
-  * (Makefile:22-23,131: k=1000 → 10⁶ nodes, 10⁶ edges): DSv2 kchain
-  * generator → reference-format CSV → PageRankCli end-to-end for 2
+  * (Makefile:22-23,131: k=1000 → 10⁶ nodes, 10⁶ edges): the
+  * `GraphIO.kChainEdges` generator → reference-format CSV →
+  * PageRankCli end-to-end for 2
   * passes, asserting the compat mass invariants that hold exactly on
   * out-degree-≤1 graphs.
   */
 class KChainSmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("EMR-scale kchain k=1000: DSv2 read + 2-pass CLI mass invariants") {
+  test("EMR-scale kchain k=1000: 2-pass CLI mass invariants") {
     val k = 1000L
     val n = (k * k).toDouble
     val tmp = Files.createTempDirectory("graft-kchain-smoke").toString
 
-    val edges = spark.read.format("kchain")
-      .option("k", k).option("numPartitions", 8).load()
-    assert(edges.rdd.getNumPartitions === 8)
+    val edges = GraphIO.kChainEdges(spark, k)
     assert(edges.count() === k * k)
 
     // the reference's input format (pageRank_v2.java:34): src,dst lines

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[VersionedTable]]'s commit-log contract on inline data: every
@@ -301,5 +302,30 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(got.filter($"part" === 2).count() === 0L)
     assert(got.count() === 12L)
     assert(got.filter($"k" === 1L).select("v").head().getDouble(0) === 111.0)
+  }
+
+  test("an append sizes its write by the launch-time shuffle width, not a scope's pinned one") {
+    val path = "target/test_vt_append_width"
+    VersionedTable.init(spark, path, table, "part")
+    val launch = spark.sparkContext.getConf.getInt(
+      "spark.sql.shuffle.partitions", 200)
+    assume(launch > 1, "needs a launch-time shuffle width above 1")
+    // 25 rows, but without CBO the filters leave the cross join's
+    // estimate at 16e4² bytes, far over the 128 MiB file target
+    val r = spark.range(0, 20000).filter($"id" < 5)
+    val batch = r.toDF("a").crossJoin(r.toDF("b"))
+      .select(($"a" * 100 + $"b" + 1000).as("k"), lit("app").as("name"),
+        $"b".cast("double").as("v"), lit("p9").as("part"))
+    assert(batch.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(128L * 1024 * 1024))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1") // the streaming runners' state scope
+    val v1 = try VersionedTable.commitAppend(spark, path, Seq("part"), batch)
+      finally spark.conf.set(key, prev)
+    assert(VersionedTable.snapshot(spark, path, v1)
+      .filter($"part" === "p9").count() === 25L)
+    assert(files(path, "part=p9").size > 1,
+      "the pinned session width sized the append's write")
   }
 }

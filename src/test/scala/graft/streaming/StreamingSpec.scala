@@ -139,37 +139,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("transformWithState variant matches mapGroupsWithState semantics") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState needs the RocksDB provider (multiple column
-    // families); the HDFS-backed default cannot host it.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Ev]
-    val q = StreamOps.userRunningStatsTws(in.toDS()).writeStream
-      .format("memory").queryName("tws").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(ev(1, 0, user = 7, v = 2.0), ev(2, 1, user = 7, v = 3.0))
-      q.processAllAvailable()
-      in.addData(ev(3, 2, user = 7, v = 5.0), ev(4, 2, user = 8, v = 1.0))
-      q.processAllAvailable()
-      val last = spark.table("tws").where("user_id = 7")
-        .orderBy("n_events").collect().last
-      assert(last.getLong(1) === 3L)
-      assert(last.getDouble(2) === 10.0)
-      assert(spark.table("tws").where("user_id = 8").count() === 1)
-    } finally {
-      q.stop()
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-  }
-
   test("streaming funnel state machine matches q41's batch chain on the same rows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -367,23 +336,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(past === Set(1L), s"expected e1 evicted+emitted, got $past")
       // matched errors never produce a null row
       assert(spark.table("ssjo").filter(col("follow_id").isNotNull).count() === 0)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment joins each micro-batch against the dim") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val in = MemoryStream[Ev]
-    val q = runAppend("en", StreamOps.enrich(in.toDF(), dim, "user_id"))
-    try {
-      in.addData(ev(1, 0, user = 1), ev(2, 1, user = 3))
-      q.processAllAvailable()
-      in.addData(ev(3, 2, user = 2))
-      q.processAllAvailable()
-      val rows = spark.table("en").select("event_id", "tier")
-        .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-      assert(rows === Map(1L -> Some("gold"), 2L -> None, 3L -> Some("basic")))
     } finally q.stop()
   }
 
@@ -733,163 +685,5 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(rows === Seq((1L, "a"), (2L, "b"), (3L, "c")),
       s"replay was not idempotent: $rows")
-  }
-
-  test("compactStreamSink preserves the committed relation and re-registers a manifest that keeps stray files invisible") {
-    // The maintenance loop between the st family and q51 (r16 item):
-    // a file sink's output is read via its _spark_metadata commit log,
-    // so compacting it must (a) compact only COMMITTED files and
-    // (b) leave a dir that still reads via a manifest.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "target/test_sink_compact"
-    val (outDir, cpDir, dstDir) =
-      (s"$base/out", s"$base/cp", s"$base/compacted")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val in = MemoryStream[Ev]
-    val q = in.toDF().select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode(OutputMode.Append).start()
-    try {
-      (1 to 3).foreach { b => // 3 commits → ≥3 committed data files
-        in.addData((1 to 20).map(i => ev(b * 100L + i, m = b)): _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // a crashed task's orphan: present on disk, absent from the log
-    val stray = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).head
-    org.apache.hadoop.fs.FileUtil.copy(fs, stray.getPath, fs,
-      new org.apache.hadoop.fs.Path(outDir, "stray-uncommitted.parquet"),
-      false, spark.sparkContext.hadoopConfiguration)
-    val committed = spark.read.parquet(outDir).collect()
-      .map(_.toSeq.toString).sorted.toSeq
-    assert(committed.length === 60, "manifest read must exclude the stray")
-    val out = graft.sources.Compaction.compactStreamSink(
-      spark, outDir, dstDir, 128L * 1024 * 1024)
-    assert(out.collect().map(_.toSeq.toString).sorted.toSeq === committed)
-    val dstFiles = fs.listStatus(new org.apache.hadoop.fs.Path(dstDir))
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-    assert(dstFiles.length === 1, s"expected 1 compacted file, got " +
-      dstFiles.map(_.getPath.getName).mkString(","))
-    // the NEW manifest governs reads: a stray dropped into the
-    // compacted dir stays invisible, same contract as the original sink
-    org.apache.hadoop.fs.FileUtil.copy(fs, dstFiles.head.getPath, fs,
-      new org.apache.hadoop.fs.Path(dstDir, "stray-later.parquet"),
-      false, spark.sparkContext.hadoopConfiguration)
-    assert(spark.read.parquet(dstDir).collect()
-      .map(_.toSeq.toString).sorted.toSeq === committed)
-  }
-
-  test("re-compaction is incremental: new batches append, prior compacted output is byte-untouched, the relation tracks the live sink") {
-    // r16 verdict item 4: the production loop re-compacts a LIVE sink
-    // on cadence — each pass must cost the new batches, not re-read
-    // and rewrite everything compacted before.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "target/test_sink_recompact"
-    val (outDir, cpDir, dstDir) =
-      (s"$base/out", s"$base/cp", s"$base/compacted")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    def dataFiles() = fs.listStatus(new org.apache.hadoop.fs.Path(dstDir))
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-        && !f.getPath.getName.startsWith("."))
-      .map(f => f.getPath.getName -> ((f.getLen, f.getModificationTime)))
-      .toMap
-    val in = MemoryStream[Ev]
-    val q = in.toDF().select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode(OutputMode.Append).start()
-    try {
-      (1 to 2).foreach { b =>
-        in.addData((1 to 20).map(i => ev(b * 100L + i, m = b)): _*)
-        q.processAllAvailable()
-      }
-      graft.sources.Compaction.compactStreamSink(
-        spark, outDir, dstDir, 128L * 1024 * 1024)
-      val firstPass = dataFiles()
-      // 3 more batches land on the LIVE sink
-      (3 to 5).foreach { b =>
-        in.addData((1 to 20).map(i => ev(b * 100L + i, m = b)): _*)
-        q.processAllAvailable()
-      }
-      val out = graft.sources.Compaction.compactStreamSink(
-        spark, outDir, dstDir, 128L * 1024 * 1024)
-      val secondPass = dataFiles()
-      // prior output byte-untouched: same names, lengths, mtimes
-      firstPass.foreach { case (name, st) =>
-        assert(secondPass.get(name) === Some(st),
-          s"re-compaction rewrote prior output file $name")
-      }
-      // the increment appended (new files exist beyond the first pass)
-      assert(secondPass.size > firstPass.size)
-      // and the compacted relation tracks the live sink exactly
-      val live = spark.read.parquet(outDir).collect()
-        .map(_.toSeq.toString).sorted.toSeq
-      assert(live.length === 100)
-      assert(out.collect().map(_.toSeq.toString).sorted.toSeq === live)
-      // an idle re-compaction (no new commits) is a no-op on the tree
-      graft.sources.Compaction.compactStreamSink(
-        spark, outDir, dstDir, 128L * 1024 * 1024)
-      assert(dataFiles() === secondPass)
-    } finally q.stop()
-  }
-
-  test("a torn compaction increment (sidecar written, batch never committed) heals on the next pass without duplicating rows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "target/test_sink_recompact_torn"
-    val (outDir, cpDir, dstDir) =
-      (s"$base/out", s"$base/cp", s"$base/compacted")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val in = MemoryStream[Ev]
-    val q = in.toDF().select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData((1 to 20).map(i => ev(100L + i, m = 1)): _*)
-      q.processAllAvailable()
-      graft.sources.Compaction.compactStreamSink(
-        spark, outDir, dstDir, 128L * 1024 * 1024)
-      in.addData((1 to 20).map(i => ev(200L + i, m = 2)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // simulate the crash window: record increment 1's sources (the
-    // newly committed files) and append its data WITHOUT committing
-    // its manifest batch — stray files on disk, sidecar ahead of log
-    val done = fs.open(new org.apache.hadoop.fs.Path(dstDir,
-      "_graft_compaction/0.sources"))
-    val gen0 = try scala.io.Source.fromInputStream(done, "UTF-8")
-      .getLines().filter(_.nonEmpty).toSet finally done.close()
-    val fresh = spark.read.parquet(outDir).inputFiles.toSeq.sorted
-      .filterNot(gen0)
-    assert(fresh.nonEmpty)
-    val sc = fs.create(new org.apache.hadoop.fs.Path(dstDir,
-      "_graft_compaction/1.sources"), true)
-    sc.write((fresh.mkString("\n") + "\n").getBytes("UTF-8")); sc.close()
-    spark.read.parquet(fresh: _*).repartition(1)
-      .write.mode("append").parquet(dstDir) // torn: no manifest batch 1
-    // the torn increment's strays are invisible: reads still serve
-    // only increment 0
-    assert(spark.read.parquet(dstDir).count() === 20)
-    // next pass detects sidecar gen 1 > last committed batch 0,
-    // REDOES the increment from its recorded sources, and the
-    // relation matches the live sink with no duplicates
-    val out = graft.sources.Compaction.compactStreamSink(
-      spark, outDir, dstDir, 128L * 1024 * 1024)
-    val live = spark.read.parquet(outDir).collect()
-      .map(_.toSeq.toString).sorted.toSeq
-    assert(live.length === 40)
-    assert(out.collect().map(_.toSeq.toString).sorted.toSeq === live,
-      "torn-increment healing duplicated or lost rows")
   }
 }

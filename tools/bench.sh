@@ -3,8 +3,9 @@
 # pass a main class as $1 to override). Runs the compiled classes
 # against /opt/spark/jars without sbt — no target-lock contention with
 # a concurrently-open sbt, no sbt JVM as a co-tenant in the measured
-# window. Mirrors build.sbt's fork options exactly (JDK17 add-opens,
-# UTC session timezone, SPARK_DRIVER_MEM heap, UI off).
+# window. Mirrors build.sbt's fork options (JDK17 add-opens,
+# SPARK_DRIVER_MEM heap); the session posture (UTC, UI off) comes from
+# graft.Runtime.session().
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="${1:-graft.Bench}"
@@ -25,7 +26,5 @@ exec java -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dio.netty.tryReflectionSetAccessible=true \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"$MEM" \
   "$MAIN" "$@"
