@@ -49,11 +49,12 @@ object Duel {
       stock: (Double, Tally), sf: String): Unit = {
     val (ct, c) = custom
     val (st, s) = stock
-    println(f"""{"duel":"$name","sf":"$sf","custom_sec":$ct%.3f,"stock_sec":$st%.3f,"speedup":${st / ct}%.2f,"custom_shuffle_rows":${c.shuffleRecords},"stock_shuffle_rows":${s.shuffleRecords},"custom_shuffle_bytes":${c.shuffleBytes},"stock_shuffle_bytes":${s.shuffleBytes}}""")
+    println(f"""{"duel":${Json.quote(name)},"sf":${Json.quote(sf)},"custom_sec":$ct%.3f,"stock_sec":$st%.3f,"speedup":${st / ct}%.2f,"custom_shuffle_rows":${c.shuffleRecords},"stock_shuffle_rows":${s.shuffleRecords},"custom_shuffle_bytes":${c.shuffleBytes},"stock_shuffle_bytes":${s.shuffleBytes}}""")
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sf = Json.quote(sfDir)
     val n = sys.env.getOrElse("SPARK_GRAFT_NSAMPLES", "3").toInt
     val which = if (args.nonEmpty) args.toSet
       else Set("topk", "bitmap", "band", "hist", "zorder", "bucketedsym",
@@ -117,8 +118,9 @@ object Duel {
         val r = li.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
         (r.getLong(0), r.getLong(1))
       }
-      val zdir = "target/duel_zorder/z"
-      val ldir = "target/duel_zorder/linear"
+      val zdir = graft.sources.Layouts.path(spark, sfDir, "duel_zorder") + "/z"
+      val ldir = graft.sources.Layouts.path(spark, sfDir, "duel_zorder") +
+        "/linear"
       val nFiles = 256
       // The z side is the first-class operator (normalization — the
       // "z-order needs bit-balanced dims" rule — lives inside it).
@@ -139,7 +141,7 @@ object Duel {
       for ((tag, probe) <- Seq("box2d" -> (box _), "dim2band" -> (band _))) {
         val (zs, Tally(_, _, zr, _)) = measure(spark, probe(zdir), n)
         val (ls, Tally(_, _, lr, _)) = measure(spark, probe(ldir), n)
-        println(f"""{"duel":"zorder_$tag","sf":"$sfDir","z_sec":$zs%.3f,"linear_sec":$ls%.3f,"z_scan_rows":$zr,"linear_scan_rows":$lr,"prune_ratio":${lr.toDouble / math.max(zr, 1L)}%.2f}""")
+        println(f"""{"duel":${Json.quote("zorder_" + tag)},"sf":$sf,"z_sec":$zs%.3f,"linear_sec":$ls%.3f,"z_scan_rows":$zr,"linear_scan_rows":$lr,"prune_ratio":${lr.toDouble / math.max(zr, 1L)}%.2f}""")
       }
     }
 
@@ -154,7 +156,8 @@ object Duel {
       // pruning; `scan_bytes` the fetched file bytes — the numbers a
       // 100 TB scan pays. Time travel makes the duel exact: identical
       // rows, identical manifest machinery, only the layout differs.
-      val root = "target/duel_vtzorder/table"
+      val root =
+        graft.sources.Layouts.path(spark, sfDir, "duel_vtzorder") + "/table"
       val li = Tables(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_extendedprice"), year(col("l_shipdate")).as("l_year"))
@@ -188,13 +191,13 @@ object Duel {
       for ((tag, probe) <- Seq("box2d" -> (box _), "dim2band" -> (band _))) {
         val (zs, Tally(_, _, zr, zb)) = measure(spark, probe(1L), n)
         val (ps, Tally(_, _, pr, pb)) = measure(spark, probe(0L), n)
-        println(f"""{"duel":"vtzorder_$tag","sf":"$sfDir","optimized_sec":$zs%.3f,"ingest_sec":$ps%.3f,"optimized_scan_rows":$zr,"ingest_scan_rows":$pr,"optimized_scan_bytes":$zb,"ingest_scan_bytes":$pb,"rows_ratio":${pr.toDouble / math.max(zr, 1L)}%.2f,"bytes_ratio":${pb.toDouble / math.max(zb, 1L)}%.2f}""")
+        println(f"""{"duel":${Json.quote("vtzorder_" + tag)},"sf":$sf,"optimized_sec":$zs%.3f,"ingest_sec":$ps%.3f,"optimized_scan_rows":$zr,"ingest_scan_rows":$pr,"optimized_scan_bytes":$zb,"ingest_scan_bytes":$pb,"rows_ratio":${pr.toDouble / math.max(zr, 1L)}%.2f,"bytes_ratio":${pb.toDouble / math.max(zb, 1L)}%.2f}""")
       }
     }
 
     if (which("dpp")) {
       // Layout duel for dynamic partition pruning: q48's star-join
-      // shape over the month-partitioned lineitem, identical plan
+      // shape over q48's own partitioned lineitem, identical plan
       // modulo the DPP subquery. With pruning OFF the fact scan
       // decodes every month directory and the join discards ~90% of
       // the rows AFTER the read; with pruning ON the runtime
@@ -203,22 +206,13 @@ object Duel {
       // (≤8 of 83). At local SF wall time is mostly fixed cost —
       // `prune_ratio` (rows decoded, off/on) is the number that
       // carries to 100 TB, where the scan IS the query's cost.
-      val pdir = "target/duel_part_li_" +
-        graft.sources.Bucketing.pathDigest(sfDir)
-      // within-partition split sized to the machine (the q48 layout's
-      // rule: a ≤8-directory pruned scan must still engage every core)
-      graft.sources.PartitionedWrite.partitionedTable(spark,
-        Tables(spark, sfDir, "lineitem"), pdir, "l_smonth",
-        year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
-        splitFiles =
-          math.max(1, spark.sparkContext.defaultParallelism / 8))
       def dim = broadcast(Tables(spark, sfDir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))
         .select((year(col("o_orderdate")) * 100 +
           month(col("o_orderdate"))).as("m"))
         .distinct())
-      def q = spark.read.parquet(pdir)
+      def q = graft.queries.CoreQueries.partitionedLineitem(spark, sfDir)
         .join(dim, col("l_smonth") === col("m"))
         .groupBy(col("l_smonth"))
         .agg(sum(col("l_extendedprice")).as("rev"), count(lit(1)).as("n"))
@@ -253,7 +247,7 @@ object Duel {
       // FACT-side prune — the number that scales with the corpus
       val (_, Tally(_, _, dimRows, _)) = measure(spark, dim, 1)
       val (onFact, offFact) = (onr - dimRows, offr - dimRows)
-      println(f"""{"duel":"dpp_star_join","sf":"$sfDir","dpp_sec":$ons%.3f,"no_dpp_sec":$offs%.3f,"dpp_fact_rows":$onFact,"no_dpp_fact_rows":$offFact,"prune_ratio":${offFact.toDouble / math.max(onFact, 1L)}%.2f}""")
+      println(f"""{"duel":"dpp_star_join","sf":$sf,"dpp_sec":$ons%.3f,"no_dpp_sec":$offs%.3f,"dpp_fact_rows":$onFact,"no_dpp_fact_rows":$offFact,"prune_ratio":${offFact.toDouble / math.max(onFact, 1L)}%.2f}""")
     }
 
     if (which("compaction")) {
@@ -266,15 +260,8 @@ object Duel {
       // 100× more opens while the compacted twin's count stays pinned
       // to ceil(bytes/target); wall at local SF mostly measures the
       // fixed costs the files multiply.
-      val digest = graft.sources.Bucketing.pathDigest(sfDir)
-      val frag = graft.sources.Layouts.root(spark) + "/frag_li_" + digest
-      val comp = graft.sources.Layouts.root(spark) + "/compact_li_" + digest
-      graft.sources.PartitionedWrite.partitionedTable(spark,
-        Tables(spark, sfDir, "lineitem"), frag, "l_smonth",
-        year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
-        splitFiles = math.max(8, spark.sparkContext.defaultParallelism))
-      graft.sources.Compaction.compact(spark, frag, comp, "l_smonth",
-        128L * 1024 * 1024)
+      val (frag, comp, _) =
+        graft.queries.CoreQueries.compactedLineitem(spark, sfDir)
       def probe(path: String) = spark.read.parquet(path)
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_extendedprice")).as("rev"), count(lit(1)).as("n"))
@@ -284,7 +271,7 @@ object Duel {
       val (csec, Tally(_, _, crows, _)) = measure(spark, probe(comp), n)
       assert(frows == crows,
         s"compaction duel decoded different row counts: $frows vs $crows")
-      println(f"""{"duel":"compaction","sf":"$sfDir","frag_files":$nf,"compact_files":$nc,"frag_sec":$fsec%.3f,"compact_sec":$csec%.3f,"speedup":${fsec / csec}%.2f,"scan_rows":$frows}""")
+      println(f"""{"duel":"compaction","sf":$sf,"frag_files":$nf,"compact_files":$nc,"frag_sec":$fsec%.3f,"compact_sec":$csec%.3f,"speedup":${fsec / csec}%.2f,"scan_rows":$frows}""")
     }
 
     if (which("statsskip")) {
@@ -301,7 +288,7 @@ object Duel {
       // 0 rows decoded) — each sample must re-plan to re-scan
       def q55 = graft.queries.CoreQueries.q55_stats_skipping(spark, sfDir)
       def full = graft.queries.CoreQueries
-        .partitionedLineitemForSpec(spark, sfDir)
+        .partitionedLineitem(spark, sfDir)
         .filter(col("l_shipdate") >= to_timestamp(lit("1997-03-10")) &&
           col("l_shipdate") <= to_timestamp(lit("1997-06-20")))
         .groupBy(col("l_returnflag"))
@@ -311,7 +298,7 @@ object Duel {
       val (fullSec, Tally(_, _, fullRows, _)) = measure(spark, full, n)
       def res(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
       assert(res(q55) == res(full), "statsskip duel: relations diverge")
-      println(f"""{"duel":"statsskip","sf":"$sfDir","skip_rows_decoded":$skipRows,"full_rows_decoded":$fullRows,"rows_ratio":${fullRows.toDouble / math.max(1L, skipRows)}%.1f,"skip_sec":$skipSec%.3f,"full_sec":$fullSec%.3f,"speedup":${fullSec / skipSec}%.2f}""")
+      println(f"""{"duel":"statsskip","sf":$sf,"skip_rows_decoded":$skipRows,"full_rows_decoded":$fullRows,"rows_ratio":${fullRows.toDouble / math.max(1L, skipRows)}%.1f,"skip_sec":$skipSec%.3f,"full_sec":$fullSec%.3f,"speedup":${fullSec / skipSec}%.2f}""")
     }
 
     if (which("fileskip")) {
@@ -334,12 +321,8 @@ object Duel {
       // Identical relations asserted; defs not vals (the statsskip
       // lesson: a reused plan serves later samples from shuffle files,
       // zeroing the decode tally).
-      val digest = graft.sources.Bucketing.pathDigest(sfDir)
-      val frag = graft.sources.Layouts.root(spark) + "/frag_li_" + digest
-      graft.sources.PartitionedWrite.partitionedTable(spark,
-        Tables(spark, sfDir, "lineitem"), frag, "l_smonth",
-        year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
-        splitFiles = math.max(8, spark.sparkContext.defaultParallelism))
+      val (frag, _, _) =
+        graft.queries.CoreQueries.compactedLineitem(spark, sfDir)
       val (tree, stats) = graft.queries.CoreQueries
         .rangedLineitem(spark, sfDir)
       def window(df: DataFrame) = df
@@ -373,7 +356,7 @@ object Duel {
       def res(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
       assert(res(fileSkip) == res(rangeDir) && res(fileSkip) == res(hashDir),
         "fileskip duel: relations diverge")
-      println(f"""{"duel":"fileskip","sf":"$sfDir","hash_rows_decoded":$hashRows,"range_rows_decoded":$dirRows,"file_rows_decoded":$fileRows,"stats_probe_rows":$statsProbeRows,"rows_ratio":${hashRows.toDouble / math.max(1L, fileRows)}%.1f,"hash_bytes_read":$hashBytes,"range_bytes_read":$dirBytes,"file_bytes_read":$fileBytes,"month_files_listed":$monthFiles,"live_files_listed":$liveFiles,"hash_sec":$hashSec%.3f,"range_sec":$dirSec%.3f,"file_sec":$fileSecT%.3f}""")
+      println(f"""{"duel":"fileskip","sf":$sf,"hash_rows_decoded":$hashRows,"range_rows_decoded":$dirRows,"file_rows_decoded":$fileRows,"stats_probe_rows":$statsProbeRows,"rows_ratio":${hashRows.toDouble / math.max(1L, fileRows)}%.1f,"hash_bytes_read":$hashBytes,"range_bytes_read":$dirBytes,"file_bytes_read":$fileBytes,"month_files_listed":$monthFiles,"live_files_listed":$liveFiles,"hash_sec":$hashSec%.3f,"range_sec":$dirSec%.3f,"file_sec":$fileSecT%.3f}""")
     }
 
     if (which("bloomskip")) {
@@ -424,7 +407,7 @@ object Duel {
       }
       def res(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
       assert(res(bloomed) == res(plain), "bloomskip duel: relations diverge")
-      println(f"""{"duel":"bloomskip","sf":"$sfDir","bloom_rows_decoded":$bRows,"plain_rows_decoded":$plainRows,"stats_probe_rows":$totalFiles,"rows_ratio":${plainRows.toDouble / math.max(1L, bRows)}%.1f,"bloom_bytes_read":$bBytes,"plain_bytes_read":$plainBytes,"files_listed":$listedFiles,"files_total":$totalFiles,"bloom_sec":$bSec%.3f,"plain_sec":$plainSec%.3f}""")
+      println(f"""{"duel":"bloomskip","sf":$sf,"bloom_rows_decoded":$bRows,"plain_rows_decoded":$plainRows,"stats_probe_rows":$totalFiles,"rows_ratio":${plainRows.toDouble / math.max(1L, bRows)}%.1f,"bloom_bytes_read":$bBytes,"plain_bytes_read":$plainBytes,"files_listed":$listedFiles,"files_total":$totalFiles,"bloom_sec":$bSec%.3f,"plain_sec":$plainSec%.3f}""")
     }
 
     if (which("mergecow")) {
@@ -438,10 +421,9 @@ object Duel {
       // touching 2 of ~80 month directories should rewrite ~2/80 of
       // the table's bytes, and the full-rewrite wall grows with the
       // CORPUS while the COW wall grows with the batch.
-      val digest = graft.sources.Bucketing.pathDigest(sfDir)
-      val cowDir = graft.sources.Layouts.root(spark) + "/merge_cow_" + digest
-      val cowDir2 = graft.sources.Layouts.root(spark) + "/merge_cowi_" + digest
-      val fullDir = graft.sources.Layouts.root(spark) + "/merge_full_" + digest
+      val cowDir = graft.sources.Layouts.path(spark, sfDir, "merge_cow")
+      val cowDir2 = graft.sources.Layouts.path(spark, sfDir, "merge_cowi")
+      val fullDir = graft.sources.Layouts.path(spark, sfDir, "merge_full")
       def monthCol = year(col("o_orderdate")) * 100 + month(col("o_orderdate"))
       val snapSrc = Tables(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -523,7 +505,7 @@ object Duel {
         "mergecow duel: COW and full-rewrite relations diverge")
       assert(sig(cowDir2) == sig(fullDir),
         "mergecow duel: immutable-key COW diverges")
-      println(f"""{"duel":"mergecow","sf":"$sfDir","dirs_total":${after.size},"dirs_rewritten":${rewritten.size},"cow_bytes":$cowBytes,"full_bytes":$fullBytes,"bytes_ratio":${fullBytes.toDouble / math.max(1L, cowBytes)}%.1f,"cow_sec":$cowSec%.3f,"cow_imm_sec":$cowImmSec%.3f,"full_sec":$fullSec%.3f}""")
+      println(f"""{"duel":"mergecow","sf":$sf,"dirs_total":${after.size},"dirs_rewritten":${rewritten.size},"cow_bytes":$cowBytes,"full_bytes":$fullBytes,"bytes_ratio":${fullBytes.toDouble / math.max(1L, cowBytes)}%.1f,"cow_sec":$cowSec%.3f,"cow_imm_sec":$cowImmSec%.3f,"full_sec":$fullSec%.3f}""")
     }
 
     if (which("bloom")) {

@@ -559,8 +559,7 @@ object CoreQueries {
     SharedRelations(s, dir, "zordered_lineitem") {
       graft.sources.ZOrderedWrite.write(s, t(s, dir, "lineitem"),
         "l_partkey", "l_suppkey", 32,
-        graft.sources.Layouts.root(s) + "/zorder_li_" +
-          graft.sources.Bucketing.pathDigest(dir))
+        graft.sources.Layouts.path(s, dir, "zorder_li"))
     }
 
   // Z-order (Morton) clustering statistics — the layout primitive
@@ -721,17 +720,14 @@ object CoreQueries {
         (col("p50_bin") * HistW).as("p50_lo"))
   }
 
-  private val partLiMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** lineitem re-written hive-partitioned by ship month (`l_smonth` =
     * yyyymm int — an INT key on purpose: partition-value inference
     * would read a `yyyy-MM` string back as DATE and silently retype
     * the column) via [[graft.sources.PartitionedWrite]], memoized per
-    * (session, sfDir) like the bucketed graph layouts. NOT
-    * SharedRelations-persisted: pinning the read-back in executor
-    * memory would shadow the directory layout and hide the partition
-    * pruning q47/q48 exist to exercise. Same rows as the source table
+    * (session, sfDir) like the bucketed graph layouts, NOT persisted:
+    * pinning the read-back in executor memory would shadow the
+    * directory layout and hide the partition pruning q47/q48 exist to
+    * exercise. Same rows as the source table
     * plus the derived key, so every lineitem oracle still holds.
     *
     * The within-partition split is sized to the machine:
@@ -744,21 +740,20 @@ object CoreQueries {
     * than the unpruned scan; with the split the same prune is ~32
     * wide).
     */
-  /** Spec access to the partitioned layout (PartitionedSpec's q55
-    * counterfactual scan needs the raw tree, not a registry entry). */
-  private[graft] def partitionedLineitemForSpec(s: SparkSession,
-      dir: String): DataFrame = partitionedLineitem(s, dir)
+  private[graft] def partitionedLineitem(s: SparkSession, dir: String)
+      : DataFrame = partitionedLineitemTree(s, dir)._2
 
-  private def partitionedLineitem(s: SparkSession, dir: String): DataFrame =
-    partLiMemo.getOrElseUpdate((s, dir), {
-      graft.sources.PartitionedWrite.partitionedTable(
-        s, t(s, dir, "lineitem"),
-        graft.sources.Layouts.root(s) + "/part_li_" +
-          graft.sources.Bucketing.pathDigest(dir),
-        "l_smonth",
+  /** [[partitionedLineitem]] with its tree's path (q55's index reads
+    * the directories, not the relation). */
+  private def partitionedLineitemTree(s: SparkSession, dir: String)
+      : (String, DataFrame) =
+    SharedRelations.memo(s, dir, "part_li") {
+      val tree = graft.sources.Layouts.path(s, dir, "part_li")
+      (tree, graft.sources.PartitionedWrite.partitionedTable(
+        s, t(s, dir, "lineitem"), tree, "l_smonth",
         year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
-        splitFiles = math.max(1, s.sparkContext.defaultParallelism / 8))
-    })
+        splitFiles = math.max(1, s.sparkContext.defaultParallelism / 8)))
+    }
 
   /** The month [[q47_partition_pruned]] probes — mid-corpus, present
     * at every SF (lineitem spans 1995-01..2001-11), shared verbatim
@@ -864,9 +859,6 @@ object CoreQueries {
     */
   private val Q50Tol = 0.05
 
-  private val q50SkMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The MATERIALIZED month-sketch table q50 rolls up from — built
     * once per (session, sfDir) and written as parquet UNDER THE SAME
     * LAYOUT ROOT as the partition tree it sidecars
@@ -886,16 +878,15 @@ object CoreQueries {
     * ~|months|·|priorities| rows at ANY corpus size.
     */
   private def monthlySketches(s: SparkSession, dir: String): DataFrame =
-    q50SkMemo.getOrElseUpdate((s, dir), {
-      val path = graft.sources.Layouts.root(s) + "/q50_sketches_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    SharedRelations.memo(s, dir, "q50_sketches") {
+      val path = graft.sources.Layouts.path(s, dir, "q50_sketches")
       t(s, dir, "orders")
         .groupBy((year(col("o_orderdate")) * 100 +
           month(col("o_orderdate"))).as("m"), col("o_orderpriority"))
         .agg(hll_sketch_agg(col("o_custkey"), lit(Q50LgK)).as("sk"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
-    })
+    }
 
   // Mergeable distinct-count sketches — the INCREMENTAL form of
   // distinct counting that q30's one-shot approx_count_distinct can't
@@ -924,9 +915,6 @@ object CoreQueries {
           col("n_exact") * Q50Tol).as("ok"))
   }
 
-  private val q51Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   // Small-file COMPACTION ([[graft.sources.Compaction]]) — the layout-
   // MAINTENANCE verb next to the three layout-creation operators
   // (partition q47/q48, z-order q42, bucketing): first a deliberately
@@ -943,27 +931,28 @@ object CoreQueries {
   // compaction has. CompactionSpec pins the layout side (file counts
   // collapse, adaptive multi-file widths at a small target, partition
   // pruning intact on the compacted tree); both trees are layout
-  // artifacts under [[graft.sources.Layouts.root]], rebuild-on-miss.
-  def q51_compaction(s: SparkSession, dir: String): DataFrame = {
-    val target = 128L * 1024 * 1024
-    val compacted = q51Memo.getOrElseUpdate((s, dir), {
-      val digest = graft.sources.Bucketing.pathDigest(dir)
-      val frag = graft.sources.Layouts.root(s) + "/frag_li_" + digest
-      // the target suffix keeps this tree apart from Duel's
-      // `compact_li_<digest>` twin, whose overwrite would otherwise
-      // yank files out from under this entry's memoized file index
-      val dst = graft.sources.Layouts.root(s) + "/compact_li_" + digest +
-        "_t" + target
+  // artifacts under [[graft.sources.Layouts]], rebuild-on-miss.
+  def q51_compaction(s: SparkSession, dir: String): DataFrame =
+    compactedLineitem(s, dir)._3
+      .groupBy(col("l_smonth").cast(LongType).as("ship_month"))
+      .agg(dsum("l_extendedprice").as("rev"), count(lit(1)).as("n_rows"))
+
+  /** [[q51_compaction]]'s trees, built once per (session, sfDir): the
+    * over-split tree's path, the compacted tree's path, and the
+    * compacted relation. The `compaction` and `fileskip` duels read
+    * the same trees. */
+  private[graft] def compactedLineitem(s: SparkSession, dir: String)
+      : (String, String, DataFrame) =
+    SharedRelations.memo(s, dir, "compact_li") {
+      val frag = graft.sources.Layouts.path(s, dir, "frag_li")
+      val dst = graft.sources.Layouts.path(s, dir, "compact_li")
       graft.sources.PartitionedWrite.partitionedTable(
         s, t(s, dir, "lineitem"), frag, "l_smonth",
         year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
         splitFiles = math.max(8, s.sparkContext.defaultParallelism))
-      graft.sources.Compaction.compact(s, frag, dst, "l_smonth", target)
-    })
-    compacted
-      .groupBy(col("l_smonth").cast(LongType).as("ship_month"))
-      .agg(dsum("l_extendedprice").as("rev"), count(lit(1)).as("n_rows"))
-  }
+      (frag, dst, graft.sources.Compaction.compact(s, frag, dst, "l_smonth",
+        128L * 1024 * 1024))
+    }
 
   // MERGE INTO / CDC upsert ([[graft.operators.MergeInto]]) — the
   // OTHER warehouse-maintenance verb next to q51's compaction: a
@@ -997,9 +986,6 @@ object CoreQueries {
       "o_orderkey")
   }
 
-  private val q53Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   // SCHEMA EVOLUTION across ingestion epochs — the third maintenance
   // surface after q51's files and q52's rows: a 100 TB corpus
   // accumulates years of parquet whose schema DRIFTED (here
@@ -1020,9 +1006,8 @@ object CoreQueries {
   // pays the sweep once per ingestion, not per query; the option is
   // the discovery tool.
   def q53_schema_merge(s: SparkSession, dir: String): DataFrame = {
-    val rel = q53Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/evo_orders_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    val rel = SharedRelations.memo(s, dir, "evo_orders") {
+      val root = graft.sources.Layouts.path(s, dir, "evo_orders")
       val snap = t(s, dir, "orders")
       val even = pmod(col("o_orderkey"), lit(2L)) === 0
       snap.filter(even)
@@ -1033,14 +1018,11 @@ object CoreQueries {
           col("o_orderpriority"))
         .write.mode("overwrite").parquet(root + "/epoch=1")
       s.read.option("mergeSchema", "true").parquet(root)
-    })
+    }
     rel.select(col("epoch").cast(LongType).as("epoch"),
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
       col("o_orderpriority"))
   }
-
-  private val q54Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
 
   /** The materialized per-partition statistics table q54 serves —
     * ANALYZE as a LAYOUT ARTIFACT, completing the warehouse family
@@ -1052,7 +1034,7 @@ object CoreQueries {
     * file/partition in its manifests (Delta/Iceberg column stats;
     * the min/max are what data skipping reads INSTEAD of footers,
     * the NDV is what a CBO joins-orders by). Written beside the tree
-    * it describes under [[graft.sources.Layouts.root]] (the q50
+    * it describes under [[graft.sources.Layouts]] (the q50
     * sidecar posture — rebuild-on-miss, re-pointed with the
     * layouts). Scale shape: one aggregation pass at ingestion per
     * landed partition, |directories| rows forever after — stats
@@ -1075,14 +1057,13 @@ object CoreQueries {
   /** Build-if-cold and return the q54 sidecar's PATH — the index-
     * backed q55 wires the path, not the relation, into the scan. */
   private def partitionStatsPath(s: SparkSession, dir: String): String =
-    q54Memo.getOrElseUpdate((s, dir), {
-      val path = graft.sources.Layouts.root(s) + "/q54_stats_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    SharedRelations.memo(s, dir, "q54_stats") {
+      val path = graft.sources.Layouts.path(s, dir, "q54_stats")
       graft.sources.StatsStore
         .dirStats(partitionedLineitem(s, dir), "l_smonth", Q54Cols, Q54Ndv)
         .write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
   private def partitionStats(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(partitionStatsPath(s, dir))
@@ -1166,9 +1147,6 @@ object CoreQueries {
       .drop("rn")
   }
 
-  private val q57Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   // VERSIONED time travel ([[graft.sources.VersionedTable]]) — the
   // lakehouse primitive q52 (MERGE write half) and q56 (AS-OF read
   // half) were each one side of: a REAL versioned table is built from
@@ -1187,9 +1165,22 @@ object CoreQueries {
   // write); the AS-OF read is one manifest (metadata) + a pruned scan
   // of exactly the live files — never table × versions.
   def q57_versioned_time_travel(s: SparkSession, dir: String): DataFrame = {
-    val path = q57Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/vt_orders_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    val path = versionedOrders(s, dir)
+    // the INDEX-backed read ([[graft.sources.VersionedFileIndex]]):
+    // the scan's file universe is v1's manifest via a Catalyst
+    // FileIndex, so the oracle hash pins the table-format read path
+    // itself (spec-pinned equal to the explicit file-list form)
+    graft.sources.VersionedTable.snapshotRelation(s, path, "o_month", 1L)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        col("o_orderpriority"), col("o_month").cast(LongType).as("o_month"))
+  }
+
+  /** Build-if-cold accessor for q57's versioned orders table (v0
+    * init, v1 merge, v2 optimize, v3 merge) — shared by q64/q65 and
+    * the CDF streaming entry (st14). */
+  private[graft] def versionedOrders(s: SparkSession, dir: String): String =
+    SharedRelations.memo(s, dir, "vt_orders") {
+      val root = graft.sources.Layouts.path(s, dir, "vt_orders")
       val snap0 = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"),
@@ -1210,8 +1201,8 @@ object CoreQueries {
       graft.sources.VersionedTable.init(s, root, snap0, "o_month")
       graft.sources.VersionedTable.commitMerge(
         s, root, "o_month", b1, "o_orderkey")
-      // an OPTIMIZE commit between the merges (v2): the AS-OF-v1 read
-      // below must still serve the PRE-optimize files — history
+      // an OPTIMIZE commit between the merges (v2): q57's AS-OF-v1
+      // read must still serve the PRE-optimize files — history
       // readable across a full-table rewrite is the property that
       // separates a commit log from a directory
       graft.sources.VersionedTable.commitOptimize(
@@ -1219,15 +1210,7 @@ object CoreQueries {
       graft.sources.VersionedTable.commitMerge(
         s, root, "o_month", b2, "o_orderkey")
       root
-    })
-    // the INDEX-backed read ([[graft.sources.VersionedFileIndex]]):
-    // the scan's file universe is v1's manifest via a Catalyst
-    // FileIndex, so the oracle hash pins the table-format read path
-    // itself (spec-pinned equal to the explicit file-list form)
-    graft.sources.VersionedTable.snapshotRelation(s, path, "o_month", 1L)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderpriority"), col("o_month").cast(LongType).as("o_month"))
-  }
+    }
 
   /** [[q55_stats_skipping]]'s date window — mid-corpus, present at
     * every SF (lineitem ships 1995-01..2001-11), spanning parts of
@@ -1262,9 +1245,7 @@ object CoreQueries {
   // — and a production table format versions stats WITH the snapshot
   // (q57/q59 compose exactly that).
   def q55_stats_skipping(s: SparkSession, dir: String): DataFrame = {
-    partitionedLineitem(s, dir) // build-if-cold; the index reads the tree
-    val tree = graft.sources.Layouts.root(s) + "/part_li_" +
-      graft.sources.Bucketing.pathDigest(dir)
+    val (tree, _) = partitionedLineitemTree(s, dir)
     val lo = to_timestamp(lit(Q55Lo))
     val hi = to_timestamp(lit(Q55Hi))
     graft.sources.ZoneMapFileIndex.dirRelation(s, tree, "l_smonth",
@@ -1274,9 +1255,6 @@ object CoreQueries {
       .groupBy(col("l_returnflag"))
       .agg(dsum("l_extendedprice").as("rev"), count(lit(1)).as("n_rows"))
   }
-
-  private val q58Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
 
   /** [[q58_file_skipping]]'s window — deliberately INSIDE one calendar
     * month, where directory-grain skipping (q55) bottoms out at "read
@@ -1296,10 +1274,9 @@ object CoreQueries {
     * ([[graft.sources.StatsStore.writeFileStats]]). */
   private[graft] def rangedLineitem(s: SparkSession, dir: String)
       : (String, String) =
-    q58Memo.getOrElseUpdate((s, dir), {
-      val digest = graft.sources.Bucketing.pathDigest(dir)
-      val tree = graft.sources.Layouts.root(s) + "/ranged_li_" + digest
-      val stats = graft.sources.Layouts.root(s) + "/q58_fstats_" + digest
+    SharedRelations.memo(s, dir, "ranged_li") {
+      val tree = graft.sources.Layouts.path(s, dir, "ranged_li")
+      val stats = graft.sources.Layouts.path(s, dir, "q58_fstats")
       val li = t(s, dir, "lineitem").withColumn("l_smonth",
         year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
       // range boundaries come from a sample seeded with the RDD id:
@@ -1311,7 +1288,7 @@ object CoreQueries {
         Seq(graft.sources.StatsStore.ColSpec("l_shipdate", "min_ship",
           "max_ship")))
       (tree, stats)
-    })
+    }
 
   // FILE-level stats skipping — q55 one grain finer (the r16 verdict's
   // item 5, Delta's per-file checkpoint stats): the predicate window
@@ -1340,9 +1317,6 @@ object CoreQueries {
       .agg(dsum("l_extendedprice").as("rev"), count(lit(1)).as("n_rows"))
   }
 
-  private val q59Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   // MAINTAINED statistics as the relation — the q54/q55 staleness gap
   // closed and put under the ORACLE gate (StatsStoreSpec pins the
   // mechanism; this pins the values at every SF): a month-partitioned
@@ -1359,10 +1333,9 @@ object CoreQueries {
   // between ANALYZE-after-every-merge (a corpus re-scan) and
   // manifest-style stats that ride along with each commit.
   def q59_maintained_stats(s: SparkSession, dir: String): DataFrame = {
-    val statsPath = q59Memo.getOrElseUpdate((s, dir), {
-      val digest = graft.sources.Bucketing.pathDigest(dir)
-      val tree = graft.sources.Layouts.root(s) + "/mstats_orders_" + digest
-      val stats = graft.sources.Layouts.root(s) + "/mstats_side_" + digest
+    val statsPath = SharedRelations.memo(s, dir, "mstats_orders") {
+      val tree = graft.sources.Layouts.path(s, dir, "mstats_orders")
+      val stats = graft.sources.Layouts.path(s, dir, "mstats_side")
       val snap0 = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"),
@@ -1389,14 +1362,11 @@ object CoreQueries {
         "o_orderkey",
         hooks = Seq(graft.sources.StatsStore.DirStatsHook(stats, cols)))
       stats
-    })
+    }
     s.read.parquet(statsPath)
       .select(col("o_month").cast(LongType).as("o_month"),
         col("n_rows"), col("min_price"), col("max_price"))
   }
-
-  private val q60Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
 
   /** [[q60_multicol_versioned]]'s slice — one (month, bucket) leaf of
     * the two-level layout, shared verbatim with the oracle. */
@@ -1419,9 +1389,8 @@ object CoreQueries {
   // commit cost = the batch's leaf footprint (≤ 8 of ~320 leaves
   // rewritten); the read is one manifest + 1 directory.
   def q60_multicol_versioned(s: SparkSession, dir: String): DataFrame = {
-    val path = q60Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/vt_mc_orders_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    val path = SharedRelations.memo(s, dir, "vt_mc_orders") {
+      val root = graft.sources.Layouts.path(s, dir, "vt_mc_orders")
       val snap0 = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
@@ -1441,7 +1410,7 @@ object CoreQueries {
       graft.sources.VersionedTable.commitMergeMulti(s, root,
         Seq("o_month", "o_bucket"), changes, "o_orderkey")
       root
-    })
+    }
     graft.sources.VersionedTable
       .snapshotRelationMulti(s, path, Seq("o_month", "o_bucket"))
       .filter(col("o_month") === Q60Month && col("o_bucket") === 1)
@@ -1449,9 +1418,6 @@ object CoreQueries {
         col("o_month").cast(LongType).as("o_month"),
         col("o_bucket").cast(LongType).as("o_bucket"))
   }
-
-  private val q61Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
 
   /** Build-if-cold the SCHEMA-EVOLVED versioned orders table q61/q62
     * read: v0 = orders (month-partitioned, no tier column); v1 = an
@@ -1461,9 +1427,8 @@ object CoreQueries {
     * composition the r17 verdict asked for, on the real commit log
     * instead of a plain tree. */
   private def evolvedOrders(s: SparkSession, dir: String): String =
-    q61Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/vt_evo_orders_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    SharedRelations.memo(s, dir, "vt_evo_orders") {
+      val root = graft.sources.Layouts.path(s, dir, "vt_evo_orders")
       val snap0 = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
@@ -1481,7 +1446,7 @@ object CoreQueries {
       graft.sources.VersionedTable.commitMerge(s, root, "o_month",
         changes, "o_orderkey", evolveSchema = true)
       root
-    })
+    }
 
   // SCHEMA EVOLUTION as a COMMIT — q53 proved epoch schema merging on
   // plain trees; this puts the same semantics inside the version log
@@ -1513,9 +1478,6 @@ object CoreQueries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_month").cast(LongType).as("o_month"))
 
-  private val q63Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   // OPTIMIZE ZORDER BY as a COMMIT — the composition the r17 verdict
   // named as Delta's single most-used maintenance verb, here from two
   // proven parts: [[graft.sources.VersionedTable.commitOptimize]]'s
@@ -1533,9 +1495,8 @@ object CoreQueries {
   // pins OPTIMIZE ZORDER as a genuine commit, not a destructive
   // rewrite.
   def q63_optimize_zorder(s: SparkSession, dir: String): DataFrame = {
-    val path = q63Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/vt_zli_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    val path = SharedRelations.memo(s, dir, "vt_zli") {
+      val root = graft.sources.Layouts.path(s, dir, "vt_zli")
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_returnflag"), col("l_extendedprice"),
@@ -1544,7 +1505,7 @@ object CoreQueries {
       graft.sources.VersionedTable.commitOptimizeZOrder(s, root, "l_year",
         "l_partkey", "l_suppkey", filesPerDir = 4)
       root
-    })
+    }
     graft.sources.VersionedTable.snapshotRelation(s, path, "l_year")
       .filter(col("l_partkey") <= 400 && col("l_suppkey") <= 20)
       .groupBy(col("l_returnflag"))
@@ -1568,14 +1529,6 @@ object CoreQueries {
   // slice-sized exchange; a commit flagged dataChange=false (q57's v2
   // OPTIMIZE) is skipped at metadata cost — the flag is what keeps a
   // CDC consumer O(changes) across compactions.
-  /** Build-if-cold accessor for q57's versioned orders table (v0
-    * init, v1 merge, v2 optimize, v3 merge) — shared by q64/q65 and
-    * the CDF streaming entry (st14). */
-  private[graft] def versionedOrders(s: SparkSession, dir: String): String = {
-    q57_versioned_time_travel(s, dir)
-    q57Memo((s, dir))
-  }
-
   def q64_change_feed(s: SparkSession, dir: String): DataFrame = {
     val path = versionedOrders(s, dir)
     graft.sources.VersionedTable.changeFeed(s, path, 0L, 1L, "o_orderkey")
@@ -1629,9 +1582,6 @@ object CoreQueries {
       .filter(col("n_rows") > 0)
   }
 
-  private val q66Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-
   /** The point-lookup key q66 probes — a partkey populated at every
     * SF (TPC-H partkeys are dense from 1). Shared verbatim with the
     * oracle. */
@@ -1648,16 +1598,15 @@ object CoreQueries {
     * construction rule). */
   private[graft] def bloomedLineitem(s: SparkSession, dir: String)
       : (String, String) =
-    q66Memo.getOrElseUpdate((s, dir), {
+    SharedRelations.memo(s, dir, "q66_bstats") {
       val (tree, _) = rangedLineitem(s, dir)
-      val stats = graft.sources.Layouts.root(s) + "/q66_bstats_" +
-        graft.sources.Bucketing.pathDigest(dir)
+      val stats = graft.sources.Layouts.path(s, dir, "q66_bstats")
       graft.sources.StatsStore.writeFileStats(s, tree, stats, "l_smonth",
         cols = Nil,
         blooms = Seq(graft.sources.StatsStore.BloomSpec(
           "l_partkey", "bf_partkey", 65536L)))
       (tree, stats)
-    })
+    }
 
   // BLOOM-FILTER file skipping — the skipping tier q55/q58 canNOT
   // serve: a POINT LOOKUP on a column the layout doesn't cluster

@@ -481,26 +481,6 @@ object DedupQueries {
     s
   }
 
-  /** Spill root for [[d16_containment_sharded]]'s shard/merge files —
-    * spark conf `graft.d16.root`, else env `GRAFT_D16_ROOT`, else
-    * `target`. At cluster scale point this at an object-store URI
-    * (the paths go through Hadoop's FileSystem API, so any scheme the
-    * cluster mounts works); the default keeps local runs self-contained.
-    */
-  private def d16Root(s: SparkSession): String =
-    s.conf.getOption("graft.d16.root")
-      .orElse(sys.env.get("GRAFT_D16_ROOT")).getOrElse("target")
-
-  /** Filesystem-safe tag for a spill directory: the SF dir path with
-    * every non-portable char collapsed to `_` — readable — plus an
-    * 8-hex SHA-256 digest of the raw path, because the sanitization
-    * alone is lossy (`sf0.1` vs `sf0_1` collapse together) and a
-    * shared spill dir between distinct inputs corrupts the audit.
-    */
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9._-]", "_").replaceAll("_+", "_")
-      .stripPrefix("_") + "_" + graft.sources.Bucketing.pathDigest(dir)
-
   /** The SHARDED exact containment audit — the runnable form of the
     * "run the exact audit per-shard at scale" posture d02/d14 document
     * (the r10 verdict's missing piece #3). Exactness: the pair
@@ -521,11 +501,15 @@ object DedupQueries {
     */
   def d16_containment_sharded(s: SparkSession, dir: String): DataFrame =
     containmentSharded(containmentShingles(s, dir), DefaultMaxPosting,
-      AutoShards, dirTag(dir), d16Root(s))
+      AutoShards, graft.sources.Layouts.tag(dir))
 
+  /** The spill lands in `<layout root>/d16_shards_<S>_<tag>`
+    * ([[graft.sources.Layouts]]); at cluster scale point the root at
+    * an object-store URI (the paths go through Hadoop's FileSystem
+    * API, so any scheme the cluster mounts works). */
   private[graft] def containmentSharded(sh: DataFrame, maxPosting: Int,
-                                        shardsSpec: Int, tag: String,
-                                        root: String = "target"): DataFrame = {
+                                        shardsSpec: Int, tag: String)
+      : DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = sh.sparkSession
     // Pin the shingle relation for the S passes — unless the caller
@@ -583,7 +567,8 @@ object DedupQueries {
     // extra write + the per-slice GC nudge keeps the small-SF cost
     // honest.
     val slices = if (shards >= 16) shards / 2 else 1
-    val base = s"$root/d16_shards_${shards}_$tag"
+    val base =
+      graft.sources.Layouts.under(spark, s"d16_shards_${shards}_$tag")
     val hconf = spark.sparkContext.hadoopConfiguration
     def exists(p: String) = {
       val hp = new org.apache.hadoop.fs.Path(p)

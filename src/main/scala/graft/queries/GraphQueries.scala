@@ -91,18 +91,6 @@ object GraphQueries {
       e.union(e.select(col("dst"), col("src"))).toDF("src", "dst").distinct()
     }
 
-  /** Catalog-safe table-name tag for a bucketed layout: the SF dir
-    * path with non-identifier chars collapsed — readable — PLUS the
-    * first 8 hex chars of the raw path's SHA-256 — collision-free.
-    * The sanitization alone is lossy (`data/sf0.1` and `data/sf0_1`
-    * collapse to the same identifier), so without the digest two
-    * distinct inputs could silently share a bucketed table — the
-    * exact failure mode the earlier 32-bit `hashCode` tag had.
-    */
-  private def tableTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("_+", "_")
-      .stripPrefix("_") + "_" + graft.sources.Bucketing.pathDigest(dir)
-
   /** The DIRECTED edge relation the PageRank-family loops
     * ([[pagerankLoop]], [[g09_pagerank_personalized]]) join their rank
     * iterate against on the src side once per round — the layout
@@ -129,9 +117,6 @@ object GraphQueries {
     }
   }
 
-  private val edgeBucketMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-
   /** Bucketed materialization of [[derivedEdges]]: one write (the
     * once-per-layout cost), then the returned catalog-table relation
     * is hash-partitioned on `src` ON DISK — no SharedRelations persist
@@ -140,11 +125,12 @@ object GraphQueries {
     */
   private def edgesBucketed(s: SparkSession, dir: String,
                             buckets: Int): DataFrame =
-    edgeBucketMemo.getOrElseUpdate((s, dir, buckets), {
-      val table = "graft_edges_b" + buckets + "_" + tableTag(dir)
+    SharedRelations.memo(s, dir, "graft_edges_b" + buckets) {
+      val table = "graft_edges_b" + buckets + "_" +
+        graft.sources.Layouts.tag(dir)
       graft.sources.Bucketing.bucketedTable(s, derivedEdges(s, dir),
         table, buckets, "src")
-    })
+    }
 
   /** The dst-keyed orientation of [[loopEdges]] — the SECOND copy of
     * the both-orientations layout a mutual recurrence needs: g19's hub
@@ -171,19 +157,17 @@ object GraphQueries {
     }
   }
 
-  private val edgeDstBucketMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-
   /** dst-bucketed materialization of [[derivedEdges]] — see
     * [[loopEdgesDst]].
     */
   private def edgesBucketedDst(s: SparkSession, dir: String,
                                buckets: Int): DataFrame =
-    edgeDstBucketMemo.getOrElseUpdate((s, dir, buckets), {
-      val table = "graft_edges_dstb" + buckets + "_" + tableTag(dir)
+    SharedRelations.memo(s, dir, "graft_edges_dstb" + buckets) {
+      val table = "graft_edges_dstb" + buckets + "_" +
+        graft.sources.Layouts.tag(dir)
       graft.sources.Bucketing.bucketedTable(s, derivedEdges(s, dir),
         table, buckets, "dst")
-    })
+    }
 
   /** The shared edge-derivation, oracle side (a WITH prefix every graph
     * oracle starts from; callers append their own CTEs after a comma).
@@ -359,20 +343,10 @@ object GraphQueries {
     * the per-call count + EdgePartition2D partition + cache. Released
     * on eviction like the checkpoint memos.
     */
-  private val gxMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.graphx.Graph[Double, Unit]]
-
   private def graphxGraph(s: SparkSession, dir: String) =
-    gxMemo.getOrElseUpdate((s, dir), {
-      SharedRelations.onEvict(s) { () =>
-        gxMemo.keys.filter(_._1 eq s).foreach { k =>
-          gxMemo.remove(k).foreach { g =>
-            g.unpersistVertices(false); g.edges.unpersist(false)
-          }
-        }
-      }
+    SharedRelations.pinned(s, dir, "graphx") {
       graft.graph.PageRankGraphX.fromEdges(derivedEdges(s, dir))
-    })
+    } { g => g.unpersistVertices(false); g.edges.unpersist(false) }
 
   /** r0 = Scale div n — the loop's init projection, shared with the
     * `bucketededges` duel and the bucketed-round spec so they measure
@@ -740,20 +714,10 @@ object GraphQueries {
     * released at eviction (checkpoints live outside the CacheManager —
     * same rationale as [[cpMemo]]).
     */
-  private val ccMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
   private def ccMemoized(s: SparkSession, dir: String, algo: String)
                         (build: => DataFrame): DataFrame =
-    ccMemo.getOrElseUpdate((s, dir, algo), {
-      SharedRelations.onEvict(s) { () =>
-        ccMemo.keys.filter(_._1 eq s).foreach { k =>
-          ccMemo.remove(k).foreach(
-            org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
-        }
-      }
-      build
-    })
+    SharedRelations.pinned(s, dir, "cc_" + algo)(build)(
+      org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
 
   /** Converged CC again, but via the O(log n)-round alternating
     * large-star/small-star contraction
@@ -1266,7 +1230,10 @@ object GraphQueries {
     * use, applied to the two-vector recurrence): stop when max|Δauth| + max|Δhub|
     * (fixed-point units, so the tolerance is exact integer
     * arithmetic) falls to ≤ `tolFp`, or at the `maxRounds` budget.
-    * Returns (result, roundsRun) — the stopped count is what makes
+    * Returns (result, roundsRun, roots): `roots` is the final pair of
+    * checkpoints backing the lazy result, released by the caller
+    * ([[org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint]])
+    * once it is done with the result. The stopped count is what makes
     * the variant testable: the result must equal [[hitsLoop]] at
     * exactly that round count (GraphQueriesSpec pins it), because a
     * converged run is just the unrolled run that stopped reading
@@ -1281,7 +1248,8 @@ object GraphQueries {
     * only the FINAL result, like the converged CC family.
     */
   private[graft] def hitsConverged(s: SparkSession, dir: String,
-      maxRounds: Int = 50, tolFp: Long = HitsQ / 1000L): (DataFrame, Int) = {
+      maxRounds: Int = 50, tolFp: Long = HitsQ / 1000L)
+      : (DataFrame, Int, Seq[DataFrame]) = {
     val eSrc = loopEdges(s, dir)
     val eDst = loopEdgesDst(s, dir)
     val nodes = derivedNodes(s, dir)
@@ -1318,16 +1286,9 @@ object GraphQueries {
       (Option(aPrev).toList ++ List(hPrev)).foreach(
         org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
     }
-    // The FINAL pair of checkpoint roots backs the returned relation —
-    // release it at the next family-boundary eviction (the cpMemo
-    // discipline), since the caller still has to materialize the tail.
-    val (fa, fh) = (a, h)
-    SharedRelations.onEvict(s) { () =>
-      Seq(fa, fh).foreach(
-        org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
-    }
-    (fa.join(fh, Seq("node"))
-      .select(col("node"), col("a").as("auth_fp"), col("h").as("hub_fp")), i)
+    (a.join(h, Seq("node"))
+      .select(col("node"), col("a").as("auth_fp"), col("h").as("hub_fp")),
+      i, Seq(a, h))
   }
 
   /** Budget and tolerance for [[g20_hits_converged]]. STATIC, not
@@ -1371,20 +1332,15 @@ object GraphQueries {
     * like the converged CC family (g11's round-7 lesson): the labels
     * are deterministic, repeated calls (the bench's samples 2-3)
     * reuse the checkpointed vectors, and the full-pass cost is
-    * carried in the bench's `cold` map; the memo drops at the same
-    * family-boundary eviction that releases [[hitsConverged]]'s roots.
+    * carried in the bench's `cold` map; the family-boundary eviction
+    * drops the memo and releases [[hitsConverged]]'s roots.
     */
   def g20_hits_converged(s: SparkSession, dir: String): DataFrame =
-    g20Memo.getOrElseUpdate((s, dir), {
-      SharedRelations.onEvict(s) { () =>
-        g20Memo.keys.filter(_._1 eq s).foreach(g20Memo.remove)
-      }
-      val (res, rounds) = hitsConverged(s, dir, G20MaxRounds, G20Tol)
-      res.withColumn("rounds_run", lit(rounds.toLong))
-    })
-
-  private val g20Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    SharedRelations.pinned(s, dir, "g20_hits_converged") {
+      val (res, rounds, roots) = hitsConverged(s, dir, G20MaxRounds, G20Tol)
+      (res.withColumn("rounds_run", lit(rounds.toLong)), roots)
+    }(_._2.foreach(org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint))
+      ._1
 
   /** One unrolled HITS round as oracle CTEs: auth from `prevH`, then
     * hub from the fresh auth — each a join-sum over `edges` plus a

@@ -40,14 +40,6 @@ object StreamQueries {
     */
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Spill root for the streaming harness dirs — same dial as d16's
-    * shard root: defaults to `target` for self-contained local runs;
-    * point it at any Hadoop-mountable URI on a cluster.
-    */
-  private def streamRoot(s: SparkSession): String =
-    s.conf.getOption("graft.stream.root")
-      .orElse(sys.env.get("GRAFT_STREAM_ROOT")).getOrElse("target")
-
   /** Stream-scoped session confs beyond the provider swap — the
     * per-batch FIXED cost knobs (optimization guide §1.2 step 3 after
     * §2's shape work; measured r18: the st family's cost at local[32]
@@ -91,15 +83,17 @@ object StreamQueries {
   )
 
   /** Shared scaffolding of the streaming runners: unique run dirs
-    * (src/out/cp), a leftover wipe — the seq restarts per JVM, and a
-    * stale `out` dir's committed `_spark_metadata` log would be served
-    * back by a fresh-checkpoint sink as already-committed files — the
+    * (src/out/cp) under the layout root ([[graft.sources.Layouts]]),
+    * a leftover wipe — the seq restarts per JVM, and a stale `out`
+    * dir's committed `_spark_metadata` log would be served back by a
+    * fresh-checkpoint sink as already-committed files — the
     * stream-scoped conf swap ([[streamConfs]], restored on exit), and
     * the hadoop-FS delete handle the body uses for its own teardown.
     */
   private def withStreamRun[T](s: SparkSession)(
       body: (String, String, String, String => Unit) => T): T = {
-    val base = streamRoot(s) + "/streams/run_" + runSeq.incrementAndGet()
+    val base = graft.sources.Layouts.under(s,
+      "streams/run_" + runSeq.incrementAndGet())
     def delete(p: String): Unit = {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
@@ -119,6 +113,32 @@ object StreamQueries {
       case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** Advisory feed-bytes per state partition for COMMIT-bound stateful
+    * operators (aggregations, dedup, transformWithState): per-batch
+    * fixed cost is (instances × commit), so instances stay few until
+    * data volume demands more. 16 MB of parquet ≈ 64 MB of raw state —
+    * inside the per-instance budget every state-store sizing guide
+    * uses.
+    */
+  private val StateAdvisoryBytes = 16L * 1024 * 1024
+
+  /** Advisory feed-bytes per state partition for the stream–stream
+    * INTERVAL JOIN entries (st03/st08), whose per-partition cost is
+    * PROBE COMPUTE, not commit: the symmetric join store probes every
+    * buffered same-key row of the opposite side per input row —
+    * measured at sf0.1 ~12 RocksDB gets per put (1.46 M gets for
+    * 120 k puts), an order of magnitude more state-machine work per
+    * feed byte than the commit-bound class. Its partition-count
+    * U-curve bottoms far earlier: at sf0.1 local[32] one partition
+    * runs the whole probe volume single-threaded (9.0 s wall) while
+    * 4–16 partitions parallelize it (3.0–2.5 s) and 32 pays commit
+    * waves again (3.5 s). 256 KB/partition puts the measured optimum
+    * (8) at this feed; larger feeds hit the shuffle-width ceiling,
+    * which is the deployment's dial, exactly as for the commit-bound
+    * class.
+    */
+  private val JoinStateAdvisoryBytes = 256L * 1024
 
   /** SCALE-ADAPTIVE state partition count for one streaming run —
     * the guide's §2 rule (derive partitioning from input size, never
@@ -148,32 +168,6 @@ object StreamQueries {
     * arguments each entry pins), which is also why this is safe to
     * adapt per run.
     */
-  /** Advisory feed-bytes per state partition for COMMIT-bound stateful
-    * operators (aggregations, dedup, transformWithState): per-batch
-    * fixed cost is (instances × commit), so instances stay few until
-    * data volume demands more. 16 MB of parquet ≈ 64 MB of raw state —
-    * inside the per-instance budget every state-store sizing guide
-    * uses.
-    */
-  private val StateAdvisoryBytes = 16L * 1024 * 1024
-
-  /** Advisory feed-bytes per state partition for the stream–stream
-    * INTERVAL JOIN entries (st03/st08), whose per-partition cost is
-    * PROBE COMPUTE, not commit: the symmetric join store probes every
-    * buffered same-key row of the opposite side per input row —
-    * measured at sf0.1 ~12 RocksDB gets per put (1.46 M gets for
-    * 120 k puts), an order of magnitude more state-machine work per
-    * feed byte than the commit-bound class. Its partition-count
-    * U-curve bottoms far earlier: at sf0.1 local[32] one partition
-    * runs the whole probe volume single-threaded (9.0 s wall) while
-    * 4–16 partitions parallelize it (3.0–2.5 s) and 32 pays commit
-    * waves again (3.5 s). 256 KB/partition puts the measured optimum
-    * (8) at this feed; larger feeds hit the shuffle-width ceiling,
-    * which is the deployment's dial, exactly as for the commit-bound
-    * class.
-    */
-  private val JoinStateAdvisoryBytes = 256L * 1024
-
   private def statePartitions(s: SparkSession, srcDir: String,
                               slices: Int, advisory: Long): Int = {
     val p = new org.apache.hadoop.fs.Path(srcDir)
@@ -749,9 +743,6 @@ object StreamQueries {
       laterBatches = Seq(evs.where(ms >= t0)))
   }
 
-  private val st13Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Build-if-cold the APPEND-ONLY versioned ingest table st13
     * streams: orders in three key-sliced commits — v0 `init`, v1/v3
     * [[graft.sources.VersionedTable.commitAppend]] (the ingest verb:
@@ -759,9 +750,8 @@ object StreamQueries {
     * between the appends, whose `dataChange=false` files the stream
     * must NOT re-serve. */
   private def ingestOrders(s: SparkSession, dir: String): String =
-    st13Memo.getOrElseUpdate((s, dir), {
-      val root = graft.sources.Layouts.root(s) + "/vt_ingest_" +
-        graft.sources.Bucketing.pathDigest(dir)
+    SharedRelations.memo(s, dir, "vt_ingest") {
+      val root = graft.sources.Layouts.path(s, dir, "vt_ingest")
       val snap = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
@@ -776,7 +766,7 @@ object StreamQueries {
       graft.sources.VersionedTable.commitAppend(s, root, Seq("o_month"),
         snap.filter(m === 2))
       root
-    })
+    }
 
   /** STREAMING read of the VERSIONED TABLE — the commit log consumed
     * as the stream ([[graft.sources.VersionedStreamSource]], Delta's

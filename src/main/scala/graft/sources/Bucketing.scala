@@ -29,8 +29,8 @@ object Bucketing {
     * buckets for a 10-TB fact table → ~2.5 GB/bucket).
     *
     * Clears any leftover managed-table LOCATION first: the layout
-    * table names are deliberately stable across sessions (sanitized
-    * path + digest), so a PREVIOUS JVM's warehouse directory survives
+    * table names are deliberately stable across sessions
+    * ([[Layouts.tag]]), so a PREVIOUS JVM's warehouse directory survives
     * into a fresh catalog that has no entry for it — and `saveAsTable`
     * then fails with LOCATION_ALREADY_EXISTS instead of overwriting
     * (caught by the second same-workspace bucketed-verify run, r13).
@@ -83,14 +83,4 @@ object Bucketing {
     writeBucketed(df.repartition(buckets, col(key)), table, buckets, key)
     s.table(table)
   }
-
-  /** First 8 hex chars of SHA-256 of a raw path — appended to
-    * sanitized path tags (catalog table names, spill dirs) so two
-    * distinct paths whose sanitized forms collide (`sf0.1` vs
-    * `sf0_1`) can never share a layout or spill dir.
-    */
-  def pathDigest(path: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(path.getBytes("UTF-8")).take(4)
-      .map(b => f"${b & 0xff}%02x").mkString
 }

@@ -494,14 +494,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5))
-    val sliced = DedupQueries.containmentSharded(
-        sh, DedupQueries.DefaultMaxPosting, 16, "sparse16", root)
-      .collect().map(key).toSeq
+    def sharded(shards: Int, tag: String) = {
+      spark.conf.set("graft.layout.root", root)
+      try DedupQueries.containmentSharded(
+          sh, DedupQueries.DefaultMaxPosting, shards, tag)
+        .collect().map(key).toSeq
+      finally spark.conf.unset("graft.layout.root")
+    }
+    val sliced = sharded(16, "sparse16")
     assert(sliced === Seq((8L, 16L, 4L, 5L, 4L, 1.0)))
     // same rows through the lazy single-phase branch
-    val lazyMerge = DedupQueries.containmentSharded(
-        sh, DedupQueries.DefaultMaxPosting, 2, "sparse2", root)
-      .collect().map(key).toSeq
+    val lazyMerge = sharded(2, "sparse2")
     assert(lazyMerge === sliced)
     // the spill landed under the custom root, and the sliced path
     // deleted its shard dirs once the merged slices were written

@@ -206,7 +206,7 @@ class GraphQueriesSpec extends AnyFunSuite {
     // geometrically (~0.81/round, measured) and cross 20000 at round
     // 12 — comfortably inside the 20-round budget, so the stop is the
     // CRITERION's, not the cap's.
-    val (res, rounds) = GraphQueries.hitsConverged(spark, dir,
+    val (res, rounds, _) = GraphQueries.hitsConverged(spark, dir,
       maxRounds = 20, tolFp = 20000L)
     assert(rounds >= 2, "delta needs two rounds to exist")
     assert(rounds < 20, s"did not converge inside the budget ($rounds)")
@@ -217,7 +217,7 @@ class GraphQueriesSpec extends AnyFunSuite {
     GraphQueries.clearCheckpointMemos(spark)
     // an unreachable tolerance runs to the budget — the round cap is
     // a real bound, not a convergence assumption
-    val (_, capped) = GraphQueries.hitsConverged(spark, dir,
+    val (_, capped, _) = GraphQueries.hitsConverged(spark, dir,
       maxRounds = 2, tolFp = -1L)
     assert(capped === 2)
   }

@@ -84,7 +84,7 @@ class PartitionedSpec extends AnyFunSuite {
     // the counterfactual: the same date window WITHOUT the probe
     // reads every directory — the skip is the stats table's doing,
     // not the engine's
-    val plain = graft.queries.CoreQueries.partitionedLineitemForSpec(spark, dir)
+    val plain = graft.queries.CoreQueries.partitionedLineitem(spark, dir)
       .filter(col("l_shipdate") >= to_timestamp(lit("1997-03-10")) &&
         col("l_shipdate") <= to_timestamp(lit("1997-06-20")))
       .groupBy(col("l_returnflag")).count()
@@ -140,7 +140,7 @@ class PartitionedSpec extends AnyFunSuite {
   test("partitioned layout is row-identical to the source table") {
     val li = Tables(spark, dir, "lineitem")
     val part = PartitionedWrite.partitionedTable(
-      spark, li, "target/part_spec_" + Bucketing.pathDigest(dir),
+      spark, li, "target/part_spec_" + Layouts.pathDigest(dir),
       "l_smonth", year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
     assert(part.schema.fieldNames.contains("l_smonth"))
     // partition-value inference must give the int key back as a
@@ -160,7 +160,7 @@ class PartitionedSpec extends AnyFunSuite {
     // row set identical, and leave static pruning untouched — the salt
     // is routing-only, it never reaches the data or the directory keys.
     val li = Tables(spark, dir, "lineitem")
-    val root = "target/part_split_spec_" + Bucketing.pathDigest(dir)
+    val root = "target/part_split_spec_" + Layouts.pathDigest(dir)
     val part = PartitionedWrite.partitionedTable(
       spark, li, root, "l_smonth",
       year(col("l_shipdate")) * 100 + month(col("l_shipdate")),
@@ -188,5 +188,36 @@ class PartitionedSpec extends AnyFunSuite {
     spark.conf.set("graft.layout.root", "/tmp/graft_layout_root")
     try assert(Layouts.root(spark) === "/tmp/graft_layout_root")
     finally spark.conf.unset("graft.layout.root")
+    // the streaming runners' run dirs and d16's shard spill land under
+    // the same root as the layouts
+    val root = java.nio.file.Files.createTempDirectory("layout_root").toFile
+    spark.conf.set("graft.layout.root", root.toString)
+    try {
+      import spark.implicits._
+      val out = graft.queries.StreamQueries.runFileStream(spark,
+        Seq(1L, 2L, 3L).toDF("v"), identity)
+      assert(out.count() === 3)
+      val sh = Seq((8L, "en", 2L, 0L), (16L, "en", 2L, 0L))
+        .toDF("doc_id", "lang", "n", "sh")
+      graft.queries.DedupQueries.containmentSharded(
+        sh, graft.queries.DedupQueries.DefaultMaxPosting, 2, "rootspec")
+        .collect()
+    } finally spark.conf.unset("graft.layout.root")
+    val runs = new java.io.File(root, "streams").listFiles()
+    assert(runs != null &&
+      runs.exists(r => new java.io.File(r, "out").isDirectory),
+      "streaming run dir did not land under the layout root")
+    assert(new java.io.File(root, "d16_shards_2_rootspec/docn").isDirectory,
+      "d16 shard spill did not land under the layout root")
+  }
+
+  test("Layouts.path keeps SF dirs whose sanitized names collide apart") {
+    val (a, b) = ("data/sf0.1", "data/sf0_1")
+    assert(Layouts.path(spark, a, "part_li") !==
+      Layouts.path(spark, b, "part_li"))
+    assert(Layouts.path(spark, a, "part_li") ===
+      "target/part_li_" + Layouts.pathDigest(a))
+    assert(Layouts.tag(a) !== Layouts.tag(b))
+    assert(Layouts.tag(a).matches("[A-Za-z0-9_]+"))
   }
 }
