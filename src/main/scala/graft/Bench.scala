@@ -124,7 +124,7 @@ object Bench {
     // must survive with its numbers, not live only in BENCH_NOTES.
     val note = sys.env.get("SPARK_GRAFT_NOTE")
       .map(t => s""","note":${Json.quote(t)}""").getOrElse("")
-    val line = s"""{"metric":"total","value":${n3(total)},"unit":"sec","queries":$qs,"families":$fams,"cold":$cold,"uncounted":$unc,"structural":$structQ,"err":$errMap,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"$note}"""
+    val line = s"""{"metric":"total","value":${n3(total)},"unit":"sec","queries":$qs,"families":$fams,"cold":$cold,"uncounted":$unc,"structural":$structQ,"err":$errMap,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":${Json.quote(sfDir)}$note}"""
     // Teardown BEFORE the result line: the driver keeps only an output
     // tail, so the JSON must be the absolute last thing on stdout —
     // r13/r14's artifacts were `parsed: null` because state-store
@@ -165,6 +165,6 @@ object Bench {
     // (build.sbt routes forked output through raw stdout and suppresses
     // sbt's [success] banner, so this line really reaches the driver
     // undecorated — the r16 root cause.)
-    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","n":${timed.length},"err_n":${failed.length},"families":$fams,"structural":$structFam,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","n":${timed.length},"err_n":${failed.length},"families":$fams,"structural":$structFam,"cpus":${Runtime.cpus},"load_avg_start":${n3(loadStart)},"load_avg_end":${n3(loadAvg)},"sf":${Json.quote(sfDir)}}""")
   }
 }

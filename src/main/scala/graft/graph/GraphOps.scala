@@ -2,11 +2,16 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph loops over DataFrames, each run to convergence:
   * connected components (min-label propagation and the O(log n)
   * star-contraction variant), single-source BFS and weighted shortest
-  * paths, and k-core peeling. The one-shot primitives of the
+  * paths, and k-core peeling. Label-prop, BFS, SSSP and k-core are a
+  * round function and a convergence probe on one driver,
+  * [[converge]], which alone decides when an iterate is persisted,
+  * checkpointed and released. The one-shot primitives of the
   * reference's inventory (SURVEY.md §2: adjacency, degrees, the
   * dangling set) are the registry entries g01–g03.
   *
@@ -26,14 +31,83 @@ object GraphOps {
     */
   private[graph] def releaseIterate(df: DataFrame): Unit = {
     df.unpersist(false)
-    org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(df)
+    ColumnBridge.releaseCheckpoint(df)
+  }
+
+  /** The converged-loop driver. A round is `step(cur)`, then `persist`
+    * — or, every `checkpointEvery`-th round, a LAZY
+    * `localCheckpoint(false)` — then `converged(next)`: the round's one
+    * driver action, which both materializes the iterate and decides
+    * whether to stop. The driver pins `init` unless it is already
+    * cached (then it is its caller's pin — k-core starts from its
+    * caller's edge relation — and is never released here), keeps
+    * exactly `cur`, the iterate before it and the latest checkpoint,
+    * and releases each iterate once, as it leaves that set. The
+    * result is an eager `localCheckpoint` of `finish(cur)`:
+    * self-contained (safe to memoize after the input is evicted) and
+    * the ONLY pin that escapes — everything else is released on the
+    * return path and on the over-budget path, which throws rather than
+    * returning a half-converged relation. Callers that keep the result
+    * long-term own that single checkpoint and release it via
+    * [[org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint]].
+    *
+    * Two r13 checkpoint disciplines, both found by the AQE-off probe
+    * and both real at-scale robustness, not config quirks:
+    * (1) a checkpoint round takes the iterate UN-cached and lazy —
+    * `localCheckpoint` stores the rdd's own MEMORY_AND_DISK blocks,
+    * which the probe materializes in one pass (the r9 eager checkpoint
+    * was a second full materialization), and layering a cache UNDER
+    * it let the checkpoint adopt the cached plan's blocks, so
+    * unpersisting the pre-checkpoint frame deleted the checkpoint's
+    * storage; (2) a checkpoint is a lineage ROOT — any later round
+    * that misses cache (AQE-off plan-match differences locally;
+    * memory-pressure eviction on a real executor) recomputes down to
+    * the NEAREST checkpoint, so one is released only after a NEWER one
+    * is materialized, never on the rolling window that retires plain
+    * iterates (which keeps the iterate before `cur` one extra round,
+    * so an evicted block of `cur` still recomputes cheaply).
+    */
+  private def converge(name: String, init: DataFrame, maxRounds: Int,
+                       checkpointEvery: Int)(step: DataFrame => DataFrame)
+                      (converged: DataFrame => Boolean)
+                      (finish: DataFrame => DataFrame): DataFrame = {
+    val borrowed = ColumnBridge.isCached(init)
+    if (!borrowed) init.persist(StorageLevel.MEMORY_AND_DISK)
+    def release(dfs: Seq[DataFrame]): Unit =
+      dfs.filter(df => df != null && !(borrowed && (df eq init))).distinct
+        .foreach(releaseIterate)
+    var cur = init
+    var prev: DataFrame = null
+    var root: DataFrame = null
+    try {
+      var done = false
+      var round = 0
+      while (!done && round < maxRounds) {
+        round += 1
+        val plan = step(cur)
+        val isCp = round % checkpointEvery == 0
+        val next =
+          if (isCp) plan.localCheckpoint(false)
+          else plan.persist(StorageLevel.MEMORY_AND_DISK)
+        done = converged(next)
+        val leaving = Seq(prev, if (isCp) root else null)
+        if (isCp) root = next
+        prev = cur
+        cur = next
+        release(leaving.filterNot(df => (df eq prev) || (df eq root)))
+      }
+      if (!done)
+        throw new IllegalStateException(
+          s"$name: not converged after $maxRounds rounds")
+      finish(cur).localCheckpoint(true)
+    } finally release(Seq(prev, cur, root))
   }
 
   /** Connected components by min-label propagation over an
     * already-symmetrized (and ideally caller-persisted) edge relation,
-    * iterated to convergence (bounded by `maxRounds`); returns (node,
-    * component) where component is the minimum node id of the
-    * component. Every round joins against `sym`, so a shared
+    * iterated to convergence on [[converge]] (bounded by `maxRounds`);
+    * returns (node, component) where component is the minimum node id
+    * of the component. Every round joins against `sym`, so a shared
     * materialization must not be rebuilt or unpersisted here. The
     * per-round work is one node-keyed join + aggregation — label-prop
     * converges in O(diameter) rounds, and each round is a fixed
@@ -42,68 +116,27 @@ object GraphOps {
     * twin (equivalence pinned in GraphOpsSpec).
     *
     * Each iterate carries its previous label as `old`, so convergence
-    * detection is a filter+count on the already-cached iterate — no
+    * detection is a filter+count on the freshly pinned iterate — no
     * dedicated change-detection join (round-7 verdict: that join was an
-    * extra two-shuffle job per round). The returned frame is an eager
-    * `localCheckpoint` of the converged labels: self-contained (safe to
-    * memoize after `sym` is evicted) and the ONLY pin that escapes the
-    * loop — every per-round persist and superseded mid-loop checkpoint
-    * is released before return. Callers that keep the result long-term
-    * own that single checkpoint and release it via
-    * [[org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint]].
+    * extra two-shuffle job per round).
     */
   def connectedComponentsFromSym(sym: DataFrame, maxRounds: Int = 50,
-                                 checkpointEvery: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    var lab = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"), col("node").as("old"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prev: DataFrame = null
-    var lastCp: DataFrame = null // live lineage root, see checkpoint note
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
+                                 checkpointEvery: Int = 5): DataFrame =
+    converge("connectedComponentsFromSym",
+      sym.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"), col("node").as("old")),
+      maxRounds, checkpointEvery) { lab =>
       // labels flow u→v across the symmetrized edges
       val nbr = sym.toDF("u", "v")
         .join(lab.select(col("node").as("u"), col("label").as("l")), Seq("u"))
         .groupBy(col("v").as("node")).agg(min(col("l")).as("nbr"))
-      val plan = lab.select(col("node"), col("label"))
+      lab.select(col("node"), col("label"))
         .join(nbr, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
           col("label").as("old"))
-      // Checkpoint rounds take the iterate UN-cached and lazy — the
-      // count() below materializes the checkpoint's own MEMORY_AND_DISK
-      // blocks in one pass. Layering a persist under the checkpoint and
-      // unpersisting it after is the AQE-off trap the r13 sssp probe
-      // hit (the checkpoint adopts the cached plan's blocks); and a
-      // checkpoint is a lineage ROOT, so it is released only when a
-      // newer one is materialized — a cache-missing later round (plan
-      // mismatch without AQE locally; memory-pressure eviction on a
-      // real executor) recomputes down to the nearest live root.
-      val isCp = (round + 1) % checkpointEvery == 0
-      val next =
-        if (isCp) plan.localCheckpoint(false)
-        else plan.persist(StorageLevel.MEMORY_AND_DISK)
-      // count() materializes next; lab is kept one extra round so an
-      // evicted cache block of next can still recompute cheaply
-      changed = next.filter(col("label") =!= col("old")).count()
-      if (isCp) {
-        if (lastCp != null) releaseIterate(lastCp)
-        lastCp = next
-      }
-      if (prev != null && !(prev eq lastCp)) releaseIterate(prev)
-      prev = lab
-      lab = next
-      round += 1
-    }
-    val out = lab.select(col("node"), col("label").as("component"))
-      .localCheckpoint(true)
-    if (prev != null) releaseIterate(prev)
-    releaseIterate(lab)
-    if (lastCp != null) releaseIterate(lastCp)
-    out
-  }
+    }(_.filter(col("label") =!= col("old")).count() == 0)(
+      _.select(col("node"), col("label").as("component")))
 
   /** Unreached-distance sentinel for [[bfsFromSym]] — far above any
     * real hop count, far below Long overflow under +1.
@@ -120,58 +153,29 @@ object GraphOps {
     * changes. Frontier-only joining is exact for unit weights: every
     * frontier node at round r has dist exactly r, so a node's first
     * relaxation IS its hop distance and earlier-settled nodes have
-    * nothing new to offer — total work O(E), not O(E·diameter). Same
-    * pin discipline: per-round persists retire, the result is the one
-    * surviving eager checkpoint. Unreached nodes report dist = −1.
+    * nothing new to offer — total work O(E), not O(E·diameter).
+    * Unreached nodes report dist = −1.
     */
   def bfsFromSym(sym: DataFrame, source: Long, maxRounds: Int = 100,
-                 checkpointEvery: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    var dist = sym.select(col("src").as("node")).distinct()
-      .select(col("node"),
-        when(col("node") === source, 0L).otherwise(BfsInf).as("dist"))
-      .select(col("node"), col("dist"), lit(BfsInf).as("old"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prev: DataFrame = null
-    var lastCp: DataFrame = null // live lineage root, see checkpoint note
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
+                 checkpointEvery: Int = 5): DataFrame =
+    converge("bfsFromSym",
+      sym.select(col("src").as("node")).distinct()
+        .select(col("node"),
+          when(col("node") === source, 0L).otherwise(BfsInf).as("dist"))
+        .select(col("node"), col("dist"), lit(BfsInf).as("old")),
+      maxRounds, checkpointEvery) { dist =>
       val nbr = sym.toDF("u", "v")
         .join(dist.filter(col("dist") < BfsInf && col("dist") =!= col("old"))
           .select(col("node").as("u"), col("dist").as("d")), Seq("u"))
         .groupBy(col("v").as("node")).agg((min(col("d")) + 1L).as("nd"))
-      val plan = dist.select(col("node"), col("dist"))
+      dist.select(col("node"), col("dist"))
         .join(nbr, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           col("dist").as("old"))
-      // same checkpoint discipline as connectedComponentsFromSym: no
-      // cache layered under the lazy checkpoint, roots released only
-      // when superseded
-      val isCp = (round + 1) % checkpointEvery == 0
-      val next =
-        if (isCp) plan.localCheckpoint(false)
-        else plan.persist(StorageLevel.MEMORY_AND_DISK)
-      changed = next.filter(col("dist") =!= col("old")).count()
-      if (isCp) {
-        if (lastCp != null) releaseIterate(lastCp)
-        lastCp = next
-      }
-      if (prev != null && !(prev eq lastCp)) releaseIterate(prev)
-      prev = dist
-      dist = next
-      round += 1
-    }
-    val out = dist
-      .select(col("node"),
-        when(col("dist") === BfsInf, -1L).otherwise(col("dist")).as("dist"))
-      .localCheckpoint(true)
-    if (prev != null) releaseIterate(prev)
-    releaseIterate(dist)
-    if (lastCp != null) releaseIterate(lastCp)
-    out
-  }
+    }(_.filter(col("dist") =!= col("old")).count() == 0)(
+      _.select(col("node"),
+        when(col("dist") === BfsInf, -1L).otherwise(col("dist")).as("dist")))
 
   /** Converged single-source shortest paths over a symmetrized WEIGHTED
     * edge relation (`src`, `dst`, `w`: positive long weights) — the
@@ -201,15 +205,13 @@ object GraphOps {
     * fresh iterate — it simultaneously materializes the iterate and
     * returns (pending count, gated-frontier count, min pending
     * distance), so convergence detection, bucket-drain detection, and
-    * the threshold jump all ride the expansion job. Rounds where the
-    * loop only advances the threshold cost zero Spark jobs (the r9
-    * shape paid a full stats job per bucket jump and a second count
-    * per expansion — at wall time ≈ rounds × driver actions, that
-    * factor-of-2+ was the whole g14 pathology at sf0.1). Same pin
-    * discipline as the CC family: per-round persists retire, the
-    * result is one eager self-contained `localCheckpoint`. Unreached
-    * nodes report −1. Throws on non-convergence within `maxRounds`
-    * rather than returning partially-relaxed distances.
+    * the threshold jump all ride the expansion job. The jump itself
+    * is the head of the next round's step and costs zero Spark jobs
+    * and no round (the r9 shape paid a full stats job per bucket jump
+    * and a second count per expansion — at wall time ≈ rounds ×
+    * driver actions, that factor-of-2+ was the whole g14 pathology at
+    * sf0.1). Runs on [[converge]], like the CC family. Unreached nodes
+    * report −1.
     *
     * Δ defaults to ADAPTIVE (`delta = 0`): one weight-stats aggregate
     * over the edges picks Δ = 4 × max(1, avg weight). Rationale —
@@ -229,106 +231,50 @@ object GraphOps {
     */
   def ssspFromSym(symW: DataFrame, source: Long, delta: Long = 0L,
                   maxRounds: Int = 200, checkpointEvery: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(delta >= 0, "ssspFromSym: delta must be positive (0 = adaptive)")
     val d = if (delta > 0) delta else {
       val avgW = symW.agg(avg(col("w"))).head().getDouble(0)
       math.max(1L, math.round(4.0 * math.max(1.0, avgW)))
     }
-    var dist = symW.select(col("src").as("node")).distinct()
-      .select(col("node"),
-        when(col("node") === source, 0L).otherwise(BfsInf).as("dist"),
-        (col("node") === source).as("pending"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prev: DataFrame = null
-    // the live checkpoint (lineage root) — see the release note below
-    var lastCp: DataFrame = null
     var threshold = d
-    var round = 0
-    var pendingN = 1L   // the source starts pending at dist 0 < Δ
-    var frontierN = 1L
+    var frontierN = 1L // the source starts pending at dist 0 < Δ
     var minPending = 0L
-    while (pendingN > 0 && round < maxRounds) {
-      if (frontierN == 0) {
-        // gated frontier drained: jump to the bucket holding the
-        // smallest pending distance. Driver-side arithmetic only —
-        // minPending came back with the last expansion's aggregate,
-        // so this costs no Spark job and no loop round.
-        threshold = (minPending / d + 1L) * d
-        frontierN = pendingN // ≥1 pending sits in [minPending, threshold)
-      } else {
-        val isFrontier = col("pending") && col("dist") < threshold
-        val nbr = symW.toDF("u", "v", "w")
-          .join(dist.filter(isFrontier)
-            .select(col("node").as("u"), col("dist").as("d")), Seq("u"))
-          .groupBy(col("v").as("node")).agg(min(col("d") + col("w")).as("nd"))
-        val plan = dist
-          .select(col("node"), col("dist"),
-            (col("pending") && !isFrontier).as("still"))
-          .join(nbr, Seq("node"), "left_outer")
-          .select(col("node"),
-            least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
-            (coalesce(col("nd"), lit(BfsInf)) < col("dist") || col("still"))
-              .as("pending"))
-        // LAZY checkpoint on cadence: the mark costs nothing now; the
-        // round's single action below materializes checkpoint blocks in
-        // one pass. (The r9 eager checkpoint was a second full
-        // materialization — the 2-4× ms spikes every 5th round in the
-        // sf0.1 trace.) Two r13 disciplines, both found by the AQE-off
-        // probe and both real at-scale robustness, not config quirks:
-        // (1) checkpoint rounds skip the separate persist —
-        // `localCheckpoint` stores the rdd's own MEMORY_AND_DISK
-        // blocks, and layering a cache UNDER it let the checkpoint
-        // adopt the cached plan's blocks, so unpersisting the
-        // pre-checkpoint frame deleted the checkpoint's storage;
-        // (2) a checkpoint is a lineage ROOT — any later round that
-        // misses cache (AQE-off plan-match differences locally;
-        // memory-pressure eviction on a real executor) recomputes down
-        // to the NEAREST checkpoint, so one is released only after a
-        // NEWER one is materialized, never on the rolling two-round
-        // window that retires plain cached iterates.
-        val isCp = (round + 1) % checkpointEvery == 0
-        val next =
-          if (isCp) plan.localCheckpoint(false)
-          else plan.persist(StorageLevel.MEMORY_AND_DISK)
-        // the round's one driver action: materializes `next` AND
-        // returns the stats that drive convergence + the Δ-gate
-        val stats = next.agg(
-          sum(col("pending").cast("long")),
-          sum((col("pending") && col("dist") < threshold).cast("long")),
-          min(when(col("pending"), col("dist")))).head()
-        pendingN = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-        frontierN = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-        minPending = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (isCp) {
-          // a newer lineage root is materialized: the previous
-          // checkpoint can no longer be reached by any recompute
-          if (lastCp != null) releaseIterate(lastCp)
-          lastCp = next
-        }
-        if (prev != null && !(prev eq lastCp)) releaseIterate(prev)
-        prev = dist
-        dist = next
-        round += 1
-      }
-    }
-    if (pendingN > 0) {
-      if (prev != null) releaseIterate(prev)
-      releaseIterate(dist)
-      if (lastCp != null) releaseIterate(lastCp)
-      throw new IllegalStateException(
-        s"ssspFromSym: not converged after $maxRounds rounds")
-    }
-    val out = dist
-      .select(col("node"),
-        when(col("dist") === BfsInf, -1L).otherwise(col("dist")).as("dist"))
-      .localCheckpoint(true)
-    // `out` is eager, so the live lineage root is no longer needed
-    // (double-release of an iterate that IS the root is a no-op)
-    if (prev != null) releaseIterate(prev)
-    releaseIterate(dist)
-    if (lastCp != null) releaseIterate(lastCp)
-    out
+    converge("ssspFromSym",
+      symW.select(col("src").as("node")).distinct()
+        .select(col("node"),
+          when(col("node") === source, 0L).otherwise(BfsInf).as("dist"),
+          (col("node") === source).as("pending")),
+      maxRounds, checkpointEvery) { dist =>
+      // gated frontier drained: jump to the bucket holding the smallest
+      // pending distance (≥1 pending node sits in [minPending,
+      // threshold) after it). Driver-side arithmetic only — minPending
+      // came back with the last expansion's aggregate.
+      if (frontierN == 0) threshold = (minPending / d + 1L) * d
+      val isFrontier = col("pending") && col("dist") < threshold
+      val nbr = symW.toDF("u", "v", "w")
+        .join(dist.filter(isFrontier)
+          .select(col("node").as("u"), col("dist").as("d")), Seq("u"))
+        .groupBy(col("v").as("node")).agg(min(col("d") + col("w")).as("nd"))
+      dist
+        .select(col("node"), col("dist"),
+          (col("pending") && !isFrontier).as("still"))
+        .join(nbr, Seq("node"), "left_outer")
+        .select(col("node"),
+          least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
+          (coalesce(col("nd"), lit(BfsInf)) < col("dist") || col("still"))
+            .as("pending"))
+    } { next =>
+      // the round's one driver action: materializes `next` AND
+      // returns the stats that drive convergence + the Δ-gate
+      val stats = next.agg(
+        sum(col("pending").cast("long")),
+        sum((col("pending") && col("dist") < threshold).cast("long")),
+        min(when(col("pending"), col("dist")))).head()
+      frontierN = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+      minPending = if (stats.isNullAt(2)) 0L else stats.getLong(2)
+      stats.isNullAt(0) || stats.getLong(0) == 0L
+    }(_.select(col("node"),
+      when(col("dist") === BfsInf, -1L).otherwise(col("dist")).as("dist")))
   }
 
   /** Connected components in O(log n) rounds via alternating
@@ -371,9 +317,11 @@ object GraphOps {
     * pinned while the three branches that read it materialize —
     * released as soon as the round's iterate is checkpointed.
     */
+  // Its own loop, not [[converge]]'s: the mid-round `large` pin and a
+  // probe that reads the previous iterate would be driver parameters
+  // only this loop uses.
   def connectedComponentsLogN(edges: DataFrame,
                               maxRounds: Int = 30): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -439,9 +387,8 @@ object GraphOps {
     * is the shrinking edge set, referenced three times per round
     * (degree agg + both semi-join probes), so un-checkpointed plan
     * size multiplies ~3× per round — like the star-contraction loop
-    * ([[connectedComponentsLogN]]) every round checkpoints, lazily so
-    * the round's counting action materializes cache and checkpoint
-    * blocks in one pass (the g14 pattern). Peeling is idempotent at
+    * ([[connectedComponentsLogN]]) every round checkpoints: this is
+    * [[converge]] at cadence 1. Peeling is idempotent at
     * fixpoint — extra rounds are no-ops — which is what lets a
     * fixed-unroll SQL oracle verify the converged loop: any oracle
     * unroll ≥ the actual round count yields the identical relation,
@@ -450,44 +397,23 @@ object GraphOps {
     * `maxRounds`.
     */
   def kCore(sym: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(k >= 1, "kCore: k must be at least 1")
-    var cur = sym.select(col("src"), col("dst")).localCheckpoint(true)
-    var curN = cur.count()
-    var prev: DataFrame = null
-    var round = 0
-    var changed = curN > 0
-    while (changed && round < maxRounds) {
+    // the input's size, so a graph that already is a k-core stops after
+    // one round (the derived graph at k = 3 and sf0.1 is one)
+    var edgesN = sym.count()
+    converge("kCore", sym.select(col("src"), col("dst")), maxRounds,
+      checkpointEvery = 1) { cur =>
       val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("src").as("keep"))
-      // lazy checkpoint WITHOUT a persist underneath — see the
-      // ssspFromSym checkpoint note (under AQE-off the checkpoint
-      // adopts the cached plan's blocks, and the old
-      // persist→checkpoint→unpersist sequence deleted its storage)
-      val next = cur
+      cur
         .join(keep.select(col("keep").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("keep").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(false)
-      val nextN = next.count() // one action: checkpoint + count
-      changed = nextN != curN
-      if (prev != null) releaseIterate(prev)
-      prev = cur
-      cur = next
-      curN = nextN
-      round += 1
-    }
-    if (changed) {
-      if (prev != null) releaseIterate(prev)
-      releaseIterate(cur)
-      throw new IllegalStateException(
-        s"kCore: not converged after $maxRounds rounds")
-    }
-    val out = cur.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    if (prev != null) releaseIterate(prev)
-    releaseIterate(cur)
-    out
+    } { next =>
+      val n = next.count() // one action: checkpoint + count
+      val same = n == edgesN
+      edgesN = n
+      same
+    }(_.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
   }
 }

@@ -58,10 +58,16 @@ object PageRankGraphX {
     val edgeRdd: RDD[Edge[Unit]] = edges
       .select("src", "dst").coalesce(parts).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    Graph.fromEdges(edgeRdd, defaultValue = 0.0,
-        edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-        vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
+    val raw = Graph.fromEdges(edgeRdd, defaultValue = 0.0,
+      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+    val g = raw.partitionBy(PartitionStrategy.EdgePartition2D)
+    // `Graph.fromEdges` caches the unpartitioned edges, which nothing
+    // reads once the partitioned graph is built: build it, then drop
+    // them, so the graph's own unpersist releases every pin it holds
+    g.vertices.count()
+    raw.edges.unpersist(false)
+    g
   }
 
   /** Standard PageRank with dangling redistribution on an already-built

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Graph operators from the reference's inventory (SURVEY.md §2:
@@ -227,115 +228,109 @@ object GraphQueries {
     */
   def g04_pagerank(s: SparkSession, dir: String, iters: Int = 3,
                    checkpointEvery: Int = 2): DataFrame =
-    pagerankLoop(s, dir, iters, divideByOutdeg = true, checkpointEvery)
+    fixedPointPagerank(s, dir, iters, divideByOutdeg = true, checkpointEvery)
 
-  /** Shared fixed-point loop for g04 (standard, divide by out-degree)
-    * and g08 (compat, whole-rank contributions). The per-iteration
-    * scalars — node count and dangling mass — stay RELATIONAL: 1-row
-    * aggregates broadcast-cross-joined into the update expression
-    * (each pass's state is persisted so the dangling branch and the
-    * contribution branch share one materialization). Integer `div`
-    * arithmetic keeps it bit-exact vs the unrolled-CTE oracle.
+  /** The fixed-round loop under g04/g07/g08 (PageRank), g09
+    * (personalized PageRank) and g19 (HITS): `init` is round 0's
+    * state, `round(state, pins)` builds the next one, persisting what
+    * several of its branches read through `pins` (each pass's state
+    * is persisted so the dangling branch and the contribution branch
+    * share one materialization).
     *
     * Lineage/cache discipline (the 100 TB concern: driver planning
-    * time, not the data path): every `checkpointEvery` passes — when at
-    * least `checkpointEvery` more passes follow — the rank relation is
+    * time, not the data path): every `checkpointEvery` rounds — when
+    * at least `checkpointEvery` more rounds follow — the state is
     * eagerly `localCheckpoint`ed: one cheap node-sized job that
     * truncates the plan to an RDD scan, keeping plan size
-    * O(2^checkpointEvery) instead of doubling per pass, after which the
-    * per-pass caches it subsumes are released and the PREVIOUS
-    * checkpoint's now-superseded RDD is unpersisted
-    * ([[org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint]]).
-    * The tail (final < 2·checkpointEvery passes) stays LAZY: the
-    * caller's first action materializes it through the per-pass caches,
-    * which is the cheapest execution of a short run (r6 measurement:
-    * one eager tail checkpoint costs more than it saves at 3
-    * iterations — and r5's mid+tail shape materialized short runs
-    * twice). The tail pins are PARKED in the bounded [[carriedPins]]
-    * pool rather than released at loop exit: a repeated or overlapping
-    * call (g04's bench samples; g08 sharing g04's pass 1; the i10
-    * probe sharing g04's passes 1–3) then finds its per-pass plans
-    * already cached via the `isCached` branch and reuses them —
-    * deterministic integer state, so reuse cannot change results. The
-    * pool caps at [[PinPoolCap]] entries and flushes wholesale when
-    * exceeded, so pinned memory — and, more important, the
-    * CacheManager's per-query plan-lookup cost against deep cached
-    * plans, the actual r4 leak victim — stays bounded;
-    * [[SharedRelations.evict]]'s `clearCache` also clears it at family
-    * boundaries. Mid-loop checkpoints (deep runs only) are memoized in
-    * [[cpMemo]] — a repeated deep call resumes from the latest one —
-    * and their RDDs are released when superseded or on eviction (via
-    * [[SharedRelations.onEvict]]). On a real cluster swap
-    * `localCheckpoint` for reliable `checkpoint` (executor loss kills
-    * local checkpoints).
-    * Checkpointing copies the integer rank values verbatim, so the
-    * oracle hash is unaffected at any cadence.
+    * O(2^checkpointEvery) instead of doubling per round, after which
+    * the per-round pins it subsumes are released. The tail (final
+    * < 2·checkpointEvery rounds) stays LAZY: the caller's first action
+    * materializes it through the per-round pins, which is the
+    * cheapest execution of a short run (r6 measurement: one eager tail
+    * checkpoint costs more than it saves at 3 iterations — and r5's
+    * mid+tail shape materialized short runs twice).
+    *
+    * Everything that outlives the call is an entry of the session
+    * store ([[SharedRelations]]), released at [[SharedRelations.evict]]
+    * (Bench and Verify evict at every family boundary, which bounds
+    * the pins to one family's loops):
+    *  - the tail's pins ([[RoundPins.keep]]): a repeated or
+    *    overlapping call (g04's bench samples; g08 sharing g04's pass
+    *    1; the i10 probe sharing g04's passes 1–3) finds its per-round
+    *    plans already cached and reuses them — deterministic integer
+    *    state, so reuse cannot change results;
+    *  - every mid-loop checkpoint, under `mode` and its round: a
+    *    later call resumes from the latest one strictly below its own
+    *    round count (strictly, so at least one round runs — HITS needs
+    *    its last round's auth vector), exact because the state at
+    *    round `p` is fully deterministic given (sfDir, mode). A
+    *    superseded checkpoint stays until eviction: an earlier
+    *    caller's still-lazy result may reference its RDD, and a
+    *    localCheckpoint cannot recompute once its blocks are dropped.
+    * `checkpointEvery = 0` means a genuinely checkpoint-free plan (no
+    * resume either), e.g. the cadence-independence spec's baseline.
+    * On a real cluster swap `localCheckpoint` for reliable
+    * `checkpoint` (executor loss kills local checkpoints).
+    * Checkpointing copies the integer state verbatim, so the oracle
+    * hash is unaffected at any cadence.
     */
-  /** Iterative tail pins parked per session, bounded — see the
-    * lineage-discipline scaladoc on [[pagerankLoop]].
-    */
-  private val PinPoolCap = 16
-  private val carriedPins =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, List[DataFrame]]
-
-  private def parkPins(s: SparkSession, pins: List[DataFrame]): Unit =
-    if (pins.nonEmpty) carriedPins.updateWith(s) { prev =>
-      if (prev.isEmpty)
-        // first park on this session: drop the (now-stale) entries when
-        // the session is evicted so dead pins never count toward the cap
-        SharedRelations.onEvict(s)(() => { carriedPins.remove(s); () })
-      val old = prev.getOrElse(Nil)
-      // On overflow release only the OLDER pins: the newest call's pins
-      // must survive until its caller materializes the returned plan.
-      if (pins.length + old.length > PinPoolCap) {
-        old.foreach(_.unpersist(false)); Some(pins)
-      } else Some(pins ::: old)
-    }
-
-  /** Latest mid-loop checkpoint per (session, sfDir, mode): the pass
-    * index and its materialized integer state. A repeated deep call
-    * (the bench's i10 samples) resumes from it instead of recomputing
-    * the prefix — exact, because the fixed-point state at pass `p` is
-    * fully deterministic given (sfDir, mode). Superseded checkpoints
-    * are RETIRED, not released immediately: an earlier caller's
-    * still-lazy result may reference the old checkpoint's RDD, and a
-    * localCheckpoint cannot recompute once its blocks are dropped
-    * (truncated lineage). Retired and current checkpoint RDDs are all
-    * released at eviction via [[SharedRelations.onEvict]] (checkpoint
-    * RDDs live outside the CacheManager, so `clearCache` can't reach
-    * them).
-    */
-  private val cpMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Int, DataFrame)]
-  private val retiredCps = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, List[DataFrame]]
-
-  private def storeMemo(mk: (SparkSession, String, String), pass: Int,
-                        df: DataFrame): Unit = {
-    val s = mk._1
-    if (!cpMemo.keys.exists(_._1 eq s))
-      SharedRelations.onEvict(s)(() => releaseMemos(s))
-    cpMemo.put(mk, (pass, df)).foreach { case (_, old) =>
-      retiredCps.updateWith(s)(prev => Some(old :: prev.getOrElse(Nil)))
-    }
-  }
-
-  /** Test hook: drop (and release) this session's memoized checkpoints
-    * so plan-shape assertions start from a known memo-free state — the
-    * resume path makes plan size depend on whatever memo an EARLIER
-    * caller left behind (round-6 ADVICE on GraphQueriesSpec).
-    */
-  private[graft] def clearCheckpointMemos(s: SparkSession): Unit =
-    releaseMemos(s)
-
-  private def releaseMemos(s: SparkSession): Unit = {
-    cpMemo.keys.filter(_._1 eq s).foreach { k =>
-      cpMemo.remove(k).foreach { case (_, df) =>
-        org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(df)
+  private def pagerankLoop(s: SparkSession, dir: String, mode: String,
+                           rounds: Int, checkpointEvery: Int, init: DataFrame)
+                          (round: (DataFrame, RoundPins) => DataFrame)
+      : DataFrame = {
+    val pins = new RoundPins(s, dir)
+    def checkpointName(p: Int) = s"$LoopCheckpoint$mode/$p"
+    val resumed =
+      if (checkpointEvery <= 0) None
+      else (rounds - 1 to 1 by -1).iterator.flatMap(p =>
+        SharedRelations.get[DataFrame](s, dir, checkpointName(p)).map(p -> _))
+        .nextOption()
+    var (i, r) = resumed.getOrElse((0, init))
+    while (i < rounds) {
+      r = round(r, pins)
+      i += 1
+      if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
+          i <= rounds - checkpointEvery) {
+        r = SharedRelations.pinned(s, dir, checkpointName(i))(
+          r.localCheckpoint(true))(ColumnBridge.releaseCheckpoint)
+        pins.release()
       }
     }
-    retiredCps.remove(s).foreach(_.foreach(
-      org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint))
+    pins.keep()
+    r
+  }
+
+  /** Name prefix of [[pagerankLoop]]'s checkpoint entries in the
+    * session store. */
+  private val LoopCheckpoint = "loop_checkpoint/"
+
+  /** Drop (and release) this session's [[pagerankLoop]] checkpoints so
+    * plan-shape assertions and per-sample duels start from a known
+    * memo-free state — the resume path makes plan size depend on
+    * whatever an EARLIER caller left behind (round-6 ADVICE on
+    * GraphQueriesSpec).
+    */
+  private[graft] def clearCheckpointMemos(s: SparkSession): Unit =
+    SharedRelations.evict(s, _.startsWith(LoopCheckpoint))
+
+  /** The per-round pins of one loop call. `apply` persists a relation
+    * unless the exact plan is already cached (a sibling or earlier
+    * call's pin — re-persisting would only log "already cached"),
+    * `release` drops this call's pins once a checkpoint has
+    * materialized their downstream, and `keep` hands the rest to the
+    * session store, where eviction releases them.
+    */
+  private final class RoundPins(s: SparkSession, dir: String) {
+    private var live = List.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame =
+      if (ColumnBridge.isCached(df)) df
+      else { live ::= df.persist(StorageLevel.MEMORY_AND_DISK); df }
+    def release(): Unit = { live.foreach(_.unpersist(false)); live = Nil }
+    def keep(): Unit = {
+      live.foreach(p => SharedRelations.pinned(s, dir,
+        "loop_pin/" + p.queryExecution.id)(p)(_.unpersist(false)))
+      live = Nil
+    }
   }
 
   /** GraphX graph over [[derivedEdges]], built once per (session,
@@ -356,82 +351,60 @@ object GraphQueries {
     nodes.crossJoin(nn)
       .select(col("node"), expr(s"${Scale}L div nn").as("r"))
 
-  /** ONE fixed-point pass — the exact per-round plan [[pagerankLoop]]
-    * builds, factored out so the duel/spec drive the identical round:
-    * dangling mass as a 1-row broadcast aggregate, the contribution
-    * join keyed on the EDGE side's `src` (this is the join the
-    * [[loopEdges]] bucketed layout makes exchange-free on the edge
-    * side), map-side-combined per-dst sums, and the all-integer rank
-    * update.
+  /** ONE fixed-point pass — the exact per-round plan g04/g07/g08 build
+    * on [[pagerankLoop]], factored out so the duel/spec drive the
+    * identical round: dangling mass as a 1-row broadcast aggregate,
+    * the contribution join keyed on the EDGE side's `src` (this is the
+    * join the [[loopEdges]] bucketed layout makes exchange-free on the
+    * edge side), map-side-combined per-dst sums, and the all-integer
+    * rank update.
     */
   private[graft] def pagerankRound(e: DataFrame, nodes: DataFrame,
                                    withDeg: DataFrame, nn: DataFrame,
-                                   divideByOutdeg: Boolean): DataFrame = {
-    val contribExpr = if (divideByOutdeg) "r div outdeg" else "r"
+                                   divideByOutdeg: Boolean): DataFrame =
+    rankRound(e, nodes, withDeg, nn,
+      if (divideByOutdeg) "r div outdeg" else "r",
+      s"(${BetaNum * Scale / 100}L div nn) + " +
+        s"(${100 - BetaNum} * (coalesce(c, CAST(0 AS BIGINT)) + dm div nn)) div 100")
+
+  /** The rank-update round both PageRank variants share: `contrib` is
+    * each edge's contribution from its source row, `update` the new
+    * rank from the summed contributions `c`, the dangling mass `dm`
+    * and the 1-row `scalar` relation (node count, or source-set size).
+    */
+  private def rankRound(e: DataFrame, nodes: DataFrame, withDeg: DataFrame,
+                        scalar: DataFrame, contrib: String,
+                        update: String): DataFrame = {
     val dm = broadcast(withDeg.filter(col("outdeg").isNull)
       .agg(coalesce(sum(col("r")), lit(0L)).as("dm")))
     val contribs = e
       .join(withDeg.filter(col("outdeg").isNotNull), e("src") === col("node"))
-      .select(col("dst").as("node"), expr(contribExpr).as("c"))
+      .select(col("dst").as("node"), expr(contrib).as("c"))
       .groupBy("node").agg(sum(col("c")).as("c"))
     nodes.join(contribs, Seq("node"), "left_outer")
-      .crossJoin(dm).crossJoin(nn)
-      .select(col("node"),
-        expr(s"(${BetaNum * Scale / 100}L div nn) + " +
-          s"(${100 - BetaNum} * (coalesce(c, CAST(0 AS BIGINT)) + dm div nn)) div 100")
-          .as("r"))
+      .crossJoin(dm).crossJoin(scalar)
+      .select(col("node"), expr(update).as("r"))
   }
 
-  private def pagerankLoop(s: SparkSession, dir: String, iters: Int,
-                           divideByOutdeg: Boolean,
-                           checkpointEvery: Int = 2): DataFrame = {
+  /** Shared fixed-point PageRank for g04 (standard, divide by
+    * out-degree), g07's witness and g08 (compat, whole-rank
+    * contributions), on [[pagerankLoop]]. The per-iteration scalars —
+    * node count and dangling mass — stay RELATIONAL: 1-row aggregates
+    * broadcast-cross-joined into the update expression. Integer `div`
+    * arithmetic keeps it bit-exact vs the unrolled-CTE oracle.
+    */
+  private def fixedPointPagerank(s: SparkSession, dir: String, iters: Int,
+                                 divideByOutdeg: Boolean,
+                                 checkpointEvery: Int = 2): DataFrame = {
     val e = loopEdges(s, dir)
     val nodes = derivedNodes(s, dir)
     val deg = outDeg(s, dir)
     val nn = broadcast(nodes.agg(count(lit(1)).as("nn")))
-    var r = pagerankInit(nodes, nn)
-    // Per-pass caches pinned until a checkpoint materializes their
-    // downstream; the tail's pins are parked in [[carriedPins]].
-    var pending = List.empty[DataFrame]
-    val mk = (s, dir, if (divideByOutdeg) "std" else "compat")
-    var i = 0
-    // Resume from a memoized checkpoint when one exists at pass ≤ iters
-    // — but not when the caller explicitly disabled checkpointing
-    // (checkpointEvery = 0 must mean a genuinely checkpoint-free plan,
-    // e.g. the cadence-independence spec's baseline).
-    if (checkpointEvery > 0)
-      cpMemo.get(mk).filter(_._1 <= iters).foreach { case (p, df) =>
-        i = p; r = df
-      }
-    while (i < iters) {
-      val joined = r.join(deg, Seq("node"), "left_outer")
-      // Reuse an existing cache of this exact plan if a CONCURRENT
-      // caller pinned it (g04 vs g08 share pass 1 exactly). Sequential
-      // callers no longer hit this branch — each call releases its
-      // pins at loop exit — but overlapping Bench/user sessions still
-      // can, and re-persisting an already-cached plan would only log
-      // "already cached" warnings.
-      val withDeg =
-        if (org.apache.spark.sql.graft.ColumnBridge.isCached(joined)) joined
-        else {
-          val p = joined.persist(StorageLevel.MEMORY_AND_DISK)
-          pending ::= p
-          p
-        }
-      r = pagerankRound(e, nodes, withDeg, nn, divideByOutdeg)
-      i += 1
-      // Mid-loop only when ≥ checkpointEvery more passes follow; the
-      // tail stays lazy (see the lineage-discipline scaladoc above).
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
-          i <= iters - checkpointEvery) {
-        r = r.localCheckpoint(true)
-        pending.foreach(_.unpersist(false))
-        pending = Nil
-        storeMemo(mk, i, r)
-      }
-    }
-    parkPins(s, pending)
-    r.select(col("node"), col("r").as("rank_fp"))
+    pagerankLoop(s, dir, if (divideByOutdeg) "std" else "compat", iters,
+        checkpointEvery, pagerankInit(nodes, nn)) { (r, pin) =>
+      pagerankRound(e, nodes, pin(r.join(deg, Seq("node"), "left_outer")),
+        nn, divideByOutdeg)
+    }.select(col("node"), col("r").as("rank_fp"))
   }
 
   /** Unrolled-CTE oracle for [[g04_pagerank]] — same integer recurrence,
@@ -503,7 +476,7 @@ object GraphQueries {
     */
   def g07_pagerank_graphx(s: SparkSession, dir: String): DataFrame = {
     val dbl = graft.graph.PageRankGraphX.standardOn(graphxGraph(s, dir), G07Iters)
-    val fp = pagerankLoop(s, dir, G07Iters, divideByOutdeg = true)
+    val fp = fixedPointPagerank(s, dir, G07Iters, divideByOutdeg = true)
     dbl.join(fp, Seq("node"))
       .select(col("node"),
         (abs(col("rank") - col("rank_fp").cast("double") / Scale.toDouble)
@@ -522,7 +495,7 @@ object GraphQueries {
     *            + (85 · (Σ_{u→v} r_i(u) + D_i div n)) div 100
     */
   def g08_pagerank_compat(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    pagerankLoop(s, dir, iters, divideByOutdeg = false)
+    fixedPointPagerank(s, dir, iters, divideByOutdeg = false)
 
   /** Unrolled-CTE oracle for [[g08_pagerank_compat]] — identical to
     * [[pagerankOracle]] minus the out-degree division.
@@ -557,8 +530,9 @@ object GraphQueries {
     * r'(v) = (85·(c(v) + [v∈S]·(D div |S|))) div 100
     *       + [v∈S]·((0.15·Scale) div |S|)
     *
-    * Same relational-scalar loop as [[pagerankLoop]] — |S| and D are
-    * 1-row broadcast aggregates, zero driver actions per pass.
+    * g04's relational-scalar round ([[rankRound]]) on [[pagerankLoop]]
+    * — |S| and D are 1-row broadcast aggregates, zero driver actions
+    * per pass.
     */
   def g09_pagerank_personalized(s: SparkSession, dir: String,
                                 iters: Int = 3,
@@ -569,50 +543,16 @@ object GraphQueries {
     val ss = broadcast(nodes.filter(col("node") % 10 === 1)
       .agg(count(lit(1)).as("ss")))
     val srcCase = (body: String) => s"CASE WHEN node % 10 = 1 THEN $body ELSE 0L END"
-    var r = nodes.crossJoin(ss)
-      .select(col("node"), expr(srcCase(s"${Scale}L div ss")).as("r"))
-    // Same checkpoint + pin-carry + memo discipline as [[pagerankLoop]]:
-    // mid-loop checkpoints for deep runs, lazy tail with pins parked
-    // in [[carriedPins]], latest checkpoint memoized for resume.
-    var pending = List.empty[DataFrame]
-    val mk = (s, dir, "pers")
-    var i = 0
-    if (checkpointEvery > 0)
-      cpMemo.get(mk).filter(_._1 <= iters).foreach { case (p, df) =>
-        i = p; r = df
-      }
-    while (i < iters) {
-      val joined = r.join(deg, Seq("node"), "left_outer")
-      val withDeg =
-        if (org.apache.spark.sql.graft.ColumnBridge.isCached(joined)) joined
-        else {
-          val p = joined.persist(StorageLevel.MEMORY_AND_DISK)
-          pending ::= p
-          p
-        }
-      val dm = broadcast(withDeg.filter(col("outdeg").isNull)
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dm")))
-      val contribs = e
-        .join(withDeg.filter(col("outdeg").isNotNull), e("src") === col("node"))
-        .select(col("dst").as("node"), expr("r div outdeg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      r = nodes.join(contribs, Seq("node"), "left_outer")
-        .crossJoin(dm).crossJoin(ss)
-        .select(col("node"),
-          expr(s"(${100 - BetaNum} * (coalesce(c, CAST(0 AS BIGINT)) + " +
+    pagerankLoop(s, dir, "pers", iters, checkpointEvery,
+        nodes.crossJoin(ss)
+          .select(col("node"), expr(srcCase(s"${Scale}L div ss")).as("r"))) {
+      (r, pin) =>
+        rankRound(e, nodes, pin(r.join(deg, Seq("node"), "left_outer")), ss,
+          "r div outdeg",
+          s"(${100 - BetaNum} * (coalesce(c, CAST(0 AS BIGINT)) + " +
             s"(${srcCase("dm div ss")}))) div 100 + " +
-            s"(${srcCase(s"${BetaNum * Scale / 100}L div ss")})").as("r"))
-      i += 1
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
-          i <= iters - checkpointEvery) {
-        r = r.localCheckpoint(true)
-        pending.foreach(_.unpersist(false))
-        pending = Nil
-        storeMemo(mk, i, r)
-      }
-    }
-    parkPins(s, pending)
-    r.select(col("node"), col("r").as("rank_fp"))
+            s"(${srcCase(s"${BetaNum * Scale / 100}L div ss")})")
+    }.select(col("node"), col("r").as("rank_fp"))
   }
 
   /** Unrolled-CTE oracle for [[g09_pagerank_personalized]]. */
@@ -711,13 +651,13 @@ object GraphQueries {
     * re-ran ~40 rounds per sample) return the already-checkpointed
     * result. The loop returns a self-contained eager checkpoint, so
     * nothing else survives it; the single checkpoint RDD per entry is
-    * released at eviction (checkpoints live outside the CacheManager —
-    * same rationale as [[cpMemo]]).
+    * released at eviction (checkpoint RDDs live outside the
+    * CacheManager, so nothing else would reach them).
     */
   private def ccMemoized(s: SparkSession, dir: String, algo: String)
                         (build: => DataFrame): DataFrame =
     SharedRelations.pinned(s, dir, "cc_" + algo)(build)(
-      org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
+      ColumnBridge.releaseCheckpoint)
 
   /** Converged CC again, but via the O(log n)-round alternating
     * large-star/small-star contraction
@@ -1161,65 +1101,38 @@ object GraphQueries {
   def g19_hits(s: SparkSession, dir: String): DataFrame =
     hitsLoop(s, dir, HitsRounds)
 
-  /** The variable-round HITS loop, on [[pagerankLoop]]'s
-    * lineage-root discipline: each normalize references its
-    * node-complete input twice (the vector and its MAX), so a lazily
-    * composed plan doubles per HALF-step — the r13 2-round form was
-    * already ~111 logical join nodes, executed cheaply only because
-    * ReuseExchange dedup'd the identical subtrees at RUNTIME while
-    * Catalyst still planned all of them (measured 10.9s honest cost at
-    * sf0.1, ~all of it planning). Here every round boundary except the
-    * last eagerly `localCheckpoint`s the hub vector — one node-sized
-    * job that truncates the plan to an RDD scan — so plan size is
-    * O(1) per round and wall-clock is linear in rounds
-    * (GraphQueriesSpec pins rounds=4 at the same tail plan size as
-    * rounds=2). Only `h` needs to be a root: round k+1 reads nothing
-    * else from round k (`a` is recomputed from `h` before its first
-    * use, and the FINAL round's a⋈h pair is the lazy tail). Per-pass
-    * `full` relations are persisted and pinned exactly like
-    * pagerankLoop's withDeg (released at the next checkpoint; tail
-    * pins parked in [[carriedPins]]); round checkpoints are memoized
-    * in [[cpMemo]] (mode "hits"), so a repeated call — the bench's
-    * later samples — resumes from the last stored round, and
-    * superseded/retired roots are released on eviction. Checkpointing
-    * copies the integer scores verbatim: the oracle hash is unaffected
-    * at any round count. On a real cluster swap `localCheckpoint` for
-    * reliable `checkpoint`, as with the other converged loops.
+  /** The variable-round HITS loop, on [[pagerankLoop]] at cadence 1:
+    * each normalize references its node-complete input twice (the
+    * vector and its MAX), so a lazily composed plan doubles per
+    * HALF-step — the r13 2-round form was already ~111 logical join
+    * nodes, executed cheaply only because ReuseExchange dedup'd the
+    * identical subtrees at RUNTIME while Catalyst still planned all of
+    * them (measured 10.9s honest cost at sf0.1, ~all of it planning).
+    * Here every round boundary except the last eagerly
+    * `localCheckpoint`s the hub vector — one node-sized job that
+    * truncates the plan to an RDD scan — so plan size is O(1) per
+    * round and wall-clock is linear in rounds (GraphQueriesSpec pins
+    * rounds=4 at the same tail plan size as rounds=2). Only `h` needs
+    * to be a root: round k+1 reads nothing else from round k (`a` is
+    * recomputed from `h` before its first use, and the FINAL round's
+    * a⋈h pair is the lazy tail). Per-pass `full` relations are the
+    * round's pins; round checkpoints are stored under mode "hits", so
+    * a repeated call — the bench's later samples — resumes from the
+    * last stored round below `rounds`.
     */
   private[graft] def hitsLoop(s: SparkSession, dir: String,
                               rounds: Int): DataFrame = {
     val eSrc = loopEdges(s, dir)
     val eDst = loopEdgesDst(s, dir)
     val nodes = derivedNodes(s, dir)
-    var pending = List.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame =
-      if (org.apache.spark.sql.graft.ColumnBridge.isCached(df)) df
-      else {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        pending ::= p
-        p
-      }
-    var h = nodes.select(col("node"), lit(HitsQ).as("h"))
+    // set by every round; the loop resumes strictly below `rounds`, so
+    // the last round always runs
     var a: DataFrame = null
-    val mk = (s, dir, "hits")
-    var i = 0
-    // Resume strictly BELOW `rounds`: the final round must re-execute
-    // so `a` (recomputed from h each round) exists for the tail join.
-    cpMemo.get(mk).filter(_._1 < rounds).foreach { case (p, df) =>
-      i = p; h = df
-    }
-    while (i < rounds) {
+    val h = pagerankLoop(s, dir, "hits", rounds, checkpointEvery = 1,
+        nodes.select(col("node"), lit(HitsQ).as("h"))) { (h, pin) =>
       a = hitsNormalize(pin(hitsFull(nodes, hitsAuthSums(eSrc, h))), "a")
-      h = hitsNormalize(pin(hitsFull(nodes, hitsHubSums(eDst, a))), "h")
-      i += 1
-      if (i < rounds) {
-        h = h.localCheckpoint(true)
-        pending.foreach(_.unpersist(false))
-        pending = Nil
-        storeMemo(mk, i, h)
-      }
+      hitsNormalize(pin(hitsFull(nodes, hitsHubSums(eDst, a))), "h")
     }
-    parkPins(s, pending)
     a.join(h, Seq("node"))
       .select(col("node"), col("a").as("auth_fp"), col("h").as("hub_fp"))
   }
@@ -1241,11 +1154,13 @@ object GraphQueries {
     * 1-row scalar each — the O9/g11 convergence-probe shape) on top
     * of the loop's two joins; both vectors are eagerly
     * `localCheckpoint`ed per round (the delta probe needs `a`
-    * materialized anyway), superseded roots released, so plan size
-    * stays O(1) and memory O(2 vectors). Not memoized in [[cpMemo]]:
-    * per-round resume cadence belongs to the fixed-round production
-    * entry (g19); the registry form ([[g20_hits_converged]]) memoizes
-    * only the FINAL result, like the converged CC family.
+    * materialized anyway), superseded roots and the round's pins
+    * released, so plan size stays O(1) and memory O(2 vectors). Its
+    * own loop, not [[pagerankLoop]]: it stops on a probe, checkpoints
+    * both vectors, and stores no resume checkpoints — per-round resume
+    * belongs to the fixed-round production entry (g19); the registry
+    * form ([[g20_hits_converged]]) memoizes only the FINAL result,
+    * like the converged CC family.
     */
   private[graft] def hitsConverged(s: SparkSession, dir: String,
       maxRounds: Int = 50, tolFp: Long = HitsQ / 1000L)
@@ -1253,20 +1168,12 @@ object GraphQueries {
     val eSrc = loopEdges(s, dir)
     val eDst = loopEdgesDst(s, dir)
     val nodes = derivedNodes(s, dir)
-    var pending = List.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame =
-      if (org.apache.spark.sql.graft.ColumnBridge.isCached(df)) df
-      else {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        pending ::= p
-        p
-      }
+    val pin = new RoundPins(s, dir)
     def maxAbsDelta(cur: DataFrame, prev: DataFrame, c: String): Long =
       cur.join(prev.withColumnRenamed(c, "prev_v"), Seq("node"))
         .agg(max(abs(col(c) - col("prev_v")))).head().getLong(0)
     var h = nodes.select(col("node"), lit(HitsQ).as("h"))
     var a: DataFrame = null
-    var roots = List.empty[DataFrame]
     var i = 0
     var converged = false
     while (i < maxRounds && !converged) {
@@ -1281,10 +1188,8 @@ object GraphQueries {
       // round 1 has no previous auth vector — by definition not
       // converged yet (the budget floor is one full round)
       converged = aPrev != null && maxAbsDelta(a, aPrev, "a") + dh <= tolFp
-      pending.foreach(_.unpersist(false))
-      pending = Nil
-      (Option(aPrev).toList ++ List(hPrev)).foreach(
-        org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint)
+      pin.release()
+      (Option(aPrev).toList ++ List(hPrev)).foreach(ColumnBridge.releaseCheckpoint)
     }
     (a.join(h, Seq("node"))
       .select(col("node"), col("a").as("auth_fp"), col("h").as("hub_fp")),
@@ -1339,8 +1244,7 @@ object GraphQueries {
     SharedRelations.pinned(s, dir, "g20_hits_converged") {
       val (res, rounds, roots) = hitsConverged(s, dir, G20MaxRounds, G20Tol)
       (res.withColumn("rounds_run", lit(rounds.toLong)), roots)
-    }(_._2.foreach(org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint))
-      ._1
+    }(_._2.foreach(ColumnBridge.releaseCheckpoint))._1
 
   /** One unrolled HITS round as oracle CTEs: auth from `prevH`, then
     * hub from the fresh auth — each a join-sum over `edges` plus a
@@ -1531,7 +1435,7 @@ object GraphQueries {
     // (localCheckpoint on the default cadence). The FIRST call runs
     // all 10 passes — wall-clock linear in iterations, the
     // lineage-truncation claim — and memoizes the last mid-loop
-    // checkpoint; repeat calls resume from it (cpMemo), so bench
+    // checkpoint; repeat calls resume from it (pagerankLoop), so bench
     // medians measure the steady-state resume path. Stays oracle-exact
     // either way via the 10-deep unrolled CTE.
     "g04_pagerank_i10" -> ((s, d) => g04_pagerank(s, d, iters = 10)),

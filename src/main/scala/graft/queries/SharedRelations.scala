@@ -11,8 +11,9 @@ import org.apache.spark.storage.StorageLevel
   * shingle relation, the normalized embedding table — the
   * Spark-native analogue of a materialized view in the catalog), the
   * on-disk layouts under [[graft.sources.Layouts]] (partition trees,
-  * stats sidecars, versioned tables, bucketed catalog tables), and
-  * the converged graph results with their checkpoint RDDs.
+  * stats sidecars, versioned tables, bucketed catalog tables), the
+  * converged graph results with their checkpoint RDDs, and the
+  * fixed-round graph loops' resume checkpoints and tail pins.
   *
   * Keys hold the session reference, so a stopped session's entries are
   * never served to a new one. Long-lived drivers (Bench between query
@@ -23,7 +24,6 @@ import org.apache.spark.storage.StorageLevel
 object SharedRelations {
   private val store =
     TrieMap.empty[(SparkSession, String, String), (Any, () => Unit)]
-  private val hooks = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** `build` once per (session, dir, name); evicting drops the entry
     * and frees nothing — for an artifact whose files ARE the
@@ -46,23 +46,17 @@ object SharedRelations {
     pinned(s, dir, name)(build.persist(StorageLevel.MEMORY_AND_DISK))(
       _.unpersist(false))
 
-  /** Register a cleanup to run when `s` is evicted — for state that
-    * is not one memo entry (the iterative loops' parked pins and
-    * resumable checkpoints). Hooks run once and are dropped.
-    */
-  def onEvict(s: SparkSession)(f: () => Unit): Unit =
-    store.put((s, "", "onEvict#" + hooks.incrementAndGet()), ((), f))
+  /** The value stored under (s, dir, name), if any; never builds. */
+  def get[A](s: SparkSession, dir: String, name: String): Option[A] =
+    store.get((s, dir, name)).map(_._1.asInstanceOf[A])
 
-  /** Release every entry memoized for `s` and run its hooks, then clear
-    * the session cache wholesale — the latter also drops stray
-    * non-shared persists (e.g. the trailing per-pass caches of the
-    * iterative PageRank loops), so a long run's executor memory stays
-    * bounded by one family's working set.
+  /** Release and forget the entries of `s` whose name `select` picks
+    * (all of them by default); their next call rebuilds. Every pin
+    * that outlives a call is an entry here, so this touches nothing
+    * another session holds.
     */
-  def evict(s: SparkSession): Unit = {
-    store.keys.filter(_._1 eq s).foreach { k =>
+  def evict(s: SparkSession, select: String => Boolean = _ => true): Unit =
+    store.keys.filter(k => (k._1 eq s) && select(k._3)).foreach { k =>
       store.remove(k).foreach(_._2())
     }
-    s.catalog.clearCache()
-  }
 }

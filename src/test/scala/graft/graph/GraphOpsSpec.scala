@@ -113,6 +113,10 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core2 === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     assert(GraphOps.kCore(sym, 3).count() === 0L)
+    // one round peels only 5: over budget, it throws and leaves no pin
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](GraphOps.kCore(sym, 2, maxRounds = 1))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("kCore agrees with driver-side brute-force peeling on the derived graph") {

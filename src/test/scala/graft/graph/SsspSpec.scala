@@ -91,10 +91,13 @@ class SsspSpec extends AnyFunSuite {
 
   test("non-convergence within maxRounds throws instead of returning junk") {
     val tris = (0L until 30L).map(i => (i, i + 1, 9L))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalStateException] {
       GraphOps.ssspFromSym(symW(tris: _*), 0L, delta = 1L, maxRounds = 3)
     }
     assert(ex.getMessage.contains("not converged"))
+    // the over-budget path releases every iterate and checkpoint
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("g14 on testdata: distances are non-negative from the min source, -1 allowed") {

@@ -102,14 +102,18 @@ class GraphQueriesSpec extends AnyFunSuite {
 
   test("converged-cc loops leave no pinned blocks after eviction") {
     // The round-7 leak: per-round persists and localCheckpoint RDDs
-    // escaping the loop. Both CC paths now retire every iterate and
-    // return a single memoized checkpoint that the eviction hook
-    // releases — so eviction must return the session to (at most) the
-    // pins that existed before the loops ran.
+    // escaping the loop. Every loop entry retires its iterates and
+    // leaves only session-store entries behind (memoized results,
+    // resume checkpoints, tail pins), which eviction releases — so
+    // eviction must return the session to (at most) the pins that
+    // existed before the loops ran.
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    GraphQueries.g11_cc_converged(spark, dir).count()
-    GraphQueries.g12_cc_logn(spark, dir).count()
+    Seq("g04_pagerank", "g04_pagerank_i10", "g07_pagerank_graphx",
+      "g08_pagerank_compat", "g09_pagerank_personalized", "g11_cc_converged",
+      "g12_cc_logn", "g13_bfs", "g14_sssp", "g15_kcore", "g19_hits",
+      "g20_hits_converged")
+      .foreach(q => GraphQueries.queries(q)(spark, dir).count())
     SharedRelations.evict(spark)
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"pinned RDDs survived eviction: $leaked")

@@ -27,30 +27,32 @@ class SharedRelationsSpec extends AnyFunSuite {
         s"$tag/layout"
       }
 
-    // evict clears the cache of the whole SparkContext, which unpins
-    // the shared test session's persisted entries too: evict that
-    // session as well, so later suites rebuild them pinned
-    try {
-      for (_ <- 1 to 2) {
-        get(a, "a", "d1", "x"); get(a, "a", "d2", "x"); get(a, "a", "d1", "y")
-        get(b, "b", "d1", "x"); layout(a, "a"); layout(b, "b")
-      }
-      assert(builds.toMap === Map("a/d1/x" -> 1, "a/d2/x" -> 1,
-        "a/d1/y" -> 1, "b/d1/x" -> 1, "a/layout" -> 1, "b/layout" -> 1))
+    for (_ <- 1 to 2) {
+      get(a, "a", "d1", "x"); get(a, "a", "d2", "x"); get(a, "a", "d1", "y")
+      get(b, "b", "d1", "x"); layout(a, "a"); layout(b, "b")
+    }
+    assert(builds.toMap === Map("a/d1/x" -> 1, "a/d2/x" -> 1,
+      "a/d1/y" -> 1, "b/d1/x" -> 1, "a/layout" -> 1, "b/layout" -> 1))
+    val relA = SharedRelations(a, "d1", "rel")(a.range(10).toDF("n"))
+    val relB = SharedRelations(b, "d1", "rel")(b.range(11).toDF("n"))
+    assert(relA.count() === 10L && relB.count() === 11L)
 
-      SharedRelations.evict(a)
-      assert(released.sorted.toSeq === Seq("a/d1/x", "a/d1/y", "a/d2/x"))
-      get(a, "a", "d1", "x"); layout(a, "a")
-      get(b, "b", "d1", "x"); layout(b, "b")
-      assert(builds("a/d1/x") === 2 && builds("a/layout") === 2,
-        "an evicted entry must rebuild on the next call")
-      assert(builds("b/d1/x") === 1 && builds("b/layout") === 1,
-        "evicting one session must leave another session's entries alone")
-      assert(released.size === 3)
-      SharedRelations.evict(b)
-      SharedRelations.evict(a)
-      assert(released.sorted.toSeq ===
-        Seq("a/d1/x", "a/d1/x", "a/d1/y", "a/d2/x", "b/d1/x"))
-    } finally SharedRelations.evict(spark)
+    SharedRelations.evict(a)
+    assert(released.sorted.toSeq === Seq("a/d1/x", "a/d1/y", "a/d2/x"))
+    assert(!org.apache.spark.sql.graft.ColumnBridge.isCached(relA))
+    assert(org.apache.spark.sql.graft.ColumnBridge.isCached(relB),
+      "evicting one session must leave another session's relations cached")
+    get(a, "a", "d1", "x"); layout(a, "a")
+    get(b, "b", "d1", "x"); layout(b, "b")
+    assert(builds("a/d1/x") === 2 && builds("a/layout") === 2,
+      "an evicted entry must rebuild on the next call")
+    assert(builds("b/d1/x") === 1 && builds("b/layout") === 1,
+      "evicting one session must leave another session's entries alone")
+    assert(released.size === 3)
+    SharedRelations.evict(b)
+    SharedRelations.evict(a)
+    assert(released.sorted.toSeq ===
+      Seq("a/d1/x", "a/d1/x", "a/d1/y", "a/d2/x", "b/d1/x"))
+    assert(!org.apache.spark.sql.graft.ColumnBridge.isCached(relB))
   }
 }
