@@ -24,18 +24,6 @@ object GraphIO {
   def readEdgesCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(edgeSchema).option("mode", "FAILFAST").csv(path)
 
-  /** k disjoint chains of k nodes, tails → sink 0 — the reference's
-    * synthetic fixture family (pageRank_v2.java:32-43, FIXTURES.md A.2).
-    * Generated distributed via `spark.range` (no driver-side
-    * materialization; k=10⁶ → 10¹² edges would still parallelize).
-    */
-  def kChainEdges(spark: SparkSession, k: Long): DataFrame = {
-    // node ids 1..k²; edge i→i+1 within a chain, tail (c*k+k)→0
-    spark.range(1, k * k + 1).toDF("src")
-      .select(col("src"),
-        when(col("src") % k === 0, lit(0L)).otherwise(col("src") + 1).as("dst"))
-  }
-
   /** Compat CSV sink: `node,U,contrib,adj-` rows, `-`-joined adjacency
     * with trailing dash (pageRank_v2.java:207-217). Expects columns
     * (node LONG, contrib DOUBLE, adj ARRAY<LONG>).

@@ -21,14 +21,18 @@ import org.apache.spark.storage.StorageLevel
   * hash-partitioned on the node id to the session's shuffle width and
   * persisted. Each pass then has one exchange: the exploded
   * contributions, regrouped by node and hash-joined into the graph,
-  * which never moves. Lineage is truncated with `localCheckpoint`
-  * every `checkpointEvery` passes (on a cluster, swap for `checkpoint`
-  * with a reliable dir) — without it the plan doubles per iteration
-  * and the driver, not the data, becomes the bottleneck. A pass's
-  * cache or checkpoint is released as soon as the next pass's state
-  * is materialized. Hence the `onPass` contract: the `CompatState` a
-  * pass hands over stays valid until the next pass materializes, so a
-  * hook writes or collects it before returning.
+  * which never moves. Every pass's state is a lazy `localCheckpoint`
+  * of its plan (on a cluster, swap for `checkpoint` with a reliable
+  * dir), so the next pass plans over a one-node leaf, not a lineage
+  * that grows with the pass count: analysis and planning cost the
+  * driver the same on every pass. The dangling term d/N reaches the
+  * rank expression as data, a broadcast 1-row relation cross-joined
+  * in, not as a literal, so every pass after the first two plans the
+  * same plan and reuses its generated classes. A pass's checkpoint
+  * is released as soon as the next pass's state is materialized.
+  * Hence the `onPass` contract: the `CompatState` a pass hands over
+  * stays valid until the next pass materializes, so a hook writes or
+  * collects it before returning.
   */
 object PageRank {
 
@@ -55,7 +59,6 @@ object PageRank {
     * for the caller.
     */
   def compat(edges: DataFrame, k: Long, passes: Int, beta: Double = 0.15,
-             checkpointEvery: Int = 5,
              onPass: (Int, CompatState) => Unit = (_, _) => ()): CompatState = {
     require(passes >= 1, "compat needs at least the init pass")
     val n = (k.toDouble * k.toDouble)
@@ -80,8 +83,7 @@ object PageRank {
     val state1 = CompatState(init.filter(col("node") =!= 0), d)
     onPass(1, state1)
     if (passes == 1) state1
-    else iterate(init, state1, k, passes - 1, beta, checkpointEvery, onPass,
-      passOffset = 1)
+    else iterate(init, state1, k, passes - 1, beta, onPass, passOffset = 1)
   }
 
   /** Advance an existing compat state by `steps` iteration passes —
@@ -93,7 +95,7 @@ object PageRank {
     * numbering can continue the original run's.
     */
   def compatSteps(state0: CompatState, k: Long, steps: Int,
-                  beta: Double = 0.15, checkpointEvery: Int = 5,
+                  beta: Double = 0.15,
                   onPass: (Int, CompatState) => Unit = (_, _) => (),
                   passOffset: Int = 0): CompatState = {
     // A state lacks the sink row and any other contribution-only
@@ -104,7 +106,7 @@ object PageRank {
       .select(col("node"), coalesce(col("adj"), array().cast("array<long>")).as("adj"))
       .repartition(shuffleWidth(state0.state), col("node"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    iterate(graph, state0, k, steps, beta, checkpointEvery, onPass, passOffset)
+    iterate(graph, state0, k, steps, beta, onPass, passOffset)
   }
 
   /** The session's shuffle width, passed explicitly to `repartition`
@@ -117,24 +119,30 @@ object PageRank {
     * reach with its adjacency, hash-partitioned on node and pinned.
     * Adjacency never changes and contribution-only targets keep an
     * empty list, so each pass is the graph LEFT JOIN its contributions,
-    * and only the contributions cross an exchange. Each pass releases
-    * its predecessor's cache or checkpoint once its own state is
-    * materialized; the graph is released after the last pass.
+    * and only the contributions cross an exchange. Each pass's state is
+    * a lazy `localCheckpoint`, never layered over a cache, which the
+    * sink-row collect materializes; only then is its predecessor
+    * released, so a lineage root always exists. The graph is released
+    * after the last pass.
     */
   private def iterate(graph: DataFrame, state0: CompatState, k: Long,
-                      steps: Int, beta: Double, checkpointEvery: Int,
+                      steps: Int, beta: Double,
                       onPass: (Int, CompatState) => Unit,
                       passOffset: Int): CompatState = {
     val n = (k.toDouble * k.toDouble)
+    val spark = graph.sparkSession
+    import spark.implicits._
     var cur = state0
     var pin: DataFrame = null
     var step = 0
     while (step < steps) {
       // Rank update applied lazily (pageRank_v2.java:126-127), then
-      // whole-rank contribution to each out-neighbor (:136-139).
-      val ranked = cur.state.withColumn("rank",
-        lit(1 - beta) * (col("contrib") + lit(cur.danglingMass / n)) +
-          lit(beta / n))
+      // whole-rank contribution to each out-neighbor (:136-139). d/N is
+      // the driver's double, carried as a row: a literal would change
+      // the generated code every pass.
+      val dn = broadcast(Seq(cur.danglingMass / n).toDF("dn"))
+      val ranked = cur.state.crossJoin(dn).withColumn("rank",
+        lit(1 - beta) * (col("contrib") + col("dn")) + lit(beta / n))
       val contribs = ranked
         .select(explode(col("adj")).as("node"), col("rank"))
         .groupBy("node").agg(sum(col("rank")).as("contrib"))
@@ -146,9 +154,7 @@ object PageRank {
         .join(contribs.hint("shuffle_hash"), Seq("node"), "left_outer")
         .select(col("node"),
           coalesce(col("contrib"), lit(0.0)).as("contrib"), col("adj"))
-      val next =
-        if ((passOffset + step + 1) % checkpointEvery == 0) plan.localCheckpoint(true)
-        else plan.persist(StorageLevel.MEMORY_AND_DISK)
+      val next = plan.localCheckpoint(false)
 
       val d = extractDangling(next)
       if (pin != null) GraphOps.releaseIterate(pin)
@@ -163,9 +169,9 @@ object PageRank {
 
   /** The reference's counter read: node 0's contribution, removed
     * from the output relation (pageRank_v2.java:216-222). One cheap
-    * driver action per pass — the same job materializes the persisted
-    * state, and the graph holds one sink row, which comes back to the
-    * driver as is: no aggregate, so no exchange.
+    * driver action per pass — the same job materializes the pass's
+    * checkpoint, and the graph holds one sink row, which comes back to
+    * the driver as is: no aggregate, so no exchange.
     */
   private def extractDangling(state: DataFrame): Double =
     state.filter(col("node") === 0).select(col("contrib"))

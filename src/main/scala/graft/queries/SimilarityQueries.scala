@@ -231,7 +231,7 @@ object SimilarityQueries {
   /** Squared euclidean ‖v−c‖² = v·v − 2 v·c + c·c (three codegen'd
     * dots, no intermediate difference vector).
     */
-  private def d2Col(v: String, cv: String): Column =
+  private[queries] def d2Col(v: String, cv: String): Column =
     dotExpr(v, v) - lit(2d) * dotExpr(v, cv) + dotExpr(cv, cv)
 
   /** Nearest trained cell per vector — broadcast argmin with a
@@ -546,15 +546,6 @@ object SimilarityQueries {
       .select(col("qid"), col("rk").cast(LongType).as("rk"),
         col("did").as("nn_id"), col("cos_sq8"))
   }
-
-  /** Total quantization error Σ_(vec,m) min_c ‖sv−cv‖² under codebook
-    * `cb` — the spec pins its non-increase from seed to trained.
-    */
-  private[queries] def pqQuantError(sub: DataFrame, cb: DataFrame): Double =
-    sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), d2Col("sv", "cv").as("d2"))
-      .groupBy(col("vec_id"), col("m")).agg(min(col("d2")).as("d2"))
-      .agg(sum(col("d2"))).head().getDouble(0)
 
   /** [[PqIters]] Lloyd passes over the subvector relation, all
     * subspaces jointly (grouped by (m, cid)); empty cells drop out of

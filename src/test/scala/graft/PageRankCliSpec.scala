@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.graph.{GraphIO, PageRank}
+import graft.graph.{GraphFixtures, GraphIO, PageRank}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI-driver behavior: pass-numbering offsets on resume and
@@ -25,7 +25,7 @@ class PageRankCliSpec extends AnyFunSuite {
   test("resumed run continues numbering and leaves prior dirs intact") {
     val tmp = Files.createTempDirectory("graft-cli").toString
     val edgesCsv = s"$tmp/edges"
-    GraphIO.kChainEdges(spark, 3)
+    GraphFixtures.kChainEdges(spark, 3)
       .select(org.apache.spark.sql.functions.concat_ws(",",
         org.apache.spark.sql.functions.col("src"),
         org.apache.spark.sql.functions.col("dst")))
@@ -51,7 +51,7 @@ class PageRankCliSpec extends AnyFunSuite {
 
     // and the resumed chain is the uninterrupted run, bit-exact
     // (state CSV round-trips exactly; see PageRankSpec)
-    val full = PageRank.compat(GraphIO.kChainEdges(spark, 3), 3, 4)
+    val full = PageRank.compat(GraphFixtures.kChainEdges(spark, 3), 3, 4)
     def toMap(st: org.apache.spark.sql.DataFrame) =
       st.select("node", "contrib", "adj")
         .as[(Long, Double, Seq[Long])].collect()

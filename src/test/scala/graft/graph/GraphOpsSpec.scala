@@ -8,7 +8,7 @@ class GraphOpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("kChainEdges generates the reference k=3 fixture") {
-    val got = GraphIO.kChainEdges(spark, 3)
+    val got = GraphFixtures.kChainEdges(spark, 3)
       .as[(Long, Long)].collect().toSet
     assert(got === Set(
       (1L, 2L), (2L, 3L), (3L, 0L),

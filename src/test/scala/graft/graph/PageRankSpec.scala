@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.TestSpark
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.io.Source
@@ -72,7 +73,7 @@ class PageRankSpec extends AnyFunSuite {
     Source.fromResource("golden/check3/part-r-00000")
 
   private def run(k: Long, passes: Int) = {
-    val edges = GraphIO.kChainEdges(spark, k)
+    val edges = GraphFixtures.kChainEdges(spark, k)
     val got = PageRank.compat(edges, k, passes)
     val state = got.state
       .select("node", "contrib", "adj")
@@ -113,7 +114,7 @@ class PageRankSpec extends AnyFunSuite {
     val goldenSrc = goldenCheck3()
     val golden = try goldenSrc.getLines().filter(_.nonEmpty).toVector.sorted
       finally goldenSrc.close()
-    val got = PageRank.compat(GraphIO.kChainEdges(spark, 3), 3, 1)
+    val got = PageRank.compat(GraphFixtures.kChainEdges(spark, 3), 3, 1)
     val tmp = java.nio.file.Files.createTempDirectory("graft-golden").toString
     GraphIO.writeCompatCsv(got.state.select("node", "contrib", "adj"), tmp)
     val lines = spark.read.text(tmp).as[String].collect().toVector.sorted
@@ -139,7 +140,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("compat state CSV round-trips exactly and resume matches uninterrupted") {
-    val edges = GraphIO.kChainEdges(spark, 3)
+    val edges = GraphFixtures.kChainEdges(spark, 3)
     val tmp = java.nio.file.Files.createTempDirectory("graft-compat").toString
 
     // write pass-1 state, read it back: bit-exact (Double.toString
@@ -171,17 +172,16 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("compat pins a constant number of RDDs, however many passes run") {
-    // Each pass releases its predecessor's cache or checkpoint once its
-    // own state is materialized, so the pins a run holds do not grow
-    // with the pass count (checkpoint passes included).
+    // Each pass releases its predecessor's checkpoint once its own
+    // state is materialized, so the pins a run holds do not grow with
+    // the pass count.
     val sc = spark.sparkContext
-    val edges = GraphIO.kChainEdges(spark, 4)
+    val edges = GraphFixtures.kChainEdges(spark, 4)
     def pinnedBy(passes: Int): (Map[Int, Int], Int) = {
       val before = sc.getPersistentRDDs.keySet
       def pinned = (sc.getPersistentRDDs.keySet -- before).size
       val perPass = scala.collection.mutable.Map.empty[Int, Int]
-      PageRank.compat(edges, 4, passes, checkpointEvery = 3,
-        onPass = (p, _) => perPass(p) = pinned)
+      PageRank.compat(edges, 4, passes, onPass = (p, _) => perPass(p) = pinned)
       (perPass.toMap, pinned)
     }
     val (perPass4, after4) = pinnedBy(4)
@@ -190,6 +190,24 @@ class PageRankSpec extends AnyFunSuite {
     assert(after10 <= 2, s"$after10 RDDs pinned after the run")
     assert(perPass4(4) === perPass10(10))
     assert((2 to 10).map(perPass10).distinct.size === 1, perPass10)
+  }
+
+  test("a steady compat pass compiles no code and analyzes a plan of constant size") {
+    // d/N reaches the rank expression as data, not as a literal, and
+    // every pass's state is a checkpoint: from pass 3 on a pass reuses
+    // the generated classes of the pass before it, and its state's
+    // analyzed plan does not grow with the pass count.
+    val compiles = scala.collection.mutable.Map.empty[Int, Long]
+    val planNodes = scala.collection.mutable.Map.empty[Int, Int]
+    PageRank.compat(GraphFixtures.kChainEdges(spark, 4), 4, 8,
+      onPass = (p, st) => {
+        compiles(p) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        planNodes(p) = st.state.queryExecution.analyzed.collect { case n => n }.size
+      })
+    assert((3 to 8).map(compiles).distinct.size === 1,
+      s"compiles by pass: ${compiles.toSeq.sorted}")
+    assert((3 to 8).map(planNodes).distinct.size === 1,
+      s"analyzed plan nodes by pass: ${planNodes.toSeq.sorted}")
   }
 
   test("compat is bit-identical across shuffle widths and AQE, resumed or not") {
@@ -211,11 +229,11 @@ class PageRankSpec extends AnyFunSuite {
     val runs = postures.map { case (key, value) =>
       val s = spark.newSession()
       s.conf.set(key, value)
-      val full = PageRank.compat(GraphIO.kChainEdges(s, k), k, passes)
+      val full = PageRank.compat(GraphFixtures.kChainEdges(s, k), k, passes)
       // resume from a written pass-3 state: the graph is rebuilt from
       // rows that lack the sink
       val tmp = java.nio.file.Files.createTempDirectory("graft-width").toString
-      val s3 = PageRank.compat(GraphIO.kChainEdges(s, k), k, 3)
+      val s3 = PageRank.compat(GraphFixtures.kChainEdges(s, k), k, 3)
       GraphIO.writeCompatCsv(s3.state, s"$tmp/state3")
       val resumed = PageRank.compatSteps(
         PageRank.CompatState(GraphIO.readCompatCsv(s, s"$tmp/state3"),
@@ -236,7 +254,7 @@ class PageRankSpec extends AnyFunSuite {
     // raw in-edge in the init pass (pageRank_v2.java:163) but iterates
     // over the HashSet-deduped adjacency (pageRank_v2.java:122,195).
     val k = 3L
-    val base = GraphIO.kChainEdges(spark, k)
+    val base = GraphFixtures.kChainEdges(spark, k)
       .as[(Long, Long)].collect().toSeq
     val withDups = base ++ base.take(4) ++ base.take(2)
     val adj = withDups.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DedupSimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Total quantization error Σ_(vec,m) min_c ‖sv−cv‖² under codebook
+    * `cb`, the quantity Lloyd's passes never increase.
+    */
+  private def pqQuantError(sub: DataFrame, cb: DataFrame): Double =
+    sub.join(broadcast(cb), Seq("m"))
+      .select(col("vec_id"), col("m"), SimilarityQueries.d2Col("sv", "cv").as("d2"))
+      .groupBy(col("vec_id"), col("m")).agg(min(col("d2")).as("d2"))
+      .agg(sum(col("d2"))).head().getDouble(0)
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -28,10 +38,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("trained PQ codebook cuts quantization error and holds top-1 recall") {
     val sub = SimilarityQueries.pqSub(spark, dir).cache()
-    val seedErr = SimilarityQueries.pqQuantError(
+    val seedErr = pqQuantError(
       sub, SimilarityQueries.pqSeedCodebook(sub))
     val trained = SimilarityQueries.pqTrainedCodebook(sub)
-    val trainedErr = SimilarityQueries.pqQuantError(sub, trained)
+    val trainedErr = pqQuantError(sub, trained)
     // Lloyd is monotone non-increasing in quantization error; the
     // trained codebook must never be worse than the id-sampled seed.
     assert(trainedErr <= seedErr + 1e-9,

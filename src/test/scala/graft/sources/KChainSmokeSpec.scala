@@ -3,13 +3,13 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import graft.{PageRankCli, TestSpark}
-import graft.graph.GraphIO
+import graft.graph.{GraphFixtures, GraphIO}
 import org.apache.spark.sql.functions.{col, concat_ws, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** At-scale smoke over the reference's own EMR configuration
   * (Makefile:22-23,131: k=1000 → 10⁶ nodes, 10⁶ edges): the
-  * `GraphIO.kChainEdges` generator → reference-format CSV →
+  * `GraphFixtures.kChainEdges` generator → reference-format CSV →
   * PageRankCli end-to-end for 2
   * passes, asserting the compat mass invariants that hold exactly on
   * out-degree-≤1 graphs.
@@ -22,7 +22,7 @@ class KChainSmokeSpec extends AnyFunSuite {
     val n = (k * k).toDouble
     val tmp = Files.createTempDirectory("graft-kchain-smoke").toString
 
-    val edges = GraphIO.kChainEdges(spark, k)
+    val edges = GraphFixtures.kChainEdges(spark, k)
     assert(edges.count() === k * k)
 
     // the reference's input format (pageRank_v2.java:34): src,dst lines
