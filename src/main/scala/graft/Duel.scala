@@ -660,7 +660,7 @@ object Duel {
       // The MUTUAL-recurrence layout duel: 2-round HITS with the edge
       // table read from the both-orientations bucketed layout (src
       // copy feeding the auth half, dst copy the hub half —
-      // GraphQueries.loopEdges/loopEdgesDst) vs the in-memory
+      // GraphQueries.loopEdges on src and on dst) vs the in-memory
       // relation. Broadcast is disabled minus the 1-row MAX hints —
       // the regime where the score vectors outgrow the driver — so
       // the plain side must shuffle the edge table TWICE per round

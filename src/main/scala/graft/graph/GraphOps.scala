@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * star-contraction variant), single-source BFS and weighted shortest
   * paths, and k-core peeling. Label-prop, BFS, SSSP and k-core are a
   * round function and a convergence probe on one driver,
-  * [[converge]], which alone decides when an iterate is persisted,
-  * checkpointed and released. The one-shot primitives of the
+  * [[converge]], which alone decides when an iterate is checkpointed
+  * and released. The one-shot primitives of the
   * reference's inventory (SURVEY.md §2: adjacency, degrees, the
   * dangling set) are the registry entries g01–g03.
   *
@@ -34,73 +34,64 @@ object GraphOps {
     ColumnBridge.releaseCheckpoint(df)
   }
 
-  /** The converged-loop driver. A round is `step(cur)`, then `persist`
-    * — or, every `checkpointEvery`-th round, a LAZY
-    * `localCheckpoint(false)` — then `converged(next)`: the round's one
-    * driver action, which both materializes the iterate and decides
-    * whether to stop. The driver pins `init` unless it is already
-    * cached (then it is its caller's pin — k-core starts from its
-    * caller's edge relation — and is never released here), keeps
-    * exactly `cur`, the iterate before it and the latest checkpoint,
-    * and releases each iterate once, as it leaves that set. The
-    * result is an eager `localCheckpoint` of `finish(cur)`:
-    * self-contained (safe to memoize after the input is evicted) and
-    * the ONLY pin that escapes — everything else is released on the
-    * return path and on the over-budget path, which throws rather than
-    * returning a half-converged relation. Callers that keep the result
-    * long-term own that single checkpoint and release it via
+  /** The converged-loop driver. A round is `step(cur)` as a LAZY
+    * `localCheckpoint(false)`, then `converged(next)`: the round's one
+    * driver action, which both materializes the checkpoint and decides
+    * whether to stop. Only then is `cur` released, so a lineage root
+    * always exists and the next round plans over a one-node leaf, never
+    * over a lineage that grows with the round count. The driver pins
+    * `init` unless it is already cached (then it is its caller's pin —
+    * k-core starts from its caller's edge relation — and is never
+    * released here). The result is an eager `localCheckpoint` of
+    * `finish(cur)`: self-contained (safe to memoize after the input is
+    * evicted) and the ONLY pin that escapes — every iterate is released
+    * on the return path and on the over-budget path, which throws
+    * rather than returning a half-converged relation. Callers that keep
+    * the result long-term own that single checkpoint and release it via
     * [[org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint]].
     *
-    * Two r13 checkpoint disciplines, both found by the AQE-off probe
-    * and both real at-scale robustness, not config quirks:
-    * (1) a checkpoint round takes the iterate UN-cached and lazy —
-    * `localCheckpoint` stores the rdd's own MEMORY_AND_DISK blocks,
-    * which the probe materializes in one pass (the r9 eager checkpoint
-    * was a second full materialization), and layering a cache UNDER
-    * it let the checkpoint adopt the cached plan's blocks, so
-    * unpersisting the pre-checkpoint frame deleted the checkpoint's
-    * storage; (2) a checkpoint is a lineage ROOT — any later round
-    * that misses cache (AQE-off plan-match differences locally;
-    * memory-pressure eviction on a real executor) recomputes down to
-    * the NEAREST checkpoint, so one is released only after a NEWER one
-    * is materialized, never on the rolling window that retires plain
-    * iterates (which keeps the iterate before `cur` one extra round,
-    * so an evicted block of `cur` still recomputes cheaply).
+    * The rule is compat PageRank's ([[PageRank]]): an iterate is
+    * checkpointed, never cached, and a checkpoint is released only after
+    * a newer one is materialized. Its failure mode is the same too: a
+    * lost local-checkpoint block (an executor gone) cannot be
+    * recomputed, so on a cluster swap `localCheckpoint` for `checkpoint`
+    * with a reliable dir. The checkpoint on every round saves driver
+    * time, not executor time. A persisted round's plan would carry
+    * every round back to the last checkpoint, and since a round reads
+    * its iterate twice, that plan doubles per round (CC's probe on a
+    * chain: 41, 97, 209, 433 analyzed nodes over four persisted
+    * rounds, 3 over a checkpoint), and every round analyzes, optimizes
+    * and plans it again. At sf0.1 the CC, BFS and SSSP loops spent 9–16 s
+    * of driver time outside Spark jobs with 4 persisted rounds of every
+    * 5, and 2–4 s with a checkpoint every round; time inside jobs
+    * stayed 1.5–3.7 s.
     */
-  private def converge(name: String, init: DataFrame, maxRounds: Int,
-                       checkpointEvery: Int)(step: DataFrame => DataFrame)
+  private def converge(name: String, init: DataFrame, maxRounds: Int)
+                      (step: DataFrame => DataFrame)
                       (converged: DataFrame => Boolean)
                       (finish: DataFrame => DataFrame): DataFrame = {
     val borrowed = ColumnBridge.isCached(init)
     if (!borrowed) init.persist(StorageLevel.MEMORY_AND_DISK)
-    def release(dfs: Seq[DataFrame]): Unit =
-      dfs.filter(df => df != null && !(borrowed && (df eq init))).distinct
-        .foreach(releaseIterate)
+    def release(df: DataFrame): Unit =
+      if (df != null && !(borrowed && (df eq init))) releaseIterate(df)
     var cur = init
     var prev: DataFrame = null
-    var root: DataFrame = null
     try {
       var done = false
       var round = 0
       while (!done && round < maxRounds) {
         round += 1
-        val plan = step(cur)
-        val isCp = round % checkpointEvery == 0
-        val next =
-          if (isCp) plan.localCheckpoint(false)
-          else plan.persist(StorageLevel.MEMORY_AND_DISK)
-        done = converged(next)
-        val leaving = Seq(prev, if (isCp) root else null)
-        if (isCp) root = next
         prev = cur
-        cur = next
-        release(leaving.filterNot(df => (df eq prev) || (df eq root)))
+        cur = step(prev).localCheckpoint(false)
+        done = converged(cur)
+        release(prev)
+        prev = null
       }
       if (!done)
         throw new IllegalStateException(
           s"$name: not converged after $maxRounds rounds")
       finish(cur).localCheckpoint(true)
-    } finally release(Seq(prev, cur, root))
+    } finally { release(prev); release(cur) }
   }
 
   /** Connected components by min-label propagation over an
@@ -111,8 +102,8 @@ object GraphOps {
     * materialization must not be rebuilt or unpersisted here. The
     * per-round work is one node-keyed join + aggregation — label-prop
     * converges in O(diameter) rounds, and each round is a fixed
-    * two-shuffle plan, so lineage is truncated with `localCheckpoint`
-    * on cadence. GraphX's `ConnectedComponents` is the Pregel-side
+    * two-shuffle plan, so every round's `localCheckpoint` truncates
+    * the lineage. GraphX's `ConnectedComponents` is the Pregel-side
     * twin (equivalence pinned in GraphOpsSpec).
     *
     * Each iterate carries its previous label as `old`, so convergence
@@ -120,12 +111,12 @@ object GraphOps {
     * dedicated change-detection join (round-7 verdict: that join was an
     * extra two-shuffle job per round).
     */
-  def connectedComponentsFromSym(sym: DataFrame, maxRounds: Int = 50,
-                                 checkpointEvery: Int = 5): DataFrame =
+  def connectedComponentsFromSym(sym: DataFrame,
+                                 maxRounds: Int = 50): DataFrame =
     converge("connectedComponentsFromSym",
       sym.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("label"), col("node").as("old")),
-      maxRounds, checkpointEvery) { lab =>
+      maxRounds) { lab =>
       // labels flow u→v across the symmetrized edges
       val nbr = sym.toDF("u", "v")
         .join(lab.select(col("node").as("u"), col("label").as("l")), Seq("u"))
@@ -156,14 +147,14 @@ object GraphOps {
     * nothing new to offer — total work O(E), not O(E·diameter).
     * Unreached nodes report dist = −1.
     */
-  def bfsFromSym(sym: DataFrame, source: Long, maxRounds: Int = 100,
-                 checkpointEvery: Int = 5): DataFrame =
+  def bfsFromSym(sym: DataFrame, source: Long,
+                 maxRounds: Int = 100): DataFrame =
     converge("bfsFromSym",
       sym.select(col("src").as("node")).distinct()
         .select(col("node"),
           when(col("node") === source, 0L).otherwise(BfsInf).as("dist"))
         .select(col("node"), col("dist"), lit(BfsInf).as("old")),
-      maxRounds, checkpointEvery) { dist =>
+      maxRounds) { dist =>
       val nbr = sym.toDF("u", "v")
         .join(dist.filter(col("dist") < BfsInf && col("dist") =!= col("old"))
           .select(col("node").as("u"), col("dist").as("d")), Seq("u"))
@@ -230,7 +221,7 @@ object GraphOps {
     * (adaptive) → ~18, Δ=∞ → 17; wall time tracks rounds ~1:1.
     */
   def ssspFromSym(symW: DataFrame, source: Long, delta: Long = 0L,
-                  maxRounds: Int = 200, checkpointEvery: Int = 5): DataFrame = {
+                  maxRounds: Int = 200): DataFrame = {
     require(delta >= 0, "ssspFromSym: delta must be positive (0 = adaptive)")
     val d = if (delta > 0) delta else {
       val avgW = symW.agg(avg(col("w"))).head().getDouble(0)
@@ -244,7 +235,7 @@ object GraphOps {
         .select(col("node"),
           when(col("node") === source, 0L).otherwise(BfsInf).as("dist"),
           (col("node") === source).as("pending")),
-      maxRounds, checkpointEvery) { dist =>
+      maxRounds) { dist =>
       // gated frontier drained: jump to the bucket holding the smallest
       // pending distance (≥1 pending node sits in [minPending,
       // threshold) after it). Driver-side arithmetic only — minPending
@@ -306,13 +297,14 @@ object GraphOps {
     * [[connectedComponentsFromSym]]: the returned frame is a
     * self-contained eager checkpoint and the only surviving pin.
     *
-    * Unlike the label-prop loop (whose iterate is referenced ONCE per
-    * round, so a checkpoint cadence of 5 bounds plan growth linearly),
-    * a star round references its predecessor ~24× through the
+    * Unlike the label-prop loop (whose iterate is referenced twice per
+    * round, so an un-checkpointed plan doubles per round), a star
+    * round references its predecessor ~24× through the
     * sym→mins→large→symS→minsS chain — plan size (and with it
     * analysis + cache-subtree-matching time) multiplies ~24× per
-    * UN-checkpointed round, which is exponential in the cadence
-    * (cadence 3 measured 205 s at sf0.1 vs ~10 s at cadence 1). So
+    * UN-checkpointed round, which is exponential in the rounds between
+    * checkpoints (a checkpoint every 3rd round measured 205 s at sf0.1
+    * vs ~10 s with one every round). So
     * every round checkpoints, and the mid-round `large` relation is
     * pinned while the three branches that read it materialize —
     * released as soon as the round's iterate is checkpointed.
@@ -386,9 +378,9 @@ object GraphOps {
     * Fixpoint structure differs from the label-prop family: the STATE
     * is the shrinking edge set, referenced three times per round
     * (degree agg + both semi-join probes), so un-checkpointed plan
-    * size multiplies ~3× per round — like the star-contraction loop
-    * ([[connectedComponentsLogN]]) every round checkpoints: this is
-    * [[converge]] at cadence 1. Peeling is idempotent at
+    * size would multiply ~3× per round; [[converge]] checkpoints every
+    * round, as the star-contraction loop
+    * ([[connectedComponentsLogN]]) does. Peeling is idempotent at
     * fixpoint — extra rounds are no-ops — which is what lets a
     * fixed-unroll SQL oracle verify the converged loop: any oracle
     * unroll ≥ the actual round count yields the identical relation,
@@ -399,10 +391,9 @@ object GraphOps {
   def kCore(sym: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, "kCore: k must be at least 1")
     // the input's size, so a graph that already is a k-core stops after
-    // one round (the derived graph at k = 3 and sf0.1 is one)
+    // one round
     var edgesN = sym.count()
-    converge("kCore", sym.select(col("src"), col("dst")), maxRounds,
-      checkpointEvery = 1) { cur =>
+    converge("kCore", sym.select(col("src"), col("dst")), maxRounds) { cur =>
       val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("src").as("keep"))
       cur

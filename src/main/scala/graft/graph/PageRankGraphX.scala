@@ -3,7 +3,10 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.reflect.ClassTag
 
 /** GraphX path for textbook PageRank on arbitrary graphs (SURVEY.md
   * §7.1.1, BASELINE.json spark_approach): contributions divided by
@@ -79,42 +82,10 @@ object PageRankGraphX {
     */
   def standardOn(graph0: Graph[Double, Unit], iters: Int,
                  beta: Double = 0.15): DataFrame = {
-    val spark = sessionOf(graph0.vertices)
     val n = graph0.numVertices.toDouble
-    // out-degree as vertex attribute; 0 for dangling
-    val degrees = graph0.outDegrees
-    var g: Graph[(Double, Int), Unit] = graph0
-      .outerJoinVertices(degrees)((_, _, deg) => (1.0 / n, deg.getOrElse(0)))
-      .cache()
-
-    // The dangling-sum action at the top of each pass materializes the
-    // current (cached) graph, so the PREVIOUS pass's cache can be
-    // dropped right after it — no extra count() job per pass.
-    var prev: Graph[(Double, Int), Unit] = null
-    var i = 0
-    while (i < iters) {
-      val d = g.vertices.filter { case (_, (_, deg)) => deg == 0 }
-        .map(_._2._1).fold(0.0)(_ + _)
-      if (prev != null) {
-        prev.unpersistVertices(false)
-        prev.edges.unpersist(false)
-      }
-      val contribs = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr._1 / ctx.srcAttr._2),
-        _ + _)
-      prev = g
-      g = g.outerJoinVertices(contribs) { (_, attr, c) =>
-        (beta / n + (1 - beta) * (c.getOrElse(0.0) + d / n), attr._2)
-      }.cache()
-      i += 1
-    }
-    spark.createDataFrame(
-      g.vertices.map { case (id, (rank, _)) => Row(id, rank) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+    iterate[Double](graph0, iters, 1.0 / n, _ / _,
+      (c, d) => beta / n + (1 - beta) * (c + d / n),
+      "rank", DoubleType)
   }
 
   /** Int64 fixed-point standard PageRank on GraphX — the GraphX
@@ -133,39 +104,55 @@ object PageRankGraphX {
     * (the derived graph is distinct by construction).
     */
   def standardFixedPointOn(graph0: Graph[Double, Unit], iters: Int): DataFrame = {
-    val spark = sessionOf(graph0.vertices)
     val Scale = 1000000000000L
     val Beta = 15L * Scale / 100L
     val n = graph0.numVertices
-    var g: Graph[(Long, Int), Unit] = graph0
-      .outerJoinVertices(graph0.outDegrees)((_, _, d) =>
-        (Scale / n, d.getOrElse(0)))
+    iterate[Long](graph0, iters, Scale / n, _ / _,
+      (c, d) => Beta / n + (85L * (c + d / n)) / 100L,
+      "rank_fp", LongType)
+  }
+
+  /** The loop [[standardOn]] and [[standardFixedPointOn]] share: ranks
+    * start at `r0`; per iteration, `d` is the dangling nodes' rank sum,
+    * each node sends `share(rank, outdeg)` to every out-neighbor, and a
+    * node's new rank is `update(c, d)` over its summed contributions `c`
+    * (zero when none arrive). Returns (node, `col`) with `col` of type
+    * `colType`.
+    *
+    * The dangling-sum action at the top of each pass materializes the
+    * current (cached) graph, so the PREVIOUS pass's cache can be
+    * dropped right after it — no extra count() job per pass.
+    */
+  private def iterate[A: ClassTag](graph0: Graph[Double, Unit], iters: Int,
+      r0: A, share: (A, Int) => A, update: (A, A) => A, col: String,
+      colType: DataType)(implicit num: Numeric[A]): DataFrame = {
+    val spark = sessionOf(graph0.vertices)
+    // out-degree as vertex attribute; 0 for dangling
+    var g: Graph[(A, Int), Unit] = graph0
+      .outerJoinVertices(graph0.outDegrees)((_, _, deg) => (r0, deg.getOrElse(0)))
       .cache()
-    var prev: Graph[(Long, Int), Unit] = null
+    var prev: Graph[(A, Int), Unit] = null
     var i = 0
     while (i < iters) {
       val d = g.vertices.filter { case (_, (_, deg)) => deg == 0 }
-        .map(_._2._1).fold(0L)(_ + _)
+        .map(_._2._1).fold(num.zero)(num.plus)
       if (prev != null) {
         prev.unpersistVertices(false)
         prev.edges.unpersist(false)
       }
-      val dd = d
-      val contribs = g.aggregateMessages[Long](
-        ctx => ctx.sendToDst(ctx.srcAttr._1 / ctx.srcAttr._2),
-        _ + _)
+      val contribs = g.aggregateMessages[A](
+        ctx => ctx.sendToDst(share(ctx.srcAttr._1, ctx.srcAttr._2)),
+        num.plus)
       prev = g
       g = g.outerJoinVertices(contribs) { (_, attr, c) =>
-        (Beta / n + (85L * (c.getOrElse(0L) + dd / n)) / 100L, attr._2)
+        (update(c.getOrElse(num.zero), d), attr._2)
       }.cache()
       i += 1
     }
     spark.createDataFrame(
       g.vertices.map { case (id, (r, _)) => Row(id, r) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("rank_fp",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+      StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField(col, colType, nullable = false))))
   }
 }

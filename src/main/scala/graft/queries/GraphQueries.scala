@@ -93,82 +93,57 @@ object GraphQueries {
     }
 
   /** The DIRECTED edge relation the PageRank-family loops
-    * ([[pagerankLoop]], [[g09_pagerank_personalized]]) join their rank
-    * iterate against on the src side once per round — the layout
-    * [[symEdges]]' scaladoc describes, as an opt-in. Default is the in-memory
+    * ([[pagerankLoop]], [[g09_pagerank_personalized]]) and HITS
+    * ([[hitsLoop]]) join their iterate against once per round, on the
+    * edge side's `key` column — the layout [[symEdges]]' scaladoc
+    * describes, as an opt-in. Default is the in-memory
     * [[derivedEdges]] (at sf ≤ 0.1 AQE broadcasts the rank side, so
     * the edge side never moves anyway); set spark conf
     * `graft.bucketedEdges` (or env `GRAFT_BUCKETED_EDGES`) to a bucket
-    * count and every round's contribution join instead reads a
-    * src-bucketed catalog table — identical rows (the loops are
-    * layout-agnostic and all-integer, so results stay oracle-exact;
-    * GraphBucketedSpec re-verifies g04/g08/g09 through this path),
-    * but on a cluster where ranks outgrow broadcast the edge-side
-    * join subtree plans ZERO exchanges: per round only the
-    * node-sized rank relation shuffles, never the edge table
-    * (GraphBucketedSpec pins exactly that on the executed round
-    * plan; the `bucketededges` duel records the traffic delta).
-    */
-  private def loopEdges(s: SparkSession, dir: String): DataFrame = {
-    val buckets = s.conf.getOption("graft.bucketedEdges")
-      .orElse(sys.env.get("GRAFT_BUCKETED_EDGES")).map(_.toInt)
-    buckets match {
-      case Some(n) => edgesBucketed(s, dir, n)
-      case None => derivedEdges(s, dir)
-    }
-  }
-
-  /** Bucketed materialization of [[derivedEdges]]: one write (the
-    * once-per-layout cost), then the returned catalog-table relation
-    * is hash-partitioned on `src` ON DISK — no SharedRelations persist
-    * (the files ARE the materialization; pinning an on-disk bucketed
-    * table in executor memory would just shadow the layout).
-    */
-  private def edgesBucketed(s: SparkSession, dir: String,
-                            buckets: Int): DataFrame =
-    SharedRelations.memo(s, dir, "graft_edges_b" + buckets) {
-      val table = "graft_edges_b" + buckets + "_" +
-        graft.sources.Layouts.tag(dir)
-      graft.sources.Bucketing.bucketedTable(s, derivedEdges(s, dir),
-        table, buckets, "src")
-    }
-
-  /** The dst-keyed orientation of [[loopEdges]] — the SECOND copy of
-    * the both-orientations layout a mutual recurrence needs: g19's hub
-    * half keys its edge⋈vector join on the edge side's `dst`, which a
-    * src-bucketed table cannot satisfy (hash(src) ≠ hash-on-dst
-    * distribution), so at scale that half would re-shuffle the edge
-    * table every round — exactly the per-round movement the src copy
-    * eliminates for the auth half. Same opt-in dial
-    * (`graft.bucketedEdges` / `GRAFT_BUCKETED_EDGES`), same
-    * once-per-layout write: identical rows either way, but with the
-    * layout on BOTH halves' edge-side join subtrees plan zero
-    * exchanges ([[graft.graph.GraphBucketedSpec]] pins it; the `hits`
-    * duel records the per-round traffic delta). Storage cost is one
-    * extra copy of the edge table — the standard trade everywhere
+    * count and every round's join instead reads a catalog table
+    * bucketed on `key` — identical rows (the loops are layout-agnostic
+    * and all-integer, so results stay oracle-exact; GraphBucketedSpec
+    * re-verifies g04/g08/g09/g19 through this path), but on a cluster
+    * where ranks outgrow broadcast the edge-side join subtree plans
+    * ZERO exchanges: per round only the node-sized rank relation
+    * shuffles, never the edge table (GraphBucketedSpec pins exactly
+    * that on the executed round plan; the `bucketededges` and `hits`
+    * duels record the traffic delta).
+    *
+    * `key = "dst"` is the SECOND copy of the both-orientations layout a
+    * mutual recurrence needs: g19's hub half keys its edge⋈vector join
+    * on the edge side's `dst`, which a src-bucketed table cannot
+    * satisfy (hash(src) ≠ hash-on-dst distribution), so at scale that
+    * half would re-shuffle the edge table every round. Storage cost is
+    * one extra copy of the edge table — the standard trade everywhere
     * mutual/undirected recurrences are run at scale (it is also what
     * `graph_sym` is, fused).
     */
-  private def loopEdgesDst(s: SparkSession, dir: String): DataFrame = {
+  private def loopEdges(s: SparkSession, dir: String,
+                        key: String = "src"): DataFrame = {
     val buckets = s.conf.getOption("graft.bucketedEdges")
       .orElse(sys.env.get("GRAFT_BUCKETED_EDGES")).map(_.toInt)
     buckets match {
-      case Some(n) => edgesBucketedDst(s, dir, n)
+      case Some(n) => edgesBucketed(s, dir, n, key)
       case None => derivedEdges(s, dir)
     }
   }
 
-  /** dst-bucketed materialization of [[derivedEdges]] — see
-    * [[loopEdgesDst]].
+  /** Materialization of [[derivedEdges]] bucketed on `key`: one write
+    * (the once-per-layout cost), then the returned catalog-table
+    * relation is hash-partitioned on `key` ON DISK — no SharedRelations
+    * persist (the files ARE the materialization; pinning an on-disk
+    * bucketed table in executor memory would just shadow the layout).
     */
-  private def edgesBucketedDst(s: SparkSession, dir: String,
-                               buckets: Int): DataFrame =
-    SharedRelations.memo(s, dir, "graft_edges_dstb" + buckets) {
-      val table = "graft_edges_dstb" + buckets + "_" +
-        graft.sources.Layouts.tag(dir)
+  private def edgesBucketed(s: SparkSession, dir: String, buckets: Int,
+                            key: String): DataFrame = {
+    val name = (if (key == "src") "graft_edges_b" else s"graft_edges_${key}b") +
+      buckets
+    SharedRelations.memo(s, dir, name) {
       graft.sources.Bucketing.bucketedTable(s, derivedEdges(s, dir),
-        table, buckets, "dst")
+        name + "_" + graft.sources.Layouts.tag(dir), buckets, key)
     }
+  }
 
   /** The shared edge-derivation, oracle side (a WITH prefix every graph
     * oracle starts from; callers append their own CTEs after a comma).
@@ -226,9 +201,8 @@ object GraphQueries {
     * identically, and long sums are associative — bit-exact across
     * engines regardless of shuffle/accumulation order.
     */
-  def g04_pagerank(s: SparkSession, dir: String, iters: Int = 3,
-                   checkpointEvery: Int = 2): DataFrame =
-    fixedPointPagerank(s, dir, iters, divideByOutdeg = true, checkpointEvery)
+  def g04_pagerank(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    fixedPointPagerank(s, dir, iters, divideByOutdeg = true)
 
   /** The fixed-round loop under g04/g07/g08 (PageRank), g09
     * (personalized PageRank) and g19 (HITS): `init` is round 0's
@@ -238,59 +212,52 @@ object GraphQueries {
     * share one materialization).
     *
     * Lineage/cache discipline (the 100 TB concern: driver planning
-    * time, not the data path): every `checkpointEvery` rounds — when
-    * at least `checkpointEvery` more rounds follow — the state is
-    * eagerly `localCheckpoint`ed: one cheap node-sized job that
-    * truncates the plan to an RDD scan, keeping plan size
-    * O(2^checkpointEvery) instead of doubling per round, after which
-    * the per-round pins it subsumes are released. The tail (final
-    * < 2·checkpointEvery rounds) stays LAZY: the caller's first action
-    * materializes it through the per-round pins, which is the
-    * cheapest execution of a short run (r6 measurement: one eager tail
-    * checkpoint costs more than it saves at 3 iterations — and r5's
-    * mid+tail shape materialized short runs twice).
+    * time, not the data path): every round but the last is eagerly
+    * `localCheckpoint`ed — one cheap node-sized job that truncates the
+    * plan to an RDD scan, so every round plans over a one-node leaf —
+    * and then the round's pins are released. The last round stays
+    * LAZY: the caller's first action materializes it through its pins.
+    * r6 measured one eager tail checkpoint costing more than it saved
+    * at 3 iterations. With a checkpoint on every round that no longer
+    * holds: at sf0.1, local[4], g04's and g09's cold samples stayed the
+    * same and their medians fell from 0.4–0.8 s to 0.15–0.24 s.
     *
     * Everything that outlives the call is an entry of the session
     * store ([[SharedRelations]]), released at [[SharedRelations.evict]]
     * (Bench and Verify evict at every family boundary, which bounds
     * the pins to one family's loops):
-    *  - the tail's pins ([[RoundPins.keep]]): a repeated or
-    *    overlapping call (g04's bench samples; g08 sharing g04's pass
-    *    1; the i10 probe sharing g04's passes 1–3) finds its per-round
-    *    plans already cached and reuses them — deterministic integer
-    *    state, so reuse cannot change results;
-    *  - every mid-loop checkpoint, under `mode` and its round: a
-    *    later call resumes from the latest one strictly below its own
-    *    round count (strictly, so at least one round runs — HITS needs
-    *    its last round's auth vector), exact because the state at
+    *  - the last round's pins ([[RoundPins.keep]]): a repeated call
+    *    (g04's bench samples) finds that round's plans already cached
+    *    and reuses them — deterministic integer state, so reuse cannot
+    *    change results;
+    *  - every round's checkpoint, under `mode` and its round: a later
+    *    call (the i10 probe after g04) resumes from the latest one
+    *    strictly below its own round count (strictly, so at least one
+    *    round runs — HITS needs its last round's auth vector), exact because the state at
     *    round `p` is fully deterministic given (sfDir, mode). A
     *    superseded checkpoint stays until eviction: an earlier
     *    caller's still-lazy result may reference its RDD, and a
     *    localCheckpoint cannot recompute once its blocks are dropped.
-    * `checkpointEvery = 0` means a genuinely checkpoint-free plan (no
-    * resume either), e.g. the cadence-independence spec's baseline.
     * On a real cluster swap `localCheckpoint` for reliable
     * `checkpoint` (executor loss kills local checkpoints).
-    * Checkpointing copies the integer state verbatim, so the oracle
-    * hash is unaffected at any cadence.
+    * Checkpointing copies the integer state verbatim, so the ranks
+    * equal a checkpoint-free run's bit for bit (GraphQueriesSpec
+    * checks them against GraphX and a plain-Scala recurrence).
     */
   private def pagerankLoop(s: SparkSession, dir: String, mode: String,
-                           rounds: Int, checkpointEvery: Int, init: DataFrame)
+                           rounds: Int, init: DataFrame)
                           (round: (DataFrame, RoundPins) => DataFrame)
       : DataFrame = {
     val pins = new RoundPins(s, dir)
     def checkpointName(p: Int) = s"$LoopCheckpoint$mode/$p"
-    val resumed =
-      if (checkpointEvery <= 0) None
-      else (rounds - 1 to 1 by -1).iterator.flatMap(p =>
+    val resumed = (rounds - 1 to 1 by -1).iterator.flatMap(p =>
         SharedRelations.get[DataFrame](s, dir, checkpointName(p)).map(p -> _))
-        .nextOption()
+      .nextOption()
     var (i, r) = resumed.getOrElse((0, init))
     while (i < rounds) {
       r = round(r, pins)
       i += 1
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
-          i <= rounds - checkpointEvery) {
+      if (i < rounds) {
         r = SharedRelations.pinned(s, dir, checkpointName(i))(
           r.localCheckpoint(true))(ColumnBridge.releaseCheckpoint)
         pins.release()
@@ -394,14 +361,13 @@ object GraphQueries {
     * arithmetic keeps it bit-exact vs the unrolled-CTE oracle.
     */
   private def fixedPointPagerank(s: SparkSession, dir: String, iters: Int,
-                                 divideByOutdeg: Boolean,
-                                 checkpointEvery: Int = 2): DataFrame = {
+                                 divideByOutdeg: Boolean): DataFrame = {
     val e = loopEdges(s, dir)
     val nodes = derivedNodes(s, dir)
     val deg = outDeg(s, dir)
     val nn = broadcast(nodes.agg(count(lit(1)).as("nn")))
     pagerankLoop(s, dir, if (divideByOutdeg) "std" else "compat", iters,
-        checkpointEvery, pagerankInit(nodes, nn)) { (r, pin) =>
+        pagerankInit(nodes, nn)) { (r, pin) =>
       pagerankRound(e, nodes, pin(r.join(deg, Seq("node"), "left_outer")),
         nn, divideByOutdeg)
     }.select(col("node"), col("r").as("rank_fp"))
@@ -410,9 +376,15 @@ object GraphQueries {
   /** Unrolled-CTE oracle for [[g04_pagerank]] — same integer recurrence,
     * one CTE pair (dangling scalar + rank relation) per iteration.
     * `finalSelect` overrides the tail projection (g07's tolerance
-    * oracle re-uses the whole unroll but emits a boolean witness).
+    * oracle re-uses the whole unroll but emits a boolean witness);
+    * `divideByOutdeg = false` drops the out-degree division, which is
+    * [[g08_pagerank_compat]]'s oracle.
     */
-  def pagerankOracle(iters: Int = 3, finalSelect: String = null): String = {
+  def pagerankOracle(iters: Int = 3, finalSelect: String = null,
+                     divideByOutdeg: Boolean = true): String = {
+    val (share, degJoin) =
+      if (divideByOutdeg) ("r.r // d.outdeg", "\n  JOIN deg d ON e.src = d.node")
+      else ("r.r", "")
     val sb = new StringBuilder(EdgesCte)
     sb.append(""",
       |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
@@ -423,9 +395,8 @@ object GraphQueries {
       sb.append(s""",
         |d$i AS MATERIALIZED (SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dm FROM r$p
         |  WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.node = r$p.node)),
-        |c$i AS MATERIALIZED (SELECT e.dst AS node, CAST(SUM(r.r // d.outdeg) AS BIGINT) AS c
-        |  FROM edges e JOIN r$p r ON e.src = r.node
-        |  JOIN deg d ON e.src = d.node GROUP BY e.dst),
+        |c$i AS MATERIALIZED (SELECT e.dst AS node, CAST(SUM($share) AS BIGINT) AS c
+        |  FROM edges e JOIN r$p r ON e.src = r.node$degJoin GROUP BY e.dst),
         |r$i AS MATERIALIZED (SELECT nodes.node,
         |    (150000000000 // nn.n)
         |    + (85 * (COALESCE(c$i.c, 0) + (d$i.dm // nn.n))) // 100 AS r
@@ -497,31 +468,6 @@ object GraphQueries {
   def g08_pagerank_compat(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
     fixedPointPagerank(s, dir, iters, divideByOutdeg = false)
 
-  /** Unrolled-CTE oracle for [[g08_pagerank_compat]] — identical to
-    * [[pagerankOracle]] minus the out-degree division.
-    */
-  def pagerankCompatOracle(iters: Int = 3): String = {
-    val sb = new StringBuilder(EdgesCte)
-    sb.append(""",
-      |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
-      |deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),
-      |r0 AS MATERIALIZED (SELECT node, 1000000000000 // n AS r FROM nodes, nn)""".stripMargin)
-    for (i <- 1 to iters) {
-      val p = i - 1
-      sb.append(s""",
-        |d$i AS MATERIALIZED (SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dm FROM r$p
-        |  WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.node = r$p.node)),
-        |c$i AS MATERIALIZED (SELECT e.dst AS node, CAST(SUM(r.r) AS BIGINT) AS c
-        |  FROM edges e JOIN r$p r ON e.src = r.node GROUP BY e.dst),
-        |r$i AS MATERIALIZED (SELECT nodes.node,
-        |    (150000000000 // nn.n)
-        |    + (85 * (COALESCE(c$i.c, 0) + (d$i.dm // nn.n))) // 100 AS r
-        |  FROM nodes LEFT JOIN c$i ON nodes.node = c$i.node, d$i, nn)""".stripMargin)
-    }
-    sb.append(s"\nSELECT node, CAST(r AS BIGINT) AS rank_fp FROM r$iters")
-    sb.toString
-  }
-
   /** Personalized PageRank: teleport AND dangling mass flow only to a
     * source set S (here `node % 10 == 1` — deterministic, ~10% of
     * nodes), contributions divided by out-degree:
@@ -535,15 +481,14 @@ object GraphQueries {
     * per pass.
     */
   def g09_pagerank_personalized(s: SparkSession, dir: String,
-                                iters: Int = 3,
-                                checkpointEvery: Int = 2): DataFrame = {
+                                iters: Int = 3): DataFrame = {
     val e = loopEdges(s, dir)
     val nodes = derivedNodes(s, dir)
     val deg = outDeg(s, dir)
     val ss = broadcast(nodes.filter(col("node") % 10 === 1)
       .agg(count(lit(1)).as("ss")))
     val srcCase = (body: String) => s"CASE WHEN node % 10 = 1 THEN $body ELSE 0L END"
-    pagerankLoop(s, dir, "pers", iters, checkpointEvery,
+    pagerankLoop(s, dir, "pers", iters,
         nodes.crossJoin(ss)
           .select(col("node"), expr(srcCase(s"${Scale}L div ss")).as("r"))) {
       (r, pin) =>
@@ -729,10 +674,17 @@ object GraphQueries {
       else graft.graph.GraphOps.ssspFromSym(symW, srcRow.getLong(0))
     }
 
-  /** k for [[g15_kcore]] — 3 keeps a nontrivial core on the derived
-    * graph at every shipped SF (mean symmetrized degree ≈ 6.7).
+  /** k for [[g15_kcore]]: the smallest k whose core peels at the
+    * bench SF. The minimum symmetrized degree of the derived graph is
+    * 4 at sf0.001 and 3 at sf0.1, so k = 3 kept every node at sf0.1
+    * after one round. k = 4 keeps a nontrivial core at every shipped
+    * SF and peels at the larger ones: 150/150 nodes after 1 round at
+    * sf0.001, 1451/1500 after 3 at sf0.01, 14609/15000 after 4 at
+    * sf0.1 (rounds include the confirming round). At k = 5 the core
+    * is empty at every SF, after more rounds than the oracle unrolls
+    * ([[KCoreOracleRounds]]) at sf0.01 and sf0.1.
     */
-  private val KCoreK = 3
+  private val KCoreK = 4
 
   /** Oracle unroll depth for [[g15_kcore]]. Peeling is idempotent at
     * fixpoint, so any unroll ≥ the loop's actual round count yields
@@ -863,21 +815,40 @@ object GraphQueries {
     * the wedge join.
     */
   def g06_triangles(s: SparkSession, dir: String): DataFrame = {
-    val und = SharedRelations(s, dir, "graph_und") {
+    val und = undEdges(s, dir)
+    orientedTriangles(und, undDegrees(und))
+      .agg(count(lit(1)).as("n_triangles"))
+  }
+
+  /** The canonical undirected edge set (a < b) of [[derivedEdges]],
+    * memoized like it — the relation g06 and g16–g18 count over.
+    */
+  private def undEdges(s: SparkSession, dir: String): DataFrame =
+    SharedRelations(s, dir, "graph_und") {
       derivedEdges(s, dir)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct()
     }
-    val deg = und.select(col("a").as("n"))
+
+  /** (n, deg): each node's degree in the undirected edge set `und`. */
+  private def undDegrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+
+  /** Every triangle of `und` exactly once, as the closed wedge
+    * (x, y1, y2, a = y1, b = y2) at its minimum-(degree, id) vertex x
+    * — [[g06_triangles]]' degree-ordered orientation, shared with
+    * [[g16_clustering]]. `deg` is [[undDegrees]] of `und`.
+    */
+  private def orientedTriangles(und: DataFrame, deg: DataFrame): DataFrame = {
     // orient: x = lower (degree, id) endpoint, y = higher
     val lower = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val ed = und
-      .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
+      .join(deg.select(col("n").as("a"), col("deg").as("da")), Seq("a"))
+      .join(deg.select(col("n").as("b"), col("deg").as("db")), Seq("b"))
       .select(when(lower, col("a")).otherwise(col("b")).as("x"),
         when(lower, col("b")).otherwise(col("a")).as("y"))
     // wedges at x over id-ordered out-neighbor pairs; (y1, y2) is then
@@ -887,7 +858,6 @@ object GraphQueries {
       .join(ed.select(col("x"), col("y").as("y2")), Seq("x"))
       .filter(col("y1") < col("y2"))
     w.join(und, col("y1") === col("a") && col("y2") === col("b"))
-      .agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Per-vertex triangle participation + local clustering coefficient
@@ -907,27 +877,9 @@ object GraphQueries {
     * bit-identical in both engines.
     */
   def g16_clustering(s: SparkSession, dir: String): DataFrame = {
-    val und = SharedRelations(s, dir, "graph_und") {
-      derivedEdges(s, dir)
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-    }
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val ed = und
-      .join(deg.select(col("n").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("deg").as("db")), Seq("b"))
-      .select(when(lower, col("a")).otherwise(col("b")).as("x"),
-        when(lower, col("b")).otherwise(col("a")).as("y"))
-    val w = ed.select(col("x"), col("y").as("y1"))
-      .join(ed.select(col("x"), col("y").as("y2")), Seq("x"))
-      .filter(col("y1") < col("y2"))
-    val closed = w.join(und, col("y1") === col("a") && col("y2") === col("b"))
-    val triPerNode = closed
+    val und = undEdges(s, dir)
+    val deg = undDegrees(und)
+    val triPerNode = orientedTriangles(und, deg)
       .select(explode(array(col("x"), col("y1"), col("y2"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("n_tri"))
     deg.join(triPerNode, Seq("n"), "left")
@@ -969,12 +921,7 @@ object GraphQueries {
     * accuracy-vs-cost dial at 100 TB.
     */
   def g17_clustering_approx(s: SparkSession, dir: String): DataFrame = {
-    val und = SharedRelations(s, dir, "graph_und") {
-      derivedEdges(s, dir)
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-    }
+    val und = undEdges(s, dir)
     val se = und.filter(pmod(col("a") * 127L + col("b") * 31L,
       lit(G17Mod)) === 0L)
     val w = se.select(col("a").as("x"), col("b").as("y1"))
@@ -984,9 +931,7 @@ object GraphQueries {
       w.join(und, col("y1") === col("a") && col("y2") === col("b"))
         .agg(count(lit(1)).as("closed_wedges")))
     val sampled = broadcast(w.agg(count(lit(1)).as("sampled_wedges")))
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val deg = undDegrees(und)
     // Integral division (matching the oracle's `//`): the double-divide
     // form is exact only below 2^53, and the dense regime this tier
     // exists for (deep ×N replica probes) is exactly where Σ d(d−1)
@@ -1075,7 +1020,7 @@ object GraphQueries {
 
   /** Hub half-step raw sums — each node collects its OUT-neighbors'
     * fresh auth scores. The join keys on the EDGE side's `dst`, which
-    * is what the dst-bucketed second copy ([[loopEdgesDst]]) exists
+    * is what the dst-bucketed second copy ([[loopEdges]] on `dst`) exists
     * for: without it this half re-shuffles the edge table every round
     * at scale.
     */
@@ -1091,7 +1036,7 @@ object GraphQueries {
   // static degree. Per round: two edge⋈vector joins — the auth half
   // keys on the edge side's src, the hub half on dst, each riding its
   // orientation of the both-orientations bucketed layout
-  // ([[loopEdges]]/[[loopEdgesDst]]) exchange-free when
+  // ([[loopEdges]] on `src` and on `dst`) exchange-free when
   // `graft.bucketedEdges` is on — two map-side-combined per-node
   // sums, and two 1-row broadcast MAX scalars (the O9 pattern).
   // All-integer fixed-point: sums of int64, normalization a single
@@ -1101,8 +1046,7 @@ object GraphQueries {
   def g19_hits(s: SparkSession, dir: String): DataFrame =
     hitsLoop(s, dir, HitsRounds)
 
-  /** The variable-round HITS loop, on [[pagerankLoop]] at cadence 1:
-    * each normalize references its node-complete input twice (the
+  /** The variable-round HITS loop, on [[pagerankLoop]]: each normalize references its node-complete input twice (the
     * vector and its MAX), so a lazily composed plan doubles per
     * HALF-step — the r13 2-round form was already ~111 logical join
     * nodes, executed cheaply only because ReuseExchange dedup'd the
@@ -1123,12 +1067,12 @@ object GraphQueries {
   private[graft] def hitsLoop(s: SparkSession, dir: String,
                               rounds: Int): DataFrame = {
     val eSrc = loopEdges(s, dir)
-    val eDst = loopEdgesDst(s, dir)
+    val eDst = loopEdges(s, dir, "dst")
     val nodes = derivedNodes(s, dir)
     // set by every round; the loop resumes strictly below `rounds`, so
     // the last round always runs
     var a: DataFrame = null
-    val h = pagerankLoop(s, dir, "hits", rounds, checkpointEvery = 1,
+    val h = pagerankLoop(s, dir, "hits", rounds,
         nodes.select(col("node"), lit(HitsQ).as("h"))) { (h, pin) =>
       a = hitsNormalize(pin(hitsFull(nodes, hitsAuthSums(eSrc, h))), "a")
       hitsNormalize(pin(hitsFull(nodes, hitsHubSums(eDst, a))), "h")
@@ -1166,7 +1110,7 @@ object GraphQueries {
       maxRounds: Int = 50, tolFp: Long = HitsQ / 1000L)
       : (DataFrame, Int, Seq[DataFrame]) = {
     val eSrc = loopEdges(s, dir)
-    val eDst = loopEdgesDst(s, dir)
+    val eDst = loopEdges(s, dir, "dst")
     val nodes = derivedNodes(s, dir)
     val pin = new RoundPins(s, dir)
     def maxAbsDelta(cur: DataFrame, prev: DataFrame, c: String): Long =
@@ -1386,7 +1330,7 @@ object GraphQueries {
     // the Spark side computes rank_ok = |rank_dbl − rank_fp/1e12| < ε.
     "g07_pagerank_graphx" -> pagerankOracle(G07Iters,
       s"SELECT node, TRUE AS rank_ok FROM r$G07Iters"),
-    "g08_pagerank_compat" -> pagerankCompatOracle(3),
+    "g08_pagerank_compat" -> pagerankOracle(3, divideByOutdeg = false),
     "g09_pagerank_personalized" -> pagerankPersonalizedOracle(3),
     "g05_cc_labelprop" -> ccOracle(3),
     "g11_cc_converged" -> ccConvergedOracle,
@@ -1431,13 +1375,12 @@ object GraphQueries {
     "g02_degrees" -> (g02_degrees _),
     "g03_dangling" -> (g03_dangling _),
     "g04_pagerank" -> ((s, d) => g04_pagerank(s, d)),
-    // Depth probe for the checkpoint cadence: same loop at iters=10
-    // (localCheckpoint on the default cadence). The FIRST call runs
-    // all 10 passes — wall-clock linear in iterations, the
-    // lineage-truncation claim — and memoizes the last mid-loop
-    // checkpoint; repeat calls resume from it (pagerankLoop), so bench
-    // medians measure the steady-state resume path. Stays oracle-exact
-    // either way via the 10-deep unrolled CTE.
+    // Depth probe for the per-round checkpoint: same loop at iters=10.
+    // The FIRST call runs all 10 passes — wall-clock linear in
+    // iterations, the lineage-truncation claim — and memoizes every
+    // round's checkpoint but the last; repeat calls resume from pass 9
+    // (pagerankLoop), so bench medians measure the steady-state resume
+    // path. Stays oracle-exact either way via the 10-deep unrolled CTE.
     "g04_pagerank_i10" -> ((s, d) => g04_pagerank(s, d, iters = 10)),
     "g08_pagerank_compat" -> ((s, d) => g08_pagerank_compat(s, d)),
     "g09_pagerank_personalized" -> ((s, d) => g09_pagerank_personalized(s, d)),

@@ -39,7 +39,7 @@ object ColumnBridge {
     * `Dataset.checkpoint` stores the materialized rows in an internal
     * RDD referenced only by the returned plan's `LogicalRDD` node;
     * nothing public unpersists it, so an iterative loop that
-    * checkpoints on cadence would otherwise leave every superseded
+    * checkpoints every round would otherwise leave every superseded
     * checkpoint pinned until GC/ContextCleaner. No-op on
     * non-checkpoint plans.
     */

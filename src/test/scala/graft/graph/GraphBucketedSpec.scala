@@ -165,7 +165,7 @@ class GraphBucketedSpec extends AnyFunSuite {
     val edges = GraphQueries.derivedEdges(spark, dir)
     // the both-orientations layout for mutual recurrences: one copy
     // bucketed by src (feeds the auth half's join), one by dst (the
-    // hub half's) — g19's production posture, GraphQueries.loopEdgesDst
+    // hub half's) — g19's production posture, GraphQueries.loopEdges
     val bSrc = Bucketing.bucketedTable(spark, edges, "b_hits_src", 8, "src")
     val bDst = Bucketing.bucketedTable(spark, edges, "b_hits_dst", 8, "dst")
     try withNoBroadcast {
@@ -225,11 +225,11 @@ class GraphBucketedSpec extends AnyFunSuite {
     def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString)
     // Memos cleared before EACH side: the fixed-point state is layout-
     // independent, so a bucketed run resuming from the plain run's
-    // pass-8 checkpoint would be correct — but then only the tail
-    // passes would exercise the bucketed join and the test would
-    // prove nothing. (The default checkpoint cadence stays ON — a
-    // cadence-0 i10 run doubles the lazy plan per pass and OOMs on
-    // AQE's plan-string rendering alone.)
+    // pass-9 checkpoint would be correct — but then only the last
+    // pass would exercise the bucketed join and the test would prove
+    // nothing. (The loops checkpoint every pass but the last; a
+    // checkpoint-free i10 run doubles the lazy plan per pass and OOMs
+    // on AQE's plan-string rendering alone.)
     def family() = {
       GraphQueries.clearCheckpointMemos(spark)
       Map(
@@ -237,7 +237,7 @@ class GraphBucketedSpec extends AnyFunSuite {
         "g04_i10" -> sorted(GraphQueries.g04_pagerank(spark, dir, iters = 10)),
         "g08" -> sorted(GraphQueries.g08_pagerank_compat(spark, dir)),
         "g09" -> sorted(GraphQueries.g09_pagerank_personalized(spark, dir)),
-        // g19 exercises BOTH orientations of the layout (loopEdgesDst)
+        // g19 exercises BOTH orientations of the layout (loopEdges on dst)
         "g19" -> sorted(GraphQueries.g19_hits(spark, dir)))
     }
     val plain = family()

@@ -32,6 +32,42 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(viaDf(4L) === 1L && viaDf(9L) === 1L && viaDf(6L) === 5L)
   }
 
+  test("converged label-prop probes the same plan size every round after the first") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // A 30-node path: labels need 29 rounds to reach the far end, plus
+    // one round that sees no change. Every round's iterate is a
+    // localCheckpoint, so every round's probe analyzes the same plan
+    // over a one-node leaf; round 1 probes over the init relation. A
+    // persisted round would carry its predecessors' plans, and the
+    // probe's plan would grow until the next checkpoint.
+    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+    val sym = chain.union(chain.select($"dst", $"src")).toDF("src", "dst")
+      .distinct().persist()
+    sym.count()
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val probes = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution,
+                             nanos: Long): Unit =
+        if (action == "count")
+          sizes.synchronized(sizes += qe.analyzed.collect { case n => n }.length)
+      override def onFailure(action: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(probes)
+    val cc = try {
+      val out = GraphOps.connectedComponentsFromSym(sym)
+      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
+      out
+    } finally spark.listenerManager.unregister(probes)
+    assert(cc.collect().map(_.getLong(1)).toSet === Set(1L))
+    org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint(cc)
+    sym.unpersist()
+    assert(sizes.length === 30, s"one probe per round: $sizes")
+    assert(sizes.drop(1).distinct.length === 1,
+      s"probe plan size changed after round 1: $sizes")
+  }
+
   test("logN cc matches label-prop and converges logarithmically on a chain") {
     import spark.implicits._
     // Path 1–2–…–256: diameter 255, the adversarial topology for

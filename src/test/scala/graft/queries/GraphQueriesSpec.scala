@@ -24,34 +24,59 @@ class GraphQueriesSpec extends AnyFunSuite {
   }
 
   test("pagerank checkpoint cadence does not change ranks (bit-exact)") {
-    val noCkpt = GraphQueries.g04_pagerank(spark, dir, iters = 6,
-      checkpointEvery = 0).as[(Long, Long)].collect().toMap
-    val ckpt = GraphQueries.g04_pagerank(spark, dir, iters = 6,
-      checkpointEvery = 2).as[(Long, Long)].collect().toMap
-    assert(ckpt === noCkpt)
-    val pNo = GraphQueries.g09_pagerank_personalized(spark, dir, iters = 6,
-      checkpointEvery = 0).as[(Long, Long)].collect().toMap
-    val pCk = GraphQueries.g09_pagerank_personalized(spark, dir, iters = 6,
-      checkpointEvery = 2).as[(Long, Long)].collect().toMap
-    assert(pCk === pNo)
+    // g04 and g09 checkpoint every round but the last. Their ranks at
+    // 6 iterations must equal two implementations that take no
+    // checkpoints: GraphX's fixed-point loop for g04, and the g09
+    // recurrence in plain Scala over the collected edges.
+    GraphQueries.clearCheckpointMemos(spark)
+    val g04 = GraphQueries.g04_pagerank(spark, dir, iters = 6)
+      .as[(Long, Long)].collect().toMap
+    val graph = graft.graph.PageRankGraphX
+      .fromEdges(GraphQueries.derivedEdges(spark, dir))
+    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(graph, 6)
+      .as[(Long, Long)].collect().toMap
+    graph.unpersist(false)
+    assert(g04 === gx)
+
+    val g09 = GraphQueries.g09_pagerank_personalized(spark, dir, iters = 6)
+      .as[(Long, Long)].collect().toMap
+    // r0(v) = [v∈S]·(Scale div |S|), S = {v : v % 10 = 1};
+    // r'(v) = (85·(c(v) + [v∈S]·(D div |S|))) div 100
+    //       + [v∈S]·((0.15·Scale) div |S|),
+    // c(v) = Σ_{u→v} r(u) div outdeg(u), D = Σ_{outdeg(u) = 0} r(u)
+    val scale = 1000000000000L
+    val edges = GraphQueries.derivedEdges(spark, dir).as[(Long, Long)].collect()
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val outdeg = edges.groupBy(_._1).map { case (u, es) => u -> es.length.toLong }
+    def inS(v: Long) = v % 10 == 1
+    val ss = nodes.count(inS).toLong
+    var r = nodes.map(v => v -> (if (inS(v)) scale / ss else 0L)).toMap
+    for (_ <- 1 to 6) {
+      val dm = nodes.filterNot(outdeg.contains).map(r).sum
+      val c = edges.groupBy(_._2).map { case (v, in) =>
+        v -> in.map { case (u, _) => r(u) / outdeg(u) }.sum }
+      r = nodes.map { v =>
+        val s = if (inS(v)) 1L else 0L
+        v -> ((85 * (c.getOrElse(v, 0L) + s * (dm / ss))) / 100 +
+          s * (15 * scale / 100 / ss))
+      }.toMap
+    }
+    assert(g09 === r)
   }
 
-  test("pagerank plan size is bounded by the checkpoint cadence, not iters") {
-    // Hermetic: a memo left by an earlier caller (e.g. the cadence-2
-    // spec above, or a Bench/Verify run on a shared session) would make
-    // the two calls resume from the same absolute pass and leave
-    // DIFFERENT residual depths (10 vs 14 minus the memo pass) — the
-    // comparison below only holds when both calls plan memo-free.
+  test("pagerank plan size does not grow with iters") {
+    // Hermetic: a memo left by an earlier caller (e.g. the spec above,
+    // or a Bench/Verify run on a shared session) would make the two
+    // calls resume from checkpoints the other did not leave — the
+    // comparison below only holds when both calls start memo-free.
     GraphQueries.clearCheckpointMemos(spark)
     def planNodes(iters: Int): Int =
-      GraphQueries.g04_pagerank(spark, dir, iters, checkpointEvery = 4)
+      GraphQueries.g04_pagerank(spark, dir, iters)
         .queryExecution.optimizedPlan.collect { case n => n }.length
-    // Mid-loop checkpoints fire at multiples of the cadence with ≥ one
-    // cadence of passes still to go, so the residual plan above the
-    // last checkpoint spans cadence..2·cadence−1 passes regardless of
-    // total iterations: 10 and 14 passes at cadence 4 both leave a
-    // 6-pass residual over a checkpoint scan and must yield the SAME
-    // plan size — the pre-fix behavior doubled per pass.
+    // Every round but the last is checkpointed, so the plan above the
+    // last checkpoint is one round regardless of total iterations: 10
+    // and 14 passes must yield the SAME plan size — without the
+    // checkpoints the plan doubled per pass.
     assert(planNodes(10) === planNodes(14))
   }
 
