@@ -1,8 +1,17 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+
+import scala.collection.mutable.ArrayBuilder
 
 /** Iterative compat PageRank: the reference's intended semantics
   * (pageRank_v2.java:32-43,116-223; SURVEY.md §7.1.2). Each node sends
@@ -16,23 +25,39 @@ import org.apache.spark.storage.StorageLevel
   * PageRank on arbitrary graphs is the GraphX path
   * ([[PageRankGraphX.standardOn]], [[PageRankGraphX.standardFixedPointOn]]).
   *
-  * Scale notes (100 TB design): compat partitions its graph once.
-  * The graph is every node a pass can reach with its adjacency,
-  * hash-partitioned on the node id to the session's shuffle width and
-  * persisted. Each pass then has one exchange: the exploded
-  * contributions, regrouped by node and hash-joined into the graph,
-  * which never moves. Every pass's state is a lazy `localCheckpoint`
-  * of its plan (on a cluster, swap for `checkpoint` with a reliable
-  * dir), so the next pass plans over a one-node leaf, not a lineage
-  * that grows with the pass count: analysis and planning cost the
-  * driver the same on every pass. The dangling term d/N reaches the
-  * rank expression as data, a broadcast 1-row relation cross-joined
-  * in, not as a literal, so every pass after the first two plans the
-  * same plan and reuses its generated classes. A pass's checkpoint
-  * is released as soon as the next pass's state is materialized.
+  * Scale notes (100 TB design): pass 1 is a DataFrame job that builds
+  * the graph, every node a pass can reach with its adjacency,
+  * hash-partitioned on the node id to the session's shuffle width w.
+  * Every later pass runs on vertex partitions in the GraphX style
+  * ([[Part]]): the graph becomes, once, one set of arrays per
+  * partition (node ids, a CSR adjacency and a node→index map: 20–28 B
+  * per node plus 8 B per edge), and a pass's state is one `double[]`
+  * per partition (8 B per node), kept by an RDD `localCheckpoint`.
+  * A pass computes each sender's rank next to its adjacency (the
+  * first iteration pass reads its senders from the state it starts
+  * from, in that state's partitions) and ships w² packed message
+  * blocks, one per (source, destination) partition pair and 16 B per
+  * message (target id and rank); nothing else crosses an exchange, and
+  * the graph never moves. One job per pass materializes the new state
+  * and returns the sink's contribution (the dangling mass); the hook's
+  * write is the pass's only other job. Nothing in a pass is planned or
+  * compiled, so a pass costs the driver the same whatever its number.
+  * A pass's state is released as soon as the next pass's state is
+  * materialized, and so is the DataFrame graph once its arrays are.
   * Hence the `onPass` contract: the `CompatState` a pass hands over
   * stays valid until the next pass materializes, so a hook writes or
-  * collects it before returning.
+  * collects it before returning. A lost local-checkpoint block (an
+  * executor gone) cannot be recomputed; on a cluster, swap for
+  * `checkpoint` with a reliable dir.
+  *
+  * The state is bit-identical to the DataFrame pass it replaced
+  * (explode, `sum`, left join, `coalesce`), because the receive side
+  * reproduces Spark's partial/final `Sum` association: each block is
+  * summed in its source partition's row order, and the block partials
+  * are added in ascending source-partition order. That makes the sink's
+  * mass, summed over many chain tails, depend on the width w, as it
+  * did before; the dependence now lives in one line of
+  * [[Part.receive]], and changing it needs its own A/B.
   */
 object PageRank {
 
@@ -61,29 +86,34 @@ object PageRank {
   def compat(edges: DataFrame, k: Long, passes: Int, beta: Double = 0.15,
              onPass: (Int, CompatState) => Unit = (_, _) => ()): CompatState = {
     require(passes >= 1, "compat needs at least the init pass")
-    val n = (k.toDouble * k.toDouble)
-
-    // Init pass (pageRank_v2.java:153-169): every in-edge carries 1/N;
-    // every node that appears as src or dst forms a group (the P-/O-
-    // records guarantee src-side groups); contributions default 0.0
-    // (the reference's Null sentinel made explicit by coalesce). One
-    // row per edge end, shuffled once by node: the init state is
-    // already the partitioned graph every later pass joins into.
-    val ends = edges.select(col("src").as("node"), col("dst").as("to"),
-        lit(null).cast("double").as("mass"))
-      .union(edges.select(col("dst").as("node"), lit(null).cast("long").as("to"),
-        lit(1.0 / n).as("mass")))
-    val init = ends.repartition(shuffleWidth(edges), col("node"))
-      .groupBy("node")
-      .agg(coalesce(sum(col("mass")), lit(0.0)).as("contrib"),
-        sort_array(collect_set(col("to"))).as("adj"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
+    val init = initGraph(edges, k)
     val d = extractDangling(init)
     val state1 = CompatState(init.filter(col("node") =!= 0), d)
     onPass(1, state1)
     if (passes == 1) state1
     else iterate(init, state1, k, passes - 1, beta, onPass, passOffset = 1)
+  }
+
+  /** The init pass (pageRank_v2.java:153-169): every in-edge carries
+    * 1/N; every node that appears as src or dst forms a group (the P-/O-
+    * records guarantee src-side groups); contributions default 0.0
+    * (the reference's Null sentinel made explicit by coalesce). One
+    * row per edge end, shuffled once by node to the shuffle width
+    * (explicit, so AQE does not coalesce it): the init state, sink
+    * included, is already the partitioned graph every later pass
+    * reads. Persisted, and released once the graph's arrays are built.
+    */
+  private[graph] def initGraph(edges: DataFrame, k: Long): DataFrame = {
+    val n = (k.toDouble * k.toDouble)
+    val ends = edges.select(col("src").as("node"), col("dst").as("to"),
+        lit(null).cast("double").as("mass"))
+      .union(edges.select(col("dst").as("node"), lit(null).cast("long").as("to"),
+        lit(1.0 / n).as("mass")))
+    ends.repartition(shuffleWidth(edges), col("node"))
+      .groupBy("node")
+      .agg(coalesce(sum(col("mass")), lit(0.0)).as("contrib"),
+        sort_array(collect_set(col("to"))).as("adj"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Advance an existing compat state by `steps` iteration passes —
@@ -105,8 +135,8 @@ object PageRank {
       .join(targets, Seq("node"), "full_outer")
       .select(col("node"), coalesce(col("adj"), array().cast("array<long>")).as("adj"))
       .repartition(shuffleWidth(state0.state), col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    iterate(graph, state0, k, steps, beta, onPass, passOffset)
+    if (steps == 0) state0
+    else iterate(graph, state0, k, steps, beta, onPass, passOffset)
   }
 
   /** The session's shuffle width, passed explicitly to `repartition`
@@ -115,65 +145,288 @@ object PageRank {
   private def shuffleWidth(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** The compat iteration over a fixed graph: every node a pass can
-    * reach with its adjacency, hash-partitioned on node and pinned.
-    * Adjacency never changes and contribution-only targets keep an
-    * empty list, so each pass is the graph LEFT JOIN its contributions,
-    * and only the contributions cross an exchange. Each pass's state is
-    * a lazy `localCheckpoint`, never layered over a cache, which the
-    * sink-row collect materializes; only then is its predecessor
-    * released, so a lineage root always exists. The graph is released
-    * after the last pass.
+  /** The partition Spark SQL's `HashPartitioning` on a LONG column puts
+    * `node` in: `pmod(murmur3(node, seed 42), width)`.
+    */
+  private[graph] def partitionOf(node: Long, width: Int): Int = {
+    val h = Murmur3_x86_32.hashLong(node, 42) % width
+    if (h < 0) h + width else h
+  }
+
+  /** The compat iteration over a fixed graph (node, adj),
+    * hash-partitioned on node. The graph becomes [[Part]]s once; the
+    * DataFrame graph is released after the first pass materializes
+    * them. Each pass's state is a lazy `localCheckpoint` that the
+    * pass's one job materializes while it reads the sink's
+    * contribution; only then is its predecessor released, so a lineage
+    * root always exists.
     */
   private def iterate(graph: DataFrame, state0: CompatState, k: Long,
                       steps: Int, beta: Double,
                       onPass: (Int, CompatState) => Unit,
                       passOffset: Int): CompatState = {
     val n = (k.toDouble * k.toDouble)
+    val (a, b) = (1 - beta, beta / n)
     val spark = graph.sparkSession
-    import spark.implicits._
+    val parts = Part.of(graph)
+    val width = parts.getNumPartitions
+    // Int keys hash to themselves: block d goes to partition d.
+    val routes = new HashPartitioner(width)
     var cur = state0
-    var pin: DataFrame = null
+    var state: RDD[Array[Double]] = null
     var step = 0
     while (step < steps) {
       // Rank update applied lazily (pageRank_v2.java:126-127), then
-      // whole-rank contribution to each out-neighbor (:136-139). d/N is
-      // the driver's double, carried as a row: a literal would change
-      // the generated code every pass.
-      val dn = broadcast(Seq(cur.danglingMass / n).toDF("dn"))
-      val ranked = cur.state.crossJoin(dn).withColumn("rank",
-        lit(1 - beta) * (col("contrib") + col("dn")) + lit(beta / n))
-      val contribs = ranked
-        .select(explode(col("adj")).as("node"), col("rank"))
-        .groupBy("node").agg(sum(col("rank")).as("contrib"))
-      // Adjacency circulates with the state (pageRank_v2.java:39,141).
-      // The hint keeps the join on the graph's partitioning: AQE would
-      // otherwise broadcast the contributions and aggregate them in a
-      // single task.
-      val plan = graph.select(col("node"), col("adj"))
-        .join(contribs.hint("shuffle_hash"), Seq("node"), "left_outer")
-        .select(col("node"),
-          coalesce(col("contrib"), lit(0.0)).as("contrib"), col("adj"))
-      val next = plan.localCheckpoint(false)
-
-      val d = extractDangling(next)
-      if (pin != null) GraphOps.releaseIterate(pin)
-      pin = next
-      cur = CompatState(next.filter(col("node") =!= 0), d)
+      // whole-rank contribution to each out-neighbor (:136-139).
+      val dn = cur.danglingMass / n
+      val sent =
+        // The first pass sends from `state0`'s own rows and partitions,
+        // as the DataFrame pass did: a resumed state is partitioned by
+        // its files, and so are its partial sums.
+        if (state == null)
+          cur.state.select("node", "adj", "contrib").queryExecution.toRdd
+            .mapPartitionsWithIndex { (s, rows) =>
+              val (p, contrib) = Part.build(s, width, rows, contribs = true)
+              p.send(contrib, a, dn, b)
+            }
+        else parts.zipPartitions(state)((ps, ss) => ps.next().send(ss.next(), a, dn, b))
+      val next = parts.zipPartitions(sent.partitionBy(routes))(
+        (ps, bs) => Iterator.single(ps.next().receive(bs))).localCheckpoint()
+      // The reference's counter read (pageRank_v2.java:216-222), in
+      // the job that materializes the checkpoint.
+      val d = parts.zipPartitions(next)((ps, ss) => ps.next().sink(ss.next()))
+        .collect().sum
+      if (state == null) graph.unpersist(false) else state.unpersist(false)
+      state = next
+      cur = CompatState(stateFrame(spark, parts, state), d)
       step += 1
       onPass(passOffset + step, cur)
     }
-    graph.unpersist(false)
     cur
   }
 
+  private val StateSchema = StructType(Seq(
+    StructField("node", LongType, nullable = false),
+    StructField("contrib", DoubleType, nullable = false),
+    StructField("adj", ArrayType(LongType, containsNull = false), nullable = false)))
+
+  /** A pass's state as (node, contrib, adj) rows, minus the sink. */
+  private def stateFrame(spark: SparkSession, parts: RDD[Part],
+                         state: RDD[Array[Double]]): DataFrame =
+    ColumnBridge.fromInternalRows(spark,
+      parts.zipPartitions(state)((ps, ss) => ps.next().rows(ss.next())), StateSchema)
+
   /** The reference's counter read: node 0's contribution, removed
-    * from the output relation (pageRank_v2.java:216-222). One cheap
-    * driver action per pass — the same job materializes the pass's
-    * checkpoint, and the graph holds one sink row, which comes back to
-    * the driver as is: no aggregate, so no exchange.
+    * from the output relation (pageRank_v2.java:216-222). The graph
+    * holds one sink row, which comes back to the driver as is.
     */
   private def extractDangling(state: DataFrame): Double =
     state.filter(col("node") === 0).select(col("contrib"))
       .collect().map(_.getDouble(0)).sum
+
+  /** A message block: the ranks one source partition sends to the
+    * nodes of one destination partition, in the source's row order.
+    */
+  private[graph] final case class Block(src: Int, targets: Array[Long],
+                                        ranks: Array[Double])
+
+  /** One vertex partition of the compat graph: the nodes partition `id`
+    * of `width` holds, in the graph's row order, with their adjacency in
+    * CSR form (node i's targets are `targets(offsets(i) until
+    * offsets(i + 1))`). The node→index map is built where the part is
+    * used and never shipped.
+    */
+  private[graph] final class Part(val id: Int, val width: Int, val nodes: Array[Long],
+                                  val offsets: Array[Int], val targets: Array[Long])
+      extends Serializable {
+
+    @transient lazy val index: NodeIndex = NodeIndex(nodes)
+
+    /** One block per destination partition, from the contribs `state`:
+      * each sender's rank `a·(c + dn) + b` (a = 1 − β, dn = d/N,
+      * b = β/N, the DataFrame pass's operations in its order) goes to
+      * every target. The sink sends nothing.
+      */
+    def send(state: Array[Double], a: Double, dn: Double,
+             b: Double): Iterator[(Int, Block)] = {
+      val dest = new Array[Int](targets.length)
+      val count = new Array[Int](width)
+      var i = 0
+      while (i < nodes.length) {
+        if (nodes(i) != 0L) {
+          var e = offsets(i)
+          while (e < offsets(i + 1)) {
+            dest(e) = partitionOf(targets(e), width)
+            count(dest(e)) += 1
+            e += 1
+          }
+        }
+        i += 1
+      }
+      val tg = count.map(new Array[Long](_))
+      val rk = count.map(new Array[Double](_))
+      val fill = new Array[Int](width)
+      i = 0
+      while (i < nodes.length) {
+        if (nodes(i) != 0L) {
+          val rank = a * (state(i) + dn) + b
+          var e = offsets(i)
+          while (e < offsets(i + 1)) {
+            val d = dest(e)
+            tg(d)(fill(d)) = targets(e)
+            rk(d)(fill(d)) = rank
+            fill(d) += 1
+            e += 1
+          }
+        }
+        i += 1
+      }
+      Iterator.tabulate(width)(d => (d, Block(id, tg(d), rk(d))))
+    }
+
+    /** The next contribs from this partition's incoming blocks — Spark's
+      * partial/final `Sum`: each block's messages to a node are summed
+      * in row order, and the block partials are added in ascending
+      * source order (fetch order is not an order). A node nothing
+      * reaches gets 0.0, the DataFrame pass's `coalesce`.
+      */
+    def receive(in: Iterator[(Int, Block)]): Array[Double] = {
+      val blocks = in.map(_._2).toArray.sortBy(_.src)
+      val next = new Array[Double](nodes.length)
+      val partial = new Array[Double](nodes.length)
+      val mark = new Array[Int](nodes.length)
+      val touched = new Array[Int](nodes.length)
+      var o = 0
+      while (o < blocks.length) {
+        val blk = blocks(o)
+        var m = 0
+        var j = 0
+        while (j < blk.targets.length) {
+          val t = index(blk.targets(j))
+          if (t < 0)
+            throw new IllegalStateException(
+              s"node ${blk.targets(j)} was routed to partition $id, which does not hold it")
+          if (mark(t) != o + 1) {
+            mark(t) = o + 1
+            partial(t) = 0.0
+            touched(m) = t
+            m += 1
+          }
+          partial(t) += blk.ranks(j)
+          j += 1
+        }
+        var q = 0
+        while (q < m) { next(touched(q)) += partial(touched(q)); q += 1 }
+        o += 1
+      }
+      next
+    }
+
+    /** The sink's contrib, if this partition holds node 0. */
+    def sink(state: Array[Double]): Iterator[Double] = {
+      val i = index(0L)
+      if (i < 0) Iterator.empty else Iterator.single(state(i))
+    }
+
+    /** (node, contrib, adj) rows, sink excluded; each row is its own
+      * object, so a consumer may buffer them.
+      */
+    def rows(state: Array[Double]): Iterator[InternalRow] =
+      Iterator.range(0, nodes.length).filter(nodes(_) != 0L).map { i =>
+        val adj = java.util.Arrays.copyOfRange(targets, offsets(i), offsets(i + 1))
+        new GenericInternalRow(Array[Any](nodes(i), state(i),
+          UnsafeArrayData.fromPrimitiveArray(adj)))
+      }
+  }
+
+  private[graph] object Part {
+
+    /** The graph (node, adj) as parts, one per partition, persisted.
+      * Every node is checked to sit in the partition [[partitionOf]]
+      * names, which is where a pass routes its messages.
+      */
+    def of(graph: DataFrame): RDD[Part] = {
+      val rows = graph.select("node", "adj").queryExecution.toRdd
+      val width = rows.getNumPartitions
+      rows.mapPartitionsWithIndex { (id, it) =>
+        val (part, _) = build(id, width, it, contribs = false)
+        part.nodes.foreach { node =>
+          val home = partitionOf(node, width)
+          if (home != id)
+            throw new IllegalStateException(
+              s"node $node is in partition $id but hashes to $home: " +
+                "the graph is not hash-partitioned on node")
+        }
+        Iterator.single(part)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Partition `id`'s rows (node, adj[, contrib]) as a part, and their
+      * contribs (empty unless `contribs`), in row order.
+      */
+    def build(id: Int, width: Int, rows: Iterator[InternalRow],
+              contribs: Boolean): (Part, Array[Double]) = {
+      val nodes = new ArrayBuilder.ofLong
+      val contrib = new ArrayBuilder.ofDouble
+      val offsets = new ArrayBuilder.ofInt
+      val targets = new ArrayBuilder.ofLong
+      var edges = 0
+      offsets += 0
+      rows.foreach { r =>
+        nodes += r.getLong(0)
+        val adj = r.getArray(1)
+        var j = 0
+        while (j < adj.numElements()) { targets += adj.getLong(j); j += 1 }
+        edges += j
+        offsets += edges
+        if (contribs) contrib += r.getDouble(2)
+      }
+      (new Part(id, width, nodes.result(), offsets.result(), targets.result()),
+        contrib.result())
+    }
+  }
+
+  /** Open-addressing map from a partition's node ids to their
+    * positions. A slot holds position + 1 and 0 marks it empty, so
+    * there is no sentinel id: every long is a key, and a lookup of an
+    * absent one stops at an empty slot, which the load factor ≤ ½
+    * guarantees. The one input it rejects is an id given twice.
+    */
+  private[graph] final class NodeIndex private (ids: Array[Long], slots: Array[Int]) {
+    private val mask = slots.length - 1
+
+    /** `id`'s position, or -1 if it is not a node of the partition. */
+    def apply(id: Long): Int = {
+      var s = NodeIndex.hash(id) & mask
+      var v = slots(s)
+      while (v != 0 && ids(v - 1) != id) { s = (s + 1) & mask; v = slots(s) }
+      v - 1
+    }
+  }
+
+  private[graph] object NodeIndex {
+    // Nodes of one partition share their murmur3 residue, so the slot
+    // hash must be a different function: Fibonacci hashing, folded.
+    private def hash(id: Long): Int = java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L)
+
+    def apply(ids: Array[Long]): NodeIndex = {
+      require(ids.length <= (1 << 29), s"${ids.length} nodes in one partition")
+      var cap = 2
+      while (cap < 2 * ids.length) cap <<= 1
+      val slots = new Array[Int](cap)
+      val mask = cap - 1
+      var i = 0
+      while (i < ids.length) {
+        var s = hash(ids(i)) & mask
+        while (slots(s) != 0) {
+          if (ids(slots(s) - 1) == ids(i))
+            throw new IllegalArgumentException(s"node ${ids(i)} appears twice in one partition")
+          s = (s + 1) & mask
+        }
+        slots(s) = i + 1
+        i += 1
+      }
+      new NodeIndex(ids, slots)
+    }
+  }
 }

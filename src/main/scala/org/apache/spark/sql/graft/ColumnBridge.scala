@@ -76,6 +76,18 @@ object ColumnBridge {
       batch.schema, isStreaming = true)
   }
 
+  /** Wrap an RDD of Catalyst rows as a batch DataFrame (a `LogicalRDD`
+    * leaf) without converting each row from a `Row` — for kernels that
+    * compute on arrays and hand their result to DataFrame sinks. The
+    * rows must match `schema` and be safe to buffer.
+    * `internalCreateDataFrame` is `private[sql]`, hence this bridge.
+    */
+  def fromInternalRows(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Block until every queued listener event is delivered — lets a
     * measurement harness read task-metric tallies after an action
     * (events post async). `listenerBus` is `private[spark]`, hence

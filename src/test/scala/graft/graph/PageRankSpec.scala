@@ -2,6 +2,8 @@ package graft.graph
 
 import graft.TestSpark
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.io.Source
@@ -247,6 +249,85 @@ class PageRankSpec extends AnyFunSuite {
       assert(full === full0, s"uninterrupted under $posture")
       assert(resumed === full0, s"resumed under $posture")
     }
+  }
+
+  test("the array kernel matches the DataFrame pass bit for bit, every pass, at widths 1, 4, 7 and AQE off") {
+    // k=100: a hundred chain tails feed the sink, so its mass is summed
+    // across partitions in an order only Spark's partial/final Sum
+    // association reproduces.
+    val k = 100L
+    val passes = 10
+    val postures = Seq(
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false")
+    postures.foreach { case (key, value) =>
+      val s = spark.newSession()
+      s.conf.set(key, value)
+      val (kernel, reference) =
+        GraphFixtures.kernelAndReference(GraphFixtures.kChainEdges(s, k), k, passes)
+      assert(kernel.size === passes)
+      assert(reference.size === passes)
+      kernel.zip(reference).zipWithIndex.foreach { case ((got, want), i) =>
+        assert(got._1.size === want._1.size, s"pass ${i + 1} under $key=$value: rows")
+        val diff = got._1.zip(want._1).find { case (g, w) => g != w }
+        assert(diff.isEmpty, s"pass ${i + 1} under $key=$value: (got, want) $diff")
+        assert(got._2 === want._2, s"pass ${i + 1} under $key=$value: mass bits")
+      }
+    }
+  }
+
+  test("a steady compat pass that writes its state runs two Spark jobs") {
+    // One job materializes the pass's state and reads the sink's mass;
+    // the hook's write is the other. Jobs are counted by a local
+    // property of this thread, so other suites' jobs do not count.
+    val sc = spark.sparkContext
+    val tag = "graft.spec.compatJobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val seen = scala.collection.mutable.Map.empty[Int, Int]
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "on")
+    try {
+      PageRank.compat(GraphFixtures.kChainEdges(spark, 4), 4, 8,
+        onPass = (p, st) => {
+          ColumnBridge.drainListenerBus(sc)
+          seen(p) = jobs.get
+          GraphIO.writeCompatCsv(st.state, s"$tmp/out$p")
+        })
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    val perPass = (3 to 8).map(p => p -> (seen(p) - seen(p - 1)))
+    assert(perPass.forall(_._2 == 2), s"jobs by pass: $perPass")
+  }
+
+  test("the node index finds every id it holds, extreme ones included, and rejects a repeated id") {
+    // Multiples of 1024 share their low bits, so they collide unless
+    // the slot hash mixes the high ones in.
+    val ids = Array(Long.MinValue, -1L, 0L, Long.MaxValue) ++ (1L to 1000L).map(_ * 1024)
+    val index = PageRank.NodeIndex(ids)
+    ids.zipWithIndex.foreach { case (id, i) => assert(index(id) === i, s"id $id") }
+    Seq(Long.MinValue + 1, -2L, 1L, 1025L, Long.MaxValue - 1)
+      .foreach(id => assert(index(id) === -1, s"absent id $id"))
+    assert(PageRank.NodeIndex(Array.empty[Long])(0L) === -1)
+    intercept[IllegalArgumentException](PageRank.NodeIndex(Array(5L, 7L, 5L)))
+    intercept[IllegalArgumentException](PageRank.NodeIndex(Array(Long.MinValue, Long.MinValue)))
+  }
+
+  test("the graph's arrays reject a graph that is not hash-partitioned on node") {
+    val graph = Seq((1L, 0.5, Seq(2L)), (2L, 0.25, Seq(1L)), (3L, 0.0, Seq.empty[Long]))
+      .toDF("node", "contrib", "adj").repartition(3)
+    val e = intercept[org.apache.spark.SparkException](PageRank.Part.of(graph).count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("not hash-partitioned on node")), e)
   }
 
   test("compat matches the independent reference impl, duplicate edges included") {
