@@ -65,6 +65,11 @@ object GraphOps {
     * of driver time outside Spark jobs with 4 persisted rounds of every
     * 5, and 2–4 s with a checkpoint every round; time inside jobs
     * stayed 1.5–3.7 s.
+    *
+    * Caution: a step must not join two relations derived from its
+    * iterate. The lazy checkpoint's plan keeps the optimizer's size
+    * estimate, which such a join squares every round (see
+    * [[graft.queries.GraphQueries.hitsConverged]]).
     */
   private def converge(name: String, init: DataFrame, maxRounds: Int)
                       (step: DataFrame => DataFrame)
@@ -311,7 +316,9 @@ object GraphOps {
     */
   // Its own loop, not [[converge]]'s: the mid-round `large` pin and a
   // probe that reads the previous iterate would be driver parameters
-  // only this loop uses.
+  // only this loop uses. A port onto `converge` was measured and kept
+  // out: the same hashes at sf0.1, but g12 cold went from 7.3 s to
+  // 12.1 s (one JVM per side, local[4]).
   def connectedComponentsLogN(edges: DataFrame,
                               maxRounds: Int = 30): DataFrame = {
     val nodes = edges.select(col("src").as("node"))

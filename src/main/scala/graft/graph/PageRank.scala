@@ -26,16 +26,16 @@ import scala.collection.mutable.ArrayBuilder
   * ([[PageRankGraphX.standardOn]], [[PageRankGraphX.standardFixedPointOn]]).
   *
   * Scale notes (100 TB design): pass 1 is a DataFrame job that builds
-  * the graph, every node a pass can reach with its adjacency,
-  * hash-partitioned on the node id to the session's shuffle width w.
-  * Every later pass runs on vertex partitions in the GraphX style
-  * ([[Part]]): the graph becomes, once, one set of arrays per
-  * partition (node ids, a CSR adjacency and a node→index map: 20–28 B
-  * per node plus 8 B per edge), and a pass's state is one `double[]`
-  * per partition (8 B per node), kept by an RDD `localCheckpoint`.
-  * A pass computes each sender's rank next to its adjacency (the
-  * first iteration pass reads its senders from the state it starts
-  * from, in that state's partitions) and ships w² packed message
+  * the graph, every node a pass can reach with its adjacency and init
+  * contrib, hash-partitioned on the node id to the session's shuffle
+  * width w (a resumed run rebuilds it from the state it starts from).
+  * Every pass runs on vertex partitions in the GraphX style ([[Part]]):
+  * the graph becomes, once, one set of arrays per partition (node ids,
+  * a CSR adjacency, the starting contribs and a node→index map: 28–36 B
+  * per node plus 8 B per edge), and the DataFrame graph is never
+  * cached. A pass's state is one `double[]` per partition (8 B per
+  * node), kept by an RDD `localCheckpoint`. A pass computes each
+  * sender's rank next to its adjacency and ships w² packed message
   * blocks, one per (source, destination) partition pair and 16 B per
   * message (target id and rank); nothing else crosses an exchange, and
   * the graph never moves. One job per pass materializes the new state
@@ -43,12 +43,11 @@ import scala.collection.mutable.ArrayBuilder
   * write is the pass's only other job. Nothing in a pass is planned or
   * compiled, so a pass costs the driver the same whatever its number.
   * A pass's state is released as soon as the next pass's state is
-  * materialized, and so is the DataFrame graph once its arrays are.
-  * Hence the `onPass` contract: the `CompatState` a pass hands over
-  * stays valid until the next pass materializes, so a hook writes or
-  * collects it before returning. A lost local-checkpoint block (an
-  * executor gone) cannot be recomputed; on a cluster, swap for
-  * `checkpoint` with a reliable dir.
+  * materialized. Hence the `onPass` contract: the `CompatState` a pass
+  * hands over stays valid until the next pass materializes, so a hook
+  * writes or collects it before returning. A lost local-checkpoint
+  * block (an executor gone) cannot be recomputed; on a cluster, swap
+  * for `checkpoint` with a reliable dir.
   *
   * The state is bit-identical to the DataFrame pass it replaced
   * (explode, `sum`, left join, `coalesce`), because the receive side
@@ -86,12 +85,7 @@ object PageRank {
   def compat(edges: DataFrame, k: Long, passes: Int, beta: Double = 0.15,
              onPass: (Int, CompatState) => Unit = (_, _) => ()): CompatState = {
     require(passes >= 1, "compat needs at least the init pass")
-    val init = initGraph(edges, k)
-    val d = extractDangling(init)
-    val state1 = CompatState(init.filter(col("node") =!= 0), d)
-    onPass(1, state1)
-    if (passes == 1) state1
-    else iterate(init, state1, k, passes - 1, beta, onPass, passOffset = 1)
+    iterate(initGraph(edges, k), None, k, passes - 1, beta, onPass, passOffset = 1)
   }
 
   /** The init pass (pageRank_v2.java:153-169): every in-edge carries
@@ -101,7 +95,8 @@ object PageRank {
     * row per edge end, shuffled once by node to the shuffle width
     * (explicit, so AQE does not coalesce it): the init state, sink
     * included, is already the partitioned graph every later pass
-    * reads. Persisted, and released once the graph's arrays are built.
+    * reads. Not cached: the job that builds the graph's arrays
+    * computes it once.
     */
   private[graph] def initGraph(edges: DataFrame, k: Long): DataFrame = {
     val n = (k.toDouble * k.toDouble)
@@ -113,7 +108,6 @@ object PageRank {
       .groupBy("node")
       .agg(coalesce(sum(col("mass")), lit(0.0)).as("contrib"),
         sort_array(collect_set(col("to"))).as("adj"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Advance an existing compat state by `steps` iteration passes —
@@ -128,15 +122,19 @@ object PageRank {
                   beta: Double = 0.15,
                   onPass: (Int, CompatState) => Unit = (_, _) => (),
                   passOffset: Int = 0): CompatState = {
-    // A state lacks the sink row and any other contribution-only
-    // target: every adjacency target joins the graph with an empty list.
-    val targets = state0.state.select(explode(col("adj")).as("node")).distinct()
-    val graph = state0.state.select(col("node"), col("adj"))
-      .join(targets, Seq("node"), "full_outer")
-      .select(col("node"), coalesce(col("adj"), array().cast("array<long>")).as("adj"))
-      .repartition(shuffleWidth(state0.state), col("node"))
     if (steps == 0) state0
-    else iterate(graph, state0, k, steps, beta, onPass, passOffset)
+    else {
+      // A state lacks the sink row and any other contribution-only
+      // target: every adjacency target joins the graph with an empty
+      // list and a zero contrib.
+      val targets = state0.state.select(explode(col("adj")).as("node")).distinct()
+      val graph = state0.state.select(col("node"), col("adj"), col("contrib"))
+        .join(targets, Seq("node"), "full_outer")
+        .select(col("node"), coalesce(col("adj"), array().cast("array<long>")).as("adj"),
+          coalesce(col("contrib"), lit(0.0)).as("contrib"))
+        .repartition(shuffleWidth(state0.state), col("node"))
+      iterate(graph, Some(state0.danglingMass), k, steps, beta, onPass, passOffset)
+    }
   }
 
   /** The session's shuffle width, passed explicitly to `repartition`
@@ -153,15 +151,17 @@ object PageRank {
     if (h < 0) h + width else h
   }
 
-  /** The compat iteration over a fixed graph (node, adj),
-    * hash-partitioned on node. The graph becomes [[Part]]s once; the
-    * DataFrame graph is released after the first pass materializes
-    * them. Each pass's state is a lazy `localCheckpoint` that the
-    * pass's one job materializes while it reads the sink's
-    * contribution; only then is its predecessor released, so a lineage
-    * root always exists.
+  /** The compat iteration over a fixed graph (node, adj, contrib),
+    * hash-partitioned on node, whose contribs are the state it starts
+    * from. The graph becomes [[Part]]s once, and every pass runs on
+    * them. Without a starting `mass` the graph is pass `passOffset`'s
+    * state: the job that builds the parts reads its mass from the sink,
+    * and `onPass` reports it. Each pass's state is a lazy
+    * `localCheckpoint` that the pass's one job materializes while it
+    * reads the sink's contribution; only then is its predecessor
+    * released, so a lineage root always exists.
     */
-  private def iterate(graph: DataFrame, state0: CompatState, k: Long,
+  private def iterate(graph: DataFrame, mass: Option[Double], k: Long,
                       steps: Int, beta: Double,
                       onPass: (Int, CompatState) => Unit,
                       passOffset: Int): CompatState = {
@@ -169,34 +169,24 @@ object PageRank {
     val (a, b) = (1 - beta, beta / n)
     val spark = graph.sparkSession
     val parts = Part.of(graph)
-    val width = parts.getNumPartitions
     // Int keys hash to themselves: block d goes to partition d.
-    val routes = new HashPartitioner(width)
-    var cur = state0
-    var state: RDD[Array[Double]] = null
+    val routes = new HashPartitioner(parts.getNumPartitions)
+    var state = parts.map(_.start)
+    var cur = CompatState(stateFrame(spark, parts, state),
+      mass.getOrElse(sinkMass(parts, state)))
+    if (mass.isEmpty) onPass(passOffset, cur)
     var step = 0
     while (step < steps) {
       // Rank update applied lazily (pageRank_v2.java:126-127), then
       // whole-rank contribution to each out-neighbor (:136-139).
       val dn = cur.danglingMass / n
-      val sent =
-        // The first pass sends from `state0`'s own rows and partitions,
-        // as the DataFrame pass did: a resumed state is partitioned by
-        // its files, and so are its partial sums.
-        if (state == null)
-          cur.state.select("node", "adj", "contrib").queryExecution.toRdd
-            .mapPartitionsWithIndex { (s, rows) =>
-              val (p, contrib) = Part.build(s, width, rows, contribs = true)
-              p.send(contrib, a, dn, b)
-            }
-        else parts.zipPartitions(state)((ps, ss) => ps.next().send(ss.next(), a, dn, b))
+      val sent = parts.zipPartitions(state)((ps, ss) => ps.next().send(ss.next(), a, dn, b))
       val next = parts.zipPartitions(sent.partitionBy(routes))(
         (ps, bs) => Iterator.single(ps.next().receive(bs))).localCheckpoint()
       // The reference's counter read (pageRank_v2.java:216-222), in
       // the job that materializes the checkpoint.
-      val d = parts.zipPartitions(next)((ps, ss) => ps.next().sink(ss.next()))
-        .collect().sum
-      if (state == null) graph.unpersist(false) else state.unpersist(false)
+      val d = sinkMass(parts, next)
+      state.unpersist(false)
       state = next
       cur = CompatState(stateFrame(spark, parts, state), d)
       step += 1
@@ -216,13 +206,11 @@ object PageRank {
     ColumnBridge.fromInternalRows(spark,
       parts.zipPartitions(state)((ps, ss) => ps.next().rows(ss.next())), StateSchema)
 
-  /** The reference's counter read: node 0's contribution, removed
-    * from the output relation (pageRank_v2.java:216-222). The graph
-    * holds one sink row, which comes back to the driver as is.
+  /** The reference's counter read: node 0's contribution in `state`,
+    * removed from the output relation (pageRank_v2.java:216-222).
     */
-  private def extractDangling(state: DataFrame): Double =
-    state.filter(col("node") === 0).select(col("contrib"))
-      .collect().map(_.getDouble(0)).sum
+  private def sinkMass(parts: RDD[Part], state: RDD[Array[Double]]): Double =
+    parts.zipPartitions(state)((ps, ss) => ps.next().sink(ss.next())).collect().sum
 
   /** A message block: the ranks one source partition sends to the
     * nodes of one destination partition, in the source's row order.
@@ -233,11 +221,12 @@ object PageRank {
   /** One vertex partition of the compat graph: the nodes partition `id`
     * of `width` holds, in the graph's row order, with their adjacency in
     * CSR form (node i's targets are `targets(offsets(i) until
-    * offsets(i + 1))`). The node→index map is built where the part is
-    * used and never shipped.
+    * offsets(i + 1))`) and the contribs the run starts from. The
+    * node→index map is built where the part is used and never shipped.
     */
   private[graph] final class Part(val id: Int, val width: Int, val nodes: Array[Long],
-                                  val offsets: Array[Int], val targets: Array[Long])
+                                  val offsets: Array[Int], val targets: Array[Long],
+                                  val start: Array[Double])
       extends Serializable {
 
     @transient lazy val index: NodeIndex = NodeIndex(nodes)
@@ -341,48 +330,38 @@ object PageRank {
 
   private[graph] object Part {
 
-    /** The graph (node, adj) as parts, one per partition, persisted.
-      * Every node is checked to sit in the partition [[partitionOf]]
-      * names, which is where a pass routes its messages.
+    /** The graph (node, adj, contrib) as parts, one per partition,
+      * persisted. Every node is checked to sit in the partition
+      * [[partitionOf]] names, which is where a pass routes its messages.
       */
     def of(graph: DataFrame): RDD[Part] = {
-      val rows = graph.select("node", "adj").queryExecution.toRdd
+      val rows = graph.select("node", "adj", "contrib").queryExecution.toRdd
       val width = rows.getNumPartitions
       rows.mapPartitionsWithIndex { (id, it) =>
-        val (part, _) = build(id, width, it, contribs = false)
-        part.nodes.foreach { node =>
+        val nodes = new ArrayBuilder.ofLong
+        val offsets = new ArrayBuilder.ofInt
+        val targets = new ArrayBuilder.ofLong
+        val start = new ArrayBuilder.ofDouble
+        var edges = 0
+        offsets += 0
+        it.foreach { r =>
+          val node = r.getLong(0)
           val home = partitionOf(node, width)
           if (home != id)
             throw new IllegalStateException(
               s"node $node is in partition $id but hashes to $home: " +
                 "the graph is not hash-partitioned on node")
+          nodes += node
+          val adj = r.getArray(1)
+          var j = 0
+          while (j < adj.numElements()) { targets += adj.getLong(j); j += 1 }
+          edges += j
+          offsets += edges
+          start += r.getDouble(2)
         }
-        Iterator.single(part)
+        Iterator.single(new Part(id, width, nodes.result(), offsets.result(),
+          targets.result(), start.result()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-    /** Partition `id`'s rows (node, adj[, contrib]) as a part, and their
-      * contribs (empty unless `contribs`), in row order.
-      */
-    def build(id: Int, width: Int, rows: Iterator[InternalRow],
-              contribs: Boolean): (Part, Array[Double]) = {
-      val nodes = new ArrayBuilder.ofLong
-      val contrib = new ArrayBuilder.ofDouble
-      val offsets = new ArrayBuilder.ofInt
-      val targets = new ArrayBuilder.ofLong
-      var edges = 0
-      offsets += 0
-      rows.foreach { r =>
-        nodes += r.getLong(0)
-        val adj = r.getArray(1)
-        var j = 0
-        while (j < adj.numElements()) { targets += adj.getLong(j); j += 1 }
-        edges += j
-        offsets += edges
-        if (contribs) contrib += r.getDouble(2)
-      }
-      (new Part(id, width, nodes.result(), offsets.result(), targets.result()),
-        contrib.result())
     }
   }
 

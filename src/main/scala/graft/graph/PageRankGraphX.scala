@@ -28,19 +28,6 @@ import scala.reflect.ClassTag
   */
 object PageRankGraphX {
 
-  /** The session owning this graph's RDDs: the active (else default)
-    * session when it shares the graph's SparkContext, otherwise one
-    * resolved from that context — never a stranger session in a
-    * multi-session driver (round-6 ADVICE on `SparkSession.active`).
-    */
-  private def sessionOf(rdd: RDD[_]): SparkSession =
-    SparkSession.getActiveSession
-      .filter(_.sparkContext eq rdd.sparkContext)
-      .orElse(SparkSession.getDefaultSession
-        .filter(_.sparkContext eq rdd.sparkContext))
-      .getOrElse(
-        org.apache.spark.sql.graft.ColumnBridge.sessionFor(rdd.sparkContext))
-
   /** Edges per partition the iteration loop targets: small enough to
     * parallelize a cluster-scale graph, large enough that per-task
     * overhead doesn't dominate (an iterative GraphX job runs MANY
@@ -76,14 +63,15 @@ object PageRankGraphX {
   /** Standard PageRank with dangling redistribution on an already-built
     * (possibly caller-cached) graph — repeated runs over the same edge
     * set skip the count + partition + cache of graph construction.
-    * Returns (node, rank):
+    * Returns (node, rank) as a DataFrame of `spark`, the session that
+    * owns the graph's context:
     * r'(v) = β/N + (1−β)·(Σ_{u→v} r(u)/outdeg(u) + D/N),
     * D = Σ_{dangling u} r(u).
     */
-  def standardOn(graph0: Graph[Double, Unit], iters: Int,
+  def standardOn(spark: SparkSession, graph0: Graph[Double, Unit], iters: Int,
                  beta: Double = 0.15): DataFrame = {
     val n = graph0.numVertices.toDouble
-    iterate[Double](graph0, iters, 1.0 / n, _ / _,
+    iterate[Double](spark, graph0, iters, 1.0 / n, _ / _,
       (c, d) => beta / n + (1 - beta) * (c + d / n),
       "rank", DoubleType)
   }
@@ -103,11 +91,12 @@ object PageRankGraphX {
     * oracle-gated. Expects a graph built from a deduplicated edge list
     * (the derived graph is distinct by construction).
     */
-  def standardFixedPointOn(graph0: Graph[Double, Unit], iters: Int): DataFrame = {
+  def standardFixedPointOn(spark: SparkSession, graph0: Graph[Double, Unit],
+                           iters: Int): DataFrame = {
     val Scale = 1000000000000L
     val Beta = 15L * Scale / 100L
     val n = graph0.numVertices
-    iterate[Long](graph0, iters, Scale / n, _ / _,
+    iterate[Long](spark, graph0, iters, Scale / n, _ / _,
       (c, d) => Beta / n + (85L * (c + d / n)) / 100L,
       "rank_fp", LongType)
   }
@@ -123,10 +112,9 @@ object PageRankGraphX {
     * current (cached) graph, so the PREVIOUS pass's cache can be
     * dropped right after it — no extra count() job per pass.
     */
-  private def iterate[A: ClassTag](graph0: Graph[Double, Unit], iters: Int,
-      r0: A, share: (A, Int) => A, update: (A, A) => A, col: String,
+  private def iterate[A: ClassTag](spark: SparkSession, graph0: Graph[Double, Unit],
+      iters: Int, r0: A, share: (A, Int) => A, update: (A, A) => A, col: String,
       colType: DataType)(implicit num: Numeric[A]): DataFrame = {
-    val spark = sessionOf(graph0.vertices)
     // out-degree as vertex attribute; 0 for dangling
     var g: Graph[(A, Int), Unit] = graph0
       .outerJoinVertices(graph0.outDegrees)((_, _, deg) => (r0, deg.getOrElse(0)))

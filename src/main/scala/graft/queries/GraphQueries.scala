@@ -446,7 +446,7 @@ object GraphQueries {
     * a plain-Scala reference in PageRankSpec).
     */
   def g07_pagerank_graphx(s: SparkSession, dir: String): DataFrame = {
-    val dbl = graft.graph.PageRankGraphX.standardOn(graphxGraph(s, dir), G07Iters)
+    val dbl = graft.graph.PageRankGraphX.standardOn(s, graphxGraph(s, dir), G07Iters)
     val fp = fixedPointPagerank(s, dir, G07Iters, divideByOutdeg = true)
     dbl.join(fp, Seq("node"))
       .select(col("node"),
@@ -1104,7 +1104,15 @@ object GraphQueries {
     * both vectors, and stores no resume checkpoints — per-round resume
     * belongs to the fixed-round production entry (g19); the registry
     * form ([[g20_hits_converged]]) memoizes only the FINAL result,
-    * like the converged CC family.
+    * like the converged CC family. Nor [[graft.graph.GraphOps]]'s
+    * `converge`: a port onto it gave the same hashes at sf0.1, but g20
+    * cold went from 15.1 s to 43.6 s (one JVM per side, local[4]). Its
+    * lazy checkpoint's `LogicalRDD` inherits the optimized plan's size
+    * estimate (`LogicalRDD.fromDataset` → `rewriteStatsAndConstraints`),
+    * a round joins two relations derived from its iterate (`a ⋈ h`),
+    * which squares that estimate, and by round 20 `sizeInBytes` had
+    * 27,145,983 digits: the driver spent its time in
+    * `BigInteger.multiply`.
     */
   private[graft] def hitsConverged(s: SparkSession, dir: String,
       maxRounds: Int = 50, tolFp: Long = HitsQ / 1000L)
@@ -1405,6 +1413,6 @@ object GraphQueries {
     // against the same unrolled-CTE oracle (long sums are associative,
     // so message merge order can't perturb the result).
     "g10_pagerank_graphx_fp" -> ((s, d) =>
-      graft.graph.PageRankGraphX.standardFixedPointOn(graphxGraph(s, d), 3)),
+      graft.graph.PageRankGraphX.standardFixedPointOn(s, graphxGraph(s, d), 3)),
   )
 }

@@ -52,15 +52,6 @@ object ColumnBridge {
     }
   }
 
-  /** A new session bound to exactly `sc` — for code handed bare RDDs
-    * (the GraphX paths) that must not adopt a stranger active session
-    * in a multi-session driver (a builder's `getOrCreate` would return
-    * that active session). The `SparkContext` constructor is
-    * `private[sql]`, hence this bridge.
-    */
-  def sessionFor(sc: org.apache.spark.SparkContext): org.apache.spark.sql.SparkSession =
-    new org.apache.spark.sql.classic.SparkSession(sc)
-
   /** Re-wrap a batch DataFrame's physical rows as a STREAMING frame —
     * what a DSv1 streaming `Source.getBatch` must return (the
     * FileStreamSource recipe: the engine rejects a non-streaming

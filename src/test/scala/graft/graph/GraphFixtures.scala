@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Graph inputs the specs generate rather than read, and the compat
   * reference the array kernel is checked against.
@@ -37,7 +38,8 @@ object GraphFixtures {
     def sink(state: DataFrame): Double =
       state.filter(col("node") === 0).select(col("contrib"))
         .collect().map(_.getDouble(0)).sum
-    val graph = PageRank.initGraph(edges, k)
+    // Persisted, so that every pass reads the graph in one row order.
+    val graph = PageRank.initGraph(edges, k).persist(StorageLevel.MEMORY_AND_DISK)
     var state = graph
     var d = sink(state)
     onPass(1, state.filter(col("node") =!= 0), d)

@@ -45,6 +45,9 @@ class GraphOpsSpec extends AnyFunSuite {
     val sym = chain.union(chain.select($"dst", $"src")).toDF("src", "dst")
       .distinct().persist()
     sym.count()
+    // Listener events post asynchronously: deliver this count's event
+    // before the probe listener is registered, or it counts as a probe.
+    org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
     val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
     val probes = new QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution,

@@ -278,6 +278,52 @@ class PageRankSpec extends AnyFunSuite {
     }
   }
 
+  test("a run resumed from a written pass-3 state equals the uninterrupted run, bit for bit, at widths 1, 4, 7 and AQE off") {
+    // k=100: the sink's mass sums a hundred chain tails, so a resumed
+    // first pass that grouped its senders by the state files' splits
+    // instead of the graph's partitions would show in the mass bits.
+    val k = 100L
+    val passes = 10
+    val postures = Seq(
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false")
+    // Every posture runs before the assertion, so a failure names each
+    // posture that differs.
+    val diffs = postures.flatMap { case (key, value) =>
+      val s = spark.newSession()
+      s.conf.set(key, value)
+      val tmp = java.nio.file.Files.createTempDirectory("graft-resume").toString
+      var mass3 = Double.NaN
+      val full = GraphFixtures.passBits(hook =>
+        PageRank.compat(GraphFixtures.kChainEdges(s, k), k, passes,
+          onPass = (p, st) => {
+            hook(p, st.state, st.danglingMass)
+            if (p == 3) {
+              GraphIO.writeCompatCsv(st.state, s"$tmp/state3")
+              mass3 = st.danglingMass
+            }
+          }))
+      val resumed = GraphFixtures.passBits(hook =>
+        PageRank.compatSteps(
+          PageRank.CompatState(GraphIO.readCompatCsv(s, s"$tmp/state3"), mass3),
+          k, passes - 3, passOffset = 3,
+          onPass = (_, st) => hook(0, st.state, st.danglingMass)))
+      assert(full.size === passes)
+      assert(resumed.size === passes - 3)
+      full.drop(3).zip(resumed).zipWithIndex.flatMap { case ((want, got), i) =>
+        val at = s"pass ${i + 4} under $key=$value"
+        val row = got._1.zip(want._1).find { case (g, w) => g != w }
+        Seq(
+          Option.when(got._1.size != want._1.size)(s"$at: ${got._1.size} rows, want ${want._1.size}"),
+          row.map(r => s"$at: (resumed, uninterrupted) $r"),
+          Option.when(got._2 != want._2)(s"$at: mass bits ${got._2}, want ${want._2}")).flatten
+      }
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
   test("a steady compat pass that writes its state runs two Spark jobs") {
     // One job materializes the pass's state and reads the sink's mass;
     // the hook's write is the other. Jobs are counted by a local
@@ -364,7 +410,7 @@ class PageRankSpec extends AnyFunSuite {
       (4L, 5L), (5L, 5L), (6L, 1L))
     val graph = PageRankGraphX.fromEdges(edges.toDF("src", "dst"))
     for (iters <- Seq(1, 5, 10)) {
-      val ranks = PageRankGraphX.standardOn(graph, iters)
+      val ranks = PageRankGraphX.standardOn(spark, graph, iters)
         .as[(Long, Double)].collect().toMap
       val expected = standardRef(edges, iters)
       assert(ranks.keySet === expected.keySet, s"iters=$iters")

@@ -33,7 +33,7 @@ class GraphQueriesSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     val graph = graft.graph.PageRankGraphX
       .fromEdges(GraphQueries.derivedEdges(spark, dir))
-    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(graph, 6)
+    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(spark, graph, 6)
       .as[(Long, Long)].collect().toMap
     graph.unpersist(false)
     assert(g04 === gx)
@@ -85,7 +85,7 @@ class GraphQueriesSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     val graph = graft.graph.PageRankGraphX
       .fromEdges(GraphQueries.derivedEdges(spark, dir))
-    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(graph, 3)
+    val gx = graft.graph.PageRankGraphX.standardFixedPointOn(spark, graph, 3)
       .as[(Long, Long)].collect().toMap
     assert(gx === df)
   }
